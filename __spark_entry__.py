@@ -18,6 +18,10 @@ Determinism rules applied throughout (both engines identically):
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -5699,374 +5703,30 @@ def entry(spark: SparkSession) -> DataFrame:
     return _QUERIES["timeseries_month_revenue"](spark, "/root/testdata/sf0.001")
 
 
-# (Historical note, ADVICE r11: the retired _R05_WINDOW/_R06_WINDOW/
-# _R08_WINDOW rotation tuples — rounds 5/6/8 gate windows — were
-# deleted once every member's evidence was superseded by later
-# rotations; see git history and PARITY.md for their contents.)
+# Driver windows check the first 50 entries of ``queries()``. The order
+# is derived from the committed CORRECTNESS_r*.json next to this file:
+# entries with no green evidence first, then by ascending round of
+# their last green evidence, ties in file order. Without evidence files
+# the order is plain file order.
+_EVIDENCE_DIR = os.path.dirname(os.path.abspath(__file__))
 
 
-# Round-11 gate window (VERDICT r10 task #1 — r10's window re-ran the
-# r9 set, so the r5-evidence cohort was never refreshed). Exactly 50
-# names (the driver cap; the r9 window listed 53 and the last 3 were
-# silently cut): ALL 26 entries whose latest oracle evidence is round
-# 5 (set ops, granularity periods, grand total, alphanumeric
-# limitSpec, composite having, inverted topN, catalog/sys tables,
-# string first/last, bloom, …) — their operators' code changed in
-# r9–r10 (limitSpec, extraction fns, subquery datasources, footer
-# extent) — then 24 r7-evidence entries prioritized by overlap with
-# r8–r10 code churn (timeseries/extent, groupBy subquery + limitSpec,
-# lookups, theta/cardinality, SQL dialect). The 25 r7 leftovers
-# (_R11_NEXT) front the r12 rotation.
-_R11_WINDOW = (
-    # r5-evidence cohort (all 26, alphabetical)
-    'agg_string_first_last', 'anti_join_customers', 'bloom_dim_filter',
-    'contrib_time_min_max', 'datasource_metadata_lineitem',
-    'dim_list_filtered_tokens', 'except_nationkeys',
-    'filter_interval_expression', 'granularity_period_2w',
-    'granularity_quarter', 'granularity_week_p1w',
-    'grouping_id_subtotals', 'having_composite', 'info_schema_columns',
-    'intersect_nationkeys', 'join_lookup_datasource',
-    'limitspec_alphanumeric', 'postagg_arithmetic',
-    'query_datasource_nested', 'scan_orderby_key_desc',
-    'search_nation_names', 'sys_segments_catalog',
-    'timeseries_grand_total', 'topn_inverted_lexicographic',
-    'union_scan_orders', 'virtual_column_case_tier',
-    # r7-evidence entries over r8–r10-churned code (24)
-    'timeseries_month_revenue', 'timeseries_day_clicks',
-    'timeboundary_lineitem', 'groupby_having_segment',
-    'groupby_subtotals', 'limitspec_offset', 'lookup_nation_name',
-    'theta_set_ops', 'theta_exact_distinct', 'cardinality_by_value',
-    'expression_lambda_agg', 'mv_explode_subquery_groupby',
-    'sql_view_query', 'sql_time_floor_revenue', 'sql_semi_join',
-    'sql_earliest_latest', 'agg_first_last_events', 'agg_filtered_sum',
-    'moving_average_monthly', 'topn_priority_revenue',
-    'groupby_flag_status', 'dim_regex_filtered', 'dim_prefix_filtered',
-    'window_moving_avg',
-)
-
-# Round-12 gate window: the 25 r7-evidence leftovers the r11 rotation
-# couldn't fit (r11's _R11_NEXT — now the oldest evidence anywhere),
-# then 25 of the 50 r8-evidence entries, prioritized by overlap with
-# r11–r12 code churn: LOOKUP dedup/inline-cap/null-literal and ROUND
-# shadow detection changed THIS round (sql/dialect.py), so
-# lookup_neq_matches_null / sql_lookup_fn / round_contract_orders lead;
-# then the timeseries-extent family (footer-stats timeBoundary landed
-# in r11), granularity, groupBy/having/postagg, topN and extraction
-# fns (r9–r10 churn). The 25 r8 leftovers are _R12_NEXT and front the
-# r13 rotation.
-_R12_WINDOW = (
-    # new r12 entries — never driver-checked, verify first
-    # (array-typed dimension grouping and the ScanResultValue
-    # envelope serializer landed this round); sql_scalar_shims and
-    # sql_floor_to_unit moved to the _R12_NEXT front to keep the
-    # 50-entry driver cap
-    'groupby_array_dim', 'scan_result_envelope',
-    'supervisor_spec_rollup',
-    # r7-evidence cohort (all 25 — oldest evidence in the registry)
-    'agg_stats_lineitem', 'dedup_exact', 'dedup_minhash_lsh',
-    'dedup_ngram_jaccard', 'extraction_regex_brand',
-    'filter_column_comparison', 'filter_combo_parts',
-    'filter_regex_not', 'join_left_deep_tree', 'join_orders_customers',
-    'lambda_realtime_union', 'mv_filter_in', 'mv_token_counts',
-    'salted_groupby_skew', 'scan_high_value_orders',
-    'semantic_dedup_embeddings', 'semantic_dedup_scale_mode',
-    'stratified_sample_documents', 'text_quality',
-    'text_winnowing_fingerprint', 'time_extract_hour',
-    'train_test_split_counts', 'tuple_sketch_order_totals',
-    'union_hetero_schemas', 'virtual_column_bucket',
-    # r8-evidence entries over r9–r12-churned code (25 of 50)
-    'lookup_neq_matches_null', 'sql_lookup_fn', 'round_contract_orders',
-    'time_ceil_origin_buckets', 'timeseries_compound_period',
-    'timeboundary_filtered_min', 'granularity_none_identity',
-    'granularity_five_minute', 'granularity_day_tz',
-    'timeseries_desc_limit', 'timeseries_over_join',
-    'groupby_double_dim', 'groupby_month_and_dim',
-    'having_equalto_lessthan', 'postagg_expression',
-    'topn_time_extraction', 'topn_per_month', 'extraction_cascade',
-    'extraction_bucket', 'extraction_time_format_gran',
-    'extraction_strlen', 'extraction_string_format',
-)
-
-# Round-13 gate window (VERDICT r12 task #2): ALL 28 entries whose
-# latest oracle evidence is round 8 (queued as r12's _R12_NEXT), then
-# 22 of the 50 r10-evidence entries prioritized by overlap with the
-# r13 code churn: filtered dimension decorations, bare-string dim
-# normalization, and post-agg collision validation changed this round
-# (operators/dimensions.py, operators/postaggs.py, plans/compiler.py),
-# so mv_filter_any_match / the bound-filter pair / the lifecycle
-# family lead; supervisor timestampSpec-'auto' changed
-# (streaming/supervisor.py), so streaming_rollup_hourly re-verifies.
-# The 36 r10 leftovers are _R13_NEXT and front the r14 rotation.
-_R13_WINDOW = (
-    # new r13 entry — never driver-checked, verify first (the
-    # hyper_unique expression-collector family landed this round);
-    # multimodal_features moved to the _R13_NEXT front to keep the
-    # 50-entry driver cap
-    'expression_hyper_unique_fold', 'text_unigram_logprob',
-    'gopher_quality_rules', 'c4_clean_filters',
-    'quantile_postagg_family', 'theta_setop_postagg',
-    'timewarp_week_over_week', 'leakage_safe_split_counts',
-    # r8-evidence cohort (all 28 — oldest evidence in the registry)
-    'expression_time_format', 'sql_floor_to_unit', 'sql_scalar_shims',
-    'human_readable_formats', 'ipv4_custkey_subnets',
-    'theta_rollup_merge', 'segment_metadata_orders', 'sql_time_ops',
-    'sql_mv_first_word', 'sql_array_fns', 'sql_safe_divide', 'sql_ipv4',
-    'sql_bloom_filter_test', 'search_fragment_multi', 'sql_bit_aggs',
-    'sql_earliest_by', 'scan_time_desc', 'tdigest_quantile_price',
-    'momentsketch_quartiles', 'null_dim_three_valued',
-    'expression_array_fold', 'search_regex', 'histogram_quantity',
-    'quantiles_sketch_median', 'dedup_components', 'doc_chunks',
-    'text_normalize_scrub', 'session_window_user',
-    # r10-evidence entries over r11–r13-churned code (22 of 50)
-    'mv_filter_any_match', 'streaming_rollup_hourly',
-    'hyperunique_complex_requery', 'expression_cartesian',
-    'filter_bound_lexicographic', 'bound_version_comparator',
-    'timeseries_zero_fill', 'lifecycle_publish_query',
-    'compaction_lifecycle', 'rollup_reaggregate',
-    'sql_frozen_current_timestamp', 'info_schema_lookup_catalog',
-    'asof_join_events', 'corpus_top_ngrams',
-)
-
-# r10-evidence leftovers — next-oldest after the r13 window; they
-# front the r14 rotation
-_R13_NEXT = (
-    'decontaminate_report', 'dedup_components_star',
-    'dedup_edit_distance', 'dedup_substring_overlap', 'deterministic_shuffle_order',
-    'dsir_importance_weights', 'mixture_weights_lang',
-    'multimodal_features', 'multimodal_frame_sample', 'multimodal_resize',
-    'pack_sequences_budget', 'scrub_common_lines',
-    'sql_array_agg_sorted', 'sql_lookup_schema_join',
-    'sql_parameterized', 'sql_scalar_shims2', 'sql_scalar_shims3',
-    'sql_theta_set_ops', 'text_repetition', 'tfidf_top_terms',
-    'similarity_cosine_topk', 'similarity_ivf_topk',
-    'similarity_lsh_topk', 'dedup_embedding_cosine', 'dedup_simhash',
-    'text_fingerprint', 'text_language_id', 'text_token_stats',
-    'streaming_stateful_running_agg', 'ingest_inline_csv',
-    'sql_insert_extern', 'segment_pruned_timeseries',
-    'hll_sketch_rollup_merge', 'hll_user_cardinality',
-    'spatial_rectangular', 'spatial_polygon',
-)
-
-
-# Round-14 gate window (VERDICT r13 task #3): 7 new r14 entries
-# (3 estimation-mode sketch gates, the PQ pair, and the two
-# advisor-fix regression gates — never driver-checked, verify first),
-# then ALL 36 r10-evidence leftovers (_R13_NEXT, the oldest evidence
-# in the registry), then 7 of the 50 r11-evidence entries prioritized
-# by overlap with the r14 code churn: the expression-lambda aggregator
-# gained the hyper_unique->HLL rewrite (operators/aggregations.py), the
-# interval filter's extractionFn order and the numeric selector's
-# integral bounds changed (operators/filters.py), and the HLL bounds
-# post-agg reads the aggregator's lgK — so expression_lambda_agg /
-# filter_interval_expression / theta_set_ops / cardinality_by_value /
-# the filter trio close the window.
-# After r14 the oldest registry evidence is r11 (_R14_NEXT fronts r15).
-_R14_WINDOW = (
-    'theta_estimation_mode', 'hll_estimation_mode',
-    'kll_estimation_mode', 'similarity_pq_topk', 'similarity_pq_adc',
-    'leakage_split_string_keys', 'interval_filter_extraction_fn',
-    'similarity_ivfpq_refined',
-) + _R13_NEXT + (
-    'expression_lambda_agg', 'filter_interval_expression',
-    'theta_set_ops', 'cardinality_by_value', 'agg_filtered_sum',
-    'bloom_dim_filter',
-)
-
-# r11-evidence leftovers — next-oldest after the r14 window; they
-# front the r15 rotation
-_R14_NEXT = tuple(n for n in _R11_WINDOW if n not in _R14_WINDOW)
-
-# Round-15 gate window (VERDICT r14 task #3): the 3 new r15 entries
-# (the ingest-materialized ANN layout, the legacy-HLLC migration path,
-# and the native legacy-groupBy route — never driver-checked, verify
-# first), then ALL 44 r11-evidence leftovers (_R14_NEXT — after this
-# window no registry evidence predates r12), then 3 r13/r14-evidence
-# entries re-gated because the r15 code churn runs through them: the
-# dot/norm helpers were rewritten to single-F.expr HOF folds
-# (similarity_cosine_topk, dedup_embedding_cosine) and the PQ encode
-# paths changed NULL/ragged handling (similarity_pq_adc).
-# semantic_dedup_embeddings (same churn, r14 evidence x2, locally
-# re-oracled green this round) and the hyper_unique finalize re-gate
-# (suite-pinned in tests/test_advice_r15.py) rotate next round.
-_R15_WINDOW = (
-    'similarity_materialized_ann', 'legacy_hllc_requery',
-    'legacy_hllc_native_groupby',
-) + _R14_NEXT + (
-    'similarity_cosine_topk', 'dedup_embedding_cosine',
-    'similarity_pq_adc',
-)
-# _R14_NEXT and the churn tail overlap on similarity_cosine_topk /
-# dedup_embedding_cosine if a future edit moves them — dedupe keeps
-# first occurrence
-_R15_WINDOW = tuple(dict.fromkeys(_R15_WINDOW))
-
-# Round-16 gate window (VERDICT r15 task #1): the 1 new r16 entry
-# (legacy hyperUnique + subtotalsSpec over the single-scan persisted
-# path), the materialized-IVFPQ-refine entry, and the Druid
-# segment-container reader gate — never driver-checked, verify
-# first — then 47 of the 50
-# entries whose latest evidence is r12 (the oldest cohort in the
-# registry — computed by union-diffing all 15 CORRECTNESS files).
-# The driver cap is 50, so THREE r12 entries stay behind
-# (granularity_none_identity, scan_result_envelope,
-# lambda_realtime_union — logic untouched since r12, golden-suite
-# covered, locally re-oracled green this round; they FRONT the r17
-# rotation). After r16 the oldest driver evidence is r13 plus those
-# three documented leftovers.
-_R16_WINDOW = (
-    'legacy_hllc_subtotals', 'similarity_materialized_ivfpq',
-    'druid_segment_scan',
-    # r12-evidence cohort (47 of 50)
-    'agg_stats_lineitem', 'dedup_exact', 'dedup_minhash_lsh',
-    'dedup_ngram_jaccard', 'extraction_bucket', 'extraction_cascade',
-    'extraction_regex_brand', 'extraction_string_format',
-    'extraction_strlen', 'extraction_time_format_gran',
-    'filter_column_comparison', 'filter_combo_parts',
-    'filter_regex_not', 'granularity_day_tz',
-    'granularity_five_minute', 'groupby_array_dim',
-    'groupby_double_dim', 'groupby_month_and_dim',
-    'having_equalto_lessthan', 'join_left_deep_tree',
-    'join_orders_customers',
-    'lookup_neq_matches_null', 'mv_filter_in', 'mv_token_counts',
-    'postagg_expression', 'round_contract_orders',
-    'salted_groupby_skew', 'scan_high_value_orders',
-    'semantic_dedup_embeddings',
-    'semantic_dedup_scale_mode', 'sql_lookup_fn',
-    'stratified_sample_documents', 'supervisor_spec_rollup',
-    'text_quality', 'text_winnowing_fingerprint',
-    'time_ceil_origin_buckets', 'time_extract_hour',
-    'timeboundary_filtered_min', 'timeseries_compound_period',
-    'timeseries_desc_limit', 'timeseries_over_join', 'topn_per_month',
-    'topn_time_extraction', 'train_test_split_counts',
-    'tuple_sketch_order_totals', 'union_hetero_schemas',
-    'virtual_column_bucket',
-)
-# r12 leftovers front the r17 rotation (both locally re-oracled
-# green this round; see PARITY.md)
-_R16_NEXT = ('granularity_none_identity', 'scan_result_envelope',
-             'lambda_realtime_union')
-
-# Round-17 gate window (VERDICT r16 task #1): the 4 evidence
-# stragglers first — the 3 r12-age leftovers (_R16_NEXT) plus
-# legacy_hllc_timeseries (registry entry #201, added late in r16 and
-# never inside a driver window) — then 46 of the 50 entries whose
-# latest driver evidence is r13 (cohort computed by union-diffing all
-# 16 CORRECTNESS files). The 50-cap forces FOUR r13 entries to stay
-# behind: sql_floor_to_unit, sql_safe_divide, sql_scalar_shims,
-# sql_time_ops — pure scalar-function translations with dense golden
-# suite coverage (test_golden_scalars/test_golden_macros), the
-# lowest-risk deferral; they front the r18 rotation (_R17_NEXT).
-# After r17 no driver evidence predates r13, and those four are the
-# only r13 holdovers.
-_R17_WINDOW = (
-    'granularity_none_identity', 'scan_result_envelope',
-    'lambda_realtime_union', 'legacy_hllc_timeseries',
-    # r13-evidence cohort (46 of 50)
-    'asof_join_events', 'bound_version_comparator', 'c4_clean_filters',
-    'compaction_lifecycle', 'corpus_top_ngrams', 'dedup_components',
-    'doc_chunks', 'expression_array_fold', 'expression_cartesian',
-    'expression_hyper_unique_fold', 'expression_time_format',
-    'filter_bound_lexicographic', 'gopher_quality_rules',
-    'histogram_quantity', 'human_readable_formats',
-    'hyperunique_complex_requery', 'info_schema_lookup_catalog',
-    'ipv4_custkey_subnets', 'leakage_safe_split_counts',
-    'lifecycle_publish_query', 'momentsketch_quartiles',
-    'mv_filter_any_match', 'null_dim_three_valued',
-    'quantile_postagg_family', 'quantiles_sketch_median',
-    'rollup_reaggregate', 'scan_time_desc', 'search_fragment_multi',
-    'search_regex', 'segment_metadata_orders', 'session_window_user',
-    'sql_array_fns', 'sql_bit_aggs', 'sql_bloom_filter_test',
-    'sql_earliest_by', 'sql_frozen_current_timestamp', 'sql_ipv4',
-    'sql_mv_first_word', 'streaming_rollup_hourly',
-    'tdigest_quantile_price', 'text_normalize_scrub',
-    'text_unigram_logprob', 'theta_rollup_merge',
-    'theta_setop_postagg', 'timeseries_zero_fill',
-    'timewarp_week_over_week',
-)
-# r13-evidence leftovers — front the r18 rotation
-_R17_NEXT = ('sql_floor_to_unit', 'sql_safe_divide',
-             'sql_scalar_shims', 'sql_time_ops')
-
-# Round-18 gate window (VERDICT r17 task #6): the never-driver-checked
-# pushdown gate first, then the four r13-evidence holdovers
-# (_R17_NEXT), then the five entries whose CODE churned in the r18
-# optimization round while their evidence predates it —
-# dedup_embedding_cosine (r15 evidence; single-scan bucket fan-out),
-# dedup_ngram_jaccard (r16; windowed set sizes), dedup_components +
-# leakage_safe_split_counts (r17; one-join label rounds),
-# text_unigram_logprob (r17; lazy totals) — then 40 of the 47
-# r14-evidence entries (the oldest cohort left, computed by
-# union-diffing all 17 CORRECTNESS files), fronted by the two that
-# ALSO sit on r18-churned code (dsir_importance_weights on
-# importance.py, dedup_components_star on graph.py). The 50-cap
-# forces SEVEN r14 entries to stay behind (_R18_NEXT): pure
-# SQL-dialect scalar/shim translations and the two spatial filters —
-# code untouched since r14, dense golden-suite coverage
-# (test_golden_macros / test_golden_filter_spatial), the lowest-risk
-# deferral. After r18 no driver evidence predates r14.
-_R18_WINDOW = (
-    'druid_segment_pushdown_scan',
-    # r13 holdovers
-    'sql_floor_to_unit', 'sql_safe_divide', 'sql_scalar_shims',
-    'sql_time_ops',
-    # r18-churned, pre-r18 evidence
-    'dedup_embedding_cosine', 'dedup_ngram_jaccard', 'dedup_components',
-    'leakage_safe_split_counts', 'text_unigram_logprob',
-    # r14-evidence cohort (40 of 47), churn overlap first
-    'dsir_importance_weights', 'dedup_components_star',
-    'agg_filtered_sum', 'bloom_dim_filter', 'cardinality_by_value',
-    'decontaminate_report', 'dedup_edit_distance', 'dedup_simhash',
-    'dedup_substring_overlap', 'deterministic_shuffle_order',
-    'expression_lambda_agg', 'filter_interval_expression',
-    'hll_estimation_mode', 'hll_sketch_rollup_merge',
-    'hll_user_cardinality', 'ingest_inline_csv',
-    'interval_filter_extraction_fn', 'kll_estimation_mode',
-    'leakage_split_string_keys', 'mixture_weights_lang',
-    'multimodal_features', 'multimodal_frame_sample', 'multimodal_resize',
-    'pack_sequences_budget', 'scrub_common_lines',
-    'segment_pruned_timeseries', 'similarity_ivf_topk',
-    'similarity_ivfpq_refined', 'similarity_lsh_topk',
-    'similarity_pq_topk', 'sql_insert_extern', 'sql_theta_set_ops',
-    'streaming_stateful_running_agg', 'text_fingerprint',
-    'text_language_id', 'text_repetition', 'text_token_stats',
-    'tfidf_top_terms', 'theta_estimation_mode', 'theta_set_ops',
-)
-# r14-evidence leftovers — the only pre-r15 evidence after r18
-_R18_NEXT = ('sql_scalar_shims2', 'sql_scalar_shims3',
-             'sql_parameterized', 'sql_array_agg_sorted',
-             'sql_lookup_schema_join', 'spatial_rectangular',
-             'spatial_polygon')
-
-
-def _entry_order(name: str) -> tuple:
-    if name in _R18_WINDOW:
-        return (-2, _R18_WINDOW.index(name))
-    if name in _R18_NEXT:
-        return (-1, _R18_NEXT.index(name))
-    if name in _R17_WINDOW:
-        return (0, _R17_WINDOW.index(name))
-    if name in _R17_NEXT:
-        return (1, _R17_NEXT.index(name))
-    if name in _R16_WINDOW:
-        return (2, _R16_WINDOW.index(name))
-    if name in _R16_NEXT:
-        return (3, _R16_NEXT.index(name))
-    if name in _R15_WINDOW:
-        return (4, _R15_WINDOW.index(name))
-    # freshest evidence last: r12 window passed in r12, r13 in r13,
-    # r14 in r14 (every r12/r13 entry not already placed above keeps
-    # its staleness-ordered slot — r17 review #6)
-    if name in _R12_WINDOW:
-        return (6, _R12_WINDOW.index(name))
-    if name in _R13_WINDOW:
-        return (7, _R13_WINDOW.index(name))
-    if name in _R14_WINDOW:
-        return (8, _R14_WINDOW.index(name))
-    return (5, 0)  # stable within group (dict keeps file order)
+def _last_green_round() -> dict[str, int]:
+    last: dict[str, int] = {}
+    for path in glob.glob(os.path.join(_EVIDENCE_DIR, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
+        with open(path) as f:
+            for name, v in json.load(f).items():
+                green = (v.get("rows_match") and v.get("schema_match")
+                         and v.get("hash_match") and v.get("err") is None)
+                if green:
+                    last[name] = max(last.get(name, rnd), rnd)
+    return last
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    names = sorted(_QUERIES, key=lambda n: (_entry_order(n),))
+    last = _last_green_round()
+    names = sorted(_QUERIES, key=lambda n: (n in last, last.get(n, 0)))
     return {n: _QUERIES[n] for n in names}
 
 

@@ -223,14 +223,16 @@ def embedding_cosine_pairs(df: DataFrame, dim: int,
     set is found by a vector-free (table, bucket) aggregation and
     broadcast as a LEFT ANTI join — the embedding payload is never
     shuffled for the cap, only for the one blocked self-join. (r18
-    A/B, tools/ab_embcos.py: a window-count cap keyed on the join key
+    A/B, commit a7e6a08: a window-count cap keyed on the join key
     looked cheaper on paper — no second aggregate — but the
     exchange+sort+window pair under both join sides measured x2 WORSE
     at 10x amplified collision density, 6.4 s vs 3.2 s median, while
     tying at sf0.1; the vector-free aggregate over the persisted
-    buckets stays.) At 100 TB the buckets are materialized at ingest
-    and the table clustered by them, making the self-join
-    co-partitioned.
+    buckets stays. The variant never shipped; wrap it as a
+    ``(spark, sf_dir)`` builder and re-time it with
+    ``python tools/ab.py MOD:FUNC MOD:FUNC --sf DIR``.) At 100 TB the
+    buckets are materialized at ingest and the table clustered by them,
+    making the self-join co-partitioned.
 
     ``verify="expression"`` (default) runs the exact-cosine pass as
     built-in expressions — oracle-exact, UDF-free, and (r14) unrolled

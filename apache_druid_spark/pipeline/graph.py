@@ -119,9 +119,11 @@ def _min_label_propagation(bidir: DataFrame, vertices: DataFrame,
         # with the current labels into ONE groupBy-min — the r17 shape
         # ran a second join (neighbor-min LEFT-joined back onto labels
         # plus least/coalesce) per round just to carry unchanged nodes
-        # through; the union does that for free (r18, guide §2.4 —
-        # interleaved A/B tools/ab_components.py: median 1.37->1.21 s
-        # at sf0.1, 3.31->2.35 s at 10x, identical labelings).
+        # through; the union does that for free (r18, guide §2.4,
+        # commit 28e15b4 — interleaved A/B: median 1.37->1.21 s at
+        # sf0.1, 3.31->2.35 s at 10x, identical labelings; re-run with
+        # `python tools/ab.py --entry dedup_components 28e15b4^
+        # 28e15b4 --sf DIR`).
         msgs = (bidir.join(labels, bidir["v"] == labels[node_col])
                 .select(F.col("u").alias(node_col), "component"))
         updated = (labels.unionAll(msgs)

@@ -67,13 +67,12 @@ def bucket_log_ratios(raw: DataFrame, target: DataFrame,
                       text_col: str = "text", n_buckets: int = 8192,
                       ngrams: tuple[int, ...] = (1, 2),
                       raw_grams: DataFrame | None = None,
-                      tgt_grams: DataFrame | None = None,
                       joined_counts: DataFrame | None = None) -> DataFrame:
     """(bucket, log_ratio): log p_target - log p_raw with +1 smoothing.
     At most ``n_buckets`` rows — broadcastable by construction.
-    ``raw_grams``/``tgt_grams`` let importance_weights share one
-    materialized raw gram table between the corpus counts and the
-    per-doc weights instead of re-tokenizing a corpus.
+    ``raw_grams`` lets importance_weights share one materialized raw
+    gram table between the corpus counts and the per-doc weights
+    instead of re-tokenizing the raw corpus.
     ``joined_counts`` goes further: a precomputed (bucket, c_raw,
     c_tgt) table (one conditional aggregate when the target is a
     flagged slice of raw — see importance_weights target_predicate)
@@ -82,9 +81,7 @@ def bucket_log_ratios(raw: DataFrame, target: DataFrame,
         return _ratios_from_counts(joined_counts, n_buckets)
     if raw_grams is None:
         raw_grams = _gram_buckets(raw, text_col, None, n_buckets, ngrams)
-    if tgt_grams is None:
-        tgt_grams = _gram_buckets(target, text_col, None, n_buckets,
-                                  ngrams)
+    tgt_grams = _gram_buckets(target, text_col, None, n_buckets, ngrams)
     raw_counts = (raw_grams.groupBy("bucket")
                   .agg(F.count(F.lit(1)).alias("c_raw")))
     tgt_counts = (tgt_grams.groupBy("bucket")
@@ -134,7 +131,6 @@ def importance_weights(raw: DataFrame, target: DataFrame,
                        n_buckets: int = 8192,
                        ngrams: tuple[int, ...] = (1, 2),
                        round_to: int | None = 4,
-                       target_within_raw: bool = False,
                        target_predicate=None) -> DataFrame:
     """(id, n_grams, weight) per raw document: the DSIR log importance
     weight. Higher = more target-like; resample/top-k on it to select.
@@ -145,32 +141,19 @@ def importance_weights(raw: DataFrame, target: DataFrame,
     once, read twice — either way one tokenize/hash pass over 100 TB,
     not two).
 
-    ``target_within_raw=True`` declares that ``target`` is a row
-    subset of ``raw`` (same ``id_col`` values and texts, ids unique) —
-    the common DSIR setup where the target is a high-quality SLICE of
-    the corpus being scored. The target bucket counts then come from
-    the already-materialized raw gram table via a semi-join on the
-    target ids (a column-pruned id scan — no tokenize), instead of a
-    second full tokenize+shingle+hash pass over the target text (r18;
-    guide §1.2: don't compute things twice). Value-identical to the
-    two-pass form by construction; AQE broadcasts the id side when it
-    is small, and at 100 TB shuffling (id, bucket) longs is far
-    cheaper than re-tokenizing the slice.
-
-    ``target_predicate`` (a boolean Column over ``raw``) goes one step
-    further for the common case where the target slice is DEFINED by a
-    predicate on the scored corpus (e.g. ``lang == 'en'``): the flag
-    rides every gram row as one boolean, and both corpus bucket counts
-    come from ONE conditional aggregate over the persisted gram table —
-    no id semi-join, no per-side count tables, no full-outer count
-    join, one fewer pass over the gram table (r18; guide §2.4).
-    Value-identical to ``target_within_raw`` with
-    ``target = raw.filter(target_predicate)``: the slice's gram bag is
-    exactly the flagged gram rows (count(when(flag, 1)) counts only
-    predicate-TRUE rows, matching filter()'s null handling), and since
-    the slice is a subset of raw, the flagged aggregate covers the same
-    bucket set as the old full join. Supersedes ``target`` /
-    ``target_within_raw`` when given."""
+    ``target_predicate`` (a boolean Column over ``raw``) serves the
+    common case where the target slice is DEFINED by a predicate on
+    the scored corpus (e.g. ``lang == 'en'``): the flag rides every
+    gram row as one boolean, and both corpus bucket counts come from
+    ONE conditional aggregate over the persisted gram table — no
+    second tokenize pass over the target, no per-side count tables, no
+    full-outer count join (r18; guide §2.4). Value-identical to the
+    two-pass form with ``target = raw.filter(target_predicate)``: the
+    slice's gram bag is exactly the flagged gram rows
+    (count(when(flag, 1)) counts only predicate-TRUE rows, matching
+    filter()'s null handling), and since the slice is a subset of raw,
+    the flagged aggregate covers the same bucket set as the full join.
+    Supersedes ``target`` when given."""
     from pyspark import StorageLevel
 
     doc_grams = _gram_buckets(raw, text_col, id_col, n_buckets, ngrams,
@@ -180,23 +163,12 @@ def importance_weights(raw: DataFrame, target: DataFrame,
         joined_counts = doc_grams.groupBy("bucket").agg(
             F.count(F.lit(1)).alias("c_raw"),
             F.count(F.when(F.col("__tgt"), 1)).alias("c_tgt"))
-        ratios = F.broadcast(
-            bucket_log_ratios(raw, target, text_col, n_buckets, ngrams,
-                              joined_counts=joined_counts))
-        return (doc_grams.join(ratios, "bucket")
-                .groupBy(id_col)
-                .agg(F.count(F.lit(1)).alias("n_grams"),
-                     _weight_expr(round_to).alias("weight")))
-    tgt_grams = None
-    if target_within_raw:
-        tgt_grams = (doc_grams
-                     .join(target.select(id_col), id_col, "left_semi")
-                     .select("bucket"))
-    ratios = F.broadcast(
-        bucket_log_ratios(raw, target, text_col, n_buckets, ngrams,
-                          raw_grams=doc_grams.select("bucket"),
-                          tgt_grams=tgt_grams))
-    return (doc_grams.join(ratios, "bucket")
+        ratios = bucket_log_ratios(raw, target, text_col, n_buckets, ngrams,
+                                   joined_counts=joined_counts)
+    else:
+        ratios = bucket_log_ratios(raw, target, text_col, n_buckets, ngrams,
+                                   raw_grams=doc_grams.select("bucket"))
+    return (doc_grams.join(F.broadcast(ratios), "bucket")
             .groupBy(id_col)
             .agg(F.count(F.lit(1)).alias("n_grams"),
                  _weight_expr(round_to).alias("weight")))

@@ -26,6 +26,10 @@ from apache_druid_spark.sql.dialect import druid_sql
 from apache_druid_spark.sql.results import format_results
 
 
+class BadJsonQueryError(ValueError):
+    """A POST body that parses but is not a JSON object."""
+
+
 def _query_exception_json(e: Exception) -> dict:
     """The Druid QueryException wire shape (sql/.../SqlPlanningException
     PlanningError + query/.../BadQueryException: {error, errorMessage,
@@ -36,7 +40,11 @@ def _query_exception_json(e: Exception) -> dict:
     from apache_druid_spark.plans.timeout import QueryTimeoutError
 
     name = type(e).__name__
-    if isinstance(e, QueryTimeoutError):
+    if isinstance(e, (json.JSONDecodeError, BadJsonQueryError)):
+        # BadJsonQueryException.java: errorCode "Json parse failed"
+        code, cls = ("Json parse failed",
+                     "com.fasterxml.jackson.core.JsonParseException")
+    elif isinstance(e, QueryTimeoutError):
         # QueryTimeoutException.java: errorCode "Query timeout"
         # (served with HTTP 504 upstream; the envelope is what
         # clients key on)
@@ -122,11 +130,15 @@ class DruidHttpServer:
                 self.wfile.write(payload.encode())
 
             def do_POST(self):
-                n = int(self.headers.get("Content-Length", 0))
-                body = json.loads(self.rfile.read(n) or b"{}")
                 path = self.path.rstrip("/")
                 cache_state = None
                 try:
+                    n = int(self.headers.get("Content-Length", 0))
+                    body = json.loads(self.rfile.read(n) or b"{}")
+                    if not isinstance(body, dict):
+                        raise BadJsonQueryError(
+                            "request body must be a JSON object, got "
+                            f"{type(body).__name__}")
                     if path == "/druid/v2/sql/avatica":
                         # JDBC statements are stateful; never cached
                         payload = json.dumps(outer.avatica.handle(body))

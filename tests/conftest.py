@@ -13,6 +13,11 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def sf_dir():
+    return SF_DIR
+
+
+@pytest.fixture(scope="session")
 def registry(spark):
     reg = DatasourceRegistry(spark)
     register_testdata(reg, SF_DIR)

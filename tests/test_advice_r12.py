@@ -14,8 +14,9 @@
    with few distinct keys but many duplicate rows was pushed to the
    correlated-subquery path (where the HOF-lambda limitation applies).
    The cap now measures post-dedup (groupBy k, max v) keys.
-4. low — dead _R05_WINDOW/_R06_WINDOW rotation tuples removed from
-   __spark_entry__ (hygiene; asserted here so they stay gone).
+4. low — hand-edited rotation tuples removed from __spark_entry__;
+   the entry order is derived from the committed evidence files
+   (asserted here against an independent computation of the rule).
 """
 
 from __future__ import annotations
@@ -127,27 +128,50 @@ def test_lookup_oversized_post_dedup_still_subquery(spark, base_table,
     assert "SELECT v FROM lookup_biggy12" in text
 
 
-# -- 4: retired rotation tuples stay deleted ---------------------------------
+# -- 4: entry order is derived from committed evidence ---------------------
 
-def test_dead_windows_removed():
+_R14_EVIDENCE = {"sql_scalar_shims2", "sql_scalar_shims3",
+                 "sql_parameterized", "sql_array_agg_sorted",
+                 "sql_lookup_schema_join", "spatial_rectangular",
+                 "spatial_polygon"}
+
+
+def test_dead_windows_removed(tmp_path, monkeypatch):
+    import json
+    import os
+    import re
+
     import __spark_entry__ as e
-    for dead in ("_R05_WINDOW", "_R06_WINDOW", "_R08_WINDOW",
-                 "_R09_WINDOW", "_R11_NEXT", "_R12_NEXT"):
-        assert not hasattr(e, dead)
-    # live rotation state is well-formed: the CURRENT window is
-    # exactly 50 known queries (r18 names; earlier windows stay live —
-    # they order the freshest-evidence groups at the back, and each
-    # _RNN_NEXT is consumed into the following window)
-    qs = set(e.queries())
-    assert len(e._R18_WINDOW) == 50
-    assert set(e._R18_WINDOW) <= qs
-    assert set(e._R18_NEXT) <= qs
-    assert set(e._R17_NEXT) <= set(e._R18_WINDOW)
-    assert set(e._R16_NEXT) <= set(e._R17_WINDOW)
-    assert set(e._R14_NEXT) <= set(e._R15_WINDOW)
-    assert set(e._R13_NEXT) <= set(e._R14_WINDOW)
-    # the window fronts the driver's 50-entry correctness pass
-    assert list(e.queries())[:50] == list(e._R18_WINDOW)
+    assert not [n for n in vars(e)
+                if re.fullmatch(r"_R\d+_(WINDOW|NEXT)", n)]
+    assert not hasattr(e, "_entry_order")
+
+    # the rule, built bucket by bucket: never-green entries, then one
+    # bucket per evidence round (oldest first), each in file order
+    root = os.path.dirname(os.path.abspath(e.__file__))
+    rounds = sorted(int(m.group(1)) for f in os.listdir(root)
+                    if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", f)))
+    last = {}
+    for rnd in rounds:
+        with open(os.path.join(root, f"CORRECTNESS_r{rnd:02d}.json")) as f:
+            for name, v in json.load(f).items():
+                if (v["rows_match"] and v["schema_match"]
+                        and v["hash_match"] and v["err"] is None):
+                    last[name] = rnd
+    file_order = list(e._QUERIES)
+    expected = [n for n in file_order if n not in last]
+    for rnd in rounds:
+        expected += [n for n in file_order if last.get(n) == rnd]
+    got = list(e.queries())
+    assert got[:50] == expected[:50]
+    assert sorted(got) == sorted(file_order)
+    # today's oldest evidence is r14: those seven front the window
+    assert set(got[:7]) == _R14_EVIDENCE
+    assert {last[n] for n in got[:7]} == {14}
+
+    # no evidence files: plain file order
+    monkeypatch.setattr(e, "_EVIDENCE_DIR", str(tmp_path))
+    assert list(e.queries()) == file_order
 
 
 # -- round-12 scale item: registry-backed extent for published

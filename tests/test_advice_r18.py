@@ -123,22 +123,7 @@ def test_label_propagation_signature_convergence(spark):
                    (10, 10), (11, 10), (20, 20), (99, 99)}
 
 
-# -- dsir target_within_raw ≡ two-pass target counts ----------------------
-
-
-def test_dsir_target_within_raw_matches_two_pass(spark):
-    from apache_druid_spark.pipeline import importance_weights
-
-    docs = _docs(spark)
-    tgt = docs.filter(F.col("lang") == "en")
-    two_pass = {(r["doc_id"], r["n_grams"], r["weight"])
-                for r in importance_weights(docs, tgt,
-                                            n_buckets=512).collect()}
-    semi = {(r["doc_id"], r["n_grams"], r["weight"])
-            for r in importance_weights(
-                docs, tgt, n_buckets=512,
-                target_within_raw=True).collect()}
-    assert two_pass == semi and len(semi) > 0
+# -- dsir target_predicate ≡ two-pass target counts ------------------------
 
 
 def test_dsir_target_predicate_matches_two_pass(spark):

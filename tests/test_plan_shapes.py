@@ -611,8 +611,6 @@ def test_guarded_explode_shape_all_sites(reg):
                             max_shingle_freq=100),
         contamination_report(docs, docs.limit(5)),
         importance_weights(docs, docs.filter(F.col("lang") == "en"),
-                           n_buckets=512, target_within_raw=True),
-        importance_weights(docs, docs.filter(F.col("lang") == "en"),
                            n_buckets=512,
                            target_predicate=F.col("lang") == "en"),
         top_ngrams(docs, ngram=3, k=20),
@@ -622,3 +620,40 @@ def test_guarded_explode_shape_all_sites(reg):
                                tables=2),
     ):
         _assert_no_inferred_generate_filter(df)
+
+
+# -- scan/exchange budgets from the committed r18 after-dumps ---------------
+
+_R18_REWRITTEN = ("dedup_ngram_jaccard", "dedup_embedding_cosine",
+                  "dsir_importance_weights", "semantic_dedup_embeddings",
+                  "text_unigram_logprob", "moving_average_monthly",
+                  "window_moving_avg")
+
+
+def _scan_exchange_counts(plan: str) -> tuple[int, int]:
+    """Lines naming a parquet scan / an exchange (shuffle or broadcast)
+    in an ``explain("formatted")`` dump — tree and detail sections."""
+    lines = plan.splitlines()
+    return (sum("Scan parquet" in ln for ln in lines),
+            sum("Exchange" in ln for ln in lines))
+
+
+@pytest.mark.parametrize("name", _R18_REWRITTEN)
+def test_r18_plan_budget(spark, name):
+    """The r18 rewrites must not regress past their committed
+    ``plans/r18/<name>_after.txt`` scan and exchange counts (the dumps
+    are ``tools/explain_dump.py r18 after <name>`` output)."""
+    import os
+
+    import __spark_entry__ as e
+    dump = os.path.join(os.path.dirname(os.path.abspath(e.__file__)),
+                        "plans", "r18", f"{name}_after.txt")
+    with open(dump) as f:
+        budget = _scan_exchange_counts(f.read())
+    # the dumps come from a fresh session; an identical intermediate
+    # left cached by an earlier test prints its materialized plan under
+    # InMemoryRelation and inflates the counts
+    spark.catalog.clearCache()
+    got =_scan_exchange_counts(plan_of(e.queries()[name](spark, SF_DIR)))
+    assert got[0] <= budget[0] and got[1] <= budget[1], \
+        f"{name}: scans/exchanges {got} over budget {budget}"

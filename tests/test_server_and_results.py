@@ -353,6 +353,39 @@ def test_sql_error_response_shape(spark, reg):
         srv.stop()
 
 
+def test_malformed_post_body_error_envelope(spark, reg):
+    """QueryResource's BadJsonQueryException: a body that is not JSON,
+    or not a JSON object, is a 400 with the QueryException envelope —
+    not a dropped connection — and the server keeps serving."""
+    import urllib.error
+
+    from apache_druid_spark.server import DruidHttpServer
+
+    srv = DruidHttpServer(spark, reg, port=0)
+    srv.start()
+    try:
+        def post(raw: bytes):
+            req = urllib.request.Request(
+                f"http://127.0.0.1:{srv.port}/druid/v2", raw,
+                {"Content-Type": "application/json"})
+            try:
+                with urllib.request.urlopen(req) as r:
+                    return r.status, json.loads(r.read())
+            except urllib.error.HTTPError as e:
+                return e.code, json.loads(e.read())
+
+        for raw in (b"{not json", b"[1]"):
+            status, err = post(raw)
+            assert status == 400, raw
+            assert {"error", "errorMessage", "errorClass"} <= set(err)
+            assert err["error"] == "Json parse failed"
+        status, rows = post(json.dumps(
+            {"queryType": "timeBoundary", "dataSource": "orders"}).encode())
+        assert status == 200 and "minTime" in rows[0]
+    finally:
+        srv.stop()
+
+
 def test_http_scan_native_result_format(spark, reg):
     # /druid/v2 scan honors the native resultFormat/batchSize envelope
     # (ScanResultValue.java) instead of the generic object rows

@@ -13,7 +13,8 @@ import importlib.util
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -29,15 +30,15 @@ def main() -> None:
     tag = sys.argv[1]
     suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
     names = sys.argv[3:]
-    entry = _load("/root/repo/__spark_entry__.py", "entry")
-    bench = _load("/root/repo/bench.py", "bench_mod")
+    entry = _load(os.path.join(ROOT, "__spark_entry__.py"), "entry")
+    bench = _load(os.path.join(ROOT, "bench.py"), "bench_mod")
     if not names:
         names = bench.HEADLINE
     from apache_druid_spark.session import get_spark
 
     spark = get_spark("explain_dump")
     qs = entry.queries()
-    outdir = os.path.join("/root/repo/plans", tag)
+    outdir = os.path.join(ROOT, "plans", tag)
     os.makedirs(outdir, exist_ok=True)
     for name in names:
         df = qs[name](spark, SF_DIR)
