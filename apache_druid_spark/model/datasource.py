@@ -20,11 +20,42 @@ rather than post-filtering.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 TIME_COLUMN = "__time"
+
+
+def local_path(uri: str) -> str | None:
+    """A file URI (as ``DataFrame.inputFiles()`` lists it) as a local
+    path; None for a remote store, whose footers are not free to read."""
+    if uri.startswith("file:"):
+        return unquote(urlparse(uri).path)
+    if "://" not in uri:
+        return uri
+    return None
+
+
+def _as_segment(df: DataFrame) -> DataFrame:
+    """``df`` as ONE partition when it reads exactly one local parquet
+    file holding exactly one row group — a single Druid segment, which
+    Spark scans as one task anyway. Declaring it (``coalesce(1)``, a
+    ``SinglePartition`` child) lets an aggregate, topN, sort, window or
+    streamed join side over the scan plan with no Exchange: one job,
+    one stage, one task, and nothing for a broker to merge. Any other
+    source is returned untouched."""
+    import pyarrow.parquet as pq
+
+    try:
+        files = df.inputFiles()
+        path = local_path(files[0]) if len(files) == 1 else None
+        if path is None or pq.ParquetFile(path).metadata.num_row_groups != 1:
+            return df
+    except Exception:  # noqa: BLE001 — unreadable footer: keep the plan
+        return df
+    return df.coalesce(1)
 
 
 @dataclass
@@ -100,7 +131,8 @@ class DatasourceRegistry:
     def register_parquet(
         self, name: str, path: str, time_column: str | None = None
     ) -> DataFrame:
-        df = self.register(name, self.spark.read.parquet(path), time_column)
+        df = self.register(name, _as_segment(self.spark.read.parquet(path)),
+                           time_column)
         if time_column is not None:
             # register() only renames/converts (monotonic) — footer
             # min/max of the raw column determine the __time extent
@@ -190,7 +222,7 @@ class DatasourceRegistry:
         At 100 TB this is the difference between listing/opening every
         segment file for footer stats and never touching directories
         outside the queried interval."""
-        df = self.spark.read.parquet(path)
+        df = _as_segment(self.spark.read.parquet(path))
         self._tables[name] = df
         self.footer_time_cols[name] = TIME_COLUMN
         self.epoch += 1

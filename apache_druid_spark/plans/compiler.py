@@ -29,7 +29,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from apache_druid_spark.model.datasource import TIME_COLUMN, DatasourceRegistry
+from apache_druid_spark.model.datasource import (
+    TIME_COLUMN, DatasourceRegistry, local_path,
+)
 from apache_druid_spark.model.granularity import time_floor_col
 from apache_druid_spark.operators.aggregations import (
     compile_aggregations, synthesize_quantile_postaggs)
@@ -615,8 +617,6 @@ def _footer_extent(df: DataFrame, raw_col: str, intervals: tuple):
         return None
     if not files:
         return None
-    from urllib.parse import unquote, urlparse
-
     import pyarrow.parquet as pq
 
     ivs = []
@@ -627,11 +627,8 @@ def _footer_extent(df: DataFrame, raw_col: str, intervals: tuple):
         ivs.append(parsed)
     lo = hi = None
     for uri in files:
-        if uri.startswith("file:"):
-            path = unquote(urlparse(uri).path)
-        elif "://" not in uri:
-            path = uri
-        else:
+        path = local_path(uri)
+        if path is None:
             return None  # remote store: listing footers not free here
         try:
             md = pq.ParquetFile(path).metadata

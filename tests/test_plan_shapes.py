@@ -36,6 +36,24 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
+def multi_file_registry(spark, tmp_path, name, time_column=None):
+    """A registry holding the fixture table ``name`` rewritten as two
+    files. A one-file, one-row-group table registers as a single
+    segment (``coalesce(1)``) and plans with no Exchange; the two-file
+    copy keeps the multi-partition shape a table has at scale."""
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(f"{SF_DIR}/{name}.parquet")
+    half = table.num_rows // 2
+    d = tmp_path / name
+    d.mkdir()
+    pq.write_table(table.slice(0, half), str(d / "part-0.parquet"))
+    pq.write_table(table.slice(half), str(d / "part-1.parquet"))
+    r = DatasourceRegistry(spark)
+    r.register_parquet(name, str(d), time_column)
+    return r
+
+
 def test_interval_filter_pushed_to_scan(reg):
     df = compile_query({
         "queryType": "timeseries", "dataSource": "lineitem",
@@ -260,13 +278,14 @@ def test_scrub_normalize_single_projection(reg):
     assert "EvalPython" not in body
 
 
-def test_pack_sequences_window_is_bucket_partitioned(spark, registry):
+def test_pack_sequences_window_is_bucket_partitioned(spark, tmp_path):
     """The packing prefix sum must run as a PARTITIONED window (over
     the hash buckets), never the single-task no-partition Window —
     the classic global-cumsum bottleneck at scale."""
     from apache_druid_spark.pipeline import pack_sequences
 
-    docs = registry.table("documents")
+    docs = multi_file_registry(spark, tmp_path, "documents").table(
+        "documents")
     plan = plan_of(pack_sequences(docs, budget=512, n_buckets=16))
     assert "Window" in plan
     assert "hashpartitioning(__bucket" in plan, plan
@@ -441,11 +460,12 @@ def test_gopher_rules_no_shuffle(reg):
     assert "EvalPython" not in body
 
 
-def test_sketch_postagg_fusion_single_shuffle(reg):
+def test_sketch_postagg_fusion_single_shuffle(spark, tmp_path):
     """The sketch post-aggregator synthesis (quantile family + theta
     set ops) must stay ONE aggregation: a single shuffle pair
     (partial/final), no join back, no second Exchange chain — at
     100 TB a per-post-agg re-aggregation would multiply the scan."""
+    reg = multi_file_registry(spark, tmp_path, "lineitem", "l_shipdate")
     q = {"queryType": "groupBy", "dataSource": "lineitem",
          "granularity": "all", "dimensions": ["l_linestatus"],
          "aggregations": [{"type": "quantilesDoublesSketch",

@@ -8,20 +8,22 @@ the O(log^2 n) claim: the star round count, wall time per stage, and
 the per-stage peak shuffle volume (pulled from the local Spark UI REST
 API after the run). Results belong in SCALE.md.
 
-Usage: PYTHONPATH=/root/repo python tools/dedup_chain_probe.py [N]
+Usage: python tools/dedup_chain_probe.py [N]
 """
 
 from __future__ import annotations
 
 import json
 import logging
+import os
 import sys
 import time
 import urllib.request
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from tools.scale_smoke import amplify  # noqa: E402
 

@@ -17,11 +17,13 @@ from __future__ import annotations
 
 import importlib.util
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = ("region nation customer supplier part orders lineitem events "
@@ -40,7 +42,7 @@ _BENIGN = {
 
 def _load_entry():
     spec = importlib.util.spec_from_file_location(
-        "entry", "/root/repo/__spark_entry__.py")
+        "entry", os.path.join(ROOT, "__spark_entry__.py"))
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)
     return m

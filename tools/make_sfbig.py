@@ -21,7 +21,8 @@ import os
 import shutil
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SRC = "/root/testdata/sf0.1"
 

@@ -9,15 +9,20 @@ VIEW) -> ORDER BY n LIMIT 20. Linear-ish ratios (<= ~N at Nx rows)
 confirm the explode multiplies rows only inside the partial-aggregate
 stage; super-linear would flag a shuffle of exploded rows.
 
-Usage: PYTHONPATH=/root/repo python tools/mv_explode_scale.py
+Usage: python tools/mv_explode_scale.py
 """
 
 from __future__ import annotations
 
 import json
+import os
+import sys
 import time
 
 from pyspark.sql import functions as F
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> int:

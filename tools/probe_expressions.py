@@ -4,10 +4,12 @@ tranche lands (reference sql/.../calcite/expression/ExpressionsTest.java)."""
 from __future__ import annotations
 
 import math
+import os
 import sys
 from datetime import datetime, date
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import SparkSession, types as T
 

@@ -2,10 +2,12 @@
 (processing/src/test/java/org/apache/druid/query/expression/)."""
 from __future__ import annotations
 
+import os
 import sys
 from datetime import datetime
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import SparkSession, types as T
 

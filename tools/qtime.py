@@ -15,7 +15,8 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -44,7 +45,7 @@ def main() -> None:
         elif not a.startswith("--"):
             args.append(a)
         i += 1
-    entry = _load("/root/repo/__spark_entry__.py", "entry")
+    entry = _load(os.path.join(ROOT, "__spark_entry__.py"), "entry")
     from apache_druid_spark.session import get_spark
 
     spark = get_spark("qtime")

@@ -9,8 +9,8 @@ Amplification cross-joins each row with a replica index and perturbs
 the id so replicas are distinct documents/vectors (no artificial exact
 dups beyond the natural rate).
 
-Usage: PYTHONPATH=/root/repo python tools/scale_smoke.py [N]
-       PYTHONPATH=/root/repo python tools/scale_smoke.py --recall [rows]
+Usage: python tools/scale_smoke.py [N]
+       python tools/scale_smoke.py --recall [rows]
 
 --recall (VERDICT r14 task #5): measures PQ and IVF-PQ recall@10
 against exact cosine on >= 100k DISTINCT synthetic vectors (the
@@ -24,10 +24,14 @@ exist for IVF to find and the run is reproducible.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
 from pyspark.sql import functions as F
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def amplify(df, n: int, id_col: str):
@@ -171,8 +175,6 @@ def engine_main(n: int) -> int:
     leakage_safe_split) over token-salted amplification. Prints one
     JSON line with x1/xN seconds, ratio, and the 1-min load recorded
     at each timed run (load attribution, same rationale as bench.py)."""
-    import os
-
     from apache_druid_spark import DatasourceRegistry, get_spark
     from apache_druid_spark.model.datasource import register_testdata
     from apache_druid_spark.pipeline import (

@@ -10,7 +10,7 @@ CORRECTNESS (tests/test_segment.py); this measures DECODE RATE so the
 "one segment per task" migration cost model in SCALE.md has a number
 behind it.
 
-Usage: PYTHONPATH=/root/repo python tools/segment_bench.py [rows]
+Usage: python tools/segment_bench.py [rows]
 """
 
 from __future__ import annotations
@@ -22,6 +22,9 @@ import struct
 import sys
 import tempfile
 import time
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def _generic_indexed_v1(elements) -> bytes:
