@@ -28,7 +28,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from apache_druid_spark.pipeline._util import parallelize_scan, staged_explode
+from apache_druid_spark.pipeline._util import (
+    ident, md5_long, parallelize_scan, staged_explode,
+)
 from apache_druid_spark.pipeline.dedup import _shingles, _tokens
 
 
@@ -37,18 +39,17 @@ def _gram_hashes(df: DataFrame, text_col: str, id_col: str | None,
     """Distinct (id?, h) rows: 60-bit md5-prefix hashes of k-token
     n-grams (same hash family as ngram_jaccard_pairs — 2^-60
     collisions are far below any contamination noise floor)."""
-    cols = ([F.col(id_col)] if id_col else [])
-    staged = parallelize_scan(df).select(
+    cols = [id_col] if id_col else []
+    staged = parallelize_scan(df).selectExpr(
         # stage tokens first — see _shingles docstring (O(n^2) otherwise)
-        *cols, _tokens(F.col(text_col)).alias("__toks"))
+        *[ident(c) for c in cols], f"{_tokens(text_col)} AS __toks")
     # staged_explode: shingle array evaluated once per row, no inferred
     # filter duplicating the tree (see _util.guarded_explode)
     return (staged_explode(
-        staged, cols,
-        F.array_distinct(_shingles(F.col("__toks"), ngram)), "__gram")
-        .select(*cols,
-                F.conv(F.substring(F.md5("__gram"), 1, 15), 16, 10)
-                .cast("long").alias("h")))
+        staged, cols, f"array_distinct({_shingles('__toks', ngram)})",
+        "__gram")
+        .selectExpr(*[ident(c) for c in cols],
+                    f"{md5_long('__gram', 15)} AS h"))
 
 
 def contamination_report(train: DataFrame, test: DataFrame,

@@ -10,6 +10,11 @@ Four strategies, cheapest first:
 Scale notes (the whole point):
   * Shingling/hashing are built-in expressions (md5/split/transform) —
     whole-stage codegen, no Python.
+  * Projections with higher-order functions are built as SQL text (one
+    parse per projection): the Column-API form spends several py4j
+    round trips per lambda and operator, which at the 16-hash
+    signature and pair expansion made the driver-side build a large
+    share of a short query's wall time.
   * Candidate generation is a groupBy/join on (band, hash) buckets —
     work is proportional to bucket collisions, never |docs|^2.
   * MinHash hashes each shingle ONCE (md5 -> 32-bit int), then applies
@@ -22,33 +27,36 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from apache_druid_spark.pipeline._util import parallelize_scan
+from apache_druid_spark.pipeline._util import (
+    ident, md5_long, parallelize_scan, sql_str,
+)
+
+_WHITESPACE = sql_str(r"\s+")
 
 
-def _tokens(text_col):
-    """Whitespace tokenization with empty-token removal."""
-    return F.filter(F.split(text_col, r"\s+"), lambda t: t != "")
+def _tokens(text_col: str) -> str:
+    """SQL text: whitespace tokenization of the column named
+    ``text_col``, with empty-token removal."""
+    return f"filter(split({ident(text_col)}, {_WHITESPACE}), t -> t != '')"
 
 
-def _shingles(toks, k: int):
-    """k-token shingles as strings: transform over token index range.
+def _shingles(toks: str, k: int) -> str:
+    """SQL text: k-token shingles as strings, a transform over the
+    token index range of the token-array column named ``toks``.
 
-    ``toks`` MUST be a materialized token-array column (a plain column
-    reference), never an inline ``_tokens(...)`` expression: the
-    transform lambda references it once per shingle, and Catalyst
-    re-evaluates a computed closure reference per element — inlining
-    the split turns an O(n) projection into O(n^2) per document
-    (measured 5x wall on sf0.1, and the factor grows with doc length).
-    Callers stage ``_tokens`` into a ``__toks`` column first; the extra
-    Project is collapsed-safe because Catalyst declines to inline
+    ``toks`` names a materialized token-array column, never an inline
+    ``_tokens(...)`` expression: the transform lambda references it
+    once per shingle, and Catalyst re-evaluates a computed closure
+    reference per element — inlining the split turns an O(n)
+    projection into O(n^2) per document (measured 5x wall on sf0.1,
+    and the factor grows with doc length). Callers stage ``_tokens``
+    into a ``__toks`` column first; the extra Project is
+    collapsed-safe because Catalyst declines to inline
     multi-referenced non-cheap expressions."""
-    n = F.size(toks)
-    return F.when(n < k, F.array(F.concat_ws(" ", toks))).otherwise(
-        F.transform(
-            F.sequence(F.lit(0), n - k),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
-        )
-    )
+    t, k = ident(toks), int(k)
+    return (f"CASE WHEN size({t}) < {k} THEN array(concat_ws(' ', {t})) "
+            f"ELSE transform(sequence(0, size({t}) - {k}), "
+            f"i -> concat_ws(' ', slice({t}, i + 1, {k}))) END")
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text",
@@ -93,21 +101,16 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
     column) so the num_hashes variants are multiply-adds, not repeated
     digests."""
     # stage tokens first — see _shingles docstring (O(n^2) otherwise)
-    staged = parallelize_scan(df).select(
-        F.col(id_col), _tokens(F.col(text_col)).alias("__toks"))
-    sh = _shingles(F.col("__toks"), shingle_k)
-    base = F.transform(
-        sh, lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10)
-                       .cast("long"))
-    hashed = staged.select(F.col(id_col), base.alias("__h"))
-    def _universal(a: int, b: int):
-        return lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(_MERSENNE_P)
-
-    sig = F.array(*[
-        F.array_min(F.transform(F.col("__h"), _universal(a, b)))
-        for a, b in _hash_coeffs(num_hashes)
-    ])
-    return hashed.select(F.col(id_col), sig.alias("minhash"))
+    idc = ident(id_col)
+    staged = parallelize_scan(df).selectExpr(
+        idc, f"{_tokens(text_col)} AS __toks")
+    hashed = staged.selectExpr(
+        idc, f"transform({_shingles('__toks', shingle_k)}, "
+             f"s -> {md5_long('s', 8)}) AS __h")
+    sig = ", ".join(
+        f"array_min(transform(__h, h -> (h * {a} + {b}) % {_MERSENNE_P}))"
+        for a, b in _hash_coeffs(num_hashes))
+    return hashed.selectExpr(idc, f"array({sig}) AS minhash")
 
 
 def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
@@ -130,31 +133,25 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     in-bucket pairs on a single task. Buckets past the cap are dropped
     here — exactly-identical docs are the job of exact_dedup (one
     hash-groupBy), which handles them without pair expansion."""
-    rows_per_band = num_hashes // bands
+    rows_per_band = int(num_hashes) // int(bands)
     sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_k)
-    banded = sigs.select(
-        F.col(id_col),
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(F.concat_ws("|", *[
-                    F.col("minhash")[b * rows_per_band + r]
-                    for r in range(rows_per_band)
-                ])).alias("bucket"),
-            )
-            for b in range(bands)
-        ])).alias("bb"),
-    ).select(id_col, "bb.band", "bb.bucket")
+    cells = ", ".join(
+        f"struct({b} AS band, md5(concat_ws('|', "
+        + ", ".join(f"minhash[{b * rows_per_band + r}]"
+                    for r in range(rows_per_band))
+        + ")) AS bucket)"
+        for b in range(int(bands)))
+    banded = sigs.selectExpr(
+        ident(id_col), f"explode(array({cells})) AS bb",
+    ).selectExpr(ident(id_col), "bb.band", "bb.bucket")
     buckets = (banded.groupBy("band", "bucket")
                .agg(F.array_sort(F.collect_set(id_col)).alias("ids"))
                .filter((F.size("ids") > 1)
                        & (F.size("ids") <= max_bucket_size)))
-    pairs = F.flatten(F.transform(
-        F.col("ids"),
-        lambda x, i: F.transform(
-            F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-            lambda y: F.struct(x.alias("id_a"), y.alias("id_b")))))
-    return (buckets.select(F.explode(pairs).alias("p"))
+    pairs = ("flatten(transform(ids, (x, i) -> transform("
+             "slice(ids, i + 2, size(ids)), "
+             "y -> struct(x AS id_a, y AS id_b))))")
+    return (buckets.selectExpr(f"explode({pairs}) AS p")
             .select("p.id_a", "p.id_b")
             .distinct())
 
@@ -177,28 +174,20 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     primitive."""
     if bits > 48:
         raise ValueError("simhash supports at most 48 bits")
-    df = parallelize_scan(df)
-    toks = _tokens(F.col(text_col))
-    base = F.transform(
-        toks, lambda t: F.conv(F.substring(F.md5(t), 1, 12), 16, 10)
-                         .cast("long"))
-    hashed = df.select(F.col(id_col), base.alias("__h"))
+    idc = ident(id_col)
+    hashed = parallelize_scan(df).selectExpr(
+        idc, f"transform({_tokens(text_col)}, w -> {md5_long('w', 12)})"
+             " AS __h")
 
-    def make_vote_step(p):
-        # closure factory: HOF lambdas must take exactly (acc, h)
-        def vote_step(acc, h):
-            bit = (F.floor(h.cast("double") / F.lit(p)).cast("long") % 2)
-            return acc + F.when(bit == 1, 1).otherwise(-1)
-        return vote_step
+    def bit_val(i: int) -> str:
+        vote = (f"aggregate(__h, 0, (acc, h) -> acc + CASE WHEN "
+                f"CAST(floor(CAST(h AS DOUBLE) / {float(2 ** i)!r}D) "
+                f"AS BIGINT) % 2 = 1 THEN 1 ELSE -1 END)")
+        return (f"CASE WHEN {vote} > 0 THEN CAST({2 ** i} AS BIGINT) "
+                f"ELSE CAST(0 AS BIGINT) END")
 
-    fp = None
-    for i in range(bits):
-        vote = F.aggregate(F.col("__h"), F.lit(0),
-                           make_vote_step(float(2 ** i)))
-        bit_val = F.when(vote > 0, F.lit(2 ** i).cast("long")
-                         ).otherwise(F.lit(0).cast("long"))
-        fp = bit_val if fp is None else fp + bit_val
-    return hashed.select(F.col(id_col), fp.alias("simhash"))
+    fp = " + ".join(bit_val(i) for i in range(int(bits)))
+    return hashed.selectExpr(idc, f"{fp} AS simhash")
 
 
 def embedding_cosine_pairs(df: DataFrame, dim: int,
@@ -246,7 +235,7 @@ def embedding_cosine_pairs(df: DataFrame, dim: int,
     before thresholding and agree (equivalence-tested)."""
     from apache_druid_spark.pipeline._util import staged_explode
     from apache_druid_spark.pipeline.similarity import (
-        _dot_cols, _norm, hyperplanes, lsh_bucket,
+        _dot_cols, _norm, hyperplanes, lsh_bucket_sql,
     )
 
     if verify not in ("expression", "numpy"):
@@ -258,15 +247,13 @@ def embedding_cosine_pairs(df: DataFrame, dim: int,
     # by a staged (guard-wrapped) explode — the r17 per-table-view
     # union scanned the source once per table. The tables x bits
     # hyperplane dots still run exactly once per row.
-    cells = F.array(*[
-        F.struct(
-            F.lit(t).alias("__table"),
-            lsh_bucket(f"`{vec_col}`",
-                       hyperplanes(bits, dim, seed=f"emb{t}:"))
-            .alias("__bucket"))
-        for t in range(tables)])
+    cells = "array(" + ", ".join(
+        f"struct({t} AS __table, " + lsh_bucket_sql(
+            ident(vec_col), hyperplanes(bits, dim, seed=f"emb{t}:"))
+        + " AS __bucket)"
+        for t in range(int(tables))) + ")"
     blocked = staged_explode(
-        base, [F.col(id_col), F.col(vec_col)], cells, "__tb",
+        base, [id_col, vec_col], cells, "__tb",
     ).select(F.col(id_col), F.col(vec_col),
              F.col("__tb.__table").alias("__table"),
              F.col("__tb.__bucket").alias("__bucket"))
@@ -400,20 +387,16 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
 
     from apache_druid_spark.pipeline._util import staged_explode
 
-    staged = parallelize_scan(df).select(
+    staged = parallelize_scan(df).selectExpr(
         # stage tokens first — see _shingles docstring (O(n^2) otherwise)
-        F.col(id_col), _tokens(F.col(text_col)).alias("__toks"),
+        ident(id_col), f"{_tokens(text_col)} AS __toks",
     )
     # staged_explode: shingle array evaluated once per row, no inferred
     # filter duplicating the tree (see _util.guarded_explode)
     posting = staged_explode(
-        staged, [F.col(id_col)],
-        F.array_distinct(_shingles(F.col("__toks"), shingle_k)), "shingle",
-    ).select(
-        F.col(id_col),
-        F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10)
-         .cast("long").alias("h"),
-    )
+        staged, [id_col],
+        f"array_distinct({_shingles('__toks', shingle_k)})", "shingle",
+    ).selectExpr(ident(id_col), f"{md5_long('shingle', 15)} AS h")
     stop = (posting.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
             .filter(F.col("df") > max_shingle_freq)
             .select("h"))

@@ -32,7 +32,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from apache_druid_spark.pipeline._util import parallelize_scan, staged_explode
+from apache_druid_spark.pipeline._util import (
+    ident, md5_long, parallelize_scan, staged_explode,
+)
 from apache_druid_spark.pipeline.dedup import _shingles, _tokens
 
 
@@ -51,16 +53,15 @@ def _gram_buckets(df: DataFrame, text_col: str, id_col: str | None,
         proj.append(flag.alias("__tgt"))
     # stage tokens first — see dedup._shingles docstring (O(n^2) otherwise)
     staged = parallelize_scan(df).select(
-        *proj, _tokens(F.col(text_col)).alias("__toks"))
-    gram_arrays = [_shingles(F.col("__toks"), n) for n in ngrams]
+        *proj, F.expr(f"{_tokens(text_col)} AS __toks"))
+    gram_arrays = ", ".join(_shingles("__toks", n) for n in ngrams)
     # staged_explode: gram array evaluated once per row, no inferred
     # filter duplicating the shingle tree (see _util.guarded_explode)
-    grams = staged_explode(staged, [F.col(n) for n in names],
-                           F.flatten(F.array(*gram_arrays)), "__gram")
-    bucket = F.pmod(
-        F.conv(F.substring(F.md5("__gram"), 1, 15), 16, 10).cast("long"),
-        F.lit(n_buckets))
-    return grams.select(*names, bucket.alias("bucket"))
+    grams = staged_explode(staged, names, f"flatten(array({gram_arrays}))",
+                           "__gram")
+    return grams.selectExpr(
+        *[ident(n) for n in names],
+        f"pmod({md5_long('__gram', 15)}, {int(n_buckets)}) AS bucket")
 
 
 def bucket_log_ratios(raw: DataFrame, target: DataFrame,
@@ -239,7 +240,7 @@ def unigram_logprob(docs: DataFrame, text_col: str = "text",
     to fixed rounding — oracle-checkable."""
     source = ref if ref is not None else docs
     ref_toks = staged_explode(parallelize_scan(source), [],
-                              _tokens(F.col(text_col)), "__tok")
+                              _tokens(text_col), "__tok")
     counts = ref_toks.groupBy("__tok").agg(
         F.count(F.lit(1)).alias("__c"))
     oov_lit = F.lit(0.0)  # mass of the OOV bucket (0 = no bucket)
@@ -276,8 +277,8 @@ def unigram_logprob(docs: DataFrame, text_col: str = "text",
             counts = F.broadcast(counts)    # bounded by construction
         totals = None
         denom = F.lit(float(n) + k * v_eff)
-    doc_toks = staged_explode(parallelize_scan(docs), [F.col(id_col)],
-                              _tokens(F.col(text_col)), "__tok")
+    doc_toks = staged_explode(parallelize_scan(docs), [id_col],
+                              _tokens(text_col), "__tok")
     lp = F.log((F.coalesce(F.col("__c"), oov_lit) + F.lit(k)) / denom)
     scored = doc_toks.join(counts, "__tok", "left")
     if max_vocab is None:

@@ -30,14 +30,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from apache_druid_spark.pipeline.dedup import _tokens
 from apache_druid_spark.pipeline.sampling import _hash_u60
 
 # high-bits divisor mapping a u60 hash into its ordered bucket
 _U60 = 1 << 60
-
-
-def _tokens(text_col):
-    return F.filter(F.split(text_col, r"\s+"), lambda t: t != "")
 
 
 def deterministic_shuffle(df: DataFrame, key_col: str = "doc_id",
@@ -69,7 +66,7 @@ def pack_sequences(df: DataFrame, budget: int = 2048,
         F.col(id_col), h.alias("__h"),
         (F.floor(h / F.lit(_U60 // n_buckets))).cast("int")
         .alias("__bucket"),
-        F.size(_tokens(F.col(text_col))).cast("long").alias("n_tokens"),
+        F.expr(f"CAST(size({_tokens(text_col)}) AS BIGINT) AS n_tokens"),
     )
     # phase 1: per-bucket totals -> driver-side exclusive running total
     # (n_buckets scalars — legitimately driver-side, like a lookup dim)

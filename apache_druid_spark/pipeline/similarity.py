@@ -170,11 +170,17 @@ def lsh_bucket(vec_sql: str, planes: list[list[float]]):
     in ONE expression breach the janino method limit (see
     _dot_literal_hof); built as ONE expr string — the Column form cost
     ~0.7 s of driver py4j per construction (r15 measurement)."""
+    return F.expr(lsh_bucket_sql(vec_sql, planes))
+
+
+def lsh_bucket_sql(vec_sql: str, planes: list[list[float]]) -> str:
+    """lsh_bucket as a SQL fragment, for callers composing a larger
+    expression string."""
     bits = " + ".join(
         f"(CASE WHEN ({_dot_literal_sql(vec_sql, p)}) > 0.0D "
         f"THEN {2 ** i}L ELSE 0L END)"
         for i, p in enumerate(planes))
-    return F.expr(f"CAST({bits} AS BIGINT)")
+    return f"CAST({bits} AS BIGINT)"
 
 
 def query_bucket(query: list[float], planes: list[list[float]]) -> int:

@@ -6,10 +6,12 @@ that Catalyst fuses into the scan."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from apache_druid_spark.pipeline._util import parallelize_scan
+from apache_druid_spark.pipeline._util import (
+    ident, parallelize_scan, sql_str,
+)
 
 # Minimal per-language stopword marker lists for the n-gram/stopword
 # language-ID heuristic (public common-word lists).
@@ -22,15 +24,22 @@ LANG_MARKERS: dict[str, list[str]] = {
 }
 
 
-def _tokens(text_col: Column) -> Column:
-    return F.filter(F.split(F.lower(text_col), r"\s+"), lambda t: t != "")
+_WHITESPACE = sql_str(r"\s+")
+_NEWLINE = sql_str("\n")
+
+
+def _tokens(text_col: str) -> str:
+    """SQL text: lowercased whitespace tokens of the column named
+    ``text_col``, with empty-token removal."""
+    return (f"filter(split(lower({ident(text_col)}), {_WHITESPACE}), "
+            f"t -> t != '')")
 
 
 def token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Token counting: whitespace tokens plus a BPE-ish subword estimate
     (words + punctuation clusters + CJK chars counted individually)."""
     df = parallelize_scan(df)
-    toks = _tokens(F.col(text_col))
+    toks = F.expr(_tokens(text_col))
     # BPE-ish: alnum runs, punct runs, and CJK codepoints each count
     bpe_ish = F.size(F.filter(
         F.split(F.col(text_col),
@@ -51,7 +60,7 @@ def language_id(df: DataFrame, text_col: str = "text",
     hits; argmax wins (ties broken by language code order).
     Reference behavior modeled on common n-gram language-ID heuristics."""
     df = parallelize_scan(df)
-    toks = _tokens(F.col(text_col))
+    toks = F.expr(_tokens(text_col))
     scores = []
     for lang, markers in sorted(LANG_MARKERS.items()):
         marker_arr = F.array(*[F.lit(m) for m in markers])
@@ -69,7 +78,7 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     ratio, uppercase ratio, repetition — composed into [0,1]."""
     df = parallelize_scan(df)
     text = F.col(text_col)
-    toks = _tokens(text)
+    toks = F.expr(_tokens(text_col))
     n_chars = F.length(text)
     n_tokens = F.size(toks)
     n_punct = n_chars - F.length(F.regexp_replace(text, r"[^\w\s]", ""))
@@ -106,7 +115,8 @@ GOPHER_STOPWORDS = ["the", "be", "to", "of", "and", "that", "have", "with"]
 
 
 def gopher_rules(df: DataFrame, text_col: str = "text",
-                 min_words: int = 50, max_words: int = 100_000) -> DataFrame:
+                 id_col: str = "doc_id", min_words: int = 50,
+                 max_words: int = 100_000) -> DataFrame:
     """Gopher structural quality rules (Rae et al. 2021, §A1.1 Table
     A1 — the filter set reused by FineWeb/Dolma/RefinedWeb):
 
@@ -124,63 +134,59 @@ def gopher_rules(df: DataFrame, text_col: str = "text",
     engine-independent — no float threshold can flip between Spark and
     an oracle. Rules emit as 0/1 ints; pass_gopher is their AND. At
     100 TB this stays a fused scan projection: Catalyst pipelines it
-    into the parquet read with zero exchanges.
+    into the parquet read with zero exchanges. Both projections are
+    built as SQL text (dedup module docstring: HOF build cost).
     """
-    df = parallelize_scan(df)
-    text = F.col(text_col)
+    text, idc = ident(text_col), ident(id_col)
+    ellipsis = r"(\.\.\.|…)"
     # stage arrays so lambdas don't re-evaluate the split per element
-    staged = df.select(
-        "doc_id",
-        _tokens(text).alias("__toks"),
-        F.filter(F.split(text, "\n"),
-                 lambda ln: F.trim(ln) != "").alias("__lines"),
-        (F.length(text) - F.length(F.regexp_replace(text, "#", ""))
-         + F.regexp_count(text, F.lit(r"(\.\.\.|…)"))
-         ).cast("long").alias("__symbols"),
+    staged = parallelize_scan(df).selectExpr(
+        idc,
+        f"{_tokens(text_col)} AS __toks",
+        f"filter(split({text}, {_NEWLINE}), ln -> trim(ln) != '')"
+        " AS __lines",
+        f"CAST(length({text}) - length(regexp_replace({text}, '#', ''))"
+        f" + regexp_count({text}, {sql_str(ellipsis)}) AS BIGINT)"
+        " AS __symbols",
     )
-    toks, lines = F.col("__toks"), F.col("__lines")
-    n_words = F.size(toks).cast("long")
-    word_chars = F.aggregate(
-        toks, F.lit(0).cast("long"), lambda a, t: a + F.length(t))
-    n_lines = F.size(lines).cast("long")
-    bullet_lines = F.size(F.filter(
-        lines, lambda ln: F.trim(ln).rlike("^[•*-]"))).cast("long")
-    ellipsis_lines = F.size(F.filter(
-        lines,
-        lambda ln: F.rtrim(ln).rlike(r"(\.\.\.|…)$"))).cast("long")
-    alpha_words = F.size(F.filter(
-        toks, lambda t: t.rlike("[a-z]"))).cast("long")
-    stops = F.array(*[F.lit(w) for w in GOPHER_STOPWORDS])
-    stop_distinct = F.size(
-        F.array_intersect(F.array_distinct(toks), stops)).cast("long")
-
-    def b(c: Column) -> Column:
-        return c.cast("int")
-
-    r_words = b((n_words >= min_words) & (n_words <= max_words))
-    r_mean_len = b((word_chars >= 3 * n_words)
-                   & (word_chars <= 10 * n_words) & (n_words > 0))
-    r_symbols = b(F.lit(10) * F.col("__symbols") <= n_words)
-    r_bullets = b(F.lit(10) * bullet_lines <= F.lit(9) * n_lines)
-    r_ellipsis = b(F.lit(10) * ellipsis_lines <= F.lit(3) * n_lines)
-    r_alpha = b(F.lit(5) * alpha_words >= F.lit(4) * n_words)
-    r_stops = b(stop_distinct >= 2)
-    return staged.select(
-        "doc_id", n_words.alias("n_words"), word_chars.alias("word_chars"),
-        r_words.alias("r_word_count"),
-        r_mean_len.alias("r_mean_word_len"),
-        r_symbols.alias("r_symbol_ratio"),
-        r_bullets.alias("r_bullet_lines"),
-        r_ellipsis.alias("r_ellipsis_lines"),
-        r_alpha.alias("r_alpha_words"),
-        r_stops.alias("r_stop_words"),
-        (r_words * r_mean_len * r_symbols * r_bullets * r_ellipsis
-         * r_alpha * r_stops).alias("pass_gopher"),
+    n_words = "CAST(size(__toks) AS BIGINT)"
+    word_chars = ("aggregate(__toks, CAST(0 AS BIGINT), "
+                  "(a, t) -> a + length(t))")
+    n_lines = "CAST(size(__lines) AS BIGINT)"
+    bullet_lines = ("CAST(size(filter(__lines, "
+                    f"ln -> trim(ln) RLIKE {sql_str('^[•*-]')})) AS BIGINT)")
+    ellipsis_lines = ("CAST(size(filter(__lines, "
+                      f"ln -> rtrim(ln) RLIKE {sql_str(ellipsis + '$')}))"
+                      " AS BIGINT)")
+    alpha_words = ("CAST(size(filter(__toks, "
+                   f"t -> t RLIKE {sql_str('[a-z]')})) AS BIGINT)")
+    stops = ", ".join(sql_str(w) for w in GOPHER_STOPWORDS)
+    stop_distinct = ("CAST(size(array_intersect(array_distinct(__toks), "
+                     f"array({stops}))) AS BIGINT)")
+    rules = {
+        "r_word_count": f"({n_words} >= {int(min_words)}) "
+                        f"AND ({n_words} <= {int(max_words)})",
+        "r_mean_word_len": f"({word_chars} >= {n_words} * 3) "
+                           f"AND ({word_chars} <= {n_words} * 10) "
+                           f"AND ({n_words} > 0)",
+        "r_symbol_ratio": f"10 * __symbols <= {n_words}",
+        "r_bullet_lines": f"10 * {bullet_lines} <= 9 * {n_lines}",
+        "r_ellipsis_lines": f"10 * {ellipsis_lines} <= 3 * {n_lines}",
+        "r_alpha_words": f"5 * {alpha_words} >= 4 * {n_words}",
+        "r_stop_words": f"{stop_distinct} >= 2",
+    }
+    flags = {name: f"CAST({rule} AS INT)" for name, rule in rules.items()}
+    return staged.selectExpr(
+        idc, f"{n_words} AS n_words", f"{word_chars} AS word_chars",
+        *[f"{flag} AS {name}" for name, flag in flags.items()],
+        " * ".join(f"({flag})" for flag in flags.values())
+        + " AS pass_gopher",
     )
 
 
 def c4_filters(df: DataFrame, text_col: str = "text",
-               min_sentences: int = 3, min_line_words: int = 5) -> DataFrame:
+               id_col: str = "doc_id", min_sentences: int = 3,
+               min_line_words: int = 5) -> DataFrame:
     """C4 cleaning heuristics (Raffel et al. 2020, JMLR §2.2 — the
     Colossal Clean Crawled Corpus rules): keep only lines that end in
     terminal punctuation AND hold >= min_line_words words; drop pages
@@ -195,7 +201,7 @@ def c4_filters(df: DataFrame, text_col: str = "text",
     df = parallelize_scan(df)
     text = F.col(text_col)
     staged = df.select(
-        "doc_id", text,
+        F.col(id_col), text,
         F.filter(F.split(text, "\n"),
                  lambda ln: F.trim(ln) != "").alias("__lines"),
     )
@@ -216,7 +222,7 @@ def c4_filters(df: DataFrame, text_col: str = "text",
     keep = ((n_sentences >= min_sentences)
             & (has_lorem == 0) & (has_brace == 0)).cast("int")
     return staged.select(
-        "doc_id",
+        F.col(id_col),
         F.size(lines).cast("long").alias("n_lines"),
         F.size(kept).cast("long").alias("n_lines_kept"),
         n_sentences.alias("n_sentences"),
@@ -245,7 +251,7 @@ def repetition_score(df: DataFrame, text_col: str = "text",
     # dedup._shingles docstring)
     staged = parallelize_scan(df).select(
         "doc_id", F.col(text_col),
-        _tokens(F.col(text_col)).alias("__toks"))
+        F.expr(_tokens(text_col)).alias("__toks"))
     toks = F.col("__toks")
     n_tok = F.size(toks)
     grams = F.when(n_tok < ngram, F.array(F.concat_ws(" ", toks))).otherwise(
@@ -327,12 +333,11 @@ def top_ngrams(df: DataFrame, text_col: str = "text", ngram: int = 3,
     from apache_druid_spark.pipeline._util import staged_explode
     from apache_druid_spark.pipeline.dedup import _shingles, _tokens
 
-    staged = parallelize_scan(df).select(
-        _tokens(F.col(text_col)).alias("__toks"))
+    staged = parallelize_scan(df).selectExpr(
+        f"{_tokens(text_col)} AS __toks")
     # staged_explode: gram array evaluated once per row, no inferred
     # filter duplicating the tree (see _util.guarded_explode)
-    return (staged_explode(staged, [],
-                           _shingles(F.col("__toks"), ngram), "gram")
+    return (staged_explode(staged, [], _shingles("__toks", ngram), "gram")
             .groupBy("gram")
             .agg(F.count(F.lit(1)).alias("occurrences"))
             .orderBy(F.col("occurrences").desc(), F.col("gram").asc())
@@ -344,7 +349,7 @@ def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     md5 over the sorted distinct token set (a set-hash 'rolling hash'
     analogue that any engine can reproduce)."""
     df = parallelize_scan(df)
-    toks = F.array_sort(F.array_distinct(_tokens(F.col(text_col))))
+    toks = F.array_sort(F.array_distinct(F.expr(_tokens(text_col))))
     return df.withColumn("fingerprint", F.md5(F.array_join(toks, " ")))
 
 
@@ -484,7 +489,7 @@ def chunk_documents(df: DataFrame, text_col: str = "text",
     stride rows per doc), and it parallelizes with the scan: no
     shuffle until a downstream aggregation asks for one."""
     df = parallelize_scan(df)
-    toks = _tokens(F.col(text_col))
+    toks = F.expr(_tokens(text_col))
     staged = df.select(F.col(id_col), toks.alias("__toks"))
     n = F.size("__toks")
     starts = F.sequence(F.lit(0), F.greatest(n - 1, F.lit(0)),
@@ -534,12 +539,12 @@ def tfidf_top_terms(df: DataFrame, text_col: str = "text",
 
     from apache_druid_spark.pipeline._util import guarded_explode
 
-    staged = parallelize_scan(df).select(
-        F.col(id_col), _tokens(F.col(text_col)).alias("__toks"))
+    staged = parallelize_scan(df).selectExpr(
+        ident(id_col), f"{_tokens(text_col)} AS __toks")
     # guarded_explode: keeps InferFiltersFromGenerate from duplicating
     # the tokenize tree into a pushed-down pre-filter (_util docstring)
-    tf = (staged.select(F.col(id_col),
-                        guarded_explode("__toks").alias("term"))
+    tf = (staged.selectExpr(ident(id_col),
+                            f"{guarded_explode('__toks')} AS term")
           .groupBy(id_col, "term")
           .agg(F.count(F.lit(1)).alias("tf")))
     n_docs = df.agg(F.count(F.lit(1)).alias("__n_docs"))

@@ -66,6 +66,13 @@ def get_spark(
         # published segments answer extent/min-max from metadata
         # (plans/compiler._footer_extent) and prune on row-group stats
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        # the generated-class cache is an LRU, 100 entries by default;
+        # the six-operator curation chain alone cycles through 126
+        # distinct classes, so at 100 every class is evicted before its
+        # next use and each warm pass recompiled 88-110 of them (9-11 ms
+        # of Janino each). 1000 holds that working set with room for
+        # the served queries; a static conf, fixed at JVM start
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import importlib.util
+import itertools
 import json
 import os
 
@@ -32,6 +33,18 @@ def nation_head(spark, sf_dir):
     return nation(spark, sf_dir).limit(3)
 
 
+_runs = itertools.count()
+
+
+def nation_fresh_literal(spark, sf_dir):
+    """The same rows as ``nation``, through a filter whose always-true
+    literal changes per run, so every run generates new code."""
+    from pyspark.sql import functions as F
+
+    df = nation(spark, sf_dir)
+    return df.filter(F.col(df.columns[0]) > -1000 - next(_runs))
+
+
 def test_callable_form_summary(spark, sf_dir, capsys):
     _ab().main([f"{__name__}:nation", f"{__name__}:nation_reordered",
                 "--sf", sf_dir, "--pairs", "2"], spark=spark)
@@ -41,6 +54,9 @@ def test_callable_form_summary(spark, sf_dir, capsys):
     summary = json.loads(out[-1])
     assert summary["pairs"] == 2
     assert summary["a_median"] > 0 and summary["b_median"] > 0
+    assert summary["a_compiles"] >= 0 and summary["b_compiles"] >= 0
+    assert sum(ln.endswith(f"compiles={summary['a_compiles']}")
+               for ln in out) >= 1
 
 
 def test_value_mismatch_exits_before_timing(spark, sf_dir, capsys):
@@ -51,3 +67,11 @@ def test_value_mismatch_exits_before_timing(spark, sf_dir, capsys):
     captured = capsys.readouterr()
     assert "value mismatch" in captured.err
     assert not any(ln.startswith("pair ") for ln in captured.out.splitlines())
+
+
+def test_compile_counts_per_side(spark, sf_dir, capsys):
+    _ab().main([f"{__name__}:nation", f"{__name__}:nation_fresh_literal",
+                "--sf", sf_dir, "--pairs", "2"], spark=spark)
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary["a_compiles"] == 0
+    assert summary["b_compiles"] >= 2

@@ -69,11 +69,11 @@ def test_jaccard_window_sizes_match_joined_sizes(spark):
                docs, shingle_k=5, threshold=0.2,
                max_shingle_freq=100).collect()}
 
-    staged = parallelize_scan(docs).select(
-        F.col("doc_id"), _tokens(F.col("text")).alias("__toks"))
+    staged = parallelize_scan(docs).selectExpr(
+        "doc_id", f"{_tokens('text')} AS __toks")
     posting = staged_explode(
-        staged, [F.col("doc_id")],
-        F.array_distinct(_shingles(F.col("__toks"), 5)), "shingle",
+        staged, ["doc_id"],
+        f"array_distinct({_shingles('__toks', 5)})", "shingle",
     ).select(
         F.col("doc_id"),
         F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10)

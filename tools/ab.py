@@ -16,7 +16,10 @@ before anything is timed; a mismatch exits 1. Each side then runs once
 untimed, and N pairs are timed with the first runner alternating. A run
 is build + noop-sink write after ``clearCache()``, as in bench.py.
 Output: one line per pair with the host 1-min load, each side's median
-and quartiles, then a one-line JSON summary.
+and quartiles and its Janino compile count over its timed runs, then a
+one-line JSON summary. The callable form reads the compile counter of
+its one session, so a class one side compiled is found cached by the
+other; in the git-ref form each side's subprocess counts its own.
 """
 
 from __future__ import annotations
@@ -45,11 +48,19 @@ def _digest(df) -> str:
     return f"{len(rows)} rows, sha256 {h}"
 
 
-def _timed(spark, build) -> float:
+def _compiles(spark) -> int:
+    """Janino compilations so far in this session's JVM."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def _timed(spark, build) -> tuple[float, int]:
+    """(seconds, Janino compilations) of one run."""
     spark.catalog.clearCache()
+    c0 = _compiles(spark)
     t0 = time.perf_counter()
     build().write.mode("overwrite").format("noop").save()
-    return time.perf_counter() - t0
+    return time.perf_counter() - t0, _compiles(spark) - c0
 
 
 class _Local:
@@ -63,7 +74,7 @@ class _Local:
     def digest(self) -> str:
         return _digest(self.build(self.spark, self.sf_dir))
 
-    def time(self) -> float:
+    def time(self) -> tuple[float, int]:
         return _timed(self.spark, lambda: self.build(self.spark, self.sf_dir))
 
 
@@ -95,8 +106,9 @@ class _Remote:
     def digest(self) -> str:
         return self._ask("digest")
 
-    def time(self) -> float:
-        return float(self._ask("time"))
+    def time(self) -> tuple[float, int]:
+        seconds, compiles = self._ask("time").split()
+        return float(seconds), int(compiles)
 
 
 def _serve(tree: str, name: str, sf_dir: str) -> None:
@@ -118,7 +130,8 @@ def _serve(tree: str, name: str, sf_dir: str) -> None:
         if cmd.strip() == "digest":
             out = _digest(build(spark, sf_dir))
         else:
-            out = f"{_timed(spark, lambda: build(spark, sf_dir)):.4f}"
+            seconds, compiles = _timed(spark, lambda: build(spark, sf_dir))
+            out = f"{seconds:.4f} {compiles}"
         print(_REPLY + out, flush=True)
 
 
@@ -131,19 +144,24 @@ def compare(a, b, labels: tuple[str, str], pairs: int) -> dict:
     print(f"value-identical: {da}", flush=True)
     a.time(), b.time()  # warm-up, not timed
     times: tuple[list[float], list[float]] = ([], [])
+    compiles = [0, 0]
     for i in range(pairs):
         order = (0, 1) if i % 2 == 0 else (1, 0)
         for k in order:
-            times[k].append((a, b)[k].time())
+            seconds, n = (a, b)[k].time()
+            times[k].append(seconds)
+            compiles[k] += n
         print(f"pair {i}: {labels[0]}={times[0][-1]:.3f} "
               f"{labels[1]}={times[1][-1]:.3f} first={labels[order[0]]} "
               f"load1={os.getloadavg()[0]:.2f}", flush=True)
     summary: dict = {"a": labels[0], "b": labels[1], "pairs": pairs}
-    for key, label, xs in zip("ab", labels, times):
+    for key, label, xs, n in zip("ab", labels, times, compiles):
         q1, med, q3 = statistics.quantiles(xs, n=4, method="inclusive")
-        print(f"{label}: median={med:.3f} q1={q1:.3f} q3={q3:.3f}")
+        print(f"{label}: median={med:.3f} q1={q1:.3f} q3={q3:.3f} "
+              f"compiles={n}")
         summary.update({f"{key}_median": round(med, 4),
-                        f"{key}_q1": round(q1, 4), f"{key}_q3": round(q3, 4)})
+                        f"{key}_q1": round(q1, 4), f"{key}_q3": round(q3, 4),
+                        f"{key}_compiles": n})
     summary["a_faster_pairs"] = sum(x < y for x, y in zip(*times))
     print(json.dumps(summary), flush=True)
     return summary
