@@ -838,7 +838,7 @@ def _window_moving_avg(spark, sf_dir):
         chunked_trailing_window, finalize_chunked,
     )
 
-    from pyspark import StorageLevel
+    from apache_druid_spark.plans.timeout import persist
 
     reg = _registry(spark, sf_dir)
     # persisted (r18): the per-day aggregate — bounded by the time
@@ -849,8 +849,8 @@ def _window_moving_avg(spark, sf_dir):
     # aggregated FOUR times (plans/r18/window_moving_avg_before.txt)
     daily = (reg.table("orders")
              .groupBy(F.date_trunc("day", F.col("o_orderdate")).alias("day"))
-             .agg(F.sum("o_totalprice").alias("rev"))
-             .persist(StorageLevel.MEMORY_AND_DISK))
+             .agg(F.sum("o_totalprice").alias("rev")))
+    daily = persist(daily)
     # Zero-fill the day grid (missing buckets contribute 0, matching
     # DoubleMeanAverager.java:31-46) — also makes the grid dense, which
     # the chunk stitch requires. The generated side is provably small;

@@ -264,9 +264,9 @@ def embedding_cosine_pairs(df: DataFrame, dim: int,
     # at ingest; this is the ad-hoc analog. (The a/b join sides share
     # one shuffle via ReusedExchange — the cross-branch recompute is
     # the one Catalyst can't dedupe.)
-    from pyspark import StorageLevel
+    from apache_druid_spark.plans.timeout import persist
 
-    blocked = blocked.persist(StorageLevel.MEMORY_AND_DISK)
+    blocked = persist(blocked)
     oversized = (blocked.select("__table", "__bucket")
                  .groupBy("__table", "__bucket")
                  .agg(F.count(F.lit(1)).alias("__bsz"))

@@ -29,6 +29,7 @@ rounding.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -36,6 +37,7 @@ from apache_druid_spark.pipeline._util import (
     ident, md5_long, parallelize_scan, staged_explode,
 )
 from apache_druid_spark.pipeline.dedup import _shingles, _tokens
+from apache_druid_spark.plans.timeout import persist
 
 
 def _gram_buckets(df: DataFrame, text_col: str, id_col: str | None,
@@ -155,11 +157,8 @@ def importance_weights(raw: DataFrame, target: DataFrame,
     filter()'s null handling), and since the slice is a subset of raw,
     the flagged aggregate covers the same bucket set as the full join.
     Supersedes ``target`` when given."""
-    from pyspark import StorageLevel
-
-    doc_grams = _gram_buckets(raw, text_col, id_col, n_buckets, ngrams,
-                              flag=target_predicate
-                              ).persist(StorageLevel.MEMORY_AND_DISK)
+    doc_grams = persist(_gram_buckets(raw, text_col, id_col, n_buckets,
+                                      ngrams, flag=target_predicate))
     if target_predicate is not None:
         joined_counts = doc_grams.groupBy("bucket").agg(
             F.count(F.lit(1)).alias("c_raw"),
@@ -264,7 +263,7 @@ def unigram_logprob(docs: DataFrame, text_col: str = "text",
         # the cap DECISION needs the true vocab size on the driver;
         # persist the count table around the eager action so the
         # scoring join reuses it instead of re-tokenizing ``ref``
-        counts = counts.persist()
+        counts = persist(counts, StorageLevel.MEMORY_AND_DISK_DESER)
         n, v = counts.agg(F.sum("__c"), F.count(F.lit(1))).first()
         v_eff = float(v)
         if int(v) > max_vocab:

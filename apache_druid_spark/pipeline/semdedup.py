@@ -135,10 +135,9 @@ def semantic_dedup(df: DataFrame, dim: int, n_cells: int = 16,
     round to 6 dp before thresholding and produce IDENTICAL outputs —
     equivalence verified row-exact on sf0.001/sf0.01/sf0.1 and the
     10x-amplified set (tests/test_advice_r18.py pins it)."""
-    from pyspark import StorageLevel
-
     from apache_druid_spark.pipeline.similarity import (
         _dot_cols, _norm, ivf_assign)
+    from apache_druid_spark.plans.timeout import persist
 
     if prune not in ("expression", "grouped"):
         raise ValueError(f"prune must be 'expression' or 'grouped', "
@@ -160,10 +159,10 @@ def semantic_dedup(df: DataFrame, dim: int, n_cells: int = 16,
                                     id_col, max_cell_size, round_to)
     # one scan: cell argmax + norm; persisted because it feeds the cap
     # aggregate and both self-join sides (ingest-materialized at 100 TB)
-    cells = assigned.select(
+    cells = persist(assigned.select(
         F.col(id_col), F.col(vec_col), F.col("__cell"),
         _norm(f"`{vec_col}`", dim).alias("__nrm"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     oversized = (cells.groupBy("__cell")
                  .agg(F.count(F.lit(1)).alias("__csz"))
                  .filter(F.col("__csz") > max_cell_size)

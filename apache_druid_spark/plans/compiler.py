@@ -42,6 +42,7 @@ from apache_druid_spark.operators.having import compile_having
 from apache_druid_spark.operators.limitspec import apply_limit_spec
 from apache_druid_spark.operators.postaggs import apply_post_aggregations
 from apache_druid_spark.operators.util import fcol
+from apache_druid_spark.plans.timeout import persist
 
 _DRUID_TYPES = {"STRING": "string", "LONG": "long", "DOUBLE": "double",
                 "FLOAT": "float"}
@@ -1040,32 +1041,6 @@ def _verify_groupby_output_names(q: dict) -> None:
             seen.add(n)
 
 
-# bounded registry of legacy-path cached bases: the newest few stay
-# pinned for their (imminent) materialization, older ones unpersist so
-# a long-lived server session doesn't accumulate one cached scan per
-# legacy query (r16 review finding). Eviction is safe-by-correctness:
-# an evicted base that a not-yet-materialized plan still references
-# simply re-scans the source (unpersist never invalidates a plan) —
-# the single-scan guarantee holds for the newest
-# ``_LEGACY_PERSIST_CAP`` legacy queries, which covers a compile→run
-# cycle; a server that wants a hard boundary calls
-# ``unpersist_legacy_cache()`` between requests or at shutdown
-# (DruidHttpServer.stop does).
-_LEGACY_PERSIST_LRU: list = []
-_LEGACY_PERSIST_CAP = 4
-
-
-def unpersist_legacy_cache(blocking: bool = False) -> int:
-    """Explicitly unpin every cached legacy-path base projection
-    (r16 verdict #6 / r17 advice): returns the number of DataFrames
-    unpersisted. Safe at any time — a still-referenced plan falls back
-    to re-scanning its source."""
-    n = 0
-    while _LEGACY_PERSIST_LRU:
-        _LEGACY_PERSIST_LRU.pop().unpersist(blocking=blocking)
-        n += 1
-    return n
-
 _IDENT_RE = __import__("re").compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
 
@@ -1126,19 +1101,12 @@ def _persist_legacy_base(q: dict, df: DataFrame, group_names,
     different agg lists, so exchange reuse can't collapse them).
     MEMORY_AND_DISK keeps the 100 TB shape honest: one scan + local
     re-reads beats N remote scans. The cached projection is NARROWED
-    to the columns the query can reference, and a small LRU
-    unpersists the oldest cached base so a long-lived server session
-    doesn't accumulate one pinned scan per legacy query."""
-    from pyspark import StorageLevel
-
+    to the columns the query can reference, and the query's scope
+    unpersists it when the query ends."""
     needed = _referenced_columns(q, df, group_names, legacy_specs)
     if needed is not None:
         df = df.select(*needed)
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _LEGACY_PERSIST_LRU.append(df)
-    if len(_LEGACY_PERSIST_LRU) > _LEGACY_PERSIST_CAP:
-        _LEGACY_PERSIST_LRU.pop(0).unpersist(blocking=False)
-    return df
+    return persist(df)
 
 
 def _attach_legacy_folds(base_df: DataFrame, out_df: DataFrame,

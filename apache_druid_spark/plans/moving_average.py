@@ -92,9 +92,9 @@ def compile_moving_average(q: dict, registry) -> DataFrame:
         # tfidf r17 disease). `inner` is a (bucket x dim-combo)
         # aggregate, bounded by the grid size, so persisting it is
         # cheap at any scale.
-        from pyspark import StorageLevel
+        from apache_druid_spark.plans.timeout import persist
 
-        inner = inner.persist(StorageLevel.MEMORY_AND_DISK)
+        inner = persist(inner)
         combos = inner.select(*dims).distinct()
         grid = buckets_df.crossJoin(combos)
     else:

@@ -23,6 +23,7 @@ import re
 import threading
 import uuid
 
+from apache_druid_spark.plans import timeout
 from apache_druid_spark.sql.dialect import druid_sql
 
 # Spark simpleString -> (JDBC java.sql.Types id, Avatica type name, rep)
@@ -262,7 +263,8 @@ class AvaticaMeta:
         df = druid_sql(self.spark, sql, self.registry)
         columns = [_column_meta(i, name, dtype)
                    for i, (name, dtype) in enumerate(df.dtypes)]
-        rows = [[_avatica_value(v) for v in row] for row in df.collect()]
+        rows = [[_avatica_value(v) for v in row]
+                for row in timeout.run_with_timeout(df)]
         with self._lock:
             self._statements[(cid, sid)] = {
                 "rows": rows, "columns": columns,

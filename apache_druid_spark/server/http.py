@@ -20,6 +20,7 @@ import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from apache_druid_spark.plans.compiler import compile_query
+from apache_druid_spark.plans.timeout import QueryTimeoutError, query_scope
 from apache_druid_spark.server.avatica import AvaticaMeta
 from apache_druid_spark.server.cache import ResultCache
 from apache_druid_spark.sql.dialect import druid_sql
@@ -37,8 +38,6 @@ def _query_exception_json(e: Exception) -> dict:
     testCannotValidate pin the error codes). Spark's ParseException
     maps to SQL_PARSE_ERROR, AnalysisException / dialect ValueErrors
     to VALIDATION_ERROR, anything else to the generic envelope."""
-    from apache_druid_spark.plans.timeout import QueryTimeoutError
-
     name = type(e).__name__
     if isinstance(e, (json.JSONDecodeError, BadJsonQueryError)):
         # BadJsonQueryException.java: errorCode "Json parse failed"
@@ -131,7 +130,12 @@ class DruidHttpServer:
 
             def do_POST(self):
                 path = self.path.rstrip("/")
-                cache_state = None
+                if path not in ("/druid/v2/sql/avatica", "/druid/v2/sql",
+                                "/druid/v2"):
+                    self.send_error(404)
+                    return
+                status, ctype, scope, cache_state = (
+                    200, "application/json", None, None)
                 try:
                     n = int(self.headers.get("Content-Length", 0))
                     body = json.loads(self.rfile.read(n) or b"{}")
@@ -139,77 +143,19 @@ class DruidHttpServer:
                         raise BadJsonQueryError(
                             "request body must be a JSON object, got "
                             f"{type(body).__name__}")
-                    if path == "/druid/v2/sql/avatica":
-                        # JDBC statements are stateful; never cached
-                        payload = json.dumps(outer.avatica.handle(body))
-                    elif path in ("/druid/v2/sql", "/druid/v2"):
-                        key = None
-                        payload = None
-                        # context.useCache: false opts a request out,
-                        # mirroring the reference's query context flag
-                        use = (outer.cache is not None and
-                               (body.get("context") or {})
-                               .get("useCache", True) is not False)
-                        if use:
-                            key = outer.cache.key(
-                                path, body, outer.registry.epoch)
-                            payload = outer.cache.get(key)
-                            cache_state = ("HIT" if payload is not None
-                                           else "MISS")
-                        if payload is None:
-                            if path == "/druid/v2/sql":
-                                df = druid_sql(
-                                    outer.spark, body["query"],
-                                    outer.registry,
-                                    parameters=body.get("parameters"),
-                                    context=body.get("context"))
-                                fmt = body.get("resultFormat", "object")
-                                from apache_druid_spark.plans.timeout \
-                                    import context_timeout
-                                payload = format_results(
-                                    df, fmt,
-                                    header=bool(body.get("header")),
-                                    types_header=bool(
-                                        body.get("typesHeader")),
-                                    sql_types_header=bool(
-                                        body.get("sqlTypesHeader")),
-                                    timeout_ms=context_timeout(body))
-                            elif body.get("queryType") == "scan":
-                                # scan honors its native resultFormat /
-                                # batchSize / legacy envelope
-                                # (ScanResultValue.java)
-                                from apache_druid_spark.sql.results \
-                                    import scan_result_values
-                                payload = json.dumps(scan_result_values(
-                                    body, outer.registry))
-                            else:
-                                from apache_druid_spark.plans.timeout \
-                                    import context_timeout
-                                df = compile_query(body, outer.registry)
-                                payload = format_results(
-                                    df, "object",
-                                    timeout_ms=context_timeout(body))
-                            if key is not None:
-                                outer.cache.put(key, payload)
-                    else:
-                        self.send_error(404)
-                        return
+                    with query_scope(outer.spark, body) as scope:
+                        payload, cache_state = outer._answer(path, body)
+                    if body.get("resultFormat") == "csv":
+                        ctype = "text/csv"
                 except Exception as e:  # noqa: BLE001 — HTTP error surface
-                    msg = json.dumps(_query_exception_json(e))
-                    self.send_response(400)
-                    self.send_header("Content-Type", "application/json")
-                    self.end_headers()
-                    self.wfile.write(msg.encode())
-                    return
-                self.send_response(200)
-                ctype = ("text/csv" if body.get("resultFormat") == "csv"
-                         else "application/json")
+                    status, payload = 400, json.dumps(
+                        _query_exception_json(e))
+                self.send_response(status)
                 self.send_header("Content-Type", ctype)
-                qid = ((body.get("context") or {}).get("sqlQueryId")
-                       if path == "/druid/v2/sql" else None)
-                if qid is not None:
-                    # SqlResource echoes the id (X-Druid-SQL-Query-Id)
-                    self.send_header("X-Druid-SQL-Query-Id", str(qid))
+                if path == "/druid/v2/sql" and scope is not None:
+                    # SqlResource always sends it, generated if absent
+                    self.send_header("X-Druid-SQL-Query-Id",
+                                     scope.query_id)
                 if cache_state is not None:
                     self.send_header("X-Druid-Cache", cache_state)
                 self.end_headers()
@@ -230,10 +176,40 @@ class DruidHttpServer:
     def stop(self) -> None:
         self._httpd.shutdown()
         self._httpd.server_close()
-        # release any legacy-path cached base projections pinned by
-        # queries this server compiled (r16 verdict #6)
-        from apache_druid_spark.plans.compiler import (
-            unpersist_legacy_cache,
-        )
 
-        unpersist_legacy_cache()
+    def _answer(self, path: str, body: dict) -> tuple[str, str | None]:
+        """The serialized answer to one request and its cache state
+        (HIT / MISS, None when the cache is not consulted)."""
+        if path == "/druid/v2/sql/avatica":
+            # JDBC statements are stateful; never cached
+            return json.dumps(self.avatica.handle(body)), None
+        # context.useCache: false opts a request out (the reference's
+        # flag). The key holds the epoch at arrival, so a register or
+        # publish that lands mid-query files this answer under the old one
+        key = None
+        if self.cache is not None and (
+                (body.get("context") or {}).get("useCache") is not False):
+            key = self.cache.key(path, body, self.registry.epoch)
+            payload = self.cache.get(key)
+            if payload is not None:
+                return payload, "HIT"
+        if path == "/druid/v2/sql":
+            df = druid_sql(self.spark, body["query"], self.registry,
+                           parameters=body.get("parameters"),
+                           context=body.get("context"))
+            payload = format_results(
+                df, body.get("resultFormat", "object"),
+                header=bool(body.get("header")),
+                types_header=bool(body.get("typesHeader")),
+                sql_types_header=bool(body.get("sqlTypesHeader")))
+        elif body.get("queryType") == "scan":
+            # scan honors its native resultFormat / batchSize / legacy
+            # envelope (ScanResultValue.java)
+            from apache_druid_spark.sql.results import scan_result_values
+            payload = json.dumps(scan_result_values(body, self.registry))
+        else:
+            payload = format_results(compile_query(body, self.registry),
+                                     "object")
+        if key is not None:
+            self.cache.put(key, payload)
+        return payload, None if key is None else "MISS"

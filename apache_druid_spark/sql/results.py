@@ -14,6 +14,8 @@ from datetime import date, datetime
 
 from pyspark.sql import DataFrame
 
+from apache_druid_spark.plans import timeout
+
 
 def _jsonable(v):
     if isinstance(v, (datetime, date)):
@@ -97,7 +99,9 @@ def scan_result_values(q: dict, registry) -> list[dict]:
         # the legacy timestamp derives from the time column; fetch it
         # without changing the user-visible projection
         qq["columns"] = ["__time"] + req
-    df = compile_query({**qq, "queryType": "scan"}, registry)
+    with timeout.query_scope(registry.spark, q):
+        df = compile_query({**qq, "queryType": "scan"}, registry)
+        rows = timeout.run_with_timeout(df)
 
     out_cols = list(df.columns)
     if legacy:
@@ -116,11 +120,7 @@ def scan_result_values(q: dict, registry) -> list[dict]:
                 ev[c] = _jsonable(row[c])
         return ev
 
-    from apache_druid_spark.plans.timeout import (
-        context_timeout, run_with_timeout)
-
-    events = [_event(r) for r in
-              run_with_timeout(df, context_timeout(q))]
+    events = [_event(r) for r in rows]
     fmt = q.get("resultFormat", "list")
     if fmt == "compactedList":
         events = [[e[c] for c in out_cols] for e in events]
@@ -134,8 +134,7 @@ def scan_result_values(q: dict, registry) -> list[dict]:
 
 def format_results(df: DataFrame, fmt: str = "object",
                    header: bool = False, types_header: bool = False,
-                   sql_types_header: bool = False,
-                   timeout_ms: int = 0) -> str:
+                   sql_types_header: bool = False) -> str:
     """Serialize a result DataFrame in a Druid ResultFormat. With
     ``header``, ``types_header`` / ``sql_types_header`` add the Druid
     native-type and SQL-type header rows (array/csv formats) or the
@@ -143,12 +142,9 @@ def format_results(df: DataFrame, fmt: str = "object",
     SqlResourceTest testArrayResultFormatWithHeader /
     testCsvResultFormatWithHeaders /
     testObjectLinesResultFormatWithFullHeader."""
-    from apache_druid_spark.plans.timeout import run_with_timeout
-
     cols = df.columns
     dts, sts = _header_types(df)
-    rows = [[_jsonable(v) for v in r]
-            for r in run_with_timeout(df, timeout_ms)]
+    rows = [[_jsonable(v) for v in r] for r in timeout.run_with_timeout(df)]
     if fmt == "object":
         return json.dumps([dict(zip(cols, r)) for r in rows])
     if fmt == "array":

@@ -1,5 +1,5 @@
 """Regression tests for the round-16 advisor findings (ADVICE.md r16,
-all low) plus the VERDICT r16 task #6 lifecycle hook.
+all low).
 
 1. read_generic_indexed validated only min/max of the end-offset
    header; a damaged header with DECREASING offsets passed the bounds
@@ -13,10 +13,9 @@ all low) plus the VERDICT r16 task #6 lifecycle hook.
 3. Duplicate-container dedup used os.path.abspath, so the same
    segment reachable via a symlink and its target ingested twice
    (doubled rows). Fixed: os.path.realpath.
-4. _LEGACY_PERSIST_LRU never cleared on session stop — a long-lived
-   server pinned up to 4 MEMORY_AND_DISK projections indefinitely.
-   Fixed: unpersist_legacy_cache() explicit hook, wired into
-   DruidHttpServer.stop.
+4. The legacy-path persist cache was never cleared on session stop.
+   The cache and its stop hook are gone: every intra-query persist is
+   released by the query's scope (tests/test_query_scope.py).
 """
 
 from __future__ import annotations
@@ -25,7 +24,6 @@ import json
 import struct
 
 import pytest
-from pyspark.sql import functions as F
 
 from apache_druid_spark.ingest.segment import DruidSegmentError
 
@@ -146,60 +144,3 @@ def test_druid_input_source_dedups_symlinked_paths(spark, tmp_path):
         "segments": [str(link)],
         "baseDir": str(base)}})
     assert df.count() == 3  # NOT 6 — symlink and target are one file
-
-
-# -- 4: legacy persist cache lifecycle --------------------------------------
-
-
-def test_unpersist_legacy_cache_unpins_all(spark):
-    from apache_druid_spark.ingest.hllc import collector_of
-    from apache_druid_spark.model.datasource import DatasourceRegistry
-    from apache_druid_spark.plans import compiler
-    from apache_druid_spark.plans.compiler import (
-        compile_query, unpersist_legacy_cache,
-    )
-
-    rows = [(et, bytearray(collector_of(
-        [f"{et}-u{i}" for i in range(10)]).to_bytes()))
-        for et in ("click", "view")]
-    df = spark.createDataFrame(
-        rows, "event_type string, uniq_state binary"
-    ).withColumn("__time",
-                 F.lit("2001-01-01 00:00:00").cast("timestamp"))
-    reg = DatasourceRegistry(spark)
-    reg.register("legacy_lifecycle_seg", df)
-    unpersist_legacy_cache(blocking=True)  # clean slate
-    out = compile_query({
-        "queryType": "groupBy", "dataSource": "legacy_lifecycle_seg",
-        "granularity": "all", "dimensions": ["event_type"],
-        "aggregations": [
-            {"type": "hyperUnique", "name": "uniq",
-             "fieldName": "uniq_state", "legacy": True}],
-    }, reg)
-    assert len(compiler._LEGACY_PERSIST_LRU) == 1
-    cached = compiler._LEGACY_PERSIST_LRU[0]
-    out.collect()  # materialize so blocks actually exist
-    assert cached.storageLevel.useMemory
-    n = unpersist_legacy_cache(blocking=True)
-    assert n == 1
-    assert compiler._LEGACY_PERSIST_LRU == []
-    assert not cached.storageLevel.useMemory  # StorageLevel.NONE
-    # the plan stays CORRECT after the unpin (re-scan, not error)
-    got = {r["event_type"]: r["uniq"] for r in out.collect()}
-    assert abs(got["click"] - 10) < 2
-
-
-def test_http_server_stop_clears_legacy_cache(spark):
-    from apache_druid_spark.model.datasource import DatasourceRegistry
-    from apache_druid_spark.plans import compiler
-    from apache_druid_spark.server.http import DruidHttpServer
-
-    reg = DatasourceRegistry(spark)
-    # simulate a compiled-but-pinned base left behind by a query
-    pinned = spark.range(3).persist()
-    compiler._LEGACY_PERSIST_LRU.append(pinned)
-    srv = DruidHttpServer(spark, reg, host="127.0.0.1", port=0)
-    srv.start()
-    srv.stop()
-    assert compiler._LEGACY_PERSIST_LRU == []
-    assert not pinned.storageLevel.useMemory

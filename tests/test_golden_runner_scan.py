@@ -11,7 +11,8 @@ envelopes: batching, compactedList arrays, legacy timestamp column,
 __time-as-millis, limit-0-is-unlimited). The timeout trio
 (testScanQueryTimeout, testScanQueryTimeoutMerge,
 testScanQueryTimeoutZeroDoesntTimeOut) closed in r12 once
-plans/timeout.py gained job-group-cancelling timeout enforcement."""
+plans/timeout.py gained timeout enforcement (now the query scope's
+job-tag cancellation)."""
 
 from __future__ import annotations
 
@@ -296,9 +297,10 @@ def test_scan_descending_compacted_list_format_limits(spark, testindex):
 # -- the timeout trio (testScanQueryTimeout / testScanQueryTimeoutMerge
 # / testScanQueryTimeoutZeroDoesntTimeOut): context timeout=1ms raises
 # the reference's QueryTimeoutException ("Query timeout"); timeout=0
-# means unlimited. Spark analogue: the query's job group is cancelled
-# at the deadline (plans/timeout.py), which at cluster scale stops a
-# runaway query's tasks instead of letting them run to completion.
+# means unlimited. Spark analogue: the query's scope cancels the jobs
+# carrying its job tag from the deadline on (plans/timeout.py), which
+# at cluster scale stops a runaway query's tasks instead of letting
+# them run to completion.
 
 def test_scan_query_timeout(spark, testindex):
     import pytest as _pytest

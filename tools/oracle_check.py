@@ -50,6 +50,7 @@ def _canon(rows, cols):
 
 def main() -> int:
     entry = _load_entry()
+    from apache_druid_spark.plans.timeout import query_scope
     from apache_druid_spark.session import get_spark
 
     spark = get_spark("oracle_check")
@@ -68,9 +69,10 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            df = fn(spark, SF_DIR)
-            srows = df.collect()
-            scols = df.columns
+            with query_scope(spark, {"context": {"queryId": name}}):
+                df = fn(spark, SF_DIR)
+                srows = df.collect()
+                scols = df.columns
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: spark error: {e!r}"[:500])
             failed.append(name)
