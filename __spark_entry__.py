@@ -846,7 +846,8 @@ def _window_moving_avg(spark, sf_dir):
     # (via the join) both chunk-stitch union branches; without
     # materialization, column pruning strips `rev` out of the bounds
     # branch, ReuseExchange cannot fire, and the source is scanned and
-    # aggregated FOUR times (plans/r18/window_moving_avg_before.txt)
+    # aggregated FOUR times
+    # (git show e5b1048:plans/r18/window_moving_avg_before.txt)
     daily = (reg.table("orders")
              .groupBy(F.date_trunc("day", F.col("o_orderdate")).alias("day"))
              .agg(F.sum("o_totalprice").alias("rev")))

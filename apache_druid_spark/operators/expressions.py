@@ -520,10 +520,6 @@ def _fn_next_up(d: Column) -> Column:
              .otherwise(_fn_long_bits_to_double(bits - 1)))
 
 
-def _raise_unsupported(name: str):
-    raise NotImplementedError(f"expression function {name} is unsupported")
-
-
 def _fn_cast(x: Column, t: Column) -> Column:
     # type name must be a literal string
     import json as _json

@@ -134,7 +134,8 @@ def mixture_weights(df: DataFrame, target: dict[str, float],
     key keeps the window defined — the r16 ``per.agg`` total subtree
     could not share the groupBy exchange because column pruning
     stripped n_docs from its branch, so the corpus was scanned and
-    tokenized TWICE; see plans/r17/mixture_weights_lang_before.txt and
+    tokenized TWICE; see ``git show
+    e5b1048:plans/r17/mixture_weights_lang_before.txt`` and
     OPTIMIZATION_r17.md), and the target table is a broadcast literal.
     One corpus pass, one shuffle of group-count size; no collects.
 

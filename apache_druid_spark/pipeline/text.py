@@ -529,7 +529,8 @@ def tfidf_top_terms(df: DataFrame, text_col: str = "text",
     out of the dfreq branch, which made the two (doc, term) exchanges
     structurally different, defeated ReuseExchange, and silently
     tokenized + shuffled the whole corpus twice (visible as two Scan
-    parquet subtrees in plans/r17/tfidf_top_terms_before.txt; guide
+    parquet subtrees in ``git show
+    e5b1048:plans/r17/tfidf_top_terms_before.txt``; guide
     §2.4). The corpus doc count joins in as a broadcast single-row
     aggregate, and the final top-k is one window shuffle on the doc
     id. Three keyed shuffles total, each on a natural key; no driver

@@ -88,7 +88,8 @@ def compile_moving_average(q: dict, registry) -> DataFrame:
         # aggregate columns out of the combos branch, the two partial
         # aggregates become structurally different, ReuseExchange
         # cannot fire, and the source is scanned+aggregated TWICE
-        # (r18, plans/r18/moving_average_monthly_before.txt — the
+        # (r18, `git show
+        # e5b1048:plans/r18/moving_average_monthly_before.txt` — the
         # tfidf r17 disease). `inner` is a (bucket x dim-combo)
         # aggregate, bounded by the grid size, so persisting it is
         # cheap at any scale.

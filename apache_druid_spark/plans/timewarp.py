@@ -20,12 +20,13 @@ from __future__ import annotations
 
 import re
 import time
-from datetime import datetime, timezone, timedelta
-from zoneinfo import ZoneInfo
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..model.granularity import _tz_offset_ms
 
 _PERIOD_RE = re.compile(
     r"^P(?:(?P<w>\d+)W)?(?:(?P<d>\d+)D)?"
@@ -56,13 +57,6 @@ def iso_millis(s: str) -> int:
 def _millis_iso(ms: int) -> str:
     return datetime.fromtimestamp(ms / 1000.0, tz=timezone.utc).strftime(
         "%Y-%m-%dT%H:%M:%S.") + f"{ms % 1000:03d}Z"
-
-
-def _tz_offset_ms(tz: str | None, at_millis: int) -> int:
-    if not tz or tz.upper() == "UTC":
-        return 0
-    dt = datetime.fromtimestamp(at_millis / 1000.0, tz=ZoneInfo(tz))
-    return int(dt.utcoffset().total_seconds() * 1000)
 
 
 class TimewarpOperator:

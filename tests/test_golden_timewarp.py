@@ -68,6 +68,10 @@ def warp_reg(spark):
     # (UTC-8 in January)
     dst_rows = [(D(2014, 1, 9, 8), 2), (D(2014, 1, 11, 8), 3)]
     reg.register("warpdst", spark.createDataFrame(dst_rows, schema).cache())
+    # and at wall-clock midnight of the fixed -07:00 zone
+    fixed_rows = [(D(2014, 1, 9, 7), 2), (D(2014, 1, 11, 7), 3)]
+    reg.register("warpfixed",
+                 spark.createDataFrame(fixed_rows, schema).cache())
     return reg
 
 
@@ -113,17 +117,17 @@ def test_post_process_timeboundary_clamps_max_at_now(spark, warp_reg):
     # testPostProcessWithTimezonesAndNoDstShift: a fixed-offset zone
     # has no correction
     ("UTC", "warped", [(D(2014, 7, 31), 2), (D(2014, 8, 2), 3)]),
+    ("-07:00", "warpfixed",
+     [(D(2014, 7, 31, 7), 2), (D(2014, 8, 2, 7), 3)]),
 ])
 def test_post_process_with_timezones(spark, warp_reg, tz, ds, expected):
     # now sits an hour into the day so the warped window's exclusive
     # end (now + offset) still contains the 2014-01-11 golden row (the
     # reference's stub runner fabricated that row AT the interval end)
     now = (iso_millis("2014-08-02T01:00:00-07:00")
-           if tz.startswith("America") else iso_millis("2014-08-02T01:00:00Z"))
-    start = "2014-07-31T00:00:00-07:00" if tz.startswith("America") \
-        else "2014-07-31"
-    end = "2014-08-05T00:00:00-07:00" if tz.startswith("America") \
-        else "2014-08-05"
+           if tz != "UTC" else iso_millis("2014-08-02T01:00:00Z"))
+    start = "2014-07-31T00:00:00-07:00" if tz != "UTC" else "2014-07-31"
+    end = "2014-08-05T00:00:00-07:00" if tz != "UTC" else "2014-08-05"
     q = {"queryType": "timeseries", "dataSource": ds,
          "granularity": {"type": "period", "period": "P1D",
                          "timeZone": tz},

@@ -9,7 +9,9 @@ outside the multimodal codec stubs.
 
 from __future__ import annotations
 
+import importlib.util
 import io
+import os
 from contextlib import redirect_stdout
 
 import pytest
@@ -20,6 +22,7 @@ from apache_druid_spark.model.datasource import (
 from apache_druid_spark.plans.compiler import compile_query
 
 SF_DIR = "/root/testdata/sf0.001"
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")
@@ -642,38 +645,83 @@ def test_guarded_explode_shape_all_sites(reg):
         _assert_no_inferred_generate_filter(df)
 
 
-# -- scan/exchange budgets from the committed r18 after-dumps ---------------
+# -- scan/exchange budget for every bench.py headline query -----------------
 
-_R18_REWRITTEN = ("dedup_ngram_jaccard", "dedup_embedding_cosine",
-                  "dsir_importance_weights", "semantic_dedup_embeddings",
-                  "text_unigram_logprob", "moving_average_monthly",
-                  "window_moving_avg")
+# Exact ``(scan, exchange)`` line counts of each budgeted query's
+# formatted plan over the sf0.001 fixtures. Regenerate with
+# ``python tools/explain_dump.py --budgets``: a change that adds or
+# removes a scan or an exchange must edit its row here.
+PLAN_BUDGETS = {
+    "timeseries_month_revenue": (2, 0),
+    "timeseries_day_clicks": (2, 0),
+    "groupby_flag_status": (2, 0),
+    "topn_priority_revenue": (2, 0),
+    "theta_exact_distinct": (2, 0),
+    "scan_high_value_orders": (2, 0),
+    "filter_combo_parts": (2, 0),
+    "join_orders_customers": (4, 2),
+    "window_moving_avg": (5, 8),
+    "virtual_column_bucket": (2, 0),
+    "dedup_exact": (2, 0),
+    "dedup_minhash_lsh": (2, 6),
+    "text_token_stats": (2, 2),
+    "similarity_cosine_topk": (2, 2),
+    "sql_time_floor_revenue": (2, 0),
+    "moving_average_monthly": (3, 8),
+    "mv_token_counts": (2, 0),
+    "groupby_subtotals": (2, 2),
+    "salted_groupby_skew": (2, 0),
+    "dedup_ngram_jaccard": (8, 22),
+    "hll_sketch_rollup_merge": (4, 4),
+    "streaming_rollup_hourly": (0, 0),
+    "similarity_ivf_topk": (2, 2),
+    "dedup_embedding_cosine": (5, 17),
+    "segment_pruned_timeseries": (2, 4),
+    "dedup_components": (0, 0),
+    "doc_chunks": (2, 2),
+    "session_window_user": (2, 0),
+    "decontaminate_report": (4, 10),
+    "pack_sequences_budget": (2, 0),
+    "text_repetition": (2, 2),
+    "multimodal_resize": (2, 0),
+    "semantic_dedup_embeddings": (2, 4),
+    "dsir_importance_weights": (3, 11),
+    "corpus_top_ngrams": (2, 4),
+    "asof_join_events": (4, 0),
+    "dedup_edit_distance": (4, 4),
+    "tfidf_top_terms": (4, 10),
+    "mixture_weights_lang": (2, 8),
+    "semantic_dedup_scale_mode": (2, 4),
+    "similarity_pq_adc": (2, 2),
+    "gopher_quality_rules": (2, 2),
+    "c4_clean_filters": (2, 2),
+    "quantile_postagg_family": (2, 0),
+    "text_unigram_logprob": (6, 18),
+}
 
 
-def _scan_exchange_counts(plan: str) -> tuple[int, int]:
-    """Lines naming a parquet scan / an exchange (shuffle or broadcast)
-    in an ``explain("formatted")`` dump — tree and detail sections."""
-    lines = plan.splitlines()
-    return (sum("Scan parquet" in ln for ln in lines),
-            sum("Exchange" in ln for ln in lines))
+_spec = importlib.util.spec_from_file_location(
+    "explain_dump", os.path.join(_ROOT, "tools", "explain_dump.py"))
+explain_dump = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(explain_dump)
 
 
-@pytest.mark.parametrize("name", _R18_REWRITTEN)
+def test_plan_budgets_cover_budgeted_queries():
+    assert list(PLAN_BUDGETS) == explain_dump.budgeted_names()
+
+
+@pytest.mark.parametrize("name", PLAN_BUDGETS)
 def test_r18_plan_budget(spark, name):
-    """The r18 rewrites must not regress past their committed
-    ``plans/r18/<name>_after.txt`` scan and exchange counts (the dumps
-    are ``tools/explain_dump.py r18 after <name>`` output)."""
-    import os
-
+    """Each budgeted query plans with exactly its ``PLAN_BUDGETS``
+    scan and exchange counts. (The name keeps the ids of the seven r18
+    rewrites the budgets started with.)"""
     import __spark_entry__ as e
-    dump = os.path.join(os.path.dirname(os.path.abspath(e.__file__)),
-                        "plans", "r18", f"{name}_after.txt")
-    with open(dump) as f:
-        budget = _scan_exchange_counts(f.read())
-    # the dumps come from a fresh session; an identical intermediate
+
+    # the budgets come from fresh builds; an identical intermediate
     # left cached by an earlier test prints its materialized plan under
     # InMemoryRelation and inflates the counts
     spark.catalog.clearCache()
-    got =_scan_exchange_counts(plan_of(e.queries()[name](spark, SF_DIR)))
-    assert got[0] <= budget[0] and got[1] <= budget[1], \
-        f"{name}: scans/exchanges {got} over budget {budget}"
+    plan = plan_of(e.queries()[name](spark, SF_DIR))
+    got = explain_dump.scan_exchange_counts(plan)
+    assert got == PLAN_BUDGETS[name], \
+        f"{name}: scans/exchanges {got}, budget {PLAN_BUDGETS[name]}"
