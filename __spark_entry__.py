@@ -32,6 +32,7 @@ from apache_druid_spark.model.datasource import (
     DatasourceRegistry, register_testdata,
 )
 from apache_druid_spark.plans.compiler import compile_query
+from apache_druid_spark.session import scratch_dir
 from apache_druid_spark.sql.dialect import druid_sql
 from apache_druid_spark.pipeline import (
     cosine_topk, exact_dedup, fingerprint, language_id, lsh_bucket_topk,
@@ -1492,12 +1493,11 @@ def _similarity_materialized_ann(spark, sf_dir):
     This is the 100 TB shape the ad-hoc similarity_ivfpq_refined
     computes on the fly. Hash-gated: DuckDB reproduces the stored
     cells and codes from the same literals."""
-    import tempfile
 
     from apache_druid_spark.pipeline import ann_materialize, ivfpq_topk
 
     emb = _registry(spark, sf_dir).table("embeddings")
-    out = tempfile.mkdtemp(prefix="ann_mat_") + "/embeddings_ann"
+    out = scratch_dir("ann_mat_") + "/embeddings_ann"
     ann_materialize(emb, n_cells=16, m=8, ks=16, keep_vec=False) \
         .write.mode("overwrite").partitionBy("cell").parquet(out)
     stored = spark.read.parquet(out)
@@ -1526,12 +1526,11 @@ def _similarity_materialized_ivfpq(spark, sf_dir):
     stored-table pipeline: cell partitioning, probe pruning, code
     plumbing, refine. (The bounded-refine recall of this composition
     is measured at 100k vectors in SCALE.md: 0.84 with defaults.)"""
-    import tempfile
 
     from apache_druid_spark.pipeline import ann_materialize, ivfpq_topk
 
     emb = _registry(spark, sf_dir).table("embeddings")
-    out = tempfile.mkdtemp(prefix="ann_mat_") + "/embeddings_ivfpq"
+    out = scratch_dir("ann_mat_") + "/embeddings_ivfpq"
     ann_materialize(emb, n_cells=16, m=8, ks=16, keep_vec=True) \
         .write.mode("overwrite").partitionBy("cell").parquet(out)
     stored = spark.read.parquet(out)
@@ -1876,7 +1875,6 @@ def _streaming_stateful_running_agg(spark, sf_dir):
     running (count, sum) carried across micro-batches — the
     queryable-in-flight-sink state no tumbling window holds
     (streaming/stateful.py). Final state == batch aggregate."""
-    import tempfile
 
     from apache_druid_spark.streaming import (
         final_state, run_updates_to_memory, running_rollup,
@@ -1884,7 +1882,7 @@ def _streaming_stateful_running_agg(spark, sf_dir):
 
     reg = _registry(spark, sf_dir)
     src = reg.table("events").select("event_type", "value")
-    tmp = tempfile.mkdtemp(prefix="stateful_src_")
+    tmp = scratch_dir("stateful_src_")
     # two part-files + maxFilesPerTrigger=1 => state provably carries
     # across at least two micro-batches
     src.repartition(2).write.mode("overwrite").parquet(tmp)
@@ -1893,7 +1891,7 @@ def _streaming_stateful_running_agg(spark, sf_dir):
               .option("maxFilesPerTrigger", "1").parquet(tmp))
     updates = running_rollup(stream, "event_type", "value")
     name = "stateful_running_agg"
-    ckpt = tempfile.mkdtemp(prefix="stateful_ckpt_")
+    ckpt = scratch_dir("stateful_ckpt_")
     run_updates_to_memory(updates, name, ckpt)
     return (final_state(spark, name, "event_type")
             .select("event_type", "cnt",
@@ -2011,7 +2009,6 @@ def _hll_sketch_rollup_merge(spark, sf_dir):
     with hll_union_agg (getCombiningFactory = HllSketchMerge), and
     finalizes to an estimate within the documented +-5% tolerance of
     exact (same deterministic-oracle pattern as hll_user_cardinality)."""
-    import tempfile
 
     from apache_druid_spark.ingest import (
         finalize_metrics, ingest, reaggregate,
@@ -2038,7 +2035,7 @@ def _hll_sketch_rollup_merge(spark, sf_dir):
                 "granularitySpec": {"rollup": True,
                                     "queryGranularity": "hour"}},
         })
-        out = tempfile.mkdtemp(prefix="hll_seg_") + "/events_hll"
+        out = scratch_dir("hll_seg_") + "/events_hll"
         write_segments(rolled, out, segment_granularity="day")
         return out
 
@@ -2402,7 +2399,6 @@ def _theta_rollup_merge(spark, sf_dir):
     via theta_sketch_estimate. Theta is deterministic and EXACT below
     its 4096-entry nominal capacity, so the estimate equals the exact
     distinct count at gate scale — a hash oracle, not a tolerance."""
-    import tempfile
 
     from apache_druid_spark.ingest import (
         finalize_metrics, ingest, reaggregate,
@@ -2427,7 +2423,7 @@ def _theta_rollup_merge(spark, sf_dir):
                 "granularitySpec": {"rollup": True,
                                     "queryGranularity": "hour"}},
         })
-        out = tempfile.mkdtemp(prefix="theta_seg_") + "/events_theta"
+        out = scratch_dir("theta_seg_") + "/events_theta"
         write_segments(rolled, out, segment_granularity="day")
         return out
 
@@ -2546,7 +2542,6 @@ def _segment_pruned_timeseries(spark, sf_dir):
     set (VersionedIntervalTimeline.lookup as directory pruning): the
     scan's PartitionFilters touch only the 3 queried day-chunks of the
     datasource (asserted in tests/test_plan_shapes.py)."""
-    import tempfile
 
     from apache_druid_spark.ingest import ingest
     from apache_druid_spark.ingest.batch import write_segments
@@ -2566,7 +2561,7 @@ def _segment_pruned_timeseries(spark, sf_dir):
                 "granularitySpec": {"rollup": True,
                                     "queryGranularity": "hour"}},
         })
-        out = tempfile.mkdtemp(prefix="seg_prune_") + "/events_pruned"
+        out = scratch_dir("seg_prune_") + "/events_pruned"
         write_segments(rolled, out, segment_granularity="day")
         return out
 
@@ -2592,7 +2587,6 @@ def _compaction_lifecycle(spark, sf_dir):
     (combining aggregators: count re-aggregates as sum) — the
     compacted table must agree with a direct day rollup of the raw
     rows (ingest/compact.py)."""
-    import tempfile
 
     from apache_druid_spark.ingest import ingest
     from apache_druid_spark.ingest.batch import write_segments
@@ -2611,7 +2605,7 @@ def _compaction_lifecycle(spark, sf_dir):
             "granularitySpec": {"rollup": True,
                                 "queryGranularity": "hour"}},
     })
-    path = tempfile.mkdtemp(prefix="compact_") + "/events_cmp"
+    path = scratch_dir("compact_") + "/events_cmp"
     write_segments(rolled, path, segment_granularity="day")
     compacted = compact(spark, path, segment_granularity="month",
                         rollup={"dimensions": ["event_type"],
@@ -2656,7 +2650,6 @@ def _lifecycle_publish_query(spark, sf_dir):
     """Full segment lifecycle inside the gate: ingest with hourly
     rollup -> publish day-partitioned segments -> register -> query
     with combining re-aggregation; must equal the raw-table query."""
-    import tempfile
 
     from apache_druid_spark.ingest import ingest, reaggregate, write_segments
 
@@ -2672,7 +2665,7 @@ def _lifecycle_publish_query(spark, sf_dir):
             "granularitySpec": {"rollup": True,
                                 "queryGranularity": "hour"}},
     })
-    path = tempfile.mkdtemp(prefix="seg_lifecycle_") + "/events_pub"
+    path = scratch_dir("seg_lifecycle_") + "/events_pub"
     write_segments(rolled, path, segment_granularity="day")
     published = spark.read.parquet(path).drop("__segment")
     df = (published.groupBy("event_type")
@@ -2689,7 +2682,6 @@ SELECT page, CAST(SUM(views) AS BIGINT) AS views FROM (VALUES
 def _sql_insert_extern(spark, sf_dir):
     """INSERT INTO ... SELECT ... FROM TABLE(EXTERN(...)) PARTITIONED
     BY day, then aggregate the published table."""
-    import tempfile
 
     from apache_druid_spark.sql.insert import druid_sql_insert
 
@@ -2702,7 +2694,7 @@ def _sql_insert_extern(spark, sf_dir):
     sig = ('[{"name": "ts", "type": "string"}, '
            '{"name": "page", "type": "string"}, '
            '{"name": "views", "type": "long"}]')
-    base = tempfile.mkdtemp(prefix="sql_insert_")
+    base = scratch_dir("sql_insert_")
     out = druid_sql_insert(spark, f"""INSERT INTO pageviews_gate
         SELECT CAST(ts AS TIMESTAMP) AS __time, page, views
         FROM TABLE(EXTERN('{inline}', '{fmt}', '{sig}'))
@@ -3059,7 +3051,6 @@ def _sys_segments_catalog(spark, sf_dir):
     datasource, then list its segments through the Druid SQL catalog
     spelling. start/end/num_rows are deterministic functions of the
     events table, so the catalog is fully oracle-checkable."""
-    import tempfile
 
     from apache_druid_spark.ingest import ingest
     from apache_druid_spark.ingest.batch import write_segments
@@ -3077,7 +3068,7 @@ def _sys_segments_catalog(spark, sf_dir):
             "granularitySpec": {"rollup": True,
                                 "queryGranularity": "hour"}},
     })
-    path = tempfile.mkdtemp(prefix="sys_seg_") + "/events_sys_pub"
+    path = scratch_dir("sys_seg_") + "/events_sys_pub"
     write_segments(rolled, path, segment_granularity="day")
     reg.register("events_sys_pub", spark.read.parquet(path)
                  .drop("__segment"))

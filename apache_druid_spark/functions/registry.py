@@ -249,22 +249,6 @@ _FUNCTION_DEFS: list[tuple[str, str, str, str]] = [
                       cast(floor(n / 65536) % 256 AS STRING),
                       cast(floor(n / 256) % 256 AS STRING),
                       cast(n % 256 AS STRING)) END"""),
-    ("HUMAN_READABLE_BINARY_BYTE_FORMAT", "n BIGINT", "STRING",
-     """format_string('%.2f %s',
-          n / power(1024, floor(log(1024, greatest(abs(n), 1)))),
-          element_at(array('B','KiB','MiB','GiB','TiB','PiB'),
-                     cast(floor(log(1024, greatest(abs(n), 1))) AS INT) + 1))"""),
-    ("HUMAN_READABLE_DECIMAL_BYTE_FORMAT", "n BIGINT", "STRING",
-     """format_string('%.2f %s',
-          n / power(1000, floor(log(1000, greatest(abs(n), 1)))),
-          element_at(array('B','KB','MB','GB','TB','PB'),
-                     cast(floor(log(1000, greatest(abs(n), 1))) AS INT) + 1))"""),
-    ("HUMAN_READABLE_DECIMAL_FORMAT", "n BIGINT", "STRING",
-     """CASE WHEN abs(n) < 1000 THEN cast(n AS STRING)
-        ELSE format_string('%.2f %s',
-          n / power(1000, floor(log(1000, abs(n)))),
-          element_at(array('', 'K','M','G','T','P'),
-                     cast(floor(log(1000, abs(n))) AS INT) + 1)) END"""),
     # Druid TRUNCATE(x, digits): truncate toward zero at `digits`
     # decimal places (Function.java Truncate)
     ("TRUNCATE", "x DOUBLE, d INT", "DOUBLE",

@@ -110,15 +110,14 @@ def _fetch_http(spark: SparkSession, src: dict) -> list[str]:
     falling back to a driver-local tempdir ONLY in local mode, where
     driver and executors share a filesystem. Local staging dirs are
     removed at interpreter exit (after all lazy reads have run)."""
-    import atexit
     import base64
     import os
-    import shutil
-    import tempfile
     import urllib.request
     import uuid
     from concurrent.futures import ThreadPoolExecutor
     from urllib.parse import urlparse
+
+    from apache_druid_spark.session import scratch_dir
 
     uris = src.get("uris") or []
     if not uris:
@@ -136,8 +135,7 @@ def _fetch_http(spark: SparkSession, src: dict) -> list[str]:
                 "http inputSource on a non-local master needs "
                 "spark.druid.http.stagingDir pointing at shared storage "
                 "(executors cannot read driver-local staging files)")
-        staging = tempfile.mkdtemp(prefix="http_ingest_")
-        atexit.register(shutil.rmtree, staging, ignore_errors=True)
+        staging = scratch_dir("http_ingest_")
 
     def fetch(iu):
         i, uri = iu

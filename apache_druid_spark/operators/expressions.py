@@ -713,7 +713,6 @@ def _fn_array_ordinal_of(arr, v):
     return F.when(pos == 0, F.lit(None)).otherwise(pos)
 
 
-_LONG_MIN = -9223372036854775808
 _DBL_MAX = 1.7976931348623157e308
 
 
@@ -780,37 +779,36 @@ def _fn_array_contains(a, v):
 def _fn_human_readable(base: int, units: list, suffix: str):
     """HumanReadableBytes.java formatter family: input truncated to
     long, NULL stays NULL, |v| < base renders the integer with the bare
-    suffix, binary tiers by power-of-1024 through EiB (Long.MIN — the
-    -inf cast — takes the reference's special '-8 EiB' path), decimal
-    tiers integer-divide by 1000 while |v| >= 1e6 (truncation BEFORE
-    the final /1000.0)."""
+    suffix, binary tiers by power-of-1024 through EiB, decimal tiers
+    integer-divide by 1000 while |v| >= 1e6 (truncation BEFORE the
+    final /1000.0). Bounds compare against ±b, never abs(v): abs
+    overflows at Long.MIN (the -inf cast), which renders '-8.00 EiB' /
+    '-9.22 EB' like the reference."""
     def fn(n, *rest):
         prec = int(_extract_literal(rest[0])) if rest else 2
         v = n.cast("long")
-        absv = F.abs(v)
+
+        def below(b):
+            return (v > F.lit(-b)) & (v < F.lit(b))
+
         arr = F.array(*[F.lit(u) for u in units])
         if base == 1024:
             idx = F.lit(6)
             for i in reversed(range(1, 7)):
-                idx = F.when(absv < F.lit(1024 ** i), i - 1).otherwise(idx)
+                idx = F.when(below(1024 ** i), i - 1).otherwise(idx)
             val = v / F.power(F.lit(1024.0), idx.cast("double"))
         else:
             idx = F.lit(5)
             for i in reversed(range(2, 7)):
-                idx = F.when(absv < F.lit(1000 ** i), i - 2).otherwise(idx)
+                idx = F.when(below(1000 ** i), i - 2).otherwise(idx)
             pw = F.power(F.lit(1000.0), idx.cast("double")).cast("long")
             val = ((v - v % pw) / pw) / F.lit(1000.0)
         big = F.format_string(f"%.{prec}f %s", val,
                               F.element_at(arr, idx.cast("int") + 1))
         small = (F.concat(v.cast("string"), F.lit(suffix)) if suffix
                  else v.cast("string"))
-        out = F.when(n.isNull(), F.lit(None)) \
-            .when(absv < base, small).otherwise(big)
-        if base == 1024:
-            out = F.when(v == F.lit(_LONG_MIN),
-                         F.format_string(f"%.{prec}f %s", F.lit(-8.0),
-                                         F.lit(units[-1]))).otherwise(out)
-        return out
+        return F.when(n.isNull(), F.lit(None)) \
+            .when(below(base), small).otherwise(big)
     return fn
 
 

@@ -127,7 +127,7 @@ def _infer_parameter_types(sql: str, registry=None) -> list[str]:
     ``?`` takes the Spark type of the column it is compared/combined
     with; LIMIT/OFFSET positions are BIGINT; unknown contexts stay
     VARCHAR (string literals coerce server-side)."""
-    from apache_druid_spark.sql.dialect import _string_spans
+    from apache_druid_spark.sql.dialect import _param_marks
 
     col_types: dict[str, str] = {}
     if registry is not None:
@@ -139,12 +139,9 @@ def _infer_parameter_types(sql: str, registry=None) -> list[str]:
                 continue
     col_types.setdefault("__time", "timestamp")
 
-    spans = _string_spans(sql)
     out = []
     ident = r"[A-Za-z_][\w.]*"
-    for i, ch in enumerate(sql):
-        if ch != "?" or any(a <= i <= b for a, b in spans):
-            continue
+    for i in _param_marks(sql):
         before, after = sql[:i], sql[i + 1:]
         typ = "string"
         if re.search(r"\b(?:LIMIT|OFFSET)\s*$", before, re.IGNORECASE):

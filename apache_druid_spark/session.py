@@ -9,9 +9,26 @@ core/src/main/java/org/apache/druid/java/util/common/DateTimes.java).
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
+
+
+@functools.cache
+def _scratch_root() -> str:
+    root = tempfile.mkdtemp(prefix="druid_spark_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
+def scratch_dir(prefix: str) -> str:
+    """A new directory under this process's scratch root (in the system
+    temp directory); the whole root is removed at interpreter exit."""
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root())
 
 
 def get_spark(
@@ -22,18 +39,20 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
-    Defaults favor the local[32] test rig but every knob here is the
-    one you would also set on a 1000-executor cluster: AQE on, UTC,
-    Arrow for the pandas paths, shuffle partitions sized to the
-    parallelism at hand rather than the 200 default.
+    Defaults to local[N] over the CPUs this process may run on
+    (``SPARK_GRAFT_CPUS`` overrides N), but every knob here is the one
+    you would also set on a 1000-executor cluster: AQE on, UTC, Arrow
+    for the pandas paths, shuffle partitions sized to the parallelism
+    at hand rather than the 200 default.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    nproc = len(os.sched_getaffinity(0))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(nproc)
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         # local mode: ~cores; on a real cluster this would be
         # 2-3x total executor cores (set via extra_conf).
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = int(cpus) if cpus.isdigit() else nproc
 
     builder = (
         SparkSession.builder.appName(app_name)

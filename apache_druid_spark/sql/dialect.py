@@ -38,8 +38,10 @@ identical to hand-written Spark SQL.
 
 from __future__ import annotations
 
+import bisect
 import math
 import re
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -109,57 +111,115 @@ _SIMPLE_RENAMES = {
     "STRPOS": "instr",
     "TRUNC": "TRUNCATE",  # numeric-truncate alias (not Spark date trunc)
 }
+# every renamed call in one pass: no value names a different key
+_SIMPLE_RENAME_PAT = (r"\b(" + "|".join(
+    sorted(_SIMPLE_RENAMES, key=len, reverse=True)) + r")\s*\(")
+
+
+# -- the one SQL text scanner -------------------------------------------
+# Every rewrite asks these helpers where string literals and brackets
+# are. A literal is single- or double-quoted (double quotes still
+# delimit identifiers before _rewrite_quoted_identifiers runs), a
+# doubled quote inside it is an escape, and an unclosed literal runs to
+# the end of the text. Scanning from a position outside any literal
+# tokenizes the rest of the text the same way as scanning from 0.
+_LITERAL = r"'[^']*(?:''[^']*)*'?|\"[^\"]*(?:\"\"[^\"]*)*\"?"
+_LITERAL_RE = re.compile(_LITERAL)
+_PARENS_RE = re.compile(rf"{_LITERAL}|[()]")
+_BRACKETS_RE = re.compile(rf"{_LITERAL}|[\[\]]")
+_ARG_TOKENS_RE = re.compile(rf"{_LITERAL}|[()\[\],]")
+_PARAM_RE = re.compile(rf"{_LITERAL}|\?")
 
 
 def _string_spans(text: str) -> list[tuple[int, int]]:
-    spans, i, n = [], 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch in ("'", '"'):
-            j = i + 1
-            while j < n and text[j] != ch:
-                j += 1
-            spans.append((i, j))
-            i = j + 1
+    """(open, close) indices of every string literal, quotes included
+    (close is the last index for an unclosed literal)."""
+    return [(m.start(), m.end() - 1) for m in _LITERAL_RE.finditer(text)]
+
+
+def _in_string(spans, i: int) -> bool:
+    """Is index ``i`` inside one of ``spans`` (either quote counts)?"""
+    k = bisect.bisect_right(spans, (i, math.inf)) - 1
+    return k >= 0 and i <= spans[k][1]
+
+
+def _matching_close(text: str, op: int) -> int:
+    """Index of the bracket closing the '(' or '[' at ``op``, skipping
+    string literals; the last index when it is never closed."""
+    opener = text[op]
+    depth = 0
+    for m in (_PARENS_RE if opener == "(" else _BRACKETS_RE).finditer(
+            text, op):
+        ch = m.group()
+        if ch == opener:
+            depth += 1
+        elif ch in (")", "]"):
+            depth -= 1
+            if not depth:
+                return m.start()
+    return len(text) - 1
+
+
+def _depths(text: str) -> list[int]:
+    """Paren depth at each character position (string-literal aware)."""
+    out, depth, last = [], 0, 0
+    for m in _PARENS_RE.finditer(text):
+        out.extend([depth] * (m.start() - last))
+        ch = m.group()
+        if ch == "(":
+            out.append(depth)
+            depth += 1
+        elif ch == ")":
+            depth -= 1
+            out.append(depth)
         else:
-            i += 1
-    return spans
+            out.extend([depth] * len(ch))
+        last = m.end()
+    out.extend([depth] * (len(text) - last))
+    return out
+
+
+def _split_top_args(inner: str) -> list[str]:
+    """Split 'a, f(b, c), d' at top-level commas (bracket/string aware)."""
+    args, depth, start = [], 0, 0
+    for m in _ARG_TOKENS_RE.finditer(inner):
+        ch = m.group()
+        if ch in ("(", "["):
+            depth += 1
+        elif ch in (")", "]"):
+            depth -= 1
+        elif ch == "," and depth == 0:
+            args.append(inner[start:m.start()])
+            start = m.end()
+    tail = inner[start:]
+    if tail.strip() or args:
+        args.append(tail)
+    return args
+
+
+def _param_marks(text: str) -> list[int]:
+    """Indices of the ``?`` placeholders outside string literals."""
+    return [m.start() for m in _PARAM_RE.finditer(text) if m.group() == "?"]
 
 
 def _find_calls(text: str, name: str):
-    """Yield (start, open_paren, close_paren) for each call of `name`,
-    skipping string literals."""
+    """Yield (start, open_paren, close_paren) for each call of `name`
+    outside string literals; calls nested in a match are skipped."""
     pat = re.compile(rf"\b{re.escape(name)}\s*\(", re.IGNORECASE)
-    spans = _string_spans(text)
+    spans = None
     i = 0
     while True:
         m = pat.search(text, i)
         if not m:
             return
-        # don't match inside a longer identifier (e.g. MY_EARLIEST)
-        # or inside a string literal
-        if m.start() > 0 and (text[m.start() - 1].isalnum()
-                              or text[m.start() - 1] == "_"):
+        if spans is None:
+            spans = _string_spans(text)
+        if _in_string(spans, m.start()):
             i = m.end()
             continue
-        if any(lo <= m.start() <= hi for lo, hi in spans):
-            i = m.end()
-            continue
-        depth, j, in_str = 1, m.end(), None
-        while j < len(text) and depth:
-            ch = text[j]
-            if in_str:
-                if ch == in_str:
-                    in_str = None
-            elif ch in ("'", '"'):
-                in_str = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            j += 1
-        yield m.start(), m.end() - 1, j - 1
-        i = j
+        cp = _matching_close(text, m.end() - 1)
+        yield m.start(), m.end() - 1, cp
+        i = cp + 1
 
 
 def _rewrite_call(text: str, name: str, new_name: str,
@@ -177,34 +237,38 @@ def _rewrite_call(text: str, name: str, new_name: str,
     return "".join(out)
 
 
+def _sub_outside_strings(text: str, pattern: str, repl) -> str:
+    """re.sub (case-insensitive) that skips matches starting inside
+    string literals."""
+    spans = None
+
+    def sub(m: re.Match) -> str:
+        nonlocal spans
+        if spans is None:
+            spans = _string_spans(text)
+        if _in_string(spans, m.start()):
+            return m.group(0)
+        return repl(m) if callable(repl) else m.expand(repl)
+
+    return re.sub(pattern, sub, text, flags=re.IGNORECASE)
+
+
 def _rewrite_array_literal(text: str) -> str:
     """Calcite array constructor ARRAY[a, b, ...] (SqlStdOperatorTable
     ARRAY_VALUE_CONSTRUCTOR, used throughout Druid SQL) -> Spark's
     array(a, b, ...). Bracket-matching, nest-safe, string-safe."""
     pat = re.compile(r"\bARRAY\s*\[", re.IGNORECASE)
     while True:
-        spans = _string_spans(text)
-        m = None
-        for cand in pat.finditer(text):
-            if not any(a <= cand.start() <= b for a, b in spans):
-                m = cand
+        spans = None
+        for m in pat.finditer(text):
+            if spans is None:
+                spans = _string_spans(text)
+            if not _in_string(spans, m.start()):
                 break
-        if m is None:
+        else:
             return text
-        depth, j, in_str = 1, m.end(), None
-        while j < len(text) and depth:
-            ch = text[j]
-            if in_str:
-                if ch == in_str:
-                    in_str = None
-            elif ch in ("'", '"'):
-                in_str = ch
-            elif ch == "[":
-                depth += 1
-            elif ch == "]":
-                depth -= 1
-            j += 1
-        inner = text[m.end():j - 1]
+        cb = _matching_close(text, m.end() - 1)
+        inner = text[m.end():cb]
         # Druid types decimal literals as DOUBLE (the native expression
         # layer has no DECIMAL), so ARRAY[1.2, 2.2] is DOUBLE_ARRAY and
         # coerces against double columns (CalciteArraysQueryTest
@@ -219,29 +283,7 @@ def _rewrite_array_literal(text: str) -> str:
                     if re.fullmatch(r"\s*[+-]?\d+\.\d+\s*", a) else a
                     for a in args]
             inner = ",".join(args)
-        text = text[:m.start()] + "array(" + inner + ")" + text[j:]
-
-
-def _split_top_args(inner: str) -> list[str]:
-    """Split 'a, f(b, c), d' at top-level commas (paren/string aware)."""
-    args, depth, in_str, start = [], 0, None, 0
-    for i, ch in enumerate(inner):
-        if in_str:
-            if ch == in_str:
-                in_str = None
-        elif ch in ("'", '"'):
-            in_str = ch
-        elif ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            args.append(inner[start:i])
-            start = i + 1
-    tail = inner[start:]
-    if tail.strip() or args:
-        args.append(tail)
-    return args
+        text = text[:m.start()] + "array(" + inner + ")" + text[cb + 1:]
 
 
 def _rewrite_regexp_extract(text: str) -> str:
@@ -445,8 +487,8 @@ def _rewrite_position_from(text: str) -> str:
             for kw in ("IN", "FROM"):
                 for m in re.finditer(rf"\s\b{kw}\b\s", inner,
                                      re.IGNORECASE):
-                    if depths[m.start()] == 0 and not any(
-                            a <= m.start() <= b for a, b in spans):
+                    if (depths[m.start()] == 0
+                            and not _in_string(spans, m.start())):
                         parts[kw] = m
                         break
             if "IN" in parts and "FROM" in parts:
@@ -637,16 +679,12 @@ def bind_parameters(text: str, parameters) -> str:
     An unbound ``?`` raises, matching the reference's
     "Parameter at position[N] is not bound"."""
     params = list(parameters or ())
-    spans = _string_spans(text)
-    out, last, idx = [], 0, 0
-    for i, ch in enumerate(text):
-        if ch != "?" or any(a <= i <= b for a, b in spans):
-            continue
+    out, last = [], 0
+    for idx, i in enumerate(_param_marks(text)):
         if idx >= len(params) or params[idx] is None:
             raise ValueError(f"Parameter at position[{idx}] is not bound")
         out.append(text[last:i])
         out.append(_param_literal(params[idx]))
-        idx += 1
         last = i + 1
     out.append(text[last:])
     return "".join(out)
@@ -670,7 +708,7 @@ def _rewrite_lookup_schema(text: str) -> str:
     spans = _string_spans(text)
     out, last = [], 0
     for m in re.finditer(r"\blookup\.([A-Za-z_]\w*)", text, re.IGNORECASE):
-        if any(a <= m.start() <= b for a, b in spans):
+        if _in_string(spans, m.start()):
             continue
         name = m.group(1)
         out.append(text[last:m.start()])
@@ -698,7 +736,7 @@ def _rewrite_view_schema(text: str) -> str:
     spans = _string_spans(text)
     out, last = [], 0
     for m in re.finditer(r"\bview\.([A-Za-z_]\w*)", text, re.IGNORECASE):
-        if any(a <= m.start() <= b for a, b in spans):
+        if _in_string(spans, m.start()):
             continue
         name = m.group(1)
         out.append(text[last:m.start()])
@@ -1084,17 +1122,14 @@ def _rewrite_druid_schema(text: str) -> str:
     references through that alias survive intact."""
     spans = _string_spans(text)
 
-    def _out(i: int) -> bool:
-        return not any(a <= i < b for a, b in spans)
-
     druid_alias = any(
-        _out(m.start()) for m in re.finditer(
+        not _in_string(spans, m.start()) for m in re.finditer(
             r"(?:\b(?:FROM|JOIN)\s+|,\s*)[`\"\w.]+\s+(?:AS\s+)?"
             r"druid\b(?!\s*\.)",
             text, re.IGNORECASE))
 
     def sub(m: re.Match) -> str:
-        if not _out(m.start()):
+        if _in_string(spans, m.start()):
             return m.group(0)
         if druid_alias:
             # only strip in table position: previous token is FROM/JOIN,
@@ -1109,7 +1144,7 @@ def _rewrite_druid_schema(text: str) -> str:
                 for k in re.finditer(
                         r"\b(FROM|SELECT|WHERE|GROUP|ORDER|HAVING|ON|"
                         r"JOIN)\b", head, re.IGNORECASE):
-                    if _out(k.start()):
+                    if not _in_string(spans, k.start()):
                         kw = k.group(1).upper()
                 if kw != "FROM":
                     return m.group(0)
@@ -1132,7 +1167,7 @@ def _rewrite_catalog_tables(text: str) -> str:
     spans = _string_spans(text)
 
     def sub(m: re.Match) -> str:
-        if any(a <= m.start() < b for a, b in spans):
+        if _in_string(spans, m.start()):
             return m.group(0)
         if m.group(1):
             return f"sys_{m.group(2).lower()}"
@@ -1149,38 +1184,17 @@ def _rewrite_quoted_identifiers(text: str) -> str:
     identifier, honoring the ``""`` escape. Runs FIRST in translate()
     so every later string-span-aware rewrite sees only single-quoted
     literals."""
-    out = []
-    i, n = 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if text[j] == "'":
-                    if j + 1 < n and text[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            out.append(text[i:j + 1])
-            i = j + 1
-        elif ch == '"':
-            j = i + 1
-            body = []
-            while j < n:
-                if text[j] == '"':
-                    if j + 1 < n and text[j + 1] == '"':
-                        body.append('"')
-                        j += 2
-                        continue
-                    break
-                body.append(text[j])
-                j += 1
-            out.append("`" + "".join(body).replace("`", "``") + "`")
-            i = j + 1
-        else:
-            out.append(ch)
-            i += 1
+    out, last = [], 0
+    for lo, hi in _string_spans(text):
+        if text[lo] != '"':
+            continue
+        # an odd quote count after the opener means it was closed
+        end = hi if text.count('"', lo + 1, hi + 1) % 2 else hi + 1
+        body = text[lo + 1:end].replace('""', '"')
+        out.append(text[last:lo])
+        out.append("`" + body.replace("`", "``") + "`")
+        last = hi + 1
+    out.append(text[last:])
     return "".join(out)
 
 
@@ -1367,7 +1381,7 @@ def _rewrite_substring_null_when_short(text: str) -> str:
                                 re.IGNORECASE))):
                 i0 = mm.start()
                 if (depths_i[i0] == 0
-                        and not any(a <= i0 <= b for a, b in spans_i)):
+                        and not _in_string(spans_i, i0)):
                     inner = inner[:i0] + "," + inner[mm.end():]
         repl = f"NULLIF(substring({inner}), '')"
         text = text[:s] + repl + text[c + 1:]
@@ -1408,7 +1422,9 @@ def _human_readable_body(n: str, p: str, base: int, units: str,
     to long, NULL stays NULL, |n| < base renders the INTEGER value with
     the bare suffix regardless of precision, and the unit index is an
     exact integer-threshold CASE (the reference uses bit position /
-    digit count — float log() would mis-bucket exact powers)."""
+    digit count — float log() would mis-bucket exact powers). Bounds
+    compare against ±t, never abs(n): abs(Long.MIN) overflows, and
+    Long.MIN must render '-8.00 EiB' / '-9.22 EB'."""
     v = "__hr_v"
     small = (f"concat(CAST({v} AS STRING), '{suffix}')" if suffix
              else f"CAST({v} AS STRING)")
@@ -1417,7 +1433,7 @@ def _human_readable_body(n: str, p: str, base: int, units: str,
         # 2^60 ≤ Long.MAX), value = bytes / 2^(10*unit), float division
         thresholds = [base ** i for i in range(1, 7)]
         idx = " ".join(
-            f"WHEN abs({v}) < {t}L THEN {i}"
+            f"WHEN {v} > -{t}L AND {v} < {t}L THEN {i}"
             for i, t in enumerate(thresholds, start=0)) + " ELSE 6"
         big = (f"format_string(concat('%.', CAST({p} AS STRING), 'f %s'), "
                f"{v} / power({base}, __hr_i), "
@@ -1428,7 +1444,7 @@ def _human_readable_body(n: str, p: str, base: int, units: str,
         # '1.234 G', not the rounded '1.235 G'), units K..E
         thresholds = [1000 ** i for i in range(2, 7)]
         idx = " ".join(
-            f"WHEN abs({v}) < {t}L THEN {i}"
+            f"WHEN {v} > -{t}L AND {v} < {t}L THEN {i}"
             for i, t in enumerate(thresholds, start=0)) + " ELSE 5"
         big = (f"format_string(concat('%.', CAST({p} AS STRING), 'f %s'), "
                f"CAST({v} DIV CAST(power({base}, __hr_i) AS BIGINT) "
@@ -1438,7 +1454,7 @@ def _human_readable_body(n: str, p: str, base: int, units: str,
     # transform (poor man's lateral binding — stays whole-stage-codegen)
     return (f"(CASE WHEN ({n}) IS NULL THEN NULL ELSE "
             f"element_at(transform(array(CAST({n} AS BIGINT)), {v} -> "
-            f"CASE WHEN abs({v}) < {base} THEN {small} ELSE "
+            f"CASE WHEN {v} > -{base} AND {v} < {base} THEN {small} ELSE "
             f"element_at(transform(array(CASE {idx} END), __hr_i -> "
             f"{big}), 1) END), 1) END)")
 
@@ -1605,27 +1621,19 @@ def translate(text: str, time_column: str = TIME_COLUMN) -> str:
         rewritten = _close_extra_paren(rewritten, "__ACDT_TMP__(", ")")
         text = rewritten.replace(
             "__ACDT_TMP__(", "theta_sketch_estimate(theta_sketch_agg(")
-    for druid, spark_name in _SIMPLE_RENAMES.items():
-        text = _rewrite_call(text, druid, spark_name)
-    return text
+    return _sub_outside_strings(
+        text, _SIMPLE_RENAME_PAT,
+        lambda m: _SIMPLE_RENAMES[m.group(1).upper()] + "(")
 
 
 def _rewrite_bare_varchar(text: str) -> str:
-    import re as _re
-    spans = _string_spans(text)
-    out, last = [], 0
-    for m in _re.finditer(r"\bAS\s+VARCHAR\b(?!\s*\()", text,
-                          _re.IGNORECASE):
-        if any(a <= m.start() < b for a, b in spans):
-            continue
-        out.append(text[last:m.start()])
-        out.append("AS STRING")
-        last = m.end()
-    out.append(text[last:])
-    return "".join(out)
+    return _sub_outside_strings(text, r"\bAS\s+VARCHAR\b(?!\s*\()",
+                                "AS STRING")
 
 
 def _close_extra_paren(text: str, marker: str, closing: str = ")") -> str:
+    """Append ``closing`` after the call each ``marker`` (ending in its
+    open paren) starts."""
     out = []
     i = 0
     while True:
@@ -1633,23 +1641,10 @@ def _close_extra_paren(text: str, marker: str, closing: str = ")") -> str:
         if k < 0:
             out.append(text[i:])
             return "".join(out)
-        j = k + len(marker)
-        depth, in_str = 1, None
-        while j < len(text) and depth:
-            ch = text[j]
-            if in_str:
-                if ch == in_str:
-                    in_str = None
-            elif ch in ("'", '"'):
-                in_str = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            j += 1
-        out.append(text[i:j])
+        cp = _matching_close(text, k + len(marker) - 1)
+        out.append(text[i:cp + 1])
         out.append(closing)
-        i = j
+        i = cp + 1
 
 
 def _explain_plan_for(spark: SparkSession, inner: str,
@@ -1675,43 +1670,9 @@ def _explain_plan_for(spark: SparkSession, inner: str,
         "PLAN string, RESOURCES string, ATTRIBUTES string")
 
 
-def _sub_outside_strings(text: str, pattern: str, repl) -> str:
-    """re.sub that skips matches starting inside string literals."""
-    spans = _string_spans(text)
-    out, last = [], 0
-    for m in re.finditer(pattern, text, re.IGNORECASE):
-        if any(a <= m.start() < b for a, b in spans):
-            continue
-        out.append(text[last:m.start()])
-        out.append(repl(m) if callable(repl) else m.expand(repl))
-        last = m.end()
-    out.append(text[last:])
-    return "".join(out)
-
-
 # a "simple operand": string literal, number, or identifier — enough
 # for the comparison forms Druid SQL uses against MV dims
 _MV_LIT = r"(?:'(?:[^']|'')*'|[0-9]+(?:\.[0-9]+)?|[A-Za-z_][\w.]*)"
-
-
-def _depths(text: str) -> list[int]:
-    """Paren depth at each character position (string-literal aware)."""
-    spans = _string_spans(text)
-    in_str = [False] * len(text)
-    for a, b in spans:
-        for i in range(a, min(b + 1, len(text))):
-            in_str[i] = True
-    out, d = [], 0
-    for i, ch in enumerate(text):
-        if not in_str[i]:
-            if ch == "(":
-                out.append(d)
-                d += 1
-                continue
-            if ch == ")":
-                d -= 1
-        out.append(d)
-    return out
 
 
 def _resolve_group_items(text: str, sel_end: int, from_start: int,
@@ -1739,7 +1700,7 @@ def _has_bare_ref(seg: str, col: str) -> bool:
     spans = _string_spans(seg)
     for m in re.finditer(rf"(?<![\w.]){re.escape(col)}\b", seg,
                          re.IGNORECASE):
-        if any(a <= m.start() <= b for a, b in spans):
+        if _in_string(spans, m.start()):
             continue
         bare = True
         for name, _, _ in _enclosing_calls(seg, m.start(), depths, spans):
@@ -1813,11 +1774,8 @@ def _explode_mv_array_items(text: str, mv_cols) -> str:
         depths = _depths(text)
         spans = _string_spans(text)
 
-        def _outside(i):
-            return not any(a <= i <= b for a, b in spans)
-
         for m in re.finditer(r"\bGROUP\s+BY\b", text, re.IGNORECASE):
-            if not _outside(m.start()):
+            if _in_string(spans, m.start()):
                 continue
             d = depths[m.start()]
             bstart = 0
@@ -1834,7 +1792,7 @@ def _explode_mv_array_items(text: str, mv_cols) -> str:
             tail = re.compile(r"\b(HAVING|ORDER\s+BY|LIMIT)\b",
                               re.IGNORECASE)
             for t in tail.finditer(text, m.end(), bend):
-                if depths[t.start()] == d and _outside(t.start()):
+                if depths[t.start()] == d and not _in_string(spans, t.start()):
                     gend = t.start()
                     break
             clause = text[m.end():gend]
@@ -1842,13 +1800,14 @@ def _explode_mv_array_items(text: str, mv_cols) -> str:
             for s2 in re.finditer(r"\bSELECT\b", text, re.IGNORECASE):
                 if (bstart <= s2.start() < m.start()
                         and depths[s2.start()] == d
-                        and _outside(s2.start())):
+                        and not _in_string(spans, s2.start())):
                     sel = s2
                     break
             fstart = None
             for f in re.finditer(r"\bFROM\b", text, re.IGNORECASE):
                 if (f.start() < m.start() and depths[f.start()] == d
-                        and f.start() >= bstart and _outside(f.start())):
+                        and f.start() >= bstart
+                        and not _in_string(spans, f.start())):
                     fstart = f
             if sel is None or fstart is None:
                 continue
@@ -1862,7 +1821,8 @@ def _explode_mv_array_items(text: str, mv_cols) -> str:
             wmatch = None
             for w in re.finditer(r"\bWHERE\b", text, re.IGNORECASE):
                 if (tbl.end() <= w.start() < m.start()
-                        and depths[w.start()] == d and _outside(w.start())):
+                        and depths[w.start()] == d
+                        and not _in_string(spans, w.start())):
                     wmatch = w
                     break
             pre_where_end = wmatch.start() if wmatch else m.start()
@@ -1947,7 +1907,7 @@ def _derived_mv_outputs(sub: str, mv_cols) -> set:
     fstart = None
     for f in re.finditer(r"\bFROM\b", sub, re.IGNORECASE):
         if (f.start() > sel.end() and depths[f.start()] == 0
-                and not any(a <= f.start() <= b for a, b in spans)):
+                and not _in_string(spans, f.start())):
             fstart = f
             break
     sel_list = sub[sel.end():fstart.start()] if fstart else sub[sel.end():]
@@ -1993,7 +1953,7 @@ def _derived_output_names(sub: str):
     fstart = None
     for f in re.finditer(r"\bFROM\b", sub, re.IGNORECASE):
         if (f.start() > sel.end() and depths[f.start()] == 0
-                and not any(a <= f.start() <= b for a, b in spans)):
+                and not _in_string(spans, f.start())):
             fstart = f
             break
     sel_list = sub[sel.end():fstart.start()] if fstart else sub[sel.end():]
@@ -2030,7 +1990,7 @@ def _scalar_shadowed(text, pos, col, mv_cols, depths, spans) -> bool:
         if not (bstart <= f.start() < bend):
             continue
         if (depths[f.start()] != d
-                or any(a <= f.start() <= b for a, b in spans)):
+                or _in_string(spans, f.start())):
             continue
         op = f.end() - 1
         cp = _matching_close(text, op)
@@ -2077,12 +2037,9 @@ def _rewrite_mv_distinct(text: str, mv_cols) -> str:
         depths = _depths(text)
         spans = _string_spans(text)
 
-        def _out(i):
-            return not any(a <= i <= b for a, b in spans)
-
         for m in re.finditer(r"\bSELECT\s+DISTINCT\b", text,
                              re.IGNORECASE):
-            if not _out(m.start()):
+            if _in_string(spans, m.start()):
                 continue
             d = depths[m.start()]
             bend = len(text)
@@ -2090,7 +2047,7 @@ def _rewrite_mv_distinct(text: str, mv_cols) -> str:
                 if depths[i] < d:
                     bend = i
                     break
-            if any(depths[g.start()] == d and _out(g.start())
+            if any(depths[g.start()] == d and not _in_string(spans, g.start())
                    for g in re.finditer(r"\bGROUP\s+BY\b", text,
                                         re.IGNORECASE)
                    if m.end() <= g.start() < bend):
@@ -2098,7 +2055,8 @@ def _rewrite_mv_distinct(text: str, mv_cols) -> str:
             fstart = None
             for f in re.finditer(r"\bFROM\b", text, re.IGNORECASE):
                 if (m.end() <= f.start() < bend
-                        and depths[f.start()] == d and _out(f.start())):
+                        and depths[f.start()] == d
+                        and not _in_string(spans, f.start())):
                     fstart = f
                     break
             if fstart is None:
@@ -2112,7 +2070,7 @@ def _rewrite_mv_distinct(text: str, mv_cols) -> str:
                                   text, re.IGNORECASE):
                 if (fstart.end() <= t2.start() < bend
                         and depths[t2.start()] == d
-                        and _out(t2.start())):
+                        and not _in_string(spans, t2.start())):
                     ins = t2.start()
                     break
             ordinals = ", ".join(str(i + 1) for i in range(len(items)))
@@ -2156,11 +2114,8 @@ def _rewrite_mv_groupby(text: str, mv_cols) -> str:
             depths = _depths(text)
             spans = _string_spans(text)
 
-            def _outside(i):
-                return not any(a <= i <= b for a, b in spans)
-
             for m in re.finditer(r"\bGROUP\s+BY\b", text, re.IGNORECASE):
-                if not _outside(m.start()):
+                if _in_string(spans, m.start()):
                     continue
                 d = depths[m.start()]
                 # block = this SELECT's span at depth d
@@ -2179,7 +2134,8 @@ def _rewrite_mv_groupby(text: str, mv_cols) -> str:
                 tail = re.compile(r"\b(HAVING|ORDER\s+BY|LIMIT)\b",
                                   re.IGNORECASE)
                 for t in tail.finditer(text, m.end(), bend):
-                    if depths[t.start()] == d and _outside(t.start()):
+                    if (depths[t.start()] == d
+                            and not _in_string(spans, t.start())):
                         gend = t.start()
                         break
                 clause = text[m.end():gend]
@@ -2189,7 +2145,8 @@ def _rewrite_mv_groupby(text: str, mv_cols) -> str:
                 fstart = None
                 for f in re.finditer(r"\bFROM\b", text, re.IGNORECASE):
                     if (f.start() < m.start() and depths[f.start()] == d
-                            and f.start() >= bstart and _outside(f.start())):
+                            and f.start() >= bstart
+                            and not _in_string(spans, f.start())):
                         fstart = f
                 if fstart is None:
                     continue
@@ -2203,7 +2160,7 @@ def _rewrite_mv_groupby(text: str, mv_cols) -> str:
                 for s2 in re.finditer(r"\bSELECT\b", text, re.IGNORECASE):
                     if (bstart <= s2.start() < m.start()
                             and depths[s2.start()] == d
-                            and _outside(s2.start())):
+                            and not _in_string(spans, s2.start())):
                         sel2 = s2
                         break
                 probe_items = (
@@ -2246,7 +2203,7 @@ def _rewrite_mv_groupby(text: str, mv_cols) -> str:
                                      re.IGNORECASE):
                     if (tbl_end <= w.start() < m.start()
                             and depths[w.start()] == d
-                            and _outside(w.start())):
+                            and not _in_string(spans, w.start())):
                         wmatch = w
                         break
                 pre_where_end = wmatch.start() if wmatch else m.start()
@@ -2256,7 +2213,7 @@ def _rewrite_mv_groupby(text: str, mv_cols) -> str:
                 # rows at grouping time). Top-level comma joins and
                 # anything else unrecognized are left alone.
                 top_idx = [i for i in range(tbl_end, pre_where_end)
-                           if depths[i] == d and _outside(i)]
+                           if depths[i] == d and not _in_string(spans, i)]
                 if any(text[i] == "," for i in top_idx):
                     continue
                 has_join = re.search(
@@ -2285,17 +2242,8 @@ def _rewrite_mv_groupby(text: str, mv_cols) -> str:
                         frm = f2
                     if sel is None or frm is None:
                         return seg
-                    inner, parts, depth2, last = \
-                        seg[sel.end():frm.start()], [], 0, 0
-                    for i2, ch in enumerate(inner):
-                        if ch == "(":
-                            depth2 += 1
-                        elif ch == ")":
-                            depth2 -= 1
-                        elif ch == "," and depth2 == 0:
-                            parts.append(inner[last:i2])
-                            last = i2 + 1
-                    parts.append(inner[last:])
+                    inner = seg[sel.end():frm.start()]
+                    parts = _split_top_args(inner) or [inner]
 
                     def _patch(p: str) -> str:
                         st = p.strip()
@@ -2458,7 +2406,7 @@ def _enclosing_calls(text: str, pos: int, depths, spans):
         j = i - 1
         while j >= 0:
             if (text[j] == "(" and depths[j] == d - 1
-                    and not any(a <= j <= b for a, b in spans)):
+                    and not _in_string(spans, j)):
                 break
             j -= 1
         if j < 0:
@@ -2470,24 +2418,6 @@ def _enclosing_calls(text: str, pos: int, depths, spans):
             yield "", j, j
         d -= 1
         i = j
-
-
-def _matching_close(text: str, op: int) -> int:
-    """Index of the ')' matching the '(' at ``op`` (string-aware)."""
-    depth, j, in_str = 1, op + 1, None
-    while j < len(text) and depth:
-        ch = text[j]
-        if in_str:
-            if ch == in_str:
-                in_str = None
-        elif ch in ("'", '"'):
-            in_str = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        j += 1
-    return j - 1
 
 
 def _rewrite_mv_in_subquery(text: str, mv_cols) -> str:
@@ -2518,7 +2448,7 @@ def _rewrite_mv_in_subquery(text: str, mv_cols) -> str:
             c = re.escape(col)
             for m in re.finditer(rf"(?<![\w.]){c}\b", text,
                                  re.IGNORECASE):
-                if any(a <= m.start() <= b for a, b in spans):
+                if _in_string(spans, m.start()):
                     continue
                 hit = _sub_at(m.end())
                 if hit is None:
@@ -2539,7 +2469,7 @@ def _rewrite_mv_in_subquery(text: str, mv_cols) -> str:
             continue
         # tuple form: (expr, ..., mv, ...) IN (SELECT ...)
         for m in re.finditer(r"\(([^()]+)\)", text):
-            if any(a <= m.start() <= b for a, b in spans):
+            if _in_string(spans, m.start()):
                 continue
             items = [i.strip() for i in _split_top_args(m.group(1))]
             if len(items) < 2 or not any(
@@ -2632,7 +2562,7 @@ def _flatten_mv_in_collects(text: str, mv_cols) -> str:
                 for mo in re.finditer(
                         rf"(?<![\w.]){re.escape(hits[0])}\b", inner,
                         re.IGNORECASE):
-                    if any(a <= mo.start() <= b for a, b in i_spans):
+                    if _in_string(i_spans, mo.start()):
                         continue
                     for nm, _fs, _op in _enclosing_calls(
                             inner, mo.start(), i_depths, i_spans):
@@ -2688,7 +2618,7 @@ def _map_mv_scalar_exprs(text: str, mv_cols) -> str:
             c = re.escape(col)
             for m in re.finditer(rf"(?<![\w.]){c}\b", text, re.IGNORECASE):
                 pos = m.start()
-                if any(a <= pos <= b for a, b in spans):
+                if _in_string(spans, pos):
                     continue
                 if _scalar_shadowed(text, pos, col, mv_cols, depths,
                                     spans):
@@ -3069,9 +2999,6 @@ def _alias_mv_map(text: str, mv_cols, mv_by_table) -> dict:
                  for t, cols in mv_by_table.items()}
     spans = _string_spans(text)
 
-    def _outside(i):
-        return not any(a <= i <= b for a, b in spans)
-
     # the alias group must NOT consume a keyword: `SELECT cnt, dim2
     # FROM foo ...` would otherwise match `, dim2 FROM` (alias=FROM),
     # swallowing the FROM so `foo` never registers and every qualified
@@ -3082,7 +3009,7 @@ def _alias_mv_map(text: str, mv_cols, mv_by_table) -> dict:
             rf"(?:\b(?:FROM|JOIN)\s+|,\s*)([A-Za-z_]\w*)"
             rf"(?:\s+(?:AS\s+)?(?!(?:{kw})\b)([A-Za-z_]\w*))?",
             text, re.IGNORECASE):
-        if not _outside(m.start()):
+        if _in_string(spans, m.start()):
             continue
         tbl = m.group(1).lower()
         if tbl not in tbl_lower:
@@ -3090,7 +3017,7 @@ def _alias_mv_map(text: str, mv_cols, mv_by_table) -> dict:
         alias = (m.group(2) or "").lower()
         out[alias or tbl] = tbl_lower[tbl]
     for m in re.finditer(r"\b(?:FROM|JOIN)\s*\(", text, re.IGNORECASE):
-        if not _outside(m.start()):
+        if _in_string(spans, m.start()):
             continue
         op = m.end() - 1
         cp = _matching_close(text, op)
@@ -3124,12 +3051,12 @@ def _align_mv_in_unions(text: str, mv_by_table) -> str:
 
     unions = [m for m in re.finditer(r"\bUNION\s+ALL\b", text,
                                      re.IGNORECASE)
-              if not any(a <= m.start() <= b for a, b in spans)]
+              if not _in_string(spans, m.start())]
     if not unions:
         return text
     # chain = consecutive arms separated by UNION ALL at one depth
     selects = [m for m in re.finditer(r"\bSELECT\b", text, re.IGNORECASE)
-               if not any(a <= m.start() <= b for a, b in spans)]
+               if not _in_string(spans, m.start())]
     edits = []  # (start, end, replacement)
     seen_chains = set()
     for um in unions:
@@ -3335,7 +3262,7 @@ def _check_mv_lambda_hygiene(text: str) -> None:
     hof = ("transform", "filter", "exists", "forall", "aggregate",
            "zip_with", "array_sort", "reduce")
     for m in re.finditer(r"__mv_e\b", text):
-        if any(a <= m.start() <= b for a, b in spans):
+        if _in_string(spans, m.start()):
             continue
         if not any(name in hof for name, _fs, _op in
                    _enclosing_calls(text, m.start(), depths, spans)):
@@ -3358,14 +3285,11 @@ def _hint_broadcast_mv_joins(text: str) -> str:
     depths = _depths(text)
     spans = _string_spans(text)
 
-    def _outside(i):
-        return not any(a <= i <= b for a, b in spans)
-
     hints = {}
     for jm in re.finditer(
             r"\bJOIN\s+([A-Za-z_]\w*)(?:\s+(?:AS\s+)?([A-Za-z_]\w*))?"
             r"\s+ON\b", text, re.IGNORECASE):
-        if not _outside(jm.start()):
+        if _in_string(spans, jm.start()):
             continue
         d = depths[jm.start()]
         end = len(text)
@@ -3373,7 +3297,7 @@ def _hint_broadcast_mv_joins(text: str) -> str:
                 r"\b(WHERE|GROUP|ORDER|HAVING|LIMIT|JOIN|UNION)\b",
                 text[jm.end():], re.IGNORECASE):
             p = jm.end() + t.start()
-            if depths[p] <= d and _outside(p):
+            if depths[p] <= d and not _in_string(spans, p):
                 end = p
                 break
         cond = text[jm.end():end]
@@ -3383,7 +3307,7 @@ def _hint_broadcast_mv_joins(text: str) -> str:
         sel = None
         for s in re.finditer(r"\bSELECT\b", text, re.IGNORECASE):
             if (s.start() < jm.start() and depths[s.start()] == d
-                    and _outside(s.start())):
+                    and not _in_string(spans, s.start())):
                 sel = s
         if sel is None:
             continue
@@ -3443,59 +3367,6 @@ def _expand_mv_wrap(text: str) -> str:
         inner = text[op + 1:cp]
         text = (text[:start] + f"array(CAST({inner} AS STRING))"
                 + text[cp + 1:])
-
-
-def _mv_string_columns(registry, names) -> tuple:
-    """Names of array<string> columns across the registered tables."""
-    from pyspark.sql.types import ArrayType, StringType
-
-    cols = set()
-    for name in names:
-        try:
-            fields = registry.table(name).schema.fields
-        except Exception:  # noqa: BLE001 — unresolvable view: skip
-            continue
-        for f in fields:
-            if (isinstance(f.dataType, ArrayType)
-                    and isinstance(f.dataType.elementType, StringType)):
-                cols.add(f.name)
-    return tuple(sorted(cols))
-
-
-def _float_columns(registry, names) -> tuple:
-    """Names of FLOAT (single-precision) columns across the tables."""
-    from pyspark.sql.types import FloatType
-
-    cols = set()
-    for name in names:
-        try:
-            fields = registry.table(name).schema.fields
-        except Exception:  # noqa: BLE001 — unresolvable view: skip
-            continue
-        for f in fields:
-            if isinstance(f.dataType, FloatType):
-                cols.add(f.name)
-    return tuple(sorted(cols))
-
-
-def _integral_columns(registry, names) -> tuple:
-    """Names of integral (LONG/INT/SHORT/BYTE) columns across the
-    registered tables."""
-    from pyspark.sql.types import (
-        ByteType, IntegerType, LongType, ShortType,
-    )
-
-    cols = set()
-    for name in names:
-        try:
-            fields = registry.table(name).schema.fields
-        except Exception:  # noqa: BLE001 — unresolvable view: skip
-            continue
-        for f in fields:
-            if isinstance(f.dataType, (LongType, IntegerType,
-                                       ShortType, ByteType)):
-                cols.add(f.name)
-    return tuple(sorted(cols))
 
 
 # SQL type keywords that follow AS inside CAST(...) — not aliases
@@ -3574,32 +3445,13 @@ def _coerce_float_literals(text: str, float_cols) -> str:
     return text
 
 
-def _complex_sketch_columns(registry, names) -> tuple:
-    """Names of BinaryType columns across the registered tables —
-    ingest-time COMPLEX sketch state (hyperUnique HLL written by
-    ingest.batch.rollup via hll_sketch_agg; the reference's
-    ComplexMetrics/HyperUniquesSerde column type)."""
-    from pyspark.sql.types import BinaryType
-
-    cols = set()
-    for name in names:
-        try:
-            fields = registry.table(name).schema.fields
-        except Exception:  # noqa: BLE001 — unresolvable view: skip
-            continue
-        for f in fields:
-            if isinstance(f.dataType, BinaryType):
-                cols.add(f.name)
-    return tuple(sorted(cols))
-
-
 def _refs_any_column(expr: str, cols) -> bool:
     """Does `expr` reference any of `cols` outside string literals?"""
     spans = _string_spans(expr)
     for col in cols:
         for m in re.finditer(rf"(?<![\w.$]){re.escape(col)}(?![\w$])",
                              expr, re.IGNORECASE):
-            if not any(a <= m.start() <= b for a, b in spans):
+            if not _in_string(spans, m.start()):
                 return True
     return False
 
@@ -3662,19 +3514,12 @@ def _rewrite_complex_sketch_aggs(text: str, bin_cols) -> str:
         end = cp + 1
         # a trailing FILTER (WHERE cond) folds into the union's input
         # (CASE gives NULL state, which hll_union_agg skips)
-        fm = re.match(r"(?is)\s*FILTER\s*\(\s*WHERE\b",
-                      text[end:])
+        fm = re.match(r"(?is)\s*FILTER\s*(\()\s*WHERE\b", text[end:])
         if fm:
-            depth, j = 1, end + fm.end()
-            while j < len(text) and depth:
-                if text[j] == "(":
-                    depth += 1
-                elif text[j] == ")":
-                    depth -= 1
-                j += 1
-            cond = text[end + fm.end():j - 1].strip()
+            fcp = _matching_close(text, end + fm.start(1))
+            cond = text[end + fm.end():fcp].strip()
             inner = f"CASE WHEN {cond} THEN {inner} END"
-            end = j
+            end = fcp + 1
         out.append(text[pos:s])
         out.append(f"CAST(ROUND(hll_sketch_estimate("
                    f"hll_union_agg({inner}))) AS BIGINT)")
@@ -3842,6 +3687,74 @@ def _apply_sql_timezone(text: str, tz: str) -> str:
     return text
 
 
+class _ColumnTypes(NamedTuple):
+    """One table's columns, by the kinds the dialect rewrites by."""
+    integral: tuple  # LONG/INT/SHORT/BYTE: ROUND keeps LONG typing
+    floats: tuple  # FLOAT: decimal literals compare at FLOAT precision
+    mv: tuple  # array<string>: multi-value string semantics
+    binary: tuple  # ingest-time COMPLEX sketch state (hyperUnique HLL)
+
+
+def _column_types(fields) -> _ColumnTypes:
+    from pyspark.sql.types import (
+        ArrayType, BinaryType, ByteType, FloatType, IntegerType, LongType,
+        ShortType, StringType,
+    )
+
+    def named(pred) -> tuple:
+        return tuple(sorted({f.name for f in fields if pred(f.dataType)}))
+
+    return _ColumnTypes(
+        integral=named(lambda t: isinstance(
+            t, (LongType, IntegerType, ShortType, ByteType))),
+        floats=named(lambda t: isinstance(t, FloatType)),
+        mv=named(lambda t: isinstance(t, ArrayType)
+                 and isinstance(t.elementType, StringType)),
+        binary=named(lambda t: isinstance(t, BinaryType)))
+
+
+def _schema_types(spark: SparkSession, registry, key) -> dict:
+    """table -> _ColumnTypes for every registered table and materialized
+    ``view_<name>``: one schema pass per ``key`` = (id(registry), epoch,
+    table names), cached on the session. Views are filled in once they
+    resolve — the recursive view-materialization call gets here before
+    its own temp view exists."""
+    cached = getattr(spark, "_druid_sql_types", None)
+    if cached is None or cached[0] != key:
+        types = {}
+        for name in key[2]:
+            try:
+                fields = registry.table(name).schema.fields
+            except Exception:  # noqa: BLE001 — unresolvable view: skip
+                fields = ()
+            types[name] = _column_types(fields)
+        cached = spark._druid_sql_types = (key, types)
+    types = cached[1]
+    for vname in registry.view_names():
+        if f"view_{vname}" not in types:
+            try:
+                fields = spark.table(f"view_{vname}").schema.fields
+            except Exception:  # noqa: BLE001 — unmaterialized view
+                continue
+            types[f"view_{vname}"] = _column_types(fields)
+    return types
+
+
+def _referenced_tables(text: str, names) -> tuple:
+    """The ``names`` that ``text`` mentions as identifiers outside
+    string literals."""
+    spans = _string_spans(text)
+    return tuple(
+        n for n in names
+        if any(not _in_string(spans, m.start()) for m in re.finditer(
+            rf"(?<![\w.$]){re.escape(n)}(?![\w$])", text, re.IGNORECASE)))
+
+
+def _columns(types: dict, tables, kind: str) -> tuple:
+    """Sorted union of one column kind over ``tables``."""
+    return tuple(sorted({c for t in tables for c in getattr(types[t], kind)}))
+
+
 def druid_sql(spark: SparkSession, text: str, registry=None,
               parameters=None, context=None) -> DataFrame:
     """Run a Druid SQL string on Spark: register scalar shims, translate
@@ -3920,27 +3833,12 @@ def druid_sql(spark: SparkSession, text: str, registry=None,
     explain = re.match(r"(?is)^\s*EXPLAIN\s+PLAN\s+FOR\s+(.+)$", text)
     if explain:
         return _explain_plan_for(spark, explain.group(1), registry)
-    if registry is not None and re.search(r"\bROUND\s*\(", text,
-                                          re.IGNORECASE):
+    types = (_schema_types(spark, registry, (id(registry), epoch, names))
+             if registry is not None else {})
+    if types and re.search(r"\bROUND\s*\(", text, re.IGNORECASE):
         # pre-translate: ROUND over integral columns keeps LONG typing
-        cached_int = getattr(spark, "_druid_sql_int_cols", None)
-        if cached_int is None or cached_int[0] != (id(registry), epoch,
-                                                   names):
-            int_by_table = {n: _integral_columns(registry, (n,))
-                            for n in names}
-            spark._druid_sql_int_cols = ((id(registry), epoch, names),
-                                         int_by_table)
-        int_by_table = spark._druid_sql_int_cols[1]
-        spans_int = _string_spans(text)
-        ref_tables = tuple(
-            n for n in int_by_table
-            if any(not any(a <= m.start() <= b for a, b in spans_int)
-                   for m in re.finditer(
-                       rf"(?<![\w.$]){re.escape(n)}(?![\w$])",
-                       text, re.IGNORECASE)))
-        int_cols = tuple(sorted(
-            {c for n in ref_tables for c in int_by_table.get(n, ())}))
-        text = _mark_integral_rounds(text, int_cols)
+        text = _mark_integral_rounds(text, _columns(
+            types, _referenced_tables(text, types), "integral"))
     translated = translate(text)
     translated = _rewrite_call(translated, "__round_int", "round")
     # Druid casts never throw. get_spark() runs non-ANSI (the faithful
@@ -3955,65 +3853,24 @@ def druid_sql(spark: SparkSession, text: str, registry=None,
     if _ansi == "true":
         translated = _rewrite_call(translated, "CAST", "TRY_CAST")
     if registry is not None:
-        cache_key = (id(registry), epoch, names)
-        cached = getattr(spark, "_druid_sql_mv_cols", None)
-        if cached is not None and cached[0] == cache_key:
-            mv_by_table, float_by_table, bin_by_table = (
-                cached[1], cached[2], cached[3])
-        else:
-            mv_by_table = {n: _mv_string_columns(registry, (n,))
-                           for n in names}
-            float_by_table = {n: _float_columns(registry, (n,))
-                              for n in names}
-            bin_by_table = {n: _complex_sketch_columns(registry, (n,))
-                            for n in names}
-            spark._druid_sql_mv_cols = (cache_key, mv_by_table,
-                                        float_by_table, bin_by_table)
-        # views are MV-typed sources too: FROM view.cview AS a must
-        # give a.dim2 MV semantics when the view exposes an array.
-        # Patched OUTSIDE the cache build: the recursive
-        # view-materialization call reaches this block before its own
-        # temp view exists, so entries may be missing from the cached
-        # map and are filled in on the first call that can see them.
-        missing_views = [v for v in registry.view_names()
-                         if f"view_{v}" not in mv_by_table]
-        if missing_views:
-            from pyspark.sql.types import ArrayType, StringType
-            for vname in missing_views:
-                try:
-                    fields = spark.table(f"view_{vname}").schema.fields
-                except Exception:  # noqa: BLE001 — unmaterialized view
-                    continue
-                mv_by_table[f"view_{vname}"] = tuple(sorted(
-                    f.name for f in fields
-                    if isinstance(f.dataType, ArrayType)
-                    and isinstance(f.dataType.elementType, StringType)))
-        # Resolve the MV column set against the tables this statement
+        # Resolve column kinds against the tables this statement
         # actually references (word-boundary match on the translated
         # text — druid. qualifiers are already stripped in table
         # position). Registering foo (MV dim2) alongside numfoo
         # (scalar STRING dim2) must not give numfoo queries MV
         # treatment (r7 verdict bug #2: multi-datasource scoping).
-        spans_mv = _string_spans(translated)
-        referenced = tuple(
-            n for n in mv_by_table
-            if any(not any(a <= m.start() <= b for a, b in spans_mv)
-                   for m in re.finditer(
-                       rf"(?<![\w.$]){re.escape(n)}(?![\w$])",
-                       translated, re.IGNORECASE)))
-        mv_cols = tuple(sorted(
-            {c for n in referenced for c in mv_by_table.get(n, ())}))
-        float_cols = tuple(sorted(
-            {c for n in referenced for c in float_by_table.get(n, ())}))
+        referenced = _referenced_tables(translated, types)
+        mv_cols = _columns(types, referenced, "mv")
+        float_cols = _columns(types, referenced, "floats")
         if float_cols:
             translated = _coerce_float_literals(translated, float_cols)
-        bin_cols = tuple(sorted(
-            {c for n in referenced for c in bin_by_table.get(n, ())}))
+        bin_cols = _columns(types, referenced, "binary")
         if bin_cols:
             _check_complex_agg_contracts(text, bin_cols, context)
             translated = _rewrite_complex_sketch_aggs(translated,
                                                       bin_cols)
         if mv_cols:
+            mv_by_table = {n: t.mv for n, t in types.items()}
             translated = _align_mv_in_unions(translated, mv_by_table)
             translated = _rewrite_mv_semantics(translated, mv_cols,
                                                mv_by_table)
@@ -4034,9 +3891,9 @@ def druid_sql(spark: SparkSession, text: str, registry=None,
         # (sql/.../planner/PlannerConfig.java; CalciteQueryTest
         # testRequireTimeCondition*): datasource-backed queries must
         # carry a __time filter. Literal-only queries (no FROM) pass.
-        spans_rt = _string_spans(translated)
+        spans = _string_spans(translated)
         has_from = any(
-            not any(a <= m.start() <= b for a, b in spans_rt)
+            not _in_string(spans, m.start())
             for m in re.finditer(r"\bFROM\b", translated, re.IGNORECASE))
         # Approximation vs the reference: Druid enforces a __time
         # filter per datasource-backed query block; this text-level

@@ -23,6 +23,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from apache_druid_spark.model.datasource import TIME_COLUMN
+from apache_druid_spark.sql.dialect import (
+    _depths, _in_string, _string_spans,
+)
 
 _INSERT_RE = re.compile(
     r"^\s*(INSERT|REPLACE)\s+INTO\s+([A-Za-z_][\w.]*|\"[^\"]+\")\s+"
@@ -81,9 +84,11 @@ def validate_insert(text: str) -> None:
     if "/" in target:
         raise ValueError(
             f"{verb} dataSource cannot contain the '/' character.")
-    pb = re.search(r"\bPARTITIONED\s+BY\s+(ALL\s+TIME|\w+|'[^']+'"
-                   r"|FLOOR\s*\([^)]*\)|TIME_FLOOR\s*\([^)]*\))",
-                   text, re.IGNORECASE)
+    spans = _string_spans(text)
+    pb = next((m for m in re.finditer(
+        r"\bPARTITIONED\s+BY\s+(ALL\s+TIME|\w+|'[^']+'"
+        r"|FLOOR\s*\([^)]*\)|TIME_FLOOR\s*\([^)]*\))",
+        text, re.IGNORECASE) if not _in_string(spans, m.start())), None)
     if pb is None:
         raise ValueError(
             f"{verb} statements must specify PARTITIONED BY clause "
@@ -100,13 +105,9 @@ def validate_insert(text: str) -> None:
     # ORDER BY on the OUTER insert query is rejected (CLUSTERED BY is
     # the supported spelling); ORDER BY inside subqueries is fine —
     # check depth-0 occurrences before PARTITIONED BY only
-    depth = 0
-    for i, ch in enumerate(text[:pb.start()]):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and text[i:i + 8].upper() == "ORDER BY":
+    depths = _depths(text)
+    for m in re.finditer("ORDER BY", text[:pb.start()], re.IGNORECASE):
+        if depths[m.start()] == 0 and not _in_string(spans, m.start()):
             raise ValueError(
                 "Cannot have ORDER BY on an INSERT query, use "
                 "CLUSTERED BY instead.")

@@ -115,6 +115,18 @@ def test_approx_count_distinct_sketch_with_filter_clause(spark, reg):
     assert out[0]["u"] == 3
 
 
+def test_count_distinct_sketch_filter_with_paren_literal(spark, reg):
+    # the FILTER clause's closing paren is found past a ')' or ')('
+    # inside a string literal
+    out = druid_sql(spark, """
+        SELECT COUNT(DISTINCT unique_dim1) FILTER (WHERE dim1 <> ')') AS a,
+               COUNT(DISTINCT unique_dim1)
+                 FILTER (WHERE dim1 IN ('def', ')(')) AS b
+        FROM druid.foo
+    """, reg).collect()
+    assert [tuple(r) for r in out] == [(6, 1)]
+
+
 def test_string_agg_on_complex_errors(spark, reg):
     # testStringAggQueryOnComplexDatatypes: validation error
     with pytest.raises(Exception,

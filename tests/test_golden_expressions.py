@@ -284,6 +284,9 @@ CASES = [
     ("hrb_kib", "HUMAN_READABLE_BINARY_BYTE_FORMAT(1024)", "1.00 KiB"),
     ("hrb_max", "HUMAN_READABLE_BINARY_BYTE_FORMAT(9223372036854775807)",
      "8.00 EiB"),
+    ("hrb_long_min",
+     "HUMAN_READABLE_BINARY_BYTE_FORMAT(-9223372036854775808)",
+     "-8.00 EiB"),
     ("hrb_cols", "HUMAN_READABLE_BINARY_BYTE_FORMAT(b, p)", "25 B"),
     ("hrb_p0", "HUMAN_READABLE_BINARY_BYTE_FORMAT(45000, 0)", "44 KiB"),
     ("hrb_p1", "HUMAN_READABLE_BINARY_BYTE_FORMAT(45000, 1)",
@@ -298,6 +301,9 @@ CASES = [
     ("hrd_kb", "HUMAN_READABLE_DECIMAL_BYTE_FORMAT(1024)", "1.02 KB"),
     ("hrd_max", "HUMAN_READABLE_DECIMAL_BYTE_FORMAT(9223372036854775807)",
      "9.22 EB"),
+    ("hrd_long_min",
+     "HUMAN_READABLE_DECIMAL_BYTE_FORMAT(-9223372036854775808)",
+     "-9.22 EB"),
     ("hrd_cols", "HUMAN_READABLE_DECIMAL_BYTE_FORMAT(b, p)", "25 B"),
     ("hrd_p0", "HUMAN_READABLE_DECIMAL_BYTE_FORMAT(45678, 0)", "46 KB"),
     ("hrd_p1", "HUMAN_READABLE_DECIMAL_BYTE_FORMAT(45678, 1)",

@@ -299,6 +299,7 @@ CASES = [
     ("human_readable_binary_byte_format(nan)", "0 B"),
     ("human_readable_binary_byte_format(inf)", "8.00 EiB"),
     ("human_readable_binary_byte_format(-inf)", "-8.00 EiB"),
+    ("human_readable_decimal_byte_format(-inf)", "-9.22 EB"),
     ("human_readable_binary_byte_format(o)", "0 B"),
     ("human_readable_binary_byte_format(od)", "0 B"),
     ("human_readable_binary_byte_format(of)", "0 B"),

@@ -322,15 +322,13 @@ def engine_main(n: int) -> int:
     # multi-container segment scan (r16 verdict #7): one 100k-row v9
     # container scanned 1× vs n× paths — one segment per task, so the
     # axis is TASK THROUGHPUT on 32 threads (ideal ratio n/32)
-    import tempfile
-
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     import segment_bench as _segb
 
     from apache_druid_spark.ingest.segment import scan_segments
+    from apache_druid_spark.session import scratch_dir
 
-    seg_dir = os.path.join(tempfile.mkdtemp(prefix="scale_seg_"),
-                           "seg")
+    seg_dir = os.path.join(scratch_dir("scale_seg_"), "seg")
     _segb.build_container(seg_dir, 100_000)
 
     def p_segment_scan(s):
