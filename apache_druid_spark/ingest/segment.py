@@ -63,6 +63,8 @@ import os
 import struct
 import zipfile
 
+from apache_druid_spark.model.granularity import parse_interval
+
 __all__ = [
     "DruidSegmentError", "SmooshedFiles", "read_segment_dir",
     "read_segment_zip", "segment_schema", "segment_metadata",
@@ -1716,29 +1718,6 @@ def _filter_row_mask(flt, smoosh: "SmooshedFiles", bitmap_type: str,
 # ---------------------------------------------------------------------------
 
 
-def _interval_to_ms(interval: str) -> tuple[int, int]:
-    """'start/end' ISO-8601 → [start_ms, end_ms) epoch UTC, with
-    Druid's eternity years clamped to the representable extremes
-    (same semantics as operators/filters._iso_interval_bounds)."""
-    import re as _re
-    from datetime import datetime, timezone
-
-    from apache_druid_spark.operators.filters import _pad_partial_iso
-
-    def parse(s: str) -> int:
-        s = _pad_partial_iso(s).replace("Z", "+00:00")
-        m = _re.match(r"^(-?\d+)-", s)
-        if m and not 1 <= int(m.group(1)) <= 9999:
-            return (-(1 << 62)) if int(m.group(1)) < 1 else (1 << 62)
-        dt = datetime.fromisoformat(s)
-        if dt.tzinfo is None:
-            dt = dt.replace(tzinfo=timezone.utc)
-        return int(dt.timestamp() * 1000)
-
-    lo_s, hi_s = interval.split("/")
-    return parse(lo_s), parse(hi_s)
-
-
 def _read_v8_frame(smoosh: "SmooshedFiles", lenient: bool,
                    interval, columns):
     """The LEGACY v8 container layout (IndexIO.java
@@ -1778,7 +1757,7 @@ def _read_v8_frame(smoosh: "SmooshedFiles", lenient: bool,
     mets = [m.decode("utf-8") for m in read_generic_indexed(buf)
             if m is not None]
     interval_str = _read_prefixed_string(buf)
-    start_ms, end_ms = _interval_to_ms(interval_str)
+    start_ms, end_ms = parse_interval(interval_str)
 
     time_name = next(
         (n for n in ("time_LITTLE_ENDIAN.drd", "time_BIG_ENDIAN.drd")
@@ -1853,7 +1832,7 @@ def _read_v8_frame(smoosh: "SmooshedFiles", lenient: bool,
     pdf = pd.DataFrame(data)
     pushdown = None
     if interval is not None:
-        lo, hi = (_interval_to_ms(interval)
+        lo, hi = (parse_interval(interval)
                   if isinstance(interval, str) else interval)
         pdf = pdf[(pdf["__time"] >= lo)
                   & (pdf["__time"] < hi)].reset_index(drop=True)
@@ -1962,7 +1941,7 @@ def read_segment_dir(dirpath: str, lenient: bool = False,
         # chunk-skips to the range. Exact — no downstream superset.
         import numpy as np
 
-        lo, hi = (_interval_to_ms(interval)
+        lo, hi = (parse_interval(interval)
                   if isinstance(interval, str) else interval)
         tv = np.asarray(time_vals, dtype=np.int64)
         keep = (tv >= lo) & (tv < hi)
@@ -2217,7 +2196,7 @@ def _v8_metadata(smoosh: "SmooshedFiles") -> dict:
     only: rows from the time envelope, per-dim cardinality from the
     dictionary GI header, sizes from meta.smoosh ranges."""
     dims, mets, met_types, interval_str = _v8_peek(smoosh)
-    start_ms, end_ms = _interval_to_ms(interval_str)
+    start_ms, end_ms = parse_interval(interval_str)
     time_name = next(
         (n for n in ("time_LITTLE_ENDIAN.drd", "time_BIG_ENDIAN.drd")
          if n in smoosh.entries), None)

@@ -13,33 +13,12 @@ key is a plain long/timestamp column.
 
 from __future__ import annotations
 
+import calendar
 import re
+from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-# Simple named granularities -> date_trunc unit (Spark and DuckDB agree
-# on week-starts-Monday for 'week').
-_TRUNC_UNITS = {
-    "second": "second",
-    "minute": "minute",
-    "hour": "hour",
-    "day": "day",
-    "week": "week",
-    "month": "month",
-    "quarter": "quarter",
-    "year": "year",
-}
-
-# Named granularities that are fixed millisecond multiples.
-_FIXED_MILLIS = {
-    "five_minute": 5 * 60_000,
-    "ten_minute": 10 * 60_000,
-    "fifteen_minute": 15 * 60_000,
-    "thirty_minute": 30 * 60_000,
-    "six_hour": 6 * 3_600_000,
-    "eight_hour": 8 * 3_600_000,
-}
 
 _PERIOD_RE = re.compile(
     r"^P(?:(\d+)Y)?(?:(\d+)M)?(?:(\d+)W)?(?:(\d+)D)?"
@@ -62,13 +41,152 @@ def parse_period(period: str, allow_mixed: bool = False) -> tuple[int, int]:
         + int(d or 0) * 86_400_000
         + int(h or 0) * 3_600_000
         + int(mi or 0) * 60_000
-        + int(float(s or 0) * 1000)
+        + round(float(s or 0) * 1000)
     )
     if months and millis and not allow_mixed:
         raise ValueError(f"mixed month/time period unsupported: {period!r}")
     if not months and not millis:
         raise ValueError(f"zero-length period: {period!r}")
     return months, millis
+
+
+# GranularityType.java:34-84: every named granularity as its ISO period
+# ("all" and "none" are not periods and are handled by their callers).
+GRANULARITIES = {
+    "second": "PT1S", "minute": "PT1M", "five_minute": "PT5M",
+    "ten_minute": "PT10M", "fifteen_minute": "PT15M",
+    "thirty_minute": "PT30M", "hour": "PT1H", "six_hour": "PT6H",
+    "eight_hour": "PT8H", "day": "P1D", "week": "P1W", "month": "P1M",
+    "quarter": "P3M", "year": "P1Y",
+}
+
+# The single-word names are also date_trunc units (Spark and DuckDB
+# agree on week-starts-Monday for 'week'); the rest are fixed
+# millisecond multiples floored from the epoch.
+_TRUNC_UNITS = frozenset(g for g in GRANULARITIES if "_" not in g)
+_FIXED_MILLIS = {g: parse_period(p)[1] for g, p in GRANULARITIES.items()
+                 if g not in _TRUNC_UNITS}
+
+
+def period_of(gran) -> str:
+    """Granularity spec -> ISO period: a name from ``GRANULARITIES``, a
+    bare ISO period, or a ``period``/``duration`` granularity dict."""
+    if isinstance(gran, dict):
+        if gran.get("type") == "duration":
+            s, ms = divmod(int(gran["duration"]), 1000)
+            return f"PT{s}.{ms:03d}S"
+        return gran.get("period", "P1D")
+    g = str(gran).lower()
+    if g in GRANULARITIES:
+        return GRANULARITIES[g]
+    if g.startswith("p"):
+        return str(gran)
+    raise ValueError(f"unsupported granularity: {gran!r}")
+
+
+def trunc_unit(period: str) -> str | None:
+    """The date_trunc unit whose buckets an ISO period spans exactly
+    (``P3M`` -> ``quarter``), or None."""
+    p = period.strip().upper()
+    return next((g for g in _TRUNC_UNITS if GRANULARITIES[g] == p), None)
+
+
+# JodaUtils.MIN_INSTANT / MAX_INSTANT; Intervals.ETERNITY renders them
+# as years -146136543 and 146140482.
+MIN_INSTANT, MAX_INSTANT = -(1 << 62), 1 << 62
+ETERNITY = "-146136543-09-08T08:23:32.096Z/146140482-04-24T15:36:27.903Z"
+_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
+_ONE_MS = timedelta(milliseconds=1)
+
+
+def datetime_ms(dt: datetime) -> int:
+    """Epoch millis of a datetime; a naive one is read as UTC."""
+    if dt.tzinfo is None:
+        dt = dt.replace(tzinfo=timezone.utc)
+    return (dt - _EPOCH) // _ONE_MS
+
+
+# the instants a datetime and a Spark timestamp hold: years 1..9999
+_LO_MS = datetime_ms(datetime.min)
+_HI_MS = datetime_ms(datetime.max.replace(microsecond=0))
+
+
+def parse_instant(s: str) -> int:
+    """ISO-8601 instant -> epoch millis, as Druid's Intervals.of reads
+    it: partial dates (``2012``, ``2011-04``), ``Z`` and ``±hh:mm``
+    offsets, no offset meaning UTC. Years outside 1..9999 (the
+    eternity bounds) map to MIN_INSTANT / MAX_INSTANT."""
+    text = str(s).strip()
+    m = re.match(r"([+-]?\d+)-", text)
+    if m and not 1 <= int(m.group(1)) <= 9999:
+        return MIN_INSTANT if int(m.group(1)) < 1 else MAX_INSTANT
+    m = re.fullmatch(r"(\d{4})(?:-(\d\d))?", text)
+    if m:
+        text = f"{m.group(1)}-{m.group(2) or '01'}-01"
+    try:
+        dt = datetime.fromisoformat(text)
+    except ValueError:
+        raise ValueError(f"invalid ISO-8601 instant: {s!r}") from None
+    return datetime_ms(dt)
+
+
+def parse_interval(iv: str) -> tuple[int, int]:
+    """``start/end`` ISO-8601 interval -> (start_ms, end_ms)."""
+    try:
+        start, end = str(iv).split("/")
+        return parse_instant(start), parse_instant(end)
+    except ValueError:
+        raise ValueError(f"invalid ISO-8601 interval: {iv!r}") from None
+
+
+def utc_datetime(ms: int) -> datetime:
+    """Epoch millis -> naive UTC datetime, clamped to years 1..9999."""
+    return (_EPOCH + min(max(ms, _LO_MS), _HI_MS) * _ONE_MS).replace(
+        tzinfo=None)
+
+
+def iso_of(ms: int) -> str:
+    """Epoch millis -> Druid's ISO rendering, ``2011-01-01T00:00:00.000Z``."""
+    return utc_datetime(ms).isoformat(timespec="milliseconds") + "Z"
+
+
+def instant_lit(ms: int) -> Column:
+    """Timestamp literal of an epoch-millis instant, clamped to years
+    1..9999 (the eternity bounds overflow a Spark timestamp)."""
+    return F.timestamp_millis(F.lit(min(max(ms, _LO_MS), _HI_MS)))
+
+
+def floor_ms(ms: int, gran: str) -> int:
+    """Python twin of ``time_floor_col`` for a named granularity in UTC
+    (week starts Monday, 1969-12-29 being the Monday before the epoch)."""
+    g = str(gran).lower()
+    if g not in GRANULARITIES:
+        raise ValueError(f"not a named granularity: {gran!r}")
+    months, millis = parse_period(GRANULARITIES[g])
+    if millis:
+        origin = -3 * 86_400_000 if g == "week" else 0
+        return ms - (ms - origin) % millis
+    d = utc_datetime(ms)
+    m = d.year * 12 + d.month - 1
+    m -= m % months
+    return datetime_ms(datetime(m // 12, m % 12 + 1, 1))
+
+
+def shift_ms(ms: int, gran, step: int) -> int:
+    """Python twin of ``time_shift_col``: move an instant by ``step``
+    periods of ``gran`` in UTC; a month step keeps the time of day and
+    clamps the day to the month's end."""
+    return _shift(ms, *parse_period(period_of(gran), allow_mixed=True), step)
+
+
+def _shift(ms: int, months: int, millis: int, step: int) -> int:
+    if months:
+        d = utc_datetime(ms)
+        y, m = divmod(d.year * 12 + d.month - 1 + months * step, 12)
+        d = d.replace(year=y, month=m + 1,
+                      day=min(d.day, calendar.monthrange(y, m + 1)[1]))
+        ms = datetime_ms(d)
+    return ms + millis * step
 
 
 def _period_field_count(period: str) -> int:
@@ -95,12 +213,11 @@ def _tz_is_fixed(tz: str) -> bool:
     if not tz or tz.upper() in ("UTC", "ETC/UTC", "Z"):
         return True
     try:
-        from datetime import datetime, timezone as _pytz
         from zoneinfo import ZoneInfo
 
         z = ZoneInfo(tz)
         offs = {
-            datetime(y, mo, 1, tzinfo=_pytz.utc).astimezone(z).utcoffset()
+            datetime(y, mo, 1, tzinfo=timezone.utc).astimezone(z).utcoffset()
             for y in (1975, 2000, 2020, 2035) for mo in (1, 7)
         }
         return len(offs) == 1
@@ -111,19 +228,13 @@ def _tz_is_fixed(tz: str) -> bool:
 def granularity_to_duration(gran) -> str:
     """Granularity -> Structured Streaming window duration string
     (for ``F.window(col, dur)`` tumbling windows in streaming rollup)."""
-    if isinstance(gran, dict):
-        if gran.get("type") == "duration":
-            return f"{int(gran['duration'])} milliseconds"
-        months, millis = parse_period(gran.get("period", "P1D"))
-        if months:
-            raise ValueError("month-based periods unsupported in streaming windows")
-        return f"{millis} milliseconds"
     g = str(gran).lower()
     if g in _TRUNC_UNITS:
         return f"1 {g}"
-    if g in _FIXED_MILLIS:
-        return f"{_FIXED_MILLIS[g]} milliseconds"
-    raise ValueError(f"unsupported streaming granularity: {gran!r}")
+    months, millis = parse_period(period_of(gran))
+    if months:
+        raise ValueError("month-based periods unsupported in streaming windows")
+    return f"{millis} milliseconds"
 
 
 def _floor_millis(col: Column, dur_ms: int, origin_ms: int = 0) -> Column:
@@ -143,10 +254,9 @@ def _tz_offset_ms(tz: str | None, instant_ms: int) -> int:
     if m:
         sign = 1 if m.group(1) == "+" else -1
         return sign * (int(m.group(2)) * 3600 + int(m.group(3)) * 60) * 1000
-    from datetime import datetime, timezone as _pytz
     from zoneinfo import ZoneInfo
 
-    d = datetime.fromtimestamp(instant_ms / 1000, tz=_pytz.utc)
+    d = _EPOCH + instant_ms * _ONE_MS
     off = d.astimezone(ZoneInfo(tz)).utcoffset()
     return int(off.total_seconds() * 1000)
 
@@ -159,40 +269,21 @@ def _compound_boundaries(origin_wall_ms: int, months: int,
     clamps as the walk proceeds (NOT equal to add_months(o, k*m) +
     k*millis). The boundary series is data-independent; precompute it
     over [1900, 2200] (wall frame) and floor via lookup."""
-    import calendar
-    from datetime import datetime, timedelta, timezone as _pytz
-
-    def to_dt(ms):
-        return datetime.fromtimestamp(ms / 1000, tz=_pytz.utc) \
-            .replace(tzinfo=None)
-
-    def to_ms(d):
-        return int(d.replace(tzinfo=_pytz.utc).timestamp() * 1000)
-
-    def add_months_clamp(d, n):
-        mo = d.month - 1 + n
-        y, m = d.year + mo // 12, mo % 12 + 1
-        return d.replace(year=y, month=m,
-                         day=min(d.day, calendar.monthrange(y, m)[1]))
-
-    def step(d, sign):
-        d = add_months_clamp(d, sign * months)
-        return d + timedelta(milliseconds=sign * millis)
-
-    lo, hi = datetime(1900, 1, 1), datetime(2200, 1, 1)
+    lo = datetime_ms(datetime(1900, 1, 1))
+    hi = datetime_ms(datetime(2200, 1, 1))
     out = []
-    cur = to_dt(origin_wall_ms)
+    cur = origin_wall_ms
     while cur < hi:
         if cur >= lo:
-            out.append(to_ms(cur))
-        cur = step(cur, 1)
-    cur = to_dt(origin_wall_ms)
+            out.append(cur)
+        cur = _shift(cur, months, millis, 1)
+    cur = origin_wall_ms
     while True:
-        cur = step(cur, -1)
+        cur = _shift(cur, months, millis, -1)
         if cur < lo:
             break
         if cur < hi:
-            out.append(to_ms(cur))
+            out.append(cur)
     out.sort()
     return out
 
@@ -257,7 +348,7 @@ def time_floor_col(col: Column, gran, timezone: str | None = None) -> Column:
     if isinstance(gran, dict):
         period_tz = gran.get("timeZone")
         if gran.get("origin") is not None:
-            origin_ms = _iso_to_millis(gran["origin"])
+            origin_ms = parse_instant(gran["origin"])
         if gran.get("type") == "duration":
             return _with_tz(
                 col, period_tz or timezone,
@@ -272,7 +363,7 @@ def time_floor_col(col: Column, gran, timezone: str | None = None) -> Column:
             return col
         if g in _TRUNC_UNITS:
             return _with_tz(
-                col, timezone, lambda c: F.date_trunc(_TRUNC_UNITS[g], c)
+                col, timezone, lambda c: F.date_trunc(g, c)
             )
         if g in _FIXED_MILLIS:
             return _with_tz(
@@ -352,25 +443,7 @@ def time_shift_col(
     col: Column, gran, step: int, timezone: str | None = None
 ) -> Column:
     """TIME_SHIFT: move a timestamp by step * period."""
-    if isinstance(gran, dict):
-        period = gran.get("period", "P1D")
-        if gran.get("type") == "duration":
-            return F.timestamp_millis(
-                F.unix_millis(col) + F.lit(int(gran["duration"]) * step)
-            )
-    else:
-        g = str(gran).lower()
-        if g in _TRUNC_UNITS:
-            period = {"second": "PT1S", "minute": "PT1M", "hour": "PT1H",
-                      "day": "P1D", "week": "P1W", "month": "P1M",
-                      "quarter": "P3M", "year": "P1Y"}[g]
-        elif g in _FIXED_MILLIS:
-            return F.timestamp_millis(
-                F.unix_millis(col) + F.lit(_FIXED_MILLIS[g] * step)
-            )
-        else:
-            period = gran
-    months, millis = parse_period(period, allow_mixed=True)
+    months, millis = parse_period(period_of(gran), allow_mixed=True)
     if months:
         # add_months returns DATE; re-attach the time-of-day so P1M
         # shifts preserve sub-day precision (Druid chronology.add);
@@ -388,13 +461,3 @@ def _with_tz(col: Column, tz: str | None, f) -> Column:
         return f(col)
     local = F.from_utc_timestamp(col, tz)
     return F.to_utc_timestamp(f(local), tz)
-
-
-def _iso_to_millis(iso: str) -> int:
-    from datetime import datetime, timezone as _tz
-
-    s = iso.replace("Z", "+00:00")
-    dt = datetime.fromisoformat(s)
-    if dt.tzinfo is None:
-        dt = dt.replace(tzinfo=_tz.utc)
-    return int(dt.timestamp() * 1000)

@@ -887,7 +887,10 @@ _FUNCTIONS: dict[str, Callable] = {
     * F.power(F.lit(2.0), sb.cast("double")),
     "mod": lambda a, b: a % b,
     "remainder": lambda a, b: a % b,
-    "safe_divide": lambda a, b: F.when(b == 0, F.lit(None)).otherwise(a / b),
+    # SafeDivideExprMacro: x/0 is NULL except 0/0, which is 0 (the SQL
+    # SAFE_DIVIDE macro in functions/registry.py agrees)
+    "safe_divide": lambda a, b: F.when(
+        b == 0, F.when(a == 0, F.lit(0.0))).otherwise(a / b),
     # bitwise
     "bitwiseand": lambda a, b: a.cast("long").bitwiseAND(b.cast("long")),
     "bitwiseor": lambda a, b: a.cast("long").bitwiseOR(b.cast("long")),

@@ -22,14 +22,11 @@ implemented with F.exists so it stays in codegen.
 
 from __future__ import annotations
 
-import re
-
-from datetime import datetime, timezone
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from apache_druid_spark.model.granularity import instant_lit, parse_interval
 from apache_druid_spark.operators.expressions import compile_expression
 from apache_druid_spark.operators.util import fcol
 
@@ -237,44 +234,13 @@ def _wants_timestamp(fn) -> bool:
     return False
 
 
-def _pad_partial_iso(s: str) -> str:
-    """Druid intervals accept partial ISO dates ('2012', '2011-04' —
-    Intervals.of via Joda): pad to a full date."""
-    m = re.fullmatch(r"(\d{4})(?:-(\d{2}))?", s.strip())
-    if m:
-        return f"{m.group(1)}-{m.group(2) or '01'}-01"
-    return s
-
-
-def _iso_interval_bounds(interval: str) -> tuple[Column, Column]:
-    start_s, end_s = interval.split("/")
-    def parse(s: str) -> Column:
-        s = _pad_partial_iso(s).replace("Z", "+00:00")
-        # Druid's eternity bounds are Long.MIN/MAX_VALUE millis —
-        # years ±146140482 (Intervals.ETERNITY renders as
-        # -146136543-09-08T.../146140482-04-24T...). Python datetime
-        # holds years 1..9999 only, so clamp out-of-range years to the
-        # representable extremes; the comparison semantics are
-        # unchanged because all real data lives inside them.
-        m = re.match(r"^(-?\d+)-", s)
-        if m and not 1 <= int(m.group(1)) <= 9999:
-            return F.lit(datetime.min if int(m.group(1)) < 1
-                         else datetime.max.replace(microsecond=0)
-                         ).cast("timestamp")
-        dt = datetime.fromisoformat(s)
-        if dt.tzinfo is None:
-            dt = dt.replace(tzinfo=timezone.utc)
-        return F.lit(dt.astimezone(timezone.utc).replace(tzinfo=None)).cast("timestamp")
-    return parse(start_s), parse(end_s)
-
-
 def interval_predicate(col: Column, intervals: list[str]) -> Column:
     """ISO-8601 interval list -> [start, end) range predicates, OR'd.
     Range form keeps the predicate pushdown- and partition-pruning-able."""
     out = None
     for iv in intervals:
-        lo, hi = _iso_interval_bounds(iv)
-        p = (col >= lo) & (col < hi)
+        lo, hi = parse_interval(iv)
+        p = (col >= instant_lit(lo)) & (col < instant_lit(hi))
         out = p if out is None else (out | p)
     return out if out is not None else F.lit(True)
 

@@ -32,7 +32,10 @@ from pyspark.sql.window import Window
 from apache_druid_spark.model.datasource import (
     TIME_COLUMN, DatasourceRegistry, local_path,
 )
-from apache_druid_spark.model.granularity import time_floor_col
+from apache_druid_spark.model.granularity import (
+    floor_ms, instant_lit, iso_of, parse_interval, parse_period, period_of,
+    time_floor_col, utc_datetime,
+)
 from apache_druid_spark.operators.aggregations import (
     compile_aggregations, synthesize_quantile_postaggs)
 from apache_druid_spark.operators.dimensions import compile_dimension_spec
@@ -234,68 +237,37 @@ def _materialize_missing_dims(df: DataFrame, q: dict) -> DataFrame:
     return df
 
 
-def _segment_floor(dt, gran: str):
-    """Python replica of time_floor_col for the named segment
-    granularities write_segments accepts (UTC, week starts Monday)."""
-    from datetime import timedelta
-
-    dt = dt.replace(minute=0, second=0, microsecond=0)
-    if gran == "hour":
-        return dt
-    dt = dt.replace(hour=0)
-    if gran == "day":
-        return dt
-    if gran == "week":
-        return dt - timedelta(days=dt.weekday())
-    dt = dt.replace(day=1)
-    if gran == "month":
-        return dt
-    if gran == "quarter":
-        return dt.replace(month=(dt.month - 1) // 3 * 3 + 1)
-    if gran == "year":
-        return dt.replace(month=1)
-    return None
+def _segment_id_ranges(intervals, gran: str) -> list | None:
+    """Query intervals -> inclusive (first, last) segment-id ranges.
+    Segment ids are ``yyyy-MM-dd'T'HH`` renderings of the UTC
+    segment-granularity floor (write_segments), so string order is
+    chronological. None when an interval does not parse or the
+    granularity is not named: the caller skips pruning, staying
+    correct."""
+    try:
+        return [(iso_of(floor_ms(lo, gran))[:13],
+                 iso_of(floor_ms(hi - 1, gran))[:13])
+                for lo, hi in map(parse_interval, intervals)]
+    except ValueError:
+        return None
 
 
 def _prune_segments(df: DataFrame, datasource, intervals: list[str],
                     registry: DatasourceRegistry) -> DataFrame:
     """Add a ``__segment`` range predicate derived from the query
-    intervals. Segment ids are ``yyyy-MM-dd'T'HH`` strings, so
-    lexicographic comparison is chronological; the predicate lands on
-    the partition column and prunes directories before any file is
-    listed or opened."""
-    from datetime import datetime, timedelta, timezone as _tz
-
+    intervals; the predicate lands on the partition column and prunes
+    directories before any file is listed or opened."""
     if not isinstance(datasource, str) or "__segment" not in df.columns:
         return df
     info = registry.segment_info(datasource)
-    if not info:
+    ranges = info and _segment_id_ranges(intervals, info["granularity"])
+    if not ranges:
         return df
-    gran = info["granularity"].lower()
-    preds = []
-    for iv in intervals:
-        try:
-            from apache_druid_spark.operators.filters import \
-                _pad_partial_iso
-            start_s, end_s = iv.split("/")
-            parse = lambda s: datetime.fromisoformat(
-                _pad_partial_iso(s).replace("Z", "+00:00"))
-            s, e = parse(start_s), parse(end_s)
-            norm = lambda d: (d.astimezone(_tz.utc).replace(tzinfo=None)
-                              if d.tzinfo else d)
-            s, e = norm(s), norm(e)
-        except ValueError:
-            return df
-        lo = _segment_floor(s, gran)
-        hi = _segment_floor(e - timedelta(microseconds=1), gran)
-        if lo is None or hi is None:
-            return df  # unknown granularity: skip pruning, stay correct
-        fmt = "%Y-%m-%dT%H"
-        preds.append((F.col("__segment") >= lo.strftime(fmt))
-                     & (F.col("__segment") <= hi.strftime(fmt)))
-    out = preds[0]
-    for p in preds[1:]:
-        out = out | p
+    seg = F.col("__segment")
+    out = None
+    for lo, hi in ranges:
+        p = (seg >= lo) & (seg <= hi)
+        out = p if out is None else out | p
     return df.filter(out)
 
 
@@ -541,45 +513,10 @@ def _tz_of(q: dict) -> str | None:
 
 def _granularity_interval_sql(gran) -> str:
     """Granularity -> Spark INTERVAL literal for bucket-sequence steps."""
-    from apache_druid_spark.model.granularity import parse_period
-
-    named_months = {"month": 1, "quarter": 3, "year": 12}
-    if isinstance(gran, dict):
-        if gran.get("type") == "duration":
-            return f"{int(gran['duration'])} MILLISECOND"
-        period = gran.get("period", "P1D")
-    elif str(gran).lower() in named_months:
-        return f"{named_months[str(gran).lower()]} MONTH"
-    else:
-        from apache_druid_spark.model.granularity import granularity_to_duration
-
-        return granularity_to_duration(gran).replace(
-            "milliseconds", "MILLISECOND")
-    months, millis = parse_period(period)
+    months, millis = parse_period(period_of(gran))
     if months:
         return f"{months} MONTH"
     return f"{millis} MILLISECOND"
-
-
-def _parse_interval_naive_utc(iv: str):
-    """``start/end`` ISO interval -> (start, end) naive-UTC datetimes,
-    or None if unparsable."""
-    from datetime import datetime, timezone as _tz
-
-    from apache_druid_spark.operators.filters import _pad_partial_iso
-
-    try:
-        start_s, end_s = iv.split("/")
-        out = []
-        for s in (start_s, end_s):
-            d = datetime.fromisoformat(
-                _pad_partial_iso(s).replace("Z", "+00:00"))
-            if d.tzinfo is not None:
-                d = d.astimezone(_tz.utc).replace(tzinfo=None)
-            out.append(d)
-        return tuple(out)
-    except (ValueError, AttributeError):
-        return None
 
 
 def _stat_as_naive_utc(v):
@@ -620,12 +557,11 @@ def _footer_extent(df: DataFrame, raw_col: str, intervals: tuple):
         return None
     import pyarrow.parquet as pq
 
-    ivs = []
-    for iv in intervals:
-        parsed = _parse_interval_naive_utc(iv)
-        if parsed is None:
-            return None
-        ivs.append(parsed)
+    try:
+        ivs = [tuple(map(utc_datetime, parse_interval(iv)))
+               for iv in intervals]
+    except ValueError:
+        return None
     lo = hi = None
     for uri in files:
         path = local_path(uri)
@@ -717,36 +653,11 @@ def _edge_segments_frame(df: DataFrame, name: str, intervals: list,
     segs = _list_segment_ids(registry.spark, info["path"])
     if not segs:
         return None
-    if intervals:
-        # keep only segments the interval bounds allow (same floor
-        # arithmetic as _prune_segments)
-        from datetime import datetime, timedelta, timezone as _tz
-        from apache_druid_spark.operators.filters import _pad_partial_iso
-
-        gran = info["granularity"].lower()
-        keep = set()
-        for iv in intervals:
-            try:
-                start_s, end_s = iv.split("/")
-                parse = lambda s: datetime.fromisoformat(  # noqa: E731
-                    _pad_partial_iso(s).replace("Z", "+00:00"))
-                s, e = parse(start_s), parse(end_s)
-                norm = lambda d: (  # noqa: E731
-                    d.astimezone(_tz.utc).replace(tzinfo=None)
-                    if d.tzinfo else d)
-                s, e = norm(s), norm(e)
-            except ValueError:
-                keep = set(segs)
-                break
-            lo = _segment_floor(s, gran)
-            hi = _segment_floor(e - timedelta(microseconds=1), gran)
-            if lo is None or hi is None:
-                keep = set(segs)
-                break
-            fmt = "%Y-%m-%dT%H"
-            keep |= {sg for sg in segs
-                     if lo.strftime(fmt) <= sg <= hi.strftime(fmt)}
-        segs = sorted(keep)
+    ranges = intervals and _segment_id_ranges(intervals, info["granularity"])
+    if ranges:
+        # keep only segments the interval bounds allow
+        segs = [sg for sg in segs
+                if any(lo <= sg <= hi for lo, hi in ranges)]
     if not segs:
         return None
     edges = sorted({segs[0], segs[-1]})
@@ -835,15 +746,10 @@ def _zero_fill(out: DataFrame, q: dict, registry, gran, tz) -> DataFrame:
     step = _granularity_interval_sql(gran)
     one = out.sparkSession.range(1)
     parts = []
-    for iv in intervals:
-        start_s, end_s = iv.split("/")
+    for start_ms, end_ms in map(parse_interval, intervals):
         start = time_floor_col(
-            F.greatest(F.lit(start_s).cast("timestamp"), F.lit(lo)),
-            gran, tz)
-        stop = F.least(
-            F.lit(end_s).cast("timestamp")
-            - F.expr("INTERVAL 1 MILLISECOND"),
-            F.lit(hi))
+            F.greatest(instant_lit(start_ms), F.lit(lo)), gran, tz)
+        stop = F.least(instant_lit(end_ms - 1), F.lit(hi))
         seq = F.when(
             stop >= start,
             F.sequence(start, stop, F.expr(f"INTERVAL {step}")))

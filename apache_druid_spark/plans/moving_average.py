@@ -20,13 +20,15 @@ the dimension cardinality, not a global sort.
 
 from __future__ import annotations
 
-from datetime import datetime, timezone
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from apache_druid_spark.model.datasource import TIME_COLUMN
+from apache_druid_spark.model.granularity import (
+    MAX_INSTANT, MIN_INSTANT, instant_lit, iso_of, parse_interval,
+    parse_period, period_of, shift_ms, time_floor_col,
+)
 from apache_druid_spark.operators.having import compile_having
 from apache_druid_spark.operators.limitspec import apply_limit_spec
 from apache_druid_spark.operators.postaggs import apply_post_aggregations
@@ -49,12 +51,18 @@ def compile_moving_average(q: dict, registry) -> DataFrame:
         raise ValueError("movingAverage query needs bounded intervals")
 
     # 1. inner groupBy over intervals extended back by n-1 buckets
-    extended = [_extend_interval(iv, gran, n - 1) for iv in intervals]
+    extended = []
+    for iv in intervals:
+        lo, hi = parse_interval(iv)
+        if lo == MIN_INSTANT or hi == MAX_INSTANT:
+            raise ValueError(
+                f"movingAverage needs bounded intervals, got {iv!r}")
+        extended.append((shift_ms(lo, gran, -(n - 1)), hi))
     inner_q = {
         "queryType": "groupBy",
         "dataSource": q["dataSource"],
         "granularity": gran,
-        "intervals": extended,
+        "intervals": [f"{iso_of(lo)}/{iso_of(hi)}" for lo, hi in extended],
         "virtualColumns": q.get("virtualColumns"),
         "filter": q.get("filter"),
         "dimensions": q.get("dimensions", []),
@@ -69,13 +77,9 @@ def compile_moving_average(q: dict, registry) -> DataFrame:
     # 2. zero-filled grid: every dim combo x every bucket
     step = _granularity_interval_sql(gran)
     seqs = []
-    for iv in extended:
-        start_s, end_s = iv.split("/")
-        from apache_druid_spark.model.granularity import time_floor_col
-
-        start = time_floor_col(F.lit(start_s).cast("timestamp"), gran, tz)
-        stop = (F.lit(end_s).cast("timestamp")
-                - F.expr("INTERVAL 1 MILLISECOND"))
+    for lo, hi in extended:
+        start = time_floor_col(instant_lit(lo), gran, tz)
+        stop = instant_lit(hi - 1)
         seqs.append(registry.spark.range(1).select(
             F.explode(F.sequence(start, stop, F.expr(f"INTERVAL {step}"))
                       ).alias(TIME_COLUMN)))
@@ -112,12 +116,11 @@ def compile_moving_average(q: dict, registry) -> DataFrame:
              .orderBy(*order).rowsBetween(-(n - 1), 0))
         out = filled
     else:
-        from apache_druid_spark.model.granularity import parse_period
         from apache_druid_spark.operators.windows import (
             chunked_trailing_window, finalize_chunked,
         )
 
-        months, millis = parse_period(_period_of(gran))
+        months, millis = parse_period(period_of(gran))
         out, w = chunked_trailing_window(filled, TIME_COLUMN, n,
                                          months=months, millis=millis)
         finalize = finalize_chunked
@@ -188,36 +191,3 @@ def _averager_col(spec: dict, w) -> Column:
     if t.startswith("long") and base not in ("mean", "meannonull"):
         col = col.cast("long")
     return col
-
-
-def _period_of(gran) -> str:
-    """Granularity spec -> ISO period string."""
-    if isinstance(gran, dict):
-        return gran.get("period", "P1D")
-    named = {"second": "PT1S", "minute": "PT1M", "hour": "PT1H",
-             "day": "P1D", "week": "P1W", "month": "P1M",
-             "quarter": "P3M", "year": "P1Y"}
-    return named.get(str(gran).lower(), str(gran))
-
-
-def _extend_interval(iv: str, gran, back: int) -> str:
-    """Move an ISO interval's start back by `back` granularity periods."""
-    start_s, end_s = iv.split("/")
-    s = start_s.replace("Z", "+00:00")
-    dt = datetime.fromisoformat(s)
-    if dt.tzinfo is None:
-        dt = dt.replace(tzinfo=timezone.utc)
-    # drive the shift through the same Column math used for buckets to
-    # keep month arithmetic consistent: evaluate via python for the
-    # common cases
-    from apache_druid_spark.model.granularity import parse_period
-
-    months, millis = parse_period(_period_of(gran))
-    if months:
-        total = dt.year * 12 + (dt.month - 1) - months * back
-        dt = dt.replace(year=total // 12, month=total % 12 + 1)
-    else:
-        from datetime import timedelta
-
-        dt = dt - timedelta(milliseconds=millis * back)
-    return f"{dt.strftime('%Y-%m-%dT%H:%M:%S')}/{end_s}"

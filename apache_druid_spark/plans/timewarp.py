@@ -18,55 +18,32 @@ fixed millis — same failure as the reference's toStandardDuration).
 
 from __future__ import annotations
 
-import re
 import time
-from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..model.granularity import _tz_offset_ms
-
-_PERIOD_RE = re.compile(
-    r"^P(?:(?P<w>\d+)W)?(?:(?P<d>\d+)D)?"
-    r"(?:T(?:(?P<h>\d+)H)?(?:(?P<m>\d+)M)?(?:(?P<s>\d+)S)?)?$")
+from ..model.granularity import (
+    _tz_offset_ms, iso_of, parse_instant, parse_interval, parse_period,
+)
 
 
 def period_to_millis(p: str) -> int:
-    m = _PERIOD_RE.match(p.strip())
-    if not m or not any(m.groupdict().values()):
+    months, millis = parse_period(p, allow_mixed=True)
+    if months:
         raise ValueError(
             f"timewarp period {p!r} does not map to a fixed duration "
             "(months/years vary — same contract as Period.toStandardDuration)")
-    g = {k: int(v or 0) for k, v in m.groupdict().items()}
-    return ((((g["w"] * 7 + g["d"]) * 24 + g["h"]) * 60 + g["m"]) * 60
-            + g["s"]) * 1000
-
-
-def iso_millis(s: str) -> int:
-    s = s.strip()
-    if s.endswith("Z"):
-        s = s[:-1] + "+00:00"
-    dt = datetime.fromisoformat(s)
-    if dt.tzinfo is None:
-        dt = dt.replace(tzinfo=timezone.utc)
-    return int(dt.timestamp() * 1000)
-
-
-def _millis_iso(ms: int) -> str:
-    return datetime.fromtimestamp(ms / 1000.0, tz=timezone.utc).strftime(
-        "%Y-%m-%dT%H:%M:%S.") + f"{ms % 1000:03d}Z"
+    return millis
 
 
 class TimewarpOperator:
     def __init__(self, data_interval: str, period: str,
                  origin: str | None = None):
-        start, end = data_interval.split("/")
-        self.data_start = iso_millis(start)
-        self.data_end = iso_millis(end)
+        self.data_start, self.data_end = parse_interval(data_interval)
         self.period_millis = period_to_millis(period)
-        self.origin_millis = iso_millis(origin) if origin else 0
+        self.origin_millis = parse_instant(origin) if origin else 0
 
     def compute_offset(self, t: int, tz: str | None = None) -> int:
         """Exact port of TimewarpOperator.computeOffset."""
@@ -90,10 +67,9 @@ class TimewarpOperator:
         offset = self.compute_offset(now, tz)
         out = []
         for iv in intervals:
-            s, e = iv.split("/")
-            s_ms = min(iso_millis(s) + offset, now + offset)
-            e_ms = min(iso_millis(e) + offset, now + offset)
-            out.append(f"{_millis_iso(s_ms)}/{_millis_iso(e_ms)}")
+            s_ms, e_ms = (min(t + offset, now + offset)
+                          for t in parse_interval(iv))
+            out.append(f"{iso_of(s_ms)}/{iso_of(e_ms)}")
         return out, offset
 
 

@@ -21,13 +21,15 @@ replaces the supervisor/task runner).
 from __future__ import annotations
 
 import json
-from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from apache_druid_spark.model.datasource import (
     TIME_COLUMN, DatasourceRegistry,
+)
+from apache_druid_spark.model.granularity import (
+    ETERNITY, iso_of, parse_instant, shift_ms,
 )
 
 CATALOG_NAME = "druid"
@@ -60,27 +62,14 @@ _SUPERVISORS_SCHEMA = (
     "spec string"
 )
 
-_GRAN_DELTA = {
-    "hour": timedelta(hours=1), "day": timedelta(days=1),
-    "week": timedelta(days=7),
-}
-
-
 def _segment_bounds(bucket: str, granularity: str) -> tuple[str, str]:
-    """Partition dir value (yyyy-MM-dd'T'HH) -> ISO start/end strings."""
-    start = datetime.strptime(bucket, "%Y-%m-%dT%H").replace(
-        tzinfo=timezone.utc)
-    g = granularity.lower()
-    if g == "month":
-        end = (start.replace(year=start.year + 1, month=1)
-               if start.month == 12
-               else start.replace(month=start.month + 1))
-    elif g == "year":
-        end = start.replace(year=start.year + 1)
-    else:
-        end = start + _GRAN_DELTA.get(g, timedelta(days=1))
-    fmt = "%Y-%m-%dT%H:%M:%S.000Z"
-    return start.strftime(fmt), end.strftime(fmt)
+    """Partition dir value (yyyy-MM-dd'T'HH) -> ISO start/end strings,
+    the end one segment-granularity period after the start. An ALL
+    segment (its __segment is NULL) spans eternity."""
+    if str(granularity).lower() == "all":
+        return tuple(ETERNITY.split("/"))
+    start = parse_instant(bucket)
+    return iso_of(start), iso_of(shift_ms(start, granularity, 1))
 
 
 def sys_segments(registry: DatasourceRegistry) -> DataFrame:
@@ -113,9 +102,7 @@ def sys_segments(registry: DatasourceRegistry) -> DataFrame:
             bucket = dirname.split("=", 1)[1]
             start, end = _segment_bounds(bucket, gran)
             size = fs.getContentSummary(st.getPath()).getLength()
-            version = datetime.fromtimestamp(
-                st.getModificationTime() / 1000, tz=timezone.utc
-            ).strftime("%Y-%m-%dT%H:%M:%S.000Z")
+            version = iso_of(st.getModificationTime())
             rows.append((
                 f"{name}_{start}_{end}_{version}", name, start, end,
                 int(size), version, 0, 1, int(counts.get(bucket, 0)),

@@ -46,6 +46,9 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 
 from apache_druid_spark.model.datasource import TIME_COLUMN
+from apache_druid_spark.model.granularity import (
+    parse_instant, parse_period, period_of, trunc_unit, utc_datetime,
+)
 
 _SIMPLE_RENAMES = {
     "APPROX_COUNT_DISTINCT_DS_HLL": "approx_count_distinct",
@@ -755,10 +758,10 @@ def _rewrite_view_schema(text: str) -> str:
     return "".join(out)
 
 
-# simple ISO periods that map to one date_trunc unit
-_TRUNC_UNITS = {"P1Y": "YEAR", "P3M": "QUARTER", "P1M": "MONTH",
-                "P1W": "WEEK", "P1D": "DAY", "PT1H": "HOUR",
-                "PT1M": "MINUTE", "PT1S": "SECOND"}
+def _trunc_unit(period: str) -> str | None:
+    """A quoted ISO period literal -> the one date_trunc unit it spans."""
+    unit = trunc_unit(period.strip("'")) if period.startswith("'") else None
+    return unit and unit.upper()
 
 
 # DOW/ISODOW included: Druid's are Joda ISO (Monday=1..Sunday=7, the
@@ -822,8 +825,7 @@ def _rewrite_time_bucket_long_form(text: str, fn: str) -> str:
         period = args[1].strip()
         origin = args[2].strip().upper() if len(args) > 2 else "NULL"
         tz = args[3].strip() if len(args) > 3 else "'UTC'"
-        unit = (_TRUNC_UNITS.get(period.strip("'").upper())
-                if period.startswith("'") else None)
+        unit = _trunc_unit(period)
         if origin != "NULL":
             # origin-aligned flooring (TimestampFloorExprMacro with an
             # origin: buckets tile outward from the origin instant —
@@ -839,12 +841,12 @@ def _rewrite_time_bucket_long_form(text: str, fn: str) -> str:
             if local:
                 ts = f"from_utc_timestamp({ts}, {tz})"
                 o = f"from_utc_timestamp({o}, {tz})"
-            p = period.strip("'").upper() if period.startswith("'") \
-                else None
-            mm = re.fullmatch(r"P(\d+)M", p or "")
-            ym = re.fullmatch(r"P(\d+)Y", p or "")
-            months = (int(mm.group(1)) if mm
-                      else 12 * int(ym.group(1)) if ym else None)
+            try:
+                months, dur = parse_period(
+                    period.strip("'") if period.startswith("'") else "")
+            except ValueError:
+                pos = cp + 1  # unsupported origin form
+                continue
             if months:
                 # interval arithmetic keeps the origin's time-of-day
                 # (add_months would degrade to DATE). months_between
@@ -857,15 +859,6 @@ def _rewrite_time_bucket_long_form(text: str, fn: str) -> str:
                         f"({o} + make_interval(0, ({k}) - {months})) "
                         f"ELSE {b} END)")
             else:
-                dm = re.fullmatch(
-                    r"P(?:(\d+)W)?(?:(\d+)D)?"
-                    r"(?:T(?:(\d+)H)?(?:(\d+)M)?(?:(\d+)S)?)?", p or "")
-                if not (p and dm and any(dm.groups())):
-                    pos = cp + 1  # unsupported origin form
-                    continue
-                w, d, h, mi, s2 = (int(g) if g else 0 for g in dm.groups())
-                dur = (((w * 7 + d) * 24 + h) * 60 + mi) * 60_000 \
-                    + s2 * 1000
                 repl = (f"timestamp_millis(unix_millis({o}) + "
                         f"CAST(floor((unix_millis({ts}) - "
                         f"unix_millis({o})) / {dur}) AS BIGINT) * {dur})")
@@ -1097,10 +1090,7 @@ def _rewrite_floor_to(text: str) -> str:
         fn, arg, unit = m.group(1).upper(), m.group(2), m.group(3).upper()
         if fn == "FLOOR":
             return f"date_trunc('{unit}', {arg})"
-        period = {"SECOND": "PT1S", "MINUTE": "PT1M", "HOUR": "PT1H",
-                  "DAY": "P1D", "WEEK": "P1W", "MONTH": "P1M",
-                  "QUARTER": "P3M", "YEAR": "P1Y"}[unit]
-        return f"TIME_CEIL({arg}, '{period}')"
+        return f"TIME_CEIL({arg}, '{period_of(unit)}')"
 
     return _FLOOR_TO_RE.sub(sub, text)
 
@@ -3545,14 +3535,11 @@ def _freeze_current_timestamp(text: str, instant, tz: str) -> str:
     instant exactly like any user literal
     (testFilterOnCurrentTimestampLosAngeles: CURRENT_TIMESTAMP + 1 DAY
     under America/Los_Angeles = 2000-01-02T00Z)."""
-    from datetime import datetime, timezone as _tzmod
+    from datetime import timezone
     from zoneinfo import ZoneInfo
 
-    s = str(instant).replace("Z", "+00:00")
-    dt = datetime.fromisoformat(s)
-    if dt.tzinfo is None:
-        dt = dt.replace(tzinfo=_tzmod.utc)
-    local = dt.astimezone(ZoneInfo(tz))
+    local = utc_datetime(parse_instant(instant)).replace(
+        tzinfo=timezone.utc).astimezone(ZoneInfo(tz))
     wall = local.strftime("%Y-%m-%d %H:%M:%S")
     if local.microsecond:  # keep a sub-second pinned instant exact
         wall += (".%06d" % local.microsecond).rstrip("0")
@@ -3675,8 +3662,7 @@ def _apply_sql_timezone(text: str, tz: str) -> str:
             if found is None:
                 break
             s, c, ts, period = found
-            unit = (_TRUNC_UNITS.get(period.strip("'").upper())
-                    if period.startswith("'") else None)
+            unit = _trunc_unit(period)
             if fn == "TIME_FLOOR" and unit is not None:
                 repl = _tz_trunc(unit, ts, tz_lit)
             else:

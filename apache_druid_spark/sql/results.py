@@ -14,6 +14,7 @@ from datetime import date, datetime
 
 from pyspark.sql import DataFrame
 
+from apache_druid_spark.model.granularity import datetime_ms, iso_of
 from apache_druid_spark.plans import timeout
 
 
@@ -55,20 +56,6 @@ def _header_types(df: DataFrame) -> tuple[list[str], list[str]]:
         druid.append(d)
         sql.append(s)
     return druid, sql
-
-
-def _epoch_millis(v) -> int:
-    from datetime import timezone
-    if v.tzinfo is None:
-        v = v.replace(tzinfo=timezone.utc)
-    return int(v.timestamp() * 1000)
-
-
-def _iso_millis(v) -> str:
-    from datetime import timezone
-    if v.tzinfo is not None:
-        v = v.astimezone(timezone.utc).replace(tzinfo=None)
-    return v.strftime("%Y-%m-%dT%H:%M:%S.") + f"{v.microsecond // 1000:03d}Z"
 
 
 def scan_result_values(q: dict, registry) -> list[dict]:
@@ -113,9 +100,9 @@ def scan_result_values(q: dict, registry) -> list[dict]:
         ev = {}
         for c in out_cols:
             if c == "timestamp" and legacy:
-                ev[c] = _iso_millis(row["__time"])
+                ev[c] = iso_of(datetime_ms(row["__time"]))
             elif c == "__time" and isinstance(row[c], datetime):
-                ev[c] = _epoch_millis(row[c])
+                ev[c] = datetime_ms(row[c])
             else:
                 ev[c] = _jsonable(row[c])
         return ev

@@ -309,6 +309,8 @@ CASES = [
     ("safe_divide(3, 0)", None),
     ("safe_divide(1, 0.0)", None),
     ("safe_divide(nan, 0.0)", None),
+    ("safe_divide(0, 0)", 0.0),
+    ("safe_divide(0.0, 0.0)", 0.0),
     # testBitwise
     ("bitwiseAnd(3, 1)", 1),
     ("bitwiseAnd(2, 1)", 0),

@@ -23,8 +23,9 @@ from datetime import datetime
 import pytest
 from pyspark.sql import types as T
 
+from apache_druid_spark.model.granularity import parse_instant as iso_millis
 from apache_druid_spark.plans.compiler import compile_query
-from apache_druid_spark.plans.timewarp import TimewarpOperator, iso_millis
+from apache_druid_spark.plans.timewarp import TimewarpOperator
 
 OP = TimewarpOperator("2014-01-01/2014-01-15", "P1W", "2014-01-06")
 
