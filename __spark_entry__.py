@@ -4351,7 +4351,7 @@ def _sql_scalar_shims(spark, sf_dir):
         SELECT p_type,
                SUM(CASE WHEN ICONTAINS_STRING(p_name, 'E') THEN 1 ELSE 0 END)
                    AS has_e,
-               SUM(PARSE_LONG(REGEXP_EXTRACT(p_brand, 'Brand#(\\\\d+)', 1)))
+               SUM(PARSE_LONG(REGEXP_EXTRACT(p_brand, 'Brand#(\\d+)', 1)))
                    AS brand_sum,
                CAST(MAX(STRPOS(p_name, ' ')) AS BIGINT) AS max_space_pos
         FROM part GROUP BY 1
@@ -5669,7 +5669,7 @@ WHERE regexp_matches(o_orderpriority, '^[1-3]')
 GROUP BY 1 ORDER BY 1
 """)
 def _round_contract_orders(spark, sf_dir):
-    """ROUND per Function.java Round (r8 `_rewrite_round_edges`):
+    """ROUND per Function.java Round (the dialect's ROUND call rule):
     double-precision HALF_UP at positive/negative/zero scales — the
     NaN/Infinity clamps are golden-pinned (test_golden_expressions);
     this entry oracle-checks the rewrite's value preservation on real

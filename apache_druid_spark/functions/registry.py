@@ -131,7 +131,7 @@ _FUNCTION_DEFS: list[tuple[str, str, str, str]] = [
     ("MV_TO_ARRAY", "a ARRAY<STRING>", "ARRAY<STRING>", "a"),
     # ARRAY_* arithmetic shims (Array{Slice,OffsetOf,OrdinalOf}
     # OperatorConversion.java); the direct name maps live in
-    # sql/dialect.py _SIMPLE_RENAMES. String-element arrays — the only
+    # sql/dialect.py _RENAMES. String-element arrays — the only
     # array type the reference's MV columns produce.
     # ARRAY_CONCAT must stay a distinct head (not bare concat): the MV
     # element-mapping pass treats concat over an MV input as an
@@ -234,7 +234,7 @@ _FUNCTION_DEFS: list[tuple[str, str, str, str]] = [
     # well-formed dotted-quad STRING parses (octets 0-255; uint
     # strings, IPv6 forms and hostnames are NULL); long-typed literal
     # arguments take the identity path via the dialect rewrite
-    # (_rewrite_ipv4_numeric — range-checked [0, 2^32))
+    # (_CALL_RULES["IPV4_PARSE"] — range-checked [0, 2^32))
     ("IPV4_PARSE", "s STRING", "BIGINT",
      """CASE WHEN s RLIKE concat('^(25[0-5]|2[0-4][0-9]|[01]?[0-9]?',
             '[0-9])(\\\\.(25[0-5]|2[0-4][0-9]|[01]?[0-9]?[0-9])){3}$')

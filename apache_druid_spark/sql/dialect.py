@@ -9,6 +9,12 @@ The rewrite is token-aware (skips string literals, matches parens), and
 everything it emits is a built-in Spark aggregate, so the plan is
 identical to hand-written Spark SQL.
 
+``_CALL_RULES`` is the one place a Druid function's SQL form is
+defined: one rule per upper-case Druid name (a rename is a rule too),
+applied by one walker, ``_rewrite_calls``, to every call outside string
+literals, arguments first. ``translate`` runs it between the few passes
+that look outside a call's parentheses.
+
   EARLIEST(x)            -> min_by(x, __time)      (time-ordered first)
   LATEST(x)              -> max_by(x, __time)
   EARLIEST_BY(x, t)      -> min_by(x, t)
@@ -50,11 +56,9 @@ from apache_druid_spark.model.granularity import (
     parse_instant, parse_period, period_of, trunc_unit, utc_datetime,
 )
 
-_SIMPLE_RENAMES = {
-    "APPROX_COUNT_DISTINCT_DS_HLL": "approx_count_distinct",
-    # APPROX_COUNT_DISTINCT_DS_THETA is a wrap (theta_sketch_estimate
-    # over theta_sketch_agg state), handled in _rewrite_aggregates
-    "APPROX_COUNT_DISTINCT_BUILTIN": "approx_count_distinct",
+# Druid functions that are a Spark function under another name: each is
+# a _CALL_RULES entry that renames the call and keeps its arguments
+_RENAMES = {
     "APPROX_QUANTILE_DS": "percentile_approx",
     "APPROX_QUANTILE_FIXED_BUCKETS": "percentile_approx",
     "APPROX_QUANTILE": "percentile_approx",
@@ -89,13 +93,9 @@ _SIMPLE_RENAMES = {
     # missing format args raise here; the reference's nonStrictFormat
     # returns 'fmt; args' (documented in the expressions goldens).
     "STRING_FORMAT": "format_string",
-    # ARRAY_AGG handled by _rewrite_array_agg (DISTINCT sorts, empty
-    # aggregates return NULL — ExpressionLambdaAggregatorFactory's
-    # observable contract, CalciteArraysQueryTest testArrayAgg)
     # ARRAY_* scalar family (sql/.../builtin/Array*OperatorConversion.java)
-    # — type-generic name maps onto Spark natives; ARRAY_APPEND /
-    # ARRAY_PREPEND / ARRAY_CONTAINS already match Spark builtins by
-    # name+semantics and need no entry. The arithmetic ones
+    # — type-generic name maps onto Spark natives; ARRAY_APPEND already
+    # matches its Spark builtin by name and semantics. The arithmetic ones
     # (ARRAY_SLICE, ARRAY_OFFSET_OF, ARRAY_ORDINAL_OF) are registered
     # as SQL UDFs in functions/registry.py.
     "ARRAY_LENGTH": "array_size",
@@ -112,11 +112,7 @@ _SIMPLE_RENAMES = {
     "BIT_OR": "bit_or",
     "BIT_XOR": "bit_xor",
     "STRPOS": "instr",
-    "TRUNC": "TRUNCATE",  # numeric-truncate alias (not Spark date trunc)
 }
-# every renamed call in one pass: no value names a different key
-_SIMPLE_RENAME_PAT = (r"\b(" + "|".join(
-    sorted(_SIMPLE_RENAMES, key=len, reverse=True)) + r")\s*\(")
 
 
 # -- the one SQL text scanner -------------------------------------------
@@ -205,10 +201,12 @@ def _param_marks(text: str) -> list[int]:
     return [m.start() for m in _PARAM_RE.finditer(text) if m.group() == "?"]
 
 
-def _find_calls(text: str, name: str):
+def _find_calls(text: str, name):
     """Yield (start, open_paren, close_paren) for each call of `name`
+    (a function name, or a compiled pattern ending in the open paren)
     outside string literals; calls nested in a match are skipped."""
-    pat = re.compile(rf"\b{re.escape(name)}\s*\(", re.IGNORECASE)
+    pat = (name if isinstance(name, re.Pattern)
+           else re.compile(rf"\b{re.escape(name)}\s*\(", re.IGNORECASE))
     spans = None
     i = 0
     while True:
@@ -225,16 +223,12 @@ def _find_calls(text: str, name: str):
         i = cp + 1
 
 
-def _rewrite_call(text: str, name: str, new_name: str,
-                  append_arg: str | None = None) -> str:
+def _rewrite_call(text: str, name: str, new_name: str) -> str:
     out, last = [], 0
     for start, op, cp in _find_calls(text, name):
         out.append(text[last:start])
         out.append(new_name)
-        inner = text[op:cp + 1]
-        if append_arg is not None:
-            inner = inner[:-1] + f", {append_arg})"
-        out.append(inner)
+        out.append(text[op:cp + 1])
         last = cp + 1
     out.append(text[last:])
     return "".join(out)
@@ -289,346 +283,11 @@ def _rewrite_array_literal(text: str) -> str:
         text = text[:m.start()] + "array(" + inner + ")" + text[cb + 1:]
 
 
-def _rewrite_regexp_extract(text: str) -> str:
-    """Druid's REGEXP_EXTRACT (RegexpExtractOperatorConversion):
-    default group is 0 (the whole match — Spark defaults to group 1)
-    and a non-match yields NULL (Spark yields ''). Rewritten to
-    nullif(regexp_extract(s, p, idx|0), '')."""
-    while True:
-        found = None
-        for start, op, cp in _find_calls(text, "REGEXP_EXTRACT"):
-            found = (start, op, cp)
-            break
-        if found is None:
-            return text
-        start, op, cp = found
-        args = _split_top_args(text[op + 1:cp])
-        if len(args) == 2:
-            args.append(" 0")
-        if args[1].strip() in ("''", '""'):
-            # the empty pattern MATCHES (at position 0, yielding '');
-            # nullif would misreport it as a non-match
-            # (ExpressionsTest.testRegexpExtract empty-pattern case)
-            call = f"__RX_EXTRACT__({','.join(args)})"
-        else:
-            call = f"nullif(__RX_EXTRACT__({','.join(args)}), '')"
-        text = text[:start] + call + text[cp + 1:]
-    return text
-
-
-def _rewrite_regexp_like_null(text: str) -> str:
-    """REGEXP_LIKE over NULL input is FALSE in the reference
-    (RegexpLikeExprMacro: nulls match nothing in SQL-compatible mode —
-    ExpressionsTest.testRegexpLike null cases); Spark's regexp_like
-    propagates NULL. coalesce(.., false) keeps filter semantics
-    identical and fixes the projected value."""
-    pos = 0
-    while True:
-        found = None
-        for start, op, cp in _find_calls(text[pos:], "REGEXP_LIKE"):
-            found = (pos + start, pos + op, pos + cp)
-            break
-        if found is None:
-            return text
-        start, op, cp = found
-        inner = text[op + 1:cp]
-        repl = f"coalesce(regexp_like({inner}), false)"
-        text = text[:start] + repl + text[cp + 1:]
-        pos = start + len(repl)
-    return text
-
-
-_ROUND_DMAX = "1.7976931348623157E308D"
-
-
-def _rewrite_round_edges(text: str) -> str:
-    """Druid ROUND (Function.java Round): NaN rounds to 0, ±Infinity
-    clamps to ±Double.MAX_VALUE, non-numeric strings are NULL, and
-    rounding happens in double precision (BigDecimal.valueOf —
-    ROUND(2.25f, 1) renders 2.3, not the float-widened 2.2999999).
-    Spark's round propagates NaN/Infinity, so wrap each call; the
-    repeated guard operand stays cheap under codegen subexpression
-    elimination, and every branch is DOUBLE so the CASE type is
-    stable."""
-    pos = 0
-    while True:
-        found = None
-        for start, op, cp in _find_calls(text[pos:], "ROUND"):
-            args = _split_top_args(text[pos + op + 1:pos + cp])
-            if len(args) in (1, 2):
-                found = (pos + start, pos + cp,
-                         [a.strip() for a in args])
-                break
-        if found is None:
-            return text
-        start, cp, args = found
-        e = f"CAST({args[0]} AS DOUBLE)"
-        d = f", {args[1]}" if len(args) == 2 else ""
-        repl = (f"CASE WHEN isnan({e}) THEN 0D "
-                f"WHEN {e} = CAST('Infinity' AS DOUBLE) "
-                f"THEN {_ROUND_DMAX} "
-                f"WHEN {e} = CAST('-Infinity' AS DOUBLE) "
-                f"THEN -{_ROUND_DMAX} "
-                f"ELSE round({e}{d}) END")
-        text = text[:start] + repl + text[cp + 1:]
-        pos = start + len(repl)
-    return text
-
-
-def _rewrite_time_parse(text: str) -> str:
-    """Druid TIME_PARSE(s[, pattern[, tz]]) — TimeParseOperatorConversion:
-    optional Joda pattern (NULL = ISO), optional origin timezone (the
-    string is read in ``tz`` and the result is the UTC instant), and
-    unparseable input is NULL, never an error. The registered 1-arg SQL
-    macro handles the common form; multi-arg calls are rewritten here
-    to try_to_timestamp (+ to_utc_timestamp for the tz form) since SQL
-    macros cannot overload arity."""
-    while True:
-        found = None
-        for start, op, cp in _find_calls(text, "TIME_PARSE"):
-            args = _split_top_args(text[op + 1:cp])
-            if len(args) > 1:
-                found = (start, op, cp, args)
-                break
-        if found is None:
-            return text
-        start, op, cp, args = found
-        s = args[0]
-        pattern = args[1].strip()
-        parse = (f"try_to_timestamp({s})" if pattern.upper() == "NULL"
-                 else f"try_to_timestamp({s}, {pattern})")
-        if len(args) >= 3:
-            parse = f"to_utc_timestamp({parse}, {args[2]})"
-        text = text[:start] + parse + text[cp + 1:]
-    return text
-
-
-def _rewrite_time_fn_tz(text: str) -> str:
-    """Timezone-arity overloads the fixed-arity SQL macros can't take
-    (ExpressionsTest testTimeFormat/testTimeExtract/testTimeShift):
-    TIME_FORMAT(ts, fmt, tz) renders in ``tz``; TIME_EXTRACT(ts, unit,
-    tz) extracts the local field; TIME_SHIFT(ts, period, step, tz)
-    shifts in local time (calendar periods cross DST correctly) and
-    returns the UTC instant."""
-    for fn, extra in (("TIME_FORMAT", 3), ("TIME_EXTRACT", 3),
-                      ("TIME_SHIFT", 4)):
-        while True:
-            found = None
-            for start, op, cp in _find_calls(text, fn):
-                args = _split_top_args(text[op + 1:cp])
-                if len(args) == extra:
-                    found = (start, cp, [a.strip() for a in args])
-                    break
-            if found is None:
-                break
-            start, cp, args = found
-            tz = args[-1]
-            local = f"from_utc_timestamp({args[0]}, {tz})"
-            if fn == "TIME_FORMAT":
-                repl = f"date_format({local}, {args[1]})"
-            elif fn == "TIME_EXTRACT":
-                repl = f"TIME_EXTRACT({local}, {args[1]})"
-            else:
-                repl = (f"to_utc_timestamp(TIME_SHIFT({local}, {args[1]}, "
-                        f"{args[2]}), {tz})")
-            text = text[:start] + repl + text[cp + 1:]
-    return text
-
-
-def _rewrite_parse_long_radix(text: str) -> str:
-    """PARSE_LONG(s, radix) — ParseLongOperatorConversion: parse in the
-    given radix with Long.parseLong semantics — optional sign, radix 16
-    accepts an optional 0x/0X prefix, and ANY invalid input is NULL
-    (the 1-arg form is a SQL macro, which can't overload).
-
-    Spark's conv() alone is too lenient (ADVICE r8): it returns '0'
-    for digit-free strings, parses the valid PREFIX of '1x', and reads
-    negatives as unsigned 64-bit. The rewrite validates every
-    character against the radix's digit set (forall over instr into
-    the 36-char alphabet) and applies the sign explicitly; unsigned
-    overflow surfaces as a >2^63-1 decimal string that try_cast nulls.
-    Known divergence: exactly Long.MIN_VALUE ('-8000000000000000'
-    radix 16) nulls here instead of parsing."""
-    digits = "'0123456789abcdefghijklmnopqrstuvwxyz'"
-    while True:
-        found = None
-        for start, op, cp in _find_calls(text, "PARSE_LONG"):
-            args = _split_top_args(text[op + 1:cp])
-            if len(args) == 2:
-                found = (start, cp, [a.strip() for a in args])
-                break
-        if found is None:
-            return text
-        start, cp, (s, radix) = found
-        low = f"lower({s})"
-        unsigned = (f"(CASE WHEN {s} LIKE '-%' OR {s} LIKE '+%' "
-                    f"THEN substring({low}, 2) ELSE {low} END)")
-        body = (f"(CASE WHEN ({radix}) = 16 AND {unsigned} LIKE '0x%' "
-                f"THEN substring({unsigned}, 3) ELSE {unsigned} END)")
-        valid = (f"({body} != '' AND forall(split({body}, ''), "
-                 f"__pl -> __pl = '' OR "
-                 f"instr({digits}, __pl) BETWEEN 1 AND ({radix})))")
-        sgn = f"(CASE WHEN {s} LIKE '-%' THEN -1L ELSE 1L END)"
-        repl = (f"(CASE WHEN {valid} THEN {sgn} * "
-                f"try_cast(conv({body}, {radix}, 10) AS BIGINT) "
-                f"ELSE NULL END)")
-        text = text[:start] + repl + text[cp + 1:]
-    return text
-
-
-def _rewrite_position_from(text: str) -> str:
-    """POSITION(needle IN haystack FROM start) — Spark's parser only
-    accepts the two-part form; the FROM form maps to locate(needle,
-    haystack, start) (1-based, 0 when absent — Calcite contract)."""
-    while True:
-        found = None
-        for start, op, cp in _find_calls(text, "POSITION"):
-            inner = text[op + 1:cp]
-            depths = _depths(inner)
-            spans = _string_spans(inner)
-            parts = {}
-            for kw in ("IN", "FROM"):
-                for m in re.finditer(rf"\s\b{kw}\b\s", inner,
-                                     re.IGNORECASE):
-                    if (depths[m.start()] == 0
-                            and not _in_string(spans, m.start())):
-                        parts[kw] = m
-                        break
-            if "IN" in parts and "FROM" in parts:
-                found = (start, cp, inner, parts)
-                break
-        if found is None:
-            return text
-        start, cp, inner, parts = found
-        needle = inner[:parts["IN"].start()]
-        hay = inner[parts["IN"].end():parts["FROM"].start()]
-        frm = inner[parts["FROM"].end():]
-        repl = f"locate({needle}, {hay}, {frm})"
-        text = text[:start] + repl + text[cp + 1:]
-    return text
-
-
-def _rewrite_repeat_negative(text: str) -> str:
-    """REPEAT(s, n < 0) is NULL in the reference (Function.java Repeat
-    throws on negative counts pre-vectorization; the SQL layer yields
-    NULL) — Spark's repeat returns ''."""
-    pos = 0
-    while True:
-        found = None
-        for start, op, cp in _find_calls(text[pos:], "REPEAT"):
-            args = _split_top_args(text[pos + op + 1:pos + cp])
-            if len(args) == 2:
-                found = (pos + start, pos + cp,
-                         [a.strip() for a in args])
-                break
-        if found is None:
-            return text
-        start, cp, (s, n) = found
-        repl = (f"CASE WHEN ({n}) < 0 THEN CAST(NULL AS STRING) "
-                f"ELSE repeat({s}, {n}) END")
-        text = text[:start] + repl + text[cp + 1:]
-        pos = start + len(repl)
-    return text
-
-
-def _rewrite_ipv4_numeric(text: str) -> str:
-    """The IPv4 macros accept LONG-typed addresses too (IPv4Address
-    ExprUtils: a long in [0, 2^32) IS the address), but the registered
-    SQL macros are STRING-typed. Literal arguments carry their SQL type
-    here, so dispatch them by composition: a numeric address validates
-    through IPV4_STRINGIFY (range-checked), a string argument to
-    STRINGIFY validates through IPV4_PARSE — uint strings stay NULL
-    (IPv4AddressParseExpressionTest testValidStringArgUnsignedInt vs
-    testValidIntegerArg pin the type distinction)."""
-    num = re.compile(r"^[0-9]+L?$")
-    for fn in ("IPV4_PARSE", "IPV4_MATCH"):
-        pos = 0
-        while True:
-            found = None
-            for start, op, cp in _find_calls(text[pos:], fn):
-                args = _split_top_args(text[pos + op + 1:pos + cp])
-                if args and num.match(args[0].strip()):
-                    found = (pos + start, pos + op, pos + cp,
-                             [a.strip() for a in args])
-                    break
-            if found is None:
-                break
-            start, op, cp, args = found
-            lit = args[0].rstrip("L").rstrip("l")
-            rest = "".join(f", {a}" for a in args[1:])
-            repl = f"{fn}(IPV4_STRINGIFY({lit}L){rest})"
-            text = text[:start] + repl + text[cp + 1:]
-            pos = start + len(repl)
-    pos = 0
-    while True:
-        found = None
-        for start, op, cp in _find_calls(text[pos:], "IPV4_STRINGIFY"):
-            arg = text[pos + op + 1:pos + cp].strip()
-            if arg.startswith("'") and arg.endswith("'"):
-                found = (pos + start, pos + cp, arg)
-                break
-        if found is None:
-            break
-        start, cp, arg = found
-        repl = f"IPV4_STRINGIFY(IPV4_PARSE({arg}))"
-        text = text[:start] + repl + text[cp + 1:]
-        pos = start + len(repl)
-    return text
-
-
-def _rewrite_array_concat_constructed(text: str) -> str:
-    """ARRAY_CONCAT over EXPLICIT array constructors goes to Spark's
-    type-generic native concat. The registered ARRAY_CONCAT UDF is
-    typed ARRAY<STRING> (right for MV columns, the dominant case), so
-    ARRAY_CONCAT(ARRAY[l1], ARRAY[l2]) would coerce longs to strings —
-    the reference keeps LONG_ARRAY (CalciteArraysQueryTest
-    testSomeArrayFunctionsWithScanQuery pins [7, null]). Only the
-    all-constructor form rewrites: a bare `concat` over scalar or MV
-    column args would change semantics (string concat / the MV
-    element-mapping pass)."""
-    pos = 0
-    while True:
-        found = None
-        for start, op, cp in _find_calls(text[pos:], "ARRAY_CONCAT"):
-            s, o, c = pos + start, pos + op, pos + cp
-            args = _split_top_args(text[o + 1:c])
-            if args and all(
-                    re.match(r"(?is)^\s*array\s*\(", a) for a in args):
-                found = (s, o, c)
-                break
-        if found is None:
-            return text
-        s, o, c = found
-        text = text[:s] + "concat" + text[s + len("ARRAY_CONCAT"):]
-        pos = o - (len("ARRAY_CONCAT") - len("concat")) + 1
-
-
-def _rewrite_array_prepend(text: str) -> str:
-    """Druid ARRAY_PREPEND(expr, arr) vs Spark array_prepend(arr, el):
-    same name, swapped arguments."""
-    while True:
-        found = None
-        for start, op, cp in _find_calls(text, "ARRAY_PREPEND"):
-            found = (start, op, cp)
-            break
-        if found is None:
-            return text
-        start, op, cp = found
-        args = _split_top_args(text[op + 1:cp])
-        if len(args) == 2:
-            call = f"__ARR_PREP__({args[1]}, {args[0]})"
-        else:  # malformed; leave for Spark's own error
-            call = f"__ARR_PREP__({text[op + 1:cp]})"
-        text = text[:start] + call + text[cp + 1:]
-    return text
-
-
 def _sql_str(v) -> str:
-    """A safe Spark SQL string literal: quotes doubled AND backslashes
-    escaped (Spark's default escapedStringLiterals=false treats \\ as
-    an escape — an unescaped trailing backslash would swallow the
-    closing quote, an injection vector on the HTTP parameters path)."""
-    return "'" + str(v).replace("\\", "\\\\").replace("'", "''") + "'"
+    """A Druid SQL string literal, as Calcite reads one: quotes doubled,
+    backslashes as they are (translate escapes them for Spark, so a
+    trailing backslash cannot swallow the closing quote)."""
+    return "'" + str(v).replace("'", "''") + "'"
 
 
 def _param_literal(p: dict) -> str:
@@ -700,20 +359,24 @@ _LOOKUP_ALIAS_STOP = frozenset(
     "using".split())
 
 
-def _rewrite_lookup_schema(text: str) -> str:
+def _rewrite_named_schemas(text: str) -> str:
     """Druid's ``lookup`` SQL schema (sql/.../schema/LookupSchema.java;
-    DruidSchemaCatalog registers it next to ``druid`` and ``sys``):
-    ``lookup.<name>`` table refs resolve to the registered lookup views
-    (k, v columns). Calcite exposes the table under its bare name, so
-    when no explicit alias follows one is added (``lookyloo.k`` keeps
+    DruidSchemaCatalog registers it next to ``druid`` and ``sys``) and
+    ``view`` schema (sql/.../view/DruidViewMacro; BaseCalciteQueryTest
+    registers aview/bview/... there): ``lookup.<name>`` table refs
+    resolve to the registered lookup views (k, v columns) and
+    ``view.<name>`` to the materialized view, registered as
+    ``<schema>_<name>``. Calcite exposes the table under its bare name,
+    so when no explicit alias follows one is added (``lookyloo.k`` keeps
     resolving), and a fully-qualified column ref
-    ``lookup.<name>.<col>`` drops the schema (the alias carries it)."""
+    ``<schema>.<name>.<col>`` drops the schema (the alias carries it)."""
     spans = _string_spans(text)
     out, last = [], 0
-    for m in re.finditer(r"\blookup\.([A-Za-z_]\w*)", text, re.IGNORECASE):
+    for m in re.finditer(r"\b(lookup|view)\.([A-Za-z_]\w*)", text,
+                         re.IGNORECASE):
         if _in_string(spans, m.start()):
             continue
-        name = m.group(1)
+        table, name = f"{m.group(1).lower()}_{m.group(2)}", m.group(2)
         out.append(text[last:m.start()])
         if m.end() < len(text) and text[m.end()] == ".":
             out.append(name)  # lookup.name.col -> name.col
@@ -723,36 +386,7 @@ def _rewrite_lookup_schema(text: str) -> str:
                       re.IGNORECASE)
         has_alias = bool(am
                          and am.group(1).lower() not in _LOOKUP_ALIAS_STOP)
-        out.append(f"lookup_{name}" if has_alias
-                   else f"lookup_{name} AS {name}")
-        last = m.end()
-    out.append(text[last:])
-    return "".join(out)
-
-
-def _rewrite_view_schema(text: str) -> str:
-    """The ``view`` SQL schema (sql/.../view/DruidViewMacro;
-    BaseCalciteQueryTest registers aview/bview/... there):
-    ``view.<name>`` table refs resolve to the materialized view
-    (registered as view_<name>); the bare name stays usable as the
-    implicit alias, mirroring the lookup schema treatment."""
-    spans = _string_spans(text)
-    out, last = [], 0
-    for m in re.finditer(r"\bview\.([A-Za-z_]\w*)", text, re.IGNORECASE):
-        if _in_string(spans, m.start()):
-            continue
-        name = m.group(1)
-        out.append(text[last:m.start()])
-        if m.end() < len(text) and text[m.end()] == ".":
-            out.append(name)  # view.name.col -> name.col
-            last = m.end()
-            continue
-        am = re.match(r"\s+(?:AS\s+)?([A-Za-z_]\w*)", text[m.end():],
-                      re.IGNORECASE)
-        has_alias = bool(am
-                         and am.group(1).lower() not in _LOOKUP_ALIAS_STOP)
-        out.append(f"view_{name}" if has_alias
-                   else f"view_{name} AS {name}")
+        out.append(table if has_alias else f"{table} AS {name}")
         last = m.end()
     out.append(text[last:])
     return "".join(out)
@@ -764,138 +398,6 @@ def _trunc_unit(period: str) -> str | None:
     return unit and unit.upper()
 
 
-# DOW/ISODOW included: Druid's are Joda ISO (Monday=1..Sunday=7, the
-# two agree — TimestampExtractExprMacro.java:130-133) where Spark's
-# EXTRACT(DOW) is Sunday=0-based
-_NONSTD_EXTRACT_UNITS = ("DECADE", "CENTURY", "MILLENNIUM", "ISOYEAR",
-                         "MILLISECOND", "ISODOW", "DOW", "EPOCH")
-
-
-def _rewrite_nonstd_extract(text: str) -> str:
-    """EXTRACT units Calcite/Druid accept but Spark's EXTRACT lacks
-    (TimestampExtractExprMacro.java:120-154: DECADE = year/10,
-    CENTURY/MILLENNIUM = ceil(year/unit), ISOYEAR ≈ year, MILLISECOND
-    = millis-of-second) route through the TIME_EXTRACT macro."""
-    while True:
-        found = None
-        for start, op, cp in _find_calls(text, "EXTRACT"):
-            inner = text[op + 1:cp]
-            m = re.match(r"\s*(" + "|".join(_NONSTD_EXTRACT_UNITS)
-                         + r")\s+FROM\s+(.+)\Z", inner,
-                         re.IGNORECASE | re.DOTALL)
-            if m:
-                found = (start, cp, m.group(1).upper(), m.group(2))
-                break
-        if found is None:
-            return text
-        start, cp, unit, expr = found
-        text = (text[:start] + f"TIME_EXTRACT({expr}, '{unit}')"
-                + text[cp + 1:])
-    return text
-
-
-def _rewrite_time_floor_tz(text: str) -> str:
-    """TIME_FLOOR / TIME_CEIL (ts, period[, origin[, timezone]]) — the
-    3/4-arg forms of TimeFloorOperatorConversion and
-    TimeCeilOperatorConversion (same signature; ceil = floor, plus one
-    period when ts is not already on a boundary): bucketing happens in
-    the given zone and the result is the UTC instant of that local
-    boundary. The registered macros are 2-arity, so the long forms
-    rewrite to from_utc/date_trunc/to_utc (or a wrapped 2-arg macro
-    call) here. Unrecognized origin periods are left for the caller's
-    error."""
-    for fn in ("TIME_FLOOR", "TIME_CEIL"):
-        text = _rewrite_time_bucket_long_form(text, fn)
-    return text
-
-
-def _rewrite_time_bucket_long_form(text: str, fn: str) -> str:
-    pos = 0
-    while True:
-        found = None
-        for start, op, cp in _find_calls(text[pos:], fn):
-            args = _split_top_args(text[pos + op + 1:pos + cp])
-            if len(args) >= 3:
-                found = (pos + start, pos + op, pos + cp, args)
-                break
-        if found is None:
-            return text
-        start, op, cp, args = found
-        ts = args[0].strip()
-        period = args[1].strip()
-        origin = args[2].strip().upper() if len(args) > 2 else "NULL"
-        tz = args[3].strip() if len(args) > 3 else "'UTC'"
-        unit = _trunc_unit(period)
-        if origin != "NULL":
-            # origin-aligned flooring (TimestampFloorExprMacro with an
-            # origin: buckets tile outward from the origin instant —
-            # testTimeseriesUsingTimeFloorWithOrigin). Month-ish
-            # periods bucket by whole-month counts from the origin;
-            # fixed-duration periods by millis arithmetic.
-            o = args[2].strip()
-            # Zone-aware origin flooring (PeriodGranularity with both
-            # origin and tz): bucket in local wall time, emit the UTC
-            # instant of the local bucket start — same convention as
-            # the tz-only path below.
-            local = tz.strip().strip("'").upper() not in ("UTC", "")
-            if local:
-                ts = f"from_utc_timestamp({ts}, {tz})"
-                o = f"from_utc_timestamp({o}, {tz})"
-            try:
-                months, dur = parse_period(
-                    period.strip("'") if period.startswith("'") else "")
-            except ValueError:
-                pos = cp + 1  # unsupported origin form
-                continue
-            if months:
-                # interval arithmetic keeps the origin's time-of-day
-                # (add_months would degrade to DATE). months_between
-                # ignores time-of-day when the days-of-month match, so
-                # a candidate bucket past ts steps back one period.
-                k = (f"CAST(floor(months_between({ts}, {o}) / "
-                     f"{months}) AS INT) * {months}")
-                b = f"({o} + make_interval(0, {k}))"
-                repl = (f"(CASE WHEN {b} > {ts} THEN "
-                        f"({o} + make_interval(0, ({k}) - {months})) "
-                        f"ELSE {b} END)")
-            else:
-                repl = (f"timestamp_millis(unix_millis({o}) + "
-                        f"CAST(floor((unix_millis({ts}) - "
-                        f"unix_millis({o})) / {dur}) AS BIGINT) * {dur})")
-            if fn == "TIME_CEIL":
-                # ceil = floor, stepped one period forward unless ts is
-                # already on a bucket boundary. The floored value is
-                # bound ONCE via a single-element transform (ADVICE r7:
-                # textually inlining it three times re-evaluates the
-                # ts/origin expressions ~6x and blows up nested calls).
-                v = "__tc_f"
-                step = (f"({v} + make_interval(0, {months}))"
-                        if months else
-                        f"timestamp_millis(unix_millis({v}) + {dur})")
-                repl = (f"element_at(transform(array({repl}), {v} -> "
-                        f"CASE WHEN {v} = {ts} THEN {v} "
-                        f"ELSE {step} END), 1)")
-            if local:
-                repl = f"to_utc_timestamp({repl}, {tz})"
-            text = text[:start] + repl + text[cp + 1:]
-            pos = start + len(repl)
-            continue
-        if fn == "TIME_FLOOR" and unit is not None:
-            repl = (f"to_utc_timestamp(CAST(date_trunc('{unit}', "
-                    f"from_utc_timestamp({ts}, {tz})) AS TIMESTAMP), {tz})")
-        else:
-            # NULL origin, any ISO period (incl. TIME_CEIL): wrap the
-            # registered 2-arg macro around the shifted wall clock —
-            # flooring/ceiling naive-local time from the naive epoch IS
-            # PeriodGranularity with a tz (origin defaults to
-            # 1970-01-01T00:00 local)
-            repl = (f"to_utc_timestamp({fn}(from_utc_timestamp({ts}, "
-                    f"{tz}), {period}), {tz})")
-        text = text[:start] + repl + text[cp + 1:]
-        pos = start + len(repl)
-    return text
-
-
 _LIKE_ESCAPE_RE = re.compile(
     r"(\bLIKE\s+)'((?:[^']|'')*)'\s+ESCAPE\s+'((?:[^']|'')*)'",
     re.IGNORECASE)
@@ -905,7 +407,8 @@ def _rewrite_like_escape(text: str) -> str:
     """LIKE ... ESCAPE with a custom escape char: Calcite (LikeDimFilter)
     lets the escape precede ANY character (escaping an ordinary char is
     the char itself); Spark rejects ESC_IN_THE_MIDDLE. Normalize to a
-    default-backslash pattern with only %/_ escapes kept."""
+    default-backslash pattern with only %/_ escapes kept, written as a
+    Calcite literal (_escape_backslashes then escapes it for Spark)."""
     def _sub(m):
         pat = m.group(2).replace("''", "'")
         esc = m.group(3).replace("''", "'")
@@ -922,7 +425,7 @@ def _rewrite_like_escape(text: str) -> str:
                 continue
             out.append("\\\\" if c == "\\" else c)
             i += 1
-        lit = "".join(out).replace("\\", "\\\\").replace("'", "''")
+        lit = "".join(out).replace("'", "''")
         return m.group(1) + "'" + lit + "'"
 
     return _LIKE_ESCAPE_RE.sub(_sub, text)
@@ -931,6 +434,7 @@ def _rewrite_like_escape(text: str) -> str:
 _INT_CAST_RE = re.compile(
     r"\bAS\s+(BIGINT|INTEGER|INT|SMALLINT|TINYINT|LONG)\s*\Z",
     re.IGNORECASE)
+_INT_DIV_RE = re.compile(r"\s*/\s*(\d+)\b(?!\s*\.)")
 
 
 def _rewrite_integer_division(text: str) -> str:
@@ -940,159 +444,26 @@ def _rewrite_integer_division(text: str) -> str:
     yields DOUBLE. Lower the explicitly-cast spelling — an
     integer-typed CAST divided by an integer literal — to DIV.
     Bare-column integer division is left as-is (no type information at
-    rewrite time; documented divergence)."""
-    changed = True
-    while changed:
-        changed = False
-        for start, op, cp in _find_calls(text, "CAST"):
-            inner = text[op + 1:cp].strip()
-            if not _INT_CAST_RE.search(inner):
-                continue
-            r = re.match(r"\s*/\s*(\d+)\b(?!\s*\.)", text[cp + 1:])
-            if not r:
-                continue
-            text = (text[:cp + 1] + f" DIV {r.group(1)}"
-                    + text[cp + 1 + r.end():])
-            changed = True
-            break
-    return text
-
-
-def _rewrite_grouping_multi(text: str) -> str:
-    """Calcite's GROUPING(a, b, ...) composite indicator: the bitmask
-    follows the ARGUMENT order, independent of the GROUP BY order
-    (GroupingSqlAggregator; testGroupingAggregatorDifferentOrder pins
-    GROUPING(gran, dim2) against GROUP BY (dim2, gran)). Spark's
-    grouping_id() insists its arguments match the grouping-column
-    order, so compose the mask from 1-arg grouping() bits instead."""
-    while True:
-        found = None
-        for start, op, cp in _find_calls(text, "GROUPING"):
-            args = _split_top_args(text[op + 1:cp])
-            if len(args) > 1:
-                found = (start, cp, args)
-                break
-        if found is None:
-            return text
-        start, cp, args = found
-        bits = " + ".join(
-            f"grouping({a.strip()}) * {1 << (len(args) - 1 - i)}"
-            if len(args) - 1 - i else f"grouping({a.strip()})"
-            for i, a in enumerate(args))
-        text = text[:start] + f"CAST({bits} AS BIGINT)" + text[cp + 1:]
-    return text
-
-
-def _rewrite_ltrim_rtrim_2arg(text: str) -> str:
-    """Druid LTRIM/RTRIM(s, chars) vs Spark's legacy 2-arg form
-    ltrim(trimStr, str) — same name, swapped arguments
-    (TrimOperatorConversion; CalciteSelectQueryTest
-    testSelectTrimFamily pins LTRIM('xfoox','x') = 'foox')."""
-    for name in ("LTRIM", "RTRIM"):
-        while True:
-            found = None
-            for start, op, cp in _find_calls(text, name):
-                args = _split_top_args(text[op + 1:cp])
-                if len(args) == 2 and "__TRIMSWAP__" not in args[0]:
-                    found = (start, op, cp, args)
-                    break
-            if found is None:
-                break
-            start, op, cp, args = found
-            text = (text[:start]
-                    + f"{name.lower()}(__TRIMSWAP__{args[1].strip()}, "
-                    + f"{args[0].strip()})" + text[cp + 1:])
-    return text.replace("__TRIMSWAP__", "")
-
-
-def _rewrite_mv_slice_2arg(text: str) -> str:
-    """Druid MV_SLICE/ARRAY_SLICE with two args slices to the end of
-    the array (ArraySliceOperatorConversion end defaults to length);
-    the registered SQL macro is fixed 3-arity. The rewrite KEEPS the
-    function head (fills the end arg with size(a)) — MV_SLICE vs
-    ARRAY_SLICE must stay distinguishable downstream, where GROUP BY
-    explodes MV_* results but groups ARRAY_* results as arrays."""
-    for name in ("MV_SLICE", "ARRAY_SLICE"):
-        while True:
-            found = None
-            for start, op, cp in _find_calls(text, name):
-                args = _split_top_args(text[op + 1:cp])
-                if len(args) == 2:
-                    found = (start, op, cp, args)
-                    break
-            if found is None:
-                break
-            start, op, cp, args = found
-            a, s = args[0].strip(), args[1].strip()
-            text = (text[:start]
-                    + f"{name}({a}, {s}, size({a}))"
-                    + text[cp + 1:])
-    return text
-
-
-def _rewrite_mv_contains_array(text: str) -> str:
-    """Druid MV_CONTAINS/ARRAY_CONTAINS with an ARRAY second argument
-    is contains-ALL (MultiValueStringOperatorConversions.Contains);
-    the registered macro and the Spark builtin take a scalar needle."""
-    for name in ("MV_CONTAINS", "ARRAY_CONTAINS"):
-        while True:
-            found = None
-            for start, op, cp in _find_calls(text, name):
-                args = _split_top_args(text[op + 1:cp])
-                if (len(args) == 2
-                        and re.match(r"\s*array\s*\(", args[1],
-                                     re.IGNORECASE)):
-                    found = (start, op, cp, args)
-                    break
-            if found is None:
-                break
-            start, op, cp, args = found
-            text = (text[:start]
-                    + f"forall({args[1].strip()}, __mv_c -> "
-                    + f"array_contains({args[0].strip()}, __mv_c))"
-                    + text[cp + 1:])
-    return text
-
-
-def _rewrite_truncate_default(text: str) -> str:
-    """TRUNC/TRUNCATE with one arg: Druid defaults digits to 0; the
-    registered TRUNCATE UDF is fixed 2-arity (SQL functions can't
-    overload)."""
-    for name in ("TRUNCATE", "TRUNC"):
-        while True:
-            found = None
-            for start, op, cp in _find_calls(text, name):
-                if len(_split_top_args(text[op + 1:cp])) == 1:
-                    found = (start, op, cp)
-                    break
-            if found is None:
-                break
-            start, op, cp = found
-            text = (text[:start] + "TRUNCATE(" + text[op + 1:cp]
-                    + ", 0)" + text[cp + 1:])
-    return text
-
-
-# the ts operand may itself be a (one-level-nested) call, e.g.
-# FLOOR(MILLIS_TO_TIMESTAMP(cnt) TO YEAR) or FLOOR(CAST(x AS TIMESTAMP)
-# TO DAY) — CalciteQueryTest.java:5965
-_FLOOR_TO_RE = re.compile(
-    r"\b(FLOOR|CEIL)\s*\(\s*((?:[^()]|\([^()]*\))+?)\s+TO\s+"
-    r"(SECOND|MINUTE|HOUR|DAY|WEEK|MONTH|QUARTER|YEAR)\s*\)",
-    re.IGNORECASE)
-
-
-def _rewrite_floor_to(text: str) -> str:
-    """Calcite time syntax FLOOR(ts TO MONTH) / CEIL(ts TO DAY)
-    (DruidOperatorTable.java time operators) -> date_trunc /
-    TIME_CEIL."""
-    def sub(m):
-        fn, arg, unit = m.group(1).upper(), m.group(2), m.group(3).upper()
-        if fn == "FLOOR":
-            return f"date_trunc('{unit}', {arg})"
-        return f"TIME_CEIL({arg}, '{period_of(unit)}')"
-
-    return _FLOOR_TO_RE.sub(sub, text)
+    rewrite time; documented divergence). Nested CASTs count too: a
+    call rule may have wrapped the operand in a CAST of its own."""
+    if "/" not in text:
+        return text
+    spans = _string_spans(text)
+    out, last = [], 0
+    divs = []
+    for m in re.finditer(r"\bCAST\s*\(", text, re.IGNORECASE):
+        if _in_string(spans, m.start()):
+            continue
+        cp = _matching_close(text, m.end() - 1)
+        r = _INT_DIV_RE.match(text, cp + 1)
+        if r and _INT_CAST_RE.search(text[m.end():cp]):
+            divs.append(r)
+    for r in sorted(divs, key=lambda r: r.start()):
+        out.append(text[last:r.start()])
+        out.append(f" DIV {r.group(1)}")
+        last = r.end()
+    out.append(text[last:])
+    return "".join(out)
 
 
 _DRUID_SCHEMA_RE = re.compile(
@@ -1186,34 +557,6 @@ def _rewrite_quoted_identifiers(text: str) -> str:
         last = hi + 1
     out.append(text[last:])
     return "".join(out)
-
-
-# aggregates Calcite lets take a BARE correlated scalar subquery as
-# the argument (CalciteCorrelatedQueryTest: ANY_VALUE(select ...));
-# Spark's parser needs the subquery parenthesized
-_SUBQUERY_AGG_FNS = ("ANY_VALUE", "SUM", "MIN", "MAX", "AVG", "COUNT")
-
-
-def _wrap_bare_subquery_agg_args(text: str) -> str:
-    """AGG(select ...) -> AGG((select ...)) so Spark parses the scalar
-    subquery; Catalyst then decorrelates it the same way Calcite's
-    RelDecorrelator does."""
-    for fn in _SUBQUERY_AGG_FNS:
-        pos = 0
-        while True:
-            found = None
-            for start, op, cp in _find_calls(text[pos:], fn):
-                o, c = pos + op, pos + cp
-                inner = text[o + 1:c]
-                if re.match(r"\s*SELECT\b", inner, re.IGNORECASE):
-                    found = (o, c, inner)
-                    break
-            if found is None:
-                break
-            o, c, inner = found
-            text = text[:o + 1] + "(" + inner + ")" + text[c:]
-            pos = c + 2
-    return text
 
 
 # array_sort comparator placing NULL elements FIRST — the reference's
@@ -1341,70 +684,6 @@ def _rewrite_string_agg(text: str) -> str:
     return text
 
 
-def _rewrite_substring_null_when_short(text: str) -> str:
-    """Druid SQL SUBSTRING lowers to SubstringDimExtractionFn, which
-    returns NULL (never '') when the start index falls past the string
-    (testGroupByWithSelectProjections pins SUBSTRING('1', 2) -> null);
-    Spark returns ''. NULLIF the result — an empty result string only
-    arises from an out-of-range start or an empty input, both null in
-    the reference."""
-    pos = 0
-    while True:
-        found = None
-        for start, op, cp in _find_calls(text[pos:], "SUBSTRING"):
-            found = (pos + start, pos + op, pos + cp)
-            break
-        if found is None:
-            break
-        s, o, c = found
-        inner = text[o + 1:c]
-        # Calcite also accepts SUBSTRING(x FROM s [FOR l]): rewrite
-        # FROM/FOR to commas ONLY when the call has no top-level commas
-        # already (i.e. it IS the FROM-form), and only for tokens at top
-        # paren depth outside string literals — a literal 'ab FROM cd'
-        # or a nested scalar-subquery argument must survive intact.
-        if len(_split_top_args(inner)) == 1:
-            depths_i = _depths(inner)
-            spans_i = _string_spans(inner)
-            for mm in reversed(list(
-                    re.finditer(r"\b(?:FROM|FOR)\b", inner,
-                                re.IGNORECASE))):
-                i0 = mm.start()
-                if (depths_i[i0] == 0
-                        and not _in_string(spans_i, i0)):
-                    inner = inner[:i0] + "," + inner[mm.end():]
-        repl = f"NULLIF(substring({inner}), '')"
-        text = text[:s] + repl + text[c + 1:]
-        # resume INSIDE the rewritten argument list so nested
-        # SUBSTRING calls get the NULL contract too
-        pos = s + len("NULLIF(substring(")
-    return text
-
-
-def _strip_agg_size_arg(text: str) -> str:
-    """Drop the trailing integer maxStringBytes argument from
-    EARLIEST/LATEST (2-arg), EARLIEST_BY/LATEST_BY (3-arg), and
-    ANY_VALUE (2-arg) — the truncation knob has no analogue here (no
-    aggregation buffers to size) and strings are never truncated."""
-    specs = (("EARLIEST_BY", 3), ("LATEST_BY", 3),
-             ("EARLIEST", 2), ("LATEST", 2), ("ANY_VALUE", 2))
-    for fn, n in specs:
-        while True:
-            found = None
-            for start, op, cp in _find_calls(text, fn):
-                args = _split_top_args(text[op + 1:cp])
-                if (len(args) == n
-                        and re.fullmatch(r"\s*\d+\s*", args[-1])):
-                    found = (op, cp, args[:-1])
-                    break
-            if found is None:
-                break
-            op, cp, keep = found
-            text = text[:op + 1] + ", ".join(a.strip() for a in keep) \
-                + text[cp:]
-    return text
-
-
 def _human_readable_body(n: str, p: str, base: int, units: str,
                          suffix: str) -> str:
     """One HUMAN_READABLE_* rendering per HumanReadableBytes.java
@@ -1480,51 +759,576 @@ def _rewrite_lookup_neq(text: str) -> str:
     return text
 
 
-def _rewrite_human_readable_precision(text: str) -> str:
+# -- the call-rule table ------------------------------------------------
+# One entry per Druid function whose SQL form differs from Spark's (the
+# role of DruidOperatorTable's SqlOperatorConversions). A rule gets the
+# call's name as written and its inner text, arguments already
+# rewritten, and returns the text replacing the whole call, or None to
+# keep the call as written. _rewrite_calls applies the table.
+
+
+def _rename(to: str):
+    return lambda _name, inner: f"{to}({inner})"
+
+
+def _args(inner: str) -> list[str]:
+    """A call's top-level arguments, stripped."""
+    return [a.strip() for a in _split_top_args(inner)]
+
+
+def _regexp_extract(_name: str, inner: str) -> str | None:
+    """Druid's REGEXP_EXTRACT (RegexpExtractOperatorConversion):
+    default group is 0 (the whole match — Spark defaults to group 1)
+    and a non-match yields NULL (Spark yields '')."""
+    args = _split_top_args(inner)
+    if len(args) < 2:
+        return None
+    if len(args) == 2:
+        args.append(" 0")
+    call = f"regexp_extract({','.join(args)})"
+    # the empty pattern MATCHES (at position 0, yielding ''); nullif
+    # would misreport it as a non-match (ExpressionsTest.testRegexpExtract
+    # empty-pattern case)
+    return call if args[1].strip() in ("''", '""') else f"nullif({call}, '')"
+
+
+def _regexp_like(_name: str, inner: str) -> str:
+    """REGEXP_LIKE over NULL input is FALSE in the reference
+    (RegexpLikeExprMacro: nulls match nothing in SQL-compatible mode —
+    ExpressionsTest.testRegexpLike null cases); Spark's regexp_like
+    propagates NULL. coalesce(.., false) keeps filter semantics
+    identical and fixes the projected value."""
+    return f"coalesce(regexp_like({inner}), false)"
+
+
+_ROUND_DMAX = "1.7976931348623157E308D"
+
+
+def _round(_name: str, inner: str) -> str | None:
+    """Druid ROUND (Function.java Round): NaN rounds to 0, ±Infinity
+    clamps to ±Double.MAX_VALUE, non-numeric strings are NULL, and
+    rounding happens in double precision (BigDecimal.valueOf —
+    ROUND(2.25f, 1) renders 2.3, not the float-widened 2.2999999).
+    Spark's round propagates NaN/Infinity; the repeated guard operand
+    stays cheap under codegen subexpression elimination, and every
+    branch is DOUBLE so the CASE type is stable."""
+    args = _args(inner)
+    if len(args) not in (1, 2):
+        return None
+    e = f"CAST({args[0]} AS DOUBLE)"
+    d = f", {args[1]}" if len(args) == 2 else ""
+    return (f"CASE WHEN isnan({e}) THEN 0D "
+            f"WHEN {e} = CAST('Infinity' AS DOUBLE) THEN {_ROUND_DMAX} "
+            f"WHEN {e} = CAST('-Infinity' AS DOUBLE) "
+            f"THEN -{_ROUND_DMAX} "
+            f"ELSE round({e}{d}) END")
+
+
+def _time_parse(_name: str, inner: str) -> str | None:
+    """Druid TIME_PARSE(s[, pattern[, tz]]) — TimeParseOperatorConversion:
+    optional Joda pattern (NULL = ISO), optional origin timezone (the
+    string is read in ``tz`` and the result is the UTC instant), and
+    unparseable input is NULL, never an error. The registered 1-arg SQL
+    macro handles the common form (SQL macros cannot overload arity)."""
+    args = _split_top_args(inner)
+    if len(args) < 2:
+        return None
+    pattern = args[1].strip()
+    parse = (f"try_to_timestamp({args[0]})" if pattern.upper() == "NULL"
+             else f"try_to_timestamp({args[0]}, {pattern})")
+    return (f"to_utc_timestamp({parse}, {args[2]})" if len(args) >= 3
+            else parse)
+
+
+def _time_fn_tz(name: str, inner: str) -> str | None:
+    """Timezone-arity overloads the fixed-arity SQL macros can't take
+    (ExpressionsTest testTimeFormat/testTimeExtract/testTimeShift):
+    TIME_FORMAT(ts, fmt, tz) renders in ``tz``; TIME_EXTRACT(ts, unit,
+    tz) extracts the local field; TIME_SHIFT(ts, period, step, tz)
+    shifts in local time (calendar periods cross DST correctly) and
+    returns the UTC instant."""
+    fn = name.upper()
+    args = _args(inner)
+    if len(args) != (4 if fn == "TIME_SHIFT" else 3):
+        return None
+    tz = args[-1]
+    local = f"from_utc_timestamp({args[0]}, {tz})"
+    if fn == "TIME_FORMAT":
+        return f"date_format({local}, {args[1]})"
+    if fn == "TIME_EXTRACT":
+        return f"TIME_EXTRACT({local}, {args[1]})"
+    return (f"to_utc_timestamp(TIME_SHIFT({local}, {args[1]}, "
+            f"{args[2]}), {tz})")
+
+
+def _parse_long_radix(_name: str, inner: str) -> str | None:
+    """PARSE_LONG(s, radix) — ParseLongOperatorConversion: parse in the
+    given radix with Long.parseLong semantics — optional sign, radix 16
+    accepts an optional 0x/0X prefix, and ANY invalid input is NULL
+    (the 1-arg form is a SQL macro, which can't overload).
+
+    Spark's conv() alone is too lenient: it returns '0' for digit-free
+    strings, parses the valid PREFIX of '1x', and reads negatives as
+    unsigned 64-bit. The rewrite validates every character against the
+    radix's digit set (forall over instr into the 36-char alphabet) and
+    applies the sign explicitly; unsigned overflow surfaces as a
+    >2^63-1 decimal string that try_cast nulls. Known divergence:
+    exactly Long.MIN_VALUE ('-8000000000000000' radix 16) nulls here
+    instead of parsing."""
+    args = _args(inner)
+    if len(args) != 2:
+        return None
+    s, radix = args
+    digits = "'0123456789abcdefghijklmnopqrstuvwxyz'"
+    low = f"lower({s})"
+    unsigned = (f"(CASE WHEN {s} LIKE '-%' OR {s} LIKE '+%' "
+                f"THEN substring({low}, 2) ELSE {low} END)")
+    body = (f"(CASE WHEN ({radix}) = 16 AND {unsigned} LIKE '0x%' "
+            f"THEN substring({unsigned}, 3) ELSE {unsigned} END)")
+    valid = (f"({body} != '' AND forall(split({body}, ''), "
+             f"__pl -> __pl = '' OR "
+             f"instr({digits}, __pl) BETWEEN 1 AND ({radix})))")
+    sgn = f"(CASE WHEN {s} LIKE '-%' THEN -1L ELSE 1L END)"
+    return (f"(CASE WHEN {valid} THEN {sgn} * "
+            f"try_cast(conv({body}, {radix}, 10) AS BIGINT) "
+            f"ELSE NULL END)")
+
+
+def _position_from(_name: str, inner: str) -> str | None:
+    """POSITION(needle IN haystack FROM start) — Spark's parser only
+    accepts the two-part form; the FROM form maps to locate(needle,
+    haystack, start) (1-based, 0 when absent — Calcite contract)."""
+    depths, spans = _depths(inner), _string_spans(inner)
+    parts = {}
+    for kw in ("IN", "FROM"):
+        for m in re.finditer(rf"\s\b{kw}\b\s", inner, re.IGNORECASE):
+            if depths[m.start()] == 0 and not _in_string(spans, m.start()):
+                parts[kw] = m
+                break
+    if len(parts) < 2:
+        return None
+    needle = inner[:parts["IN"].start()]
+    hay = inner[parts["IN"].end():parts["FROM"].start()]
+    return f"locate({needle}, {hay}, {inner[parts['FROM'].end():]})"
+
+
+def _repeat(_name: str, inner: str) -> str | None:
+    """REPEAT(s, n < 0) is NULL in the reference (Function.java Repeat
+    throws on negative counts pre-vectorization; the SQL layer yields
+    NULL) — Spark's repeat returns ''."""
+    args = _args(inner)
+    if len(args) != 2:
+        return None
+    s, n = args
+    return (f"CASE WHEN ({n}) < 0 THEN CAST(NULL AS STRING) "
+            f"ELSE repeat({s}, {n}) END")
+
+
+def _ipv4_numeric(name: str, inner: str) -> str | None:
+    """The IPv4 macros accept LONG-typed addresses too (IPv4Address
+    ExprUtils: a long in [0, 2^32) IS the address), but the registered
+    SQL macros are STRING-typed. Literal arguments carry their SQL type
+    here, so dispatch them by composition: a numeric address validates
+    through IPV4_STRINGIFY (range-checked), a string argument to
+    STRINGIFY validates through IPV4_PARSE — uint strings stay NULL
+    (IPv4AddressParseExpressionTest testValidStringArgUnsignedInt vs
+    testValidIntegerArg pin the type distinction)."""
+    fn = name.upper()
+    if fn == "IPV4_STRINGIFY":
+        arg = inner.strip()
+        return (f"IPV4_STRINGIFY(IPV4_PARSE({arg}))"
+                if arg.startswith("'") and arg.endswith("'") else None)
+    args = _args(inner)
+    if not args or not re.match(r"^[0-9]+L?$", args[0]):
+        return None
+    rest = "".join(f", {a}" for a in args[1:])
+    return f"{fn}(IPV4_STRINGIFY({args[0].rstrip('Ll')}L){rest})"
+
+
+def _array_prepend(_name: str, inner: str) -> str | None:
+    """Druid ARRAY_PREPEND(expr, arr) vs Spark array_prepend(arr, el):
+    same name, swapped arguments."""
+    args = _split_top_args(inner)
+    if len(args) != 2:  # malformed; leave for Spark's own error
+        return None
+    return f"array_prepend({args[1]}, {args[0]})"
+
+
+def _array_concat(_name: str, inner: str) -> str | None:
+    """ARRAY_CONCAT over EXPLICIT array constructors goes to Spark's
+    type-generic native concat. The registered ARRAY_CONCAT UDF is
+    typed ARRAY<STRING> (right for MV columns, the dominant case), so
+    ARRAY_CONCAT(ARRAY[l1], ARRAY[l2]) would coerce longs to strings —
+    the reference keeps LONG_ARRAY (CalciteArraysQueryTest
+    testSomeArrayFunctionsWithScanQuery pins [7, null]). Only the
+    all-constructor form rewrites: a bare `concat` over scalar or MV
+    column args would change semantics (string concat / the MV
+    element-mapping pass)."""
+    args = _split_top_args(inner)
+    if args and all(re.match(r"(?is)\s*array\s*\(", a) for a in args):
+        return f"concat({inner})"
+    return None
+
+
+# DOW/ISODOW included: Druid's are Joda ISO (Monday=1..Sunday=7, the
+# two agree — TimestampExtractExprMacro.java:130-133) where Spark's
+# EXTRACT(DOW) is Sunday=0-based
+_NONSTD_EXTRACT_RE = re.compile(
+    r"\s*(DECADE|CENTURY|MILLENNIUM|ISOYEAR|MILLISECOND|ISODOW|DOW|EPOCH)"
+    r"\s+FROM\s+(.+)\Z", re.IGNORECASE | re.DOTALL)
+
+
+def _extract(_name: str, inner: str) -> str | None:
+    """EXTRACT units Calcite/Druid accept but Spark's EXTRACT lacks
+    (TimestampExtractExprMacro.java:120-154: DECADE = year/10,
+    CENTURY/MILLENNIUM = ceil(year/unit), ISOYEAR ≈ year, MILLISECOND
+    = millis-of-second) route through the TIME_EXTRACT macro."""
+    m = _NONSTD_EXTRACT_RE.match(inner)
+    return m and f"TIME_EXTRACT({m.group(2)}, '{m.group(1).upper()}')"
+
+
+def _grouping(_name: str, inner: str) -> str | None:
+    """Calcite's GROUPING(a, b, ...) composite indicator: the bitmask
+    follows the ARGUMENT order, independent of the GROUP BY order
+    (GroupingSqlAggregator; testGroupingAggregatorDifferentOrder pins
+    GROUPING(gran, dim2) against GROUP BY (dim2, gran)). Spark's
+    grouping_id() insists its arguments match the grouping-column
+    order, so compose the mask from 1-arg grouping() bits instead."""
+    args = _args(inner)
+    if len(args) < 2:
+        return None
+    bits = " + ".join(
+        f"grouping({a}) * {1 << (len(args) - 1 - i)}"
+        if len(args) - 1 - i else f"grouping({a})"
+        for i, a in enumerate(args))
+    return f"CAST({bits} AS BIGINT)"
+
+
+def _trim_2arg(name: str, inner: str) -> str | None:
+    """Druid LTRIM/RTRIM(s, chars) vs Spark's legacy 2-arg form
+    ltrim(trimStr, str) — same name, swapped arguments
+    (TrimOperatorConversion; CalciteSelectQueryTest
+    testSelectTrimFamily pins LTRIM('xfoox','x') = 'foox')."""
+    args = _args(inner)
+    if len(args) != 2:
+        return None
+    return f"{name.lower()}({args[1]}, {args[0]})"
+
+
+def _slice_2arg(name: str, inner: str) -> str | None:
+    """Druid MV_SLICE/ARRAY_SLICE with two args slices to the end of
+    the array (ArraySliceOperatorConversion end defaults to length);
+    the registered SQL macro is fixed 3-arity. The rewrite KEEPS the
+    function head (fills the end arg with size(a)) — MV_SLICE vs
+    ARRAY_SLICE must stay distinguishable downstream, where GROUP BY
+    explodes MV_* results but groups ARRAY_* results as arrays."""
+    args = _args(inner)
+    if len(args) != 2:
+        return None
+    a, s = args
+    return f"{name.upper()}({a}, {s}, size({a}))"
+
+
+def _contains_array(_name: str, inner: str) -> str | None:
+    """Druid MV_CONTAINS/ARRAY_CONTAINS with an ARRAY second argument
+    is contains-ALL (MultiValueStringOperatorConversions.Contains);
+    the registered macro and the Spark builtin take a scalar needle."""
+    args = _args(inner)
+    if len(args) != 2 or not re.match(r"array\s*\(", args[1],
+                                      re.IGNORECASE):
+        return None
+    return f"forall({args[1]}, __mv_c -> array_contains({args[0]}, __mv_c))"
+
+
+def _truncate(name: str, inner: str) -> str | None:
+    """TRUNC/TRUNCATE with one arg: Druid defaults digits to 0; the
+    registered TRUNCATE UDF is fixed 2-arity (SQL functions can't
+    overload). TRUNC is its numeric-truncate alias (not Spark's date
+    trunc)."""
+    if len(_split_top_args(inner)) == 1:
+        return f"TRUNCATE({inner}, 0)"
+    return f"TRUNCATE({inner})" if name.upper() == "TRUNC" else None
+
+
+def _time_bucket(name: str, inner: str) -> str | None:
+    """TIME_FLOOR / TIME_CEIL (ts, period[, origin[, timezone]]) — the
+    3/4-arg forms of TimeFloorOperatorConversion and
+    TimeCeilOperatorConversion (same signature; ceil = floor, plus one
+    period when ts is not already on a boundary): bucketing happens in
+    the given zone and the result is the UTC instant of that local
+    boundary. The registered macros are 2-arity, so the long forms
+    rewrite to from_utc/date_trunc/to_utc (or a wrapped 2-arg macro
+    call) here. Unrecognized origin periods are left for the caller's
+    error."""
+    fn = name.upper()
+    args = _args(inner)
+    if len(args) < 3:
+        return None
+    ts, period = args[0], args[1]
+    tz = args[3] if len(args) > 3 else "'UTC'"
+    if args[2].upper() == "NULL":
+        unit = _trunc_unit(period)
+        if fn == "TIME_FLOOR" and unit is not None:
+            return (f"to_utc_timestamp(CAST(date_trunc('{unit}', "
+                    f"from_utc_timestamp({ts}, {tz})) AS TIMESTAMP), {tz})")
+        # NULL origin, any ISO period (incl. TIME_CEIL): wrap the
+        # registered 2-arg macro around the shifted wall clock —
+        # flooring/ceiling naive-local time from the naive epoch IS
+        # PeriodGranularity with a tz (origin defaults to 1970-01-01T00:00
+        # local)
+        return (f"to_utc_timestamp({fn}(from_utc_timestamp({ts}, "
+                f"{tz}), {period}), {tz})")
+    # origin-aligned flooring (TimestampFloorExprMacro with an origin:
+    # buckets tile outward from the origin instant —
+    # testTimeseriesUsingTimeFloorWithOrigin). Month-ish periods bucket
+    # by whole-month counts from the origin; fixed-duration periods by
+    # millis arithmetic. With a zone (PeriodGranularity with both origin
+    # and tz) bucket in local wall time and emit the UTC instant of the
+    # local bucket start.
+    o = args[2]
+    local = tz.strip("'").upper() not in ("UTC", "")
+    if local:
+        ts = f"from_utc_timestamp({ts}, {tz})"
+        o = f"from_utc_timestamp({o}, {tz})"
+    try:
+        months, dur = parse_period(
+            period.strip("'") if period.startswith("'") else "")
+    except ValueError:
+        return None  # unsupported origin form
+    if months:
+        # interval arithmetic keeps the origin's time-of-day (add_months
+        # would degrade to DATE). months_between ignores time-of-day
+        # when the days-of-month match, so a candidate bucket past ts
+        # steps back one period.
+        k = (f"CAST(floor(months_between({ts}, {o}) / "
+             f"{months}) AS INT) * {months}")
+        b = f"({o} + make_interval(0, {k}))"
+        repl = (f"(CASE WHEN {b} > {ts} THEN "
+                f"({o} + make_interval(0, ({k}) - {months})) "
+                f"ELSE {b} END)")
+    else:
+        repl = (f"timestamp_millis(unix_millis({o}) + "
+                f"CAST(floor((unix_millis({ts}) - "
+                f"unix_millis({o})) / {dur}) AS BIGINT) * {dur})")
+    if fn == "TIME_CEIL":
+        # ceil = floor, stepped one period forward unless ts is already
+        # on a bucket boundary. The floored value is bound ONCE via a
+        # single-element transform (inlining it three times re-evaluates
+        # the ts/origin expressions ~6x and blows up nested calls).
+        v = "__tc_f"
+        step = (f"({v} + make_interval(0, {months}))" if months
+                else f"timestamp_millis(unix_millis({v}) + {dur})")
+        repl = (f"element_at(transform(array({repl}), {v} -> "
+                f"CASE WHEN {v} = {ts} THEN {v} "
+                f"ELSE {step} END), 1)")
+    return f"to_utc_timestamp({repl}, {tz})" if local else repl
+
+
+_TO_UNIT_RE = re.compile(
+    r"\s*(.+?)\s+TO\s+(SECOND|MINUTE|HOUR|DAY|WEEK|MONTH|QUARTER|YEAR)"
+    r"\s*\Z", re.IGNORECASE | re.DOTALL)
+
+
+def _floor_ceil_to(name: str, inner: str) -> str | None:
+    """Calcite time syntax FLOOR(ts TO MONTH) / CEIL(ts TO DAY)
+    (DruidOperatorTable.java time operators) -> date_trunc /
+    TIME_CEIL."""
+    m = _TO_UNIT_RE.match(inner)
+    if not m:
+        return None
+    arg, unit = m.group(1), m.group(2).upper()
+    if name.upper() == "FLOOR":
+        return f"date_trunc('{unit}', {arg})"
+    return f"TIME_CEIL({arg}, '{period_of(unit)}')"
+
+
+_HUMAN_READABLE = {
+    "HUMAN_READABLE_BINARY_BYTE_FORMAT":
+        (1024, "array('B','KiB','MiB','GiB','TiB','PiB','EiB')", " B"),
+    "HUMAN_READABLE_DECIMAL_BYTE_FORMAT":
+        (1000, "array('KB','MB','GB','TB','PB','EB')", " B"),
+    "HUMAN_READABLE_DECIMAL_FORMAT":
+        (1000, "array('K','M','G','T','P','E')", ""),
+}
+
+
+def _human_readable(name: str, inner: str) -> str | None:
     """HUMAN_READABLE_*_FORMAT(n[, precision]) — both arities inline
     (HumanReadableFormatOperatorConversion; precision 0..3 defaults 2;
     CalciteQueryTest.testHumanReadableFormatFunction). Inlined rather
     than SQL UDFs so the NULL/small-value/precision contract is a
     single rendering (core/.../HumanReadableBytes.java)."""
-    specs = {
-        "HUMAN_READABLE_BINARY_BYTE_FORMAT":
-            (1024, "array('B','KiB','MiB','GiB','TiB','PiB','EiB')", " B"),
-        "HUMAN_READABLE_DECIMAL_BYTE_FORMAT":
-            (1000, "array('KB','MB','GB','TB','PB','EB')", " B"),
-        "HUMAN_READABLE_DECIMAL_FORMAT":
-            (1000, "array('K','M','G','T','P','E')", ""),
-    }
-    for fn, (base, units, suffix) in specs.items():
-        pos = 0
-        while True:
-            found = None
-            for start, op, cp in _find_calls(text[pos:], fn):
-                args = _split_top_args(text[pos + op + 1:pos + cp])
-                if len(args) in (1, 2):
-                    found = (pos + start, pos + cp, args)
-                    break
-            if found is None:
-                break
-            s, c, args = found
-            n = args[0].strip()
-            p = args[1].strip() if len(args) == 2 else "2"
-            body = _human_readable_body(n, p, base, units, suffix)
-            text = text[:s] + body + text[c + 1:]
-            pos = s + len(body)
-    return text
+    args = _args(inner)
+    if len(args) not in (1, 2):
+        return None
+    p = args[1] if len(args) == 2 else "2"
+    return _human_readable_body(args[0], p, *_HUMAN_READABLE[name.upper()])
 
 
-def translate(text: str, time_column: str = TIME_COLUMN) -> str:
-    """Rewrite Druid SQL aggregate surface into Spark SQL."""
+def _substring(_name: str, inner: str) -> str:
+    """Druid SQL SUBSTRING lowers to SubstringDimExtractionFn, which
+    returns NULL (never '') when the start index falls past the string
+    (testGroupByWithSelectProjections pins SUBSTRING('1', 2) -> null);
+    Spark returns ''. NULLIF the result — an empty result string only
+    arises from an out-of-range start or an empty input, both null in
+    the reference."""
+    # Calcite also accepts SUBSTRING(x FROM s [FOR l]): rewrite FROM/FOR
+    # to commas ONLY when the call has no top-level commas already, and
+    # only for tokens at top paren depth outside string literals — a
+    # literal 'ab FROM cd' or a scalar-subquery argument survives.
+    if len(_split_top_args(inner)) == 1:
+        depths, spans = _depths(inner), _string_spans(inner)
+        for m in reversed(list(re.finditer(r"\b(?:FROM|FOR)\b", inner,
+                                           re.IGNORECASE))):
+            if depths[m.start()] == 0 and not _in_string(spans, m.start()):
+                inner = inner[:m.start()] + "," + inner[m.end():]
+    return f"NULLIF(substring({inner}), '')"
+
+
+def _drop_size_arg(inner: str, n: int) -> str:
+    """Druid's string forms carry a trailing maxStringBytes argument
+    (EARLIEST(expr, 10) / EARLIEST_BY(expr, ts, 10) / ANY_VALUE(expr,
+    10) — StringFirstAggregatorFactory). This engine never truncates
+    aggregate strings (strictly better, like exact topN), so an
+    ``n``-th integer argument drops."""
+    args = _split_top_args(inner)
+    if len(args) == n and re.fullmatch(r"\s*\d+\s*", args[-1]):
+        return ", ".join(a.strip() for a in args[:-1])
+    return inner
+
+
+def _subquery_agg(name: str, inner: str) -> str | None:
+    """Calcite lets aggregates take a BARE correlated scalar subquery
+    (CalciteCorrelatedQueryTest: ANY_VALUE(select ...)); Spark's parser
+    needs it parenthesized, and Catalyst then decorrelates it the same
+    way Calcite's RelDecorrelator does. ANY_VALUE also drops its
+    maxStringBytes argument."""
+    if re.match(r"\s*SELECT\b", inner, re.IGNORECASE):
+        return f"{name}(({inner}))"
+    if name.upper() != "ANY_VALUE":
+        return None
+    kept = _drop_size_arg(inner, 2)
+    return None if kept == inner else f"{name}({kept})"
+
+
+def _approx_count_distinct(name: str, inner: str) -> str | None:
+    """APPROX_COUNT_DISTINCT[_DS_HLL|_BUILTIN] -> approx_count_distinct;
+    _DS_THETA -> the finalized theta estimate over real sketch state
+    (the DataSketches theta ThetaSketchApproxCountDistinctSqlAggregator
+    produces). Calcite tolerates a redundant DISTINCT keyword inside
+    (CalciteQueryTest.testApproxCountDistinct); Spark rejects it."""
+    m = re.match(r"\s*DISTINCT\b", inner, re.IGNORECASE)
+    x = inner[m.end():] if m else inner
+    fn = name.upper()
+    if fn == "APPROX_COUNT_DISTINCT_DS_THETA":
+        return f"theta_sketch_estimate(theta_sketch_agg({x}))"
+    if fn == "APPROX_COUNT_DISTINCT":
+        return f"{name}({x})" if m else None
+    return f"approx_count_distinct({x})"
+
+
+_CALL_RULES = {
+    **{name: _rename(to) for name, to in _RENAMES.items()},
+    "REGEXP_EXTRACT": _regexp_extract,
+    "REGEXP_LIKE": _regexp_like,
+    "ROUND": _round,
+    "TIME_PARSE": _time_parse,
+    "TIME_FORMAT": _time_fn_tz,
+    "TIME_EXTRACT": _time_fn_tz,
+    "TIME_SHIFT": _time_fn_tz,
+    "TIME_FLOOR": _time_bucket,
+    "TIME_CEIL": _time_bucket,
+    "FLOOR": _floor_ceil_to,
+    "CEIL": _floor_ceil_to,
+    "PARSE_LONG": _parse_long_radix,
+    "POSITION": _position_from,
+    "REPEAT": _repeat,
+    "IPV4_PARSE": _ipv4_numeric,
+    "IPV4_MATCH": _ipv4_numeric,
+    "IPV4_STRINGIFY": _ipv4_numeric,
+    "ARRAY_PREPEND": _array_prepend,
+    "ARRAY_CONCAT": _array_concat,
+    "EXTRACT": _extract,
+    "GROUPING": _grouping,
+    "LTRIM": _trim_2arg,
+    "RTRIM": _trim_2arg,
+    "MV_SLICE": _slice_2arg,
+    "ARRAY_SLICE": _slice_2arg,
+    "MV_CONTAINS": _contains_array,
+    "ARRAY_CONTAINS": _contains_array,
+    "TRUNC": _truncate,
+    "TRUNCATE": _truncate,
+    **dict.fromkeys(_HUMAN_READABLE, _human_readable),
+    "SUBSTRING": _substring,
+    **dict.fromkeys(("ANY_VALUE", "SUM", "MIN", "MAX", "AVG", "COUNT"),
+                    _subquery_agg),
+    "EARLIEST": lambda _n, a: f"min_by({_drop_size_arg(a, 2)}, "
+                              f"`{TIME_COLUMN}`)",
+    "LATEST": lambda _n, a: f"max_by({_drop_size_arg(a, 2)}, "
+                            f"`{TIME_COLUMN}`)",
+    "EARLIEST_BY": lambda _n, a: f"min_by({_drop_size_arg(a, 3)})",
+    "LATEST_BY": lambda _n, a: f"max_by({_drop_size_arg(a, 3)})",
+    # SUM0: null-as-zero sum (DruidOperatorTable.java SUM0 — the
+    # rollup-count re-aggregation form)
+    "SUM0": lambda _n, a: f"coalesce(sum({a}), 0)",
+    **dict.fromkeys(("APPROX_COUNT_DISTINCT", "APPROX_COUNT_DISTINCT_DS_HLL",
+                     "APPROX_COUNT_DISTINCT_BUILTIN",
+                     "APPROX_COUNT_DISTINCT_DS_THETA"),
+                    _approx_count_distinct),
+}
+_CALL_RE = re.compile(r"\b(?:" + "|".join(_CALL_RULES) + r")\s*\(",
+                      re.IGNORECASE)
+
+
+def _rewrite_calls(text: str) -> str:
+    """Apply _CALL_RULES to every call of a table name outside string
+    literals: the call's arguments first, then its own rule on the
+    rewritten arguments. A rule's output is never scanned again, so a
+    rule can emit its own name and fires on every nesting level."""
+    out, last = [], 0
+    for start, op, cp in _find_calls(text, _CALL_RE):
+        if text[cp] != ")" or cp == op:  # never closed: leave it
+            continue
+        name = text[start:op].rstrip()
+        inner = _rewrite_calls(text[op + 1:cp])
+        new = _CALL_RULES[name.upper()](name, inner)
+        out.append(text[last:start])
+        out.append(text[start:op + 1] + inner + ")" if new is None else new)
+        last = cp + 1
+    out.append(text[last:])
+    return "".join(out)
+
+
+def _rewrite_bare_varchar(text: str) -> str:
+    return _sub_outside_strings(text, r"\bAS\s+VARCHAR\b(?!\s*\()",
+                                "AS STRING")
+
+
+def _escape_backslashes(text: str) -> str:
+    """Calcite reads a backslash in a string literal as itself, while
+    Spark's parser (spark.sql.parser.escapedStringLiterals=false) reads
+    it as an escape: double it inside every single-quoted literal."""
+    if "\\" not in text:
+        return text
+    out, last = [], 0
+    for lo, hi in _string_spans(text):
+        if text[lo] == "'":
+            out.append(text[last:lo])
+            out.append(text[lo:hi + 1].replace("\\", "\\\\"))
+            last = hi + 1
+    out.append(text[last:])
+    return "".join(out)
+
+
+def translate(text: str) -> str:
+    """Rewrite Druid SQL into Spark SQL: one walk of _CALL_RULES between
+    the passes that look outside a call's parentheses."""
     text = _rewrite_quoted_identifiers(text)
     text = _rewrite_array_agg(text)
     text = _rewrite_string_agg(text)
-    text = _wrap_bare_subquery_agg_args(text)
     text = _rewrite_catalog_tables(text)
     text = _rewrite_druid_schema(text)
-    text = _rewrite_lookup_schema(text)
-    text = _rewrite_view_schema(text)
-    text = _rewrite_floor_to(text)
+    text = _rewrite_named_schemas(text)
     # Calcite accepts unsized VARCHAR in CASTs; Spark wants STRING
     text = _rewrite_bare_varchar(text)
     # Druid CAST never throws — malformed input is NULL and numeric
@@ -1534,25 +1338,14 @@ def translate(text: str, time_column: str = TIME_COLUMN) -> str:
     # rewrite (used while the engine ran ANSI) would null '10.1'
     # instead of truncating (CalciteQueryTest testSumOfString pins 13).
     text = _rewrite_array_literal(text)
-    text = _rewrite_regexp_extract(text)
-    text = _rewrite_time_parse(text)
-    text = _rewrite_time_fn_tz(text)
-    text = _rewrite_parse_long_radix(text)
-    text = _rewrite_position_from(text)
-    text = _rewrite_repeat_negative(text)
-    text = _rewrite_regexp_like_null(text)
-    text = _rewrite_round_edges(text)
-    text = _rewrite_ipv4_numeric(text)
-    text = text.replace("__RX_EXTRACT__", "regexp_extract")
-    text = _rewrite_array_prepend(text)
-    text = text.replace("__ARR_PREP__", "array_prepend")
-    text = _rewrite_array_concat_constructed(text)
-    text = _rewrite_nonstd_extract(text)
+    # after ARRAY[..] became array(..), which the ARRAY_CONCAT and
+    # *_CONTAINS rules look for; before integer division, which reads
+    # the CAST the GROUPING rule emits
+    text = _rewrite_calls(text)
     # GROUP BY () — Calcite's explicit empty grouping set (the
     # ungrouped aggregate); Spark's parser rejects the () spelling
     text = _sub_outside_strings(text, r"\bGROUP\s+BY\s*\(\s*\)", " ")
     text = _rewrite_like_escape(text)
-    text = _rewrite_grouping_multi(text)
     text = _rewrite_integer_division(text)
     # Druid time IS an epoch-millis long, so CAST(__time AS BIGINT)
     # yields millis (testJoinOnTimeseriesWithFloorOnTime pins it);
@@ -1563,78 +1356,8 @@ def translate(text: str, time_column: str = TIME_COLUMN) -> str:
     text = _sub_outside_strings(
         text, r"\bCAST\s*\(\s*(`?__time`?)\s+AS\s+BIGINT\s*\)",
         lambda m: f"unix_millis({m.group(1)})")
-    text = _rewrite_ltrim_rtrim_2arg(text)
-    text = _rewrite_time_floor_tz(text)
-    text = _rewrite_mv_slice_2arg(text)
-    text = _rewrite_mv_contains_array(text)
-    text = _rewrite_truncate_default(text)
     text = _rewrite_lookup_neq(text)
-    text = _rewrite_human_readable_precision(text)
-    # APPROX_COUNT_DISTINCT(DISTINCT x) — Calcite tolerates the
-    # redundant DISTINCT keyword inside the approximate aggregator
-    # (CalciteQueryTest.testApproxCountDistinct); Spark rejects it
-    text = _sub_outside_strings(
-        text,
-        r"\b(APPROX_COUNT_DISTINCT(?:_DS_HLL|_BUILTIN|_DS_THETA)?)"
-        r"\s*\(\s*DISTINCT\b",
-        lambda m: f"{m.group(1)}(")
-    # Druid's string forms carry a trailing maxStringBytes argument
-    # (EARLIEST(expr, 10) / EARLIEST_BY(expr, ts, 10) /
-    # ANY_VALUE(expr, 10) — StringFirstAggregatorFactory). This engine
-    # never truncates aggregate strings (strictly better, like exact
-    # topN), so the size argument drops before the min_by/max_by
-    # lowering (which would otherwise emit an invalid 3-arg min_by).
-    text = _rewrite_substring_null_when_short(text)
-    text = _strip_agg_size_arg(text)
-    # ordered: _BY variants first so bare EARLIEST doesn't eat them
-    text = _rewrite_call(text, "EARLIEST_BY", "min_by")
-    text = _rewrite_call(text, "LATEST_BY", "max_by")
-    text = _rewrite_call(text, "EARLIEST", "min_by",
-                         append_arg=f"`{time_column}`")
-    text = _rewrite_call(text, "LATEST", "max_by",
-                         append_arg=f"`{time_column}`")
-    # ARRAY_CONCAT_AGG handled by _rewrite_array_agg (runs earlier)
-    # SUM0: null-as-zero sum (DruidOperatorTable.java SUM0 — the
-    # rollup-count re-aggregation form): SUM0(x) -> coalesce(sum(x), 0)
-    # via a collision-proof temp marker so pre-existing coalesce(sum(
-    # text in the input is never touched.
-    rewritten = _rewrite_call(text, "SUM0", "__SUM0_TMP__")
-    if rewritten != text:
-        rewritten = _close_extra_paren(rewritten, "__SUM0_TMP__(", ", 0)")
-        text = rewritten.replace("__SUM0_TMP__(", "coalesce(sum(")
-    # APPROX_COUNT_DISTINCT_DS_THETA(x) -> finalized theta estimate
-    # over real sketch state (same DataSketches theta the reference's
-    # ThetaSketchApproxCountDistinctSqlAggregator produces)
-    rewritten = _rewrite_call(text, "APPROX_COUNT_DISTINCT_DS_THETA",
-                              "__ACDT_TMP__")
-    if rewritten != text:
-        rewritten = _close_extra_paren(rewritten, "__ACDT_TMP__(", ")")
-        text = rewritten.replace(
-            "__ACDT_TMP__(", "theta_sketch_estimate(theta_sketch_agg(")
-    return _sub_outside_strings(
-        text, _SIMPLE_RENAME_PAT,
-        lambda m: _SIMPLE_RENAMES[m.group(1).upper()] + "(")
-
-
-def _rewrite_bare_varchar(text: str) -> str:
-    return _sub_outside_strings(text, r"\bAS\s+VARCHAR\b(?!\s*\()",
-                                "AS STRING")
-
-
-def _close_extra_paren(text: str, marker: str, closing: str = ")") -> str:
-    """Append ``closing`` after the call each ``marker`` (ending in its
-    open paren) starts."""
-    out = []
-    i = 0
-    while True:
-        k = text.find(marker, i)
-        if k < 0:
-            out.append(text[i:])
-            return "".join(out)
-        cp = _matching_close(text, k + len(marker) - 1)
-        out.append(text[i:cp + 1])
-        out.append(closing)
-        i = cp + 1
+    return _escape_backslashes(text)
 
 
 def _explain_plan_for(spark: SparkSession, inner: str,

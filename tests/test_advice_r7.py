@@ -13,8 +13,8 @@ import pytest
 from apache_druid_spark.model.datasource import DatasourceRegistry
 from apache_druid_spark.sql.dialect import (
     _rewrite_druid_schema,
-    _rewrite_time_floor_tz,
     druid_sql,
+    translate,
 )
 
 MV_SCHEMA = ("__time timestamp, dim1 string, dim3 array<string>, "
@@ -76,7 +76,7 @@ def test_time_floor_origin_utc_unchanged(spark):
                           TIMESTAMP '2024-01-01 08:00:00', 'UTC') AS t
     """).first()
     assert out["t"] == datetime(2024, 6, 1, 8, 0)
-    assert "America" not in _rewrite_time_floor_tz(
+    assert "America" not in translate(
         "TIME_FLOOR(x, 'P1M', o)")
 
 

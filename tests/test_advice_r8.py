@@ -14,7 +14,6 @@ from apache_druid_spark.model.datasource import DatasourceRegistry
 from apache_druid_spark.sql.dialect import (
     _check_mv_lambda_hygiene,
     _rewrite_druid_schema,
-    _rewrite_time_floor_tz,
     druid_sql,
     translate,
 )
@@ -150,7 +149,7 @@ def test_druid_schema_comma_from_list():
 # --- ADVICE #5: TIME_CEIL origin expansion binds the floor once -------
 
 def test_time_ceil_origin_binds_floor_once():
-    out = _rewrite_time_floor_tz(
+    out = translate(
         "SELECT TIME_CEIL(__time, 'PT1H', TIMESTAMP '2000-01-01 00:30:00')"
         " FROM t")
     # the floored value appears once, bound to the __tc_f lambda var

@@ -1,0 +1,190 @@
+"""The call-rule table of the SQL dialect (`_CALL_RULES`, applied by
+`_rewrite_calls`): one nested same-name sample per Druid function, row
+checks of nested calls and of call names inside string literals, and
+Druid (Calcite) string-literal semantics — a backslash is an ordinary
+character."""
+
+from __future__ import annotations
+
+from datetime import datetime
+
+import pytest
+
+from apache_druid_spark.sql.dialect import (
+    _CALL_RULES, _RENAMES, druid_sql, translate,
+)
+
+# key -> (outer call with {} where the nested call goes, nested call)
+SAMPLES = {
+    **{k: (f"{k}({{}})", f"{k}(x)") for k in _RENAMES},
+    "REGEXP_EXTRACT": ("REGEXP_EXTRACT({}, '[0-9]+')",
+                       "REGEXP_EXTRACT(dim1, 'a[0-9]+')"),
+    "REGEXP_LIKE": ("REGEXP_LIKE(CAST({} AS STRING), 'true')",
+                    "REGEXP_LIKE(dim1, '^a')"),
+    "ROUND": ("ROUND({} + 1)", "ROUND(m1, 1)"),
+    "TIME_PARSE": ("TIME_PARSE(CAST({} AS STRING), NULL, 'UTC')",
+                   "TIME_PARSE(dim1, 'yyyy-MM-dd', 'America/Los_Angeles')"),
+    "TIME_FORMAT": ("TIME_FORMAT(TIME_PARSE({}), 'yyyy', 'Asia/Tokyo')",
+                    "TIME_FORMAT(__time, 'yyyy-MM-dd', 'Europe/Paris')"),
+    "TIME_EXTRACT": ("TIME_EXTRACT(MILLIS_TO_TIMESTAMP({}), 'HOUR', "
+                     "'Asia/Tokyo')",
+                     "TIME_EXTRACT(__time, 'DAY', 'America/Los_Angeles')"),
+    "TIME_SHIFT": ("TIME_SHIFT({}, 'P1D', 1, 'Asia/Tokyo')",
+                   "TIME_SHIFT(__time, 'P1M', -1, 'America/Los_Angeles')"),
+    "TIME_FLOOR": ("TIME_FLOOR({}, 'P1M', NULL, 'Asia/Tokyo')",
+                   "TIME_FLOOR(__time, 'P1D', NULL, 'America/Los_Angeles')"),
+    "TIME_CEIL": ("TIME_CEIL({}, 'PT1H', TIMESTAMP '2000-01-01 00:30:00')",
+                  "TIME_CEIL(__time, 'P1D', NULL, 'America/Los_Angeles')"),
+    "FLOOR": ("FLOOR({} TO MONTH)", "FLOOR(__time TO DAY)"),
+    "CEIL": ("CEIL({} TO YEAR)", "CEIL(__time TO HOUR)"),
+    "PARSE_LONG": ("PARSE_LONG(CAST({} AS STRING), 10)",
+                   "PARSE_LONG(dim1, 16)"),
+    "POSITION": ("POSITION('1' IN CAST({} AS STRING) FROM 1)",
+                 "POSITION('a' IN dim1 FROM 2)"),
+    "REPEAT": ("REPEAT({}, 2)", "REPEAT('ab', -1)"),
+    "IPV4_PARSE": ("IPV4_PARSE({})", "IPV4_PARSE(3232235777)"),
+    "IPV4_MATCH": ("IPV4_MATCH(3232235777, CASE WHEN {} "
+                   "THEN '192.168.0.0/16' END)",
+                   "IPV4_MATCH(167772161, '10.0.0.0/8')"),
+    "IPV4_STRINGIFY": ("IPV4_STRINGIFY({})",
+                       "IPV4_STRINGIFY('192.168.0.1')"),
+    "ARRAY_PREPEND": ("ARRAY_PREPEND('z', {})",
+                      "ARRAY_PREPEND('a', ARRAY['b'])"),
+    "ARRAY_CONCAT": ("ARRAY_CONCAT(ARRAY[1], ARRAY[ARRAY_LENGTH({})])",
+                     "ARRAY_CONCAT(ARRAY[2], ARRAY[3])"),
+    "EXTRACT": ("EXTRACT(DECADE FROM MILLIS_TO_TIMESTAMP({}))",
+                "EXTRACT(MILLISECOND FROM __time)"),
+    "GROUPING": ("GROUPING({}, dim2)", "GROUPING(dim1, dim2)"),
+    "LTRIM": ("LTRIM({}, 'y')", "LTRIM('xfoox', 'x')"),
+    "RTRIM": ("RTRIM({}, 'y')", "RTRIM('xfoox', 'x')"),
+    "MV_SLICE": ("MV_SLICE({}, 1)", "MV_SLICE(dim3, 0)"),
+    "ARRAY_SLICE": ("ARRAY_SLICE({}, 1)", "ARRAY_SLICE(arr, 0)"),
+    "MV_CONTAINS": ("MV_CONTAINS(ARRAY[CAST({} AS STRING)], "
+                    "ARRAY['true'])",
+                    "MV_CONTAINS(dim3, ARRAY['a', 'b'])"),
+    "ARRAY_CONTAINS": ("ARRAY_CONTAINS(ARRAY[CAST({} AS STRING)], "
+                       "ARRAY['true'])",
+                       "ARRAY_CONTAINS(arr, ARRAY['a', 'b'])"),
+    "TRUNC": ("TRUNC({})", "TRUNC(m1, 1)"),
+    "TRUNCATE": ("TRUNCATE({} * 10)", "TRUNCATE(m1)"),
+    "HUMAN_READABLE_BINARY_BYTE_FORMAT": (
+        "HUMAN_READABLE_BINARY_BYTE_FORMAT(LENGTH({}))",
+        "HUMAN_READABLE_BINARY_BYTE_FORMAT(cnt, 1)"),
+    "HUMAN_READABLE_DECIMAL_BYTE_FORMAT": (
+        "HUMAN_READABLE_DECIMAL_BYTE_FORMAT(LENGTH({}))",
+        "HUMAN_READABLE_DECIMAL_BYTE_FORMAT(cnt, 1)"),
+    "HUMAN_READABLE_DECIMAL_FORMAT": (
+        "HUMAN_READABLE_DECIMAL_FORMAT(LENGTH({}))",
+        "HUMAN_READABLE_DECIMAL_FORMAT(cnt)"),
+    "SUBSTRING": ("SUBSTRING({} FROM 2)", "SUBSTRING(dim1, 3, 2)"),
+    "ANY_VALUE": ("ANY_VALUE({}, 10)", "ANY_VALUE(dim1, 20)"),
+    **{k: (f"{k}(SELECT {{}} FROM t)", f"{k}(SELECT m1 FROM t)")
+       for k in ("SUM", "MIN", "MAX", "AVG", "COUNT")},
+    "EARLIEST": ("EARLIEST({}, 10)", "EARLIEST(dim1, 20)"),
+    "LATEST": ("LATEST({}, 10)", "LATEST(dim1)"),
+    "EARLIEST_BY": ("EARLIEST_BY({}, __time, 10)",
+                    "EARLIEST_BY(dim1, __time)"),
+    "LATEST_BY": ("LATEST_BY({}, __time)", "LATEST_BY(dim1, __time, 20)"),
+    "SUM0": ("SUM0({})", "SUM0(cnt)"),
+    "APPROX_COUNT_DISTINCT": ("APPROX_COUNT_DISTINCT(DISTINCT {})",
+                              "APPROX_COUNT_DISTINCT(DISTINCT dim1)"),
+    "APPROX_COUNT_DISTINCT_DS_HLL": ("APPROX_COUNT_DISTINCT_DS_HLL({})",
+                                     "APPROX_COUNT_DISTINCT_DS_HLL(dim1)"),
+    "APPROX_COUNT_DISTINCT_BUILTIN": (
+        "APPROX_COUNT_DISTINCT_BUILTIN(DISTINCT {})",
+        "APPROX_COUNT_DISTINCT_BUILTIN(dim1)"),
+    "APPROX_COUNT_DISTINCT_DS_THETA": (
+        "APPROX_COUNT_DISTINCT_DS_THETA({})",
+        "APPROX_COUNT_DISTINCT_DS_THETA(DISTINCT dim1)"),
+}
+
+# these rules fire only on a literal argument, which cannot hold a call
+LITERAL_ONLY = {"IPV4_PARSE", "IPV4_STRINGIFY"}
+HOLE = "hole_"
+
+
+def test_every_rule_has_a_nested_sample():
+    assert set(SAMPLES) == set(_CALL_RULES)
+
+
+@pytest.mark.parametrize("key", sorted(SAMPLES))
+def test_nested_same_name_call_is_rewritten_at_both_levels(key):
+    outer, inner = SAMPLES[key]
+    inner_out = translate(inner)
+    outer_out = translate(outer.format(HOLE))
+    assert inner_out != inner
+    assert (outer_out == outer.format(HOLE)) == (key in LITERAL_ONLY)
+    # the outer rule sees the nested call already rewritten, and its
+    # own output is never scanned again
+    assert translate(outer.format(inner)) == \
+        outer_out.replace(HOLE, inner_out)
+
+
+def test_call_names_inside_literals_are_kept():
+    sql = "SELECT 'FLOOR(a TO DAY)', 'ROUND(x)', 'EARLIEST(z)' FROM t"
+    assert translate(sql) == sql
+
+
+def test_unclosed_call_is_left_as_written():
+    assert translate("SELECT ROUND(x") == "SELECT ROUND(x"
+    assert translate("SELECT REPEAT(") == "SELECT REPEAT("
+
+
+def one(spark, sql):
+    return druid_sql(spark, sql).first()
+
+
+def test_nested_repeat_negative_is_null(spark):
+    assert one(spark, "SELECT REPEAT(REPEAT('ab', -1), 2) AS v").v is None
+
+
+def test_nested_round_of_nan(spark):
+    # the inner NaN rounds to 0, so the outer rounds 0 + 1
+    assert one(spark, "SELECT ROUND(ROUND(CAST('NaN' AS DOUBLE)) + 1) "
+                      "AS v").v == 1.0
+
+
+def test_nested_time_floor_with_zones(spark):
+    # 10:00Z is 03:00 in Los Angeles: the day starts 07:00Z, which is
+    # 16:00 in Tokyo, whose month starts 2024-05-31T15:00Z
+    row = one(spark, """
+        SELECT TIME_FLOOR(TIME_FLOOR(TIMESTAMP '2024-06-15 10:00:00',
+                                     'P1D', NULL, 'America/Los_Angeles'),
+                          'P1M', NULL, 'Asia/Tokyo') AS v""")
+    assert row.v == datetime(2024, 5, 31, 15, 0)
+
+
+def test_floor_to_over_two_levels_of_calls(spark):
+    # 40 days after the epoch, shifted one day, floored to the month
+    row = one(spark, """
+        SELECT FLOOR(TIME_SHIFT(MILLIS_TO_TIMESTAMP(cnt), 'P1D', 1)
+                     TO MONTH) AS v
+        FROM (SELECT CAST(3456000000 AS BIGINT) AS cnt)""")
+    assert row.v == datetime(1970, 2, 1)
+
+
+def test_floor_to_inside_a_literal_is_text(spark):
+    assert one(spark, "SELECT 'FLOOR(a TO DAY)' AS v").v == \
+        "FLOOR(a TO DAY)"
+
+
+def test_backslash_in_a_literal_is_a_character(spark):
+    row = one(spark, r"SELECT 'C:\temp' AS p, LENGTH('a\b') AS n")
+    assert (row.p, row.n) == ("C:\\temp", 3)
+
+
+def test_regex_escape_reaches_the_regex_engine(spark):
+    row = one(spark, r"SELECT REGEXP_EXTRACT('Brand#12', 'Brand#(\d+)', 1)"
+                     r" AS v")
+    assert row.v == "12"
+
+
+@pytest.mark.parametrize("value, pattern, matches", [
+    ("'a%b'", "'a!%b'", True),
+    ("'a%xb'", "'a!%b'", False),
+    ("'abc'", "'a!bc'", True),
+    (r"'a\b'", r"'a\b'", True),
+])
+def test_like_with_escape_clause(spark, value, pattern, matches):
+    row = one(spark, f"SELECT {value} LIKE {pattern} ESCAPE '!' AS v")
+    assert row.v is matches

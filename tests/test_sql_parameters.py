@@ -251,6 +251,50 @@ def test_backslash_parameter_binds_safely(spark, reg):
     assert out.v == "C:\\temp\\"
 
 
+def test_trailing_backslash_binds_exactly():
+    # bound text is Druid SQL: Calcite reads a backslash as itself, and
+    # translate escapes it for Spark
+    assert bind_parameters("SELECT ?", [
+        {"type": "VARCHAR", "value": "x\\"}]) == "SELECT 'x\\'"
+
+
+def test_http_trailing_backslash_parameter(spark, reg):
+    from apache_druid_spark.server.http import DruidHttpServer
+
+    srv = DruidHttpServer(spark, reg, port=0)
+    srv.start()
+    try:
+        body = json.dumps({
+            "query": "SELECT ? AS v, LENGTH(?) AS n",
+            "parameters": [{"type": "VARCHAR", "value": "x\\"},
+                           {"type": "VARCHAR", "value": "x\\"}],
+        }).encode()
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{srv.port}/druid/v2/sql", data=body,
+            headers={"Content-Type": "application/json"})
+        rows = json.loads(urllib.request.urlopen(req).read())
+        assert rows == [{"v": "x\\", "n": 2}]
+    finally:
+        srv.stop()
+
+
+def test_avatica_trailing_backslash_parameter(spark, reg):
+    from apache_druid_spark.server.avatica import AvaticaMeta
+
+    meta = AvaticaMeta(spark, reg)
+    meta.handle({"request": "openConnection", "connectionId": "c6"})
+    prep = meta.handle({"request": "prepare", "connectionId": "c6",
+                        "sql": "SELECT ? AS v, LENGTH(?) AS n"})
+    res = meta.handle({
+        "request": "execute",
+        "statementHandle": {"connectionId": "c6",
+                            "id": prep["statement"]["id"]},
+        "parameterValues": [{"type": "STRING", "value": "x\\"},
+                            {"type": "STRING", "value": "x\\"}],
+    })
+    assert res["results"][0]["firstFrame"]["rows"] == [["x\\", 2]]
+
+
 def test_primitive_rep_binds_typed(spark, reg):
     # Avatica PRIMITIVE_LONG must bind as a numeric literal
     from apache_druid_spark.server.avatica import AvaticaMeta

@@ -93,3 +93,40 @@ def test_no_hand_written_quote_or_depth_loop():
                         default=None)
             assert owner is not None and owner.name in allowed, \
                 f"{path}:{lineno}: use the dialect scanner"
+
+
+def _translate_passes() -> dict:
+    """Source of translate and of every module-level def or table it
+    reaches by name, keyed by name."""
+    src = open(os.path.join(PKG, "sql", "dialect.py")).read()
+    nodes = {}
+    for n in ast.parse(src).body:
+        if isinstance(n, ast.FunctionDef):
+            nodes[n.name] = n
+        elif isinstance(n, ast.Assign):
+            nodes.update((t.id, n) for t in n.targets
+                         if isinstance(t, ast.Name))
+    seen, todo = {}, ["translate"]
+    while todo:
+        name = todo.pop()
+        if name in seen or name not in nodes:
+            continue
+        seen[name] = ast.get_source_segment(src, nodes[name])
+        todo += [n.id for n in ast.walk(nodes[name])
+                 if isinstance(n, ast.Name)]
+    return seen
+
+
+def test_translate_has_no_placeholder_markers():
+    passes = _translate_passes()
+    assert {"_rewrite_calls", "_CALL_RULES", "_round"} <= set(passes)
+    assert "_close_extra_paren" not in passes
+    for name, seg in passes.items():
+        assert not re.search(r"__\w+__\s*\(", seg), name
+
+
+def test_find_calls_only_in_the_walker_and_outside_paren_passes():
+    users = {name for name, seg in _translate_passes().items()
+             if name != "_find_calls" and "_find_calls(" in seg}
+    assert users == {"_rewrite_calls", "_rewrite_array_agg",
+                     "_rewrite_string_agg", "_rewrite_lookup_neq"}
