@@ -9,99 +9,53 @@ Every function is a Spark *SQL UDF* (CREATE TEMPORARY FUNCTION ... RETURN
 NOT a Python UDF. Druid SQL that uses these names runs verbatim through
 ``spark.sql`` after ``register_druid_functions``.
 
-TIME_FLOOR/CEIL/SHIFT accept arbitrary ISO-8601 periods at runtime; the
-period parse is pure SQL (regexp on the argument), so for the common case
-of a literal period Catalyst constant-folds it away entirely.
+Time functions are lowered by sql/dialect.py in their zone, a literal
+period read at translate time; the 2-arg TIME_FLOOR/CEIL/SHIFT UDFs
+below serve a NON-literal period only, parsed per row in UTC (the
+dialect wraps the zone). TIME_FLOOR by a compound one floors to months.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-# SQL fragments that parse an ISO-8601 period string `{p}` into months /
-# milliseconds. Groups: 1=Y 2=M 3=W 4=D 5=H 6=Min 7=S
+# The ISO-8601 period argument `period` read per row: field i of the
+# pattern (1=Y 2=M 3=W 4=D 5=H 6=Min 7=S) as an INT, 0 when absent
 _PERIOD_RE_SQL = r"'^P(?:(\\d+)Y)?(?:(\\d+)M)?(?:(\\d+)W)?(?:(\\d+)D)?(?:T(?:(\\d+)H)?(?:(\\d+)M)?(?:(\\d+)S)?)?$'"
 
 
-def _months(p: str) -> str:
-    return (f"(coalesce(try_cast(regexp_extract({p}, {_PERIOD_RE_SQL}, 1) AS BIGINT), 0) * 12"
-            f" + coalesce(try_cast(regexp_extract({p}, {_PERIOD_RE_SQL}, 2) AS BIGINT), 0))")
+def _field(i: int) -> str:
+    return (f"coalesce(try_cast(regexp_extract(period, {_PERIOD_RE_SQL}, "
+            f"{i}) AS INT), 0)")
 
 
-def _millis(p: str) -> str:
-    return (f"(coalesce(try_cast(regexp_extract({p}, {_PERIOD_RE_SQL}, 3) AS BIGINT), 0) * 604800000"
-            f" + coalesce(try_cast(regexp_extract({p}, {_PERIOD_RE_SQL}, 4) AS BIGINT), 0) * 86400000"
-            f" + coalesce(try_cast(regexp_extract({p}, {_PERIOD_RE_SQL}, 5) AS BIGINT), 0) * 3600000"
-            f" + coalesce(try_cast(regexp_extract({p}, {_PERIOD_RE_SQL}, 6) AS BIGINT), 0) * 60000"
-            f" + coalesce(try_cast(regexp_extract({p}, {_PERIOD_RE_SQL}, 7) AS BIGINT), 0) * 1000)")
-
-
-def _time_floor_body(ts: str, p: str) -> str:
-    """Common periods fold to date_trunc: with a literal period the CASE
-    predicates are constants, so Catalyst keeps exactly one branch."""
-    months, millis = _months(p), _millis(p)
-    total_m = f"((year({ts}) * 12 + month({ts}) - 1) - pmod(year({ts}) * 12 + month({ts}) - 1, {months}))"
-    return f"""CASE
-      WHEN upper({p}) = 'P1W' THEN date_trunc('WEEK', {ts})
-      WHEN {months} = 12 THEN date_trunc('YEAR', {ts})
-      WHEN {months} = 3 THEN date_trunc('QUARTER', {ts})
-      WHEN {months} = 1 THEN date_trunc('MONTH', {ts})
-      WHEN {months} > 0 THEN
-        make_timestamp(CAST(floor({total_m} / 12) AS INT),
-                       CAST(pmod({total_m}, 12) + 1 AS INT), 1, 0, 0, 0)
-      WHEN {millis} = 86400000 THEN date_trunc('DAY', {ts})
-      WHEN {millis} = 3600000 THEN date_trunc('HOUR', {ts})
-      WHEN {millis} = 60000 THEN date_trunc('MINUTE', {ts})
-      WHEN {millis} = 1000 THEN date_trunc('SECOND', {ts})
-      ELSE timestamp_millis(unix_millis({ts}) - pmod(unix_millis({ts}), {millis}))
-    END"""
-
-
-def _time_shift_body(ts: str, p: str, step: str) -> str:
-    # add_months returns DATE — re-attach time-of-day (Druid
-    # chronology.add preserves sub-day precision)
-    months, millis = _months(p), _millis(p)
-    return f"""CASE
-      WHEN {months} > 0 THEN
-        timestamp_millis(
-          unix_millis(CAST(add_months(date_trunc('DAY', {ts}),
-                           CAST({months} * {step} AS INT)) AS TIMESTAMP))
-          + (unix_millis({ts}) - unix_millis(date_trunc('DAY', {ts}))))
-      ELSE timestamp_millis(unix_millis({ts}) + {millis} * {step})
-    END"""
+_MONTHS = f"({_field(1)} * 12 + {_field(2)})"
+_MILLIS = "(" + " + ".join(
+    f"{_field(i)} * {ms}L" for i, ms in
+    ((3, 604_800_000), (4, 86_400_000), (5, 3_600_000), (6, 60_000),
+     (7, 1000))) + ")"
+# months since year 0, floored to a multiple of the period's months
+_MONTH_FLOOR = (f"(year(ts) * 12 + month(ts) - 1 - "
+                f"pmod(year(ts) * 12 + month(ts) - 1, {_MONTHS}))")
 
 
 _FUNCTION_DEFS: list[tuple[str, str, str, str]] = [
     # (name, arg signature, return type, body)
+    # P1W floors to Monday; other periods from the epoch
     ("TIME_FLOOR", "ts TIMESTAMP, period STRING", "TIMESTAMP",
-     _time_floor_body("ts", "period")),
-    ("TIME_CEIL", "ts TIMESTAMP, period STRING", "TIMESTAMP",
-     f"""CASE WHEN {_time_floor_body("ts", "period")} = ts THEN ts
-          ELSE {_time_shift_body(_time_floor_body("ts", "period"), "period", "1")} END"""),
+     f"""CASE WHEN upper(period) = 'P1W' THEN date_trunc('WEEK', ts)
+          WHEN {_MONTHS} > 0 THEN make_timestamp(
+            CAST(floor({_MONTH_FLOOR} / 12) AS INT),
+            CAST(pmod({_MONTH_FLOOR}, 12) + 1 AS INT), 1, 0, 0, 0)
+          ELSE timestamp_millis(unix_millis(ts)
+                                - pmod(unix_millis(ts), {_MILLIS})) END"""),
+    # interval addition: months, then days, then time (chronology.add)
     ("TIME_SHIFT", "ts TIMESTAMP, period STRING, step BIGINT", "TIMESTAMP",
-     _time_shift_body("ts", "period", "step")),
-    ("TIME_EXTRACT", "ts TIMESTAMP, unit STRING", "BIGINT",
-     """CASE upper(unit)
-         WHEN 'EPOCH' THEN unix_timestamp(ts)
-         WHEN 'SECOND' THEN second(ts) WHEN 'MINUTE' THEN minute(ts)
-         WHEN 'HOUR' THEN hour(ts) WHEN 'DAY' THEN day(ts)
-         WHEN 'DOW' THEN pmod(dayofweek(ts) + 5, 7) + 1
-         WHEN 'ISODOW' THEN pmod(dayofweek(ts) + 5, 7) + 1
-         WHEN 'DOY' THEN dayofyear(ts) WHEN 'WEEK' THEN weekofyear(ts)
-         WHEN 'MONTH' THEN month(ts) WHEN 'QUARTER' THEN quarter(ts)
-         WHEN 'YEAR' THEN year(ts)
-         WHEN 'MILLISECOND' THEN pmod(unix_millis(ts), 1000)
-         WHEN 'ISOYEAR' THEN year(ts)
-         WHEN 'DECADE' THEN CAST(year(ts) / 10 AS BIGINT)
-         WHEN 'CENTURY' THEN CAST(ceil(year(ts) / 100.0) AS BIGINT)
-         WHEN 'MILLENNIUM' THEN CAST(ceil(year(ts) / 1000.0) AS BIGINT)
-         END"""),
-    ("TIME_FORMAT", "ts TIMESTAMP, pattern STRING", "STRING",
-     "date_format(ts, pattern)"),
-    # Druid TIME_PARSE returns NULL on unparseable input
-    ("TIME_PARSE", "s STRING", "TIMESTAMP", "try_to_timestamp(s)"),
-    ("MILLIS_TO_TIMESTAMP", "ms BIGINT", "TIMESTAMP", "timestamp_millis(ms)"),
-    ("TIMESTAMP_TO_MILLIS", "ts TIMESTAMP", "BIGINT", "unix_millis(ts)"),
+     "ts + make_interval(" + ", ".join(
+         f"CAST({_field(i)} * step AS INT)" for i in range(1, 8)) + ")"),
+    ("TIME_CEIL", "ts TIMESTAMP, period STRING", "TIMESTAMP",
+     """CASE WHEN TIME_FLOOR(ts, period) = ts THEN ts
+          ELSE TIME_SHIFT(TIME_FLOOR(ts, period), period, 1) END"""),
     # -- multi-value string functions (ARRAY<STRING> columns) ------------
     ("MV_LENGTH", "a ARRAY<STRING>", "INT", "size(a)"),
     ("MV_OFFSET", "a ARRAY<STRING>, i INT", "STRING", "get(a, i)"),

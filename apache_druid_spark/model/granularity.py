@@ -196,21 +196,24 @@ def _period_field_count(period: str) -> int:
     return sum(1 for g in (m.groups() if m else ()) if g and float(g))
 
 
-def _period_has_day_or_week(period: str) -> bool:
-    """True when the ISO period has a non-zero weeks or days field —
-    the Joda fields that turn imprecise under a DST chronology."""
+def day_millis(period: str) -> int:
+    """An ISO period's weeks and days in millis: the fields a zoned
+    chronology adds on the wall clock (DST makes them imprecise)."""
     m = _PERIOD_RE.match(period.strip().upper())
-    if not m:
-        return False
-    weeks, days = m.group(3), m.group(4)
-    return bool((weeks and int(weeks)) or (days and int(days)))
+    weeks, days = (m.group(3), m.group(4)) if m else (None, None)
+    return (int(weeks or 0) * 7 + int(days or 0)) * 86_400_000
+
+
+def is_utc(tz: str | None) -> bool:
+    """No zone, or a spelling of UTC."""
+    return not tz or tz.upper() in ("UTC", "ETC/UTC", "Z")
 
 
 def _tz_is_fixed(tz: str) -> bool:
     """True when the zone has a constant UTC offset (no DST) — sampled
     at winter/summer instants across five decades, which is how far
     the engine's own test pins reach."""
-    if not tz or tz.upper() in ("UTC", "ETC/UTC", "Z"):
+    if is_utc(tz):
         return True
     try:
         from zoneinfo import ZoneInfo
@@ -245,10 +248,10 @@ def _floor_millis(col: Column, dur_ms: int, origin_ms: int = 0) -> Column:
     return F.timestamp_millis(t - F.pmod(off, F.lit(dur_ms)))
 
 
-def _tz_offset_ms(tz: str | None, instant_ms: int) -> int:
+def tz_offset_ms(tz: str | None, instant_ms: int) -> int:
     """UTC offset of ``tz`` at an instant, in millis (0 for UTC/None).
     Accepts zone ids and fixed '+HH:MM' offsets."""
-    if not tz or tz.upper() in ("UTC", "ETC/UTC", "Z"):
+    if is_utc(tz):
         return 0
     m = re.match(r"^([+-])(\d{2}):?(\d{2})$", tz.strip())
     if m:
@@ -380,7 +383,7 @@ def time_floor_col(col: Column, gran, timezone: str | None = None) -> Column:
     # the origin instant expressed on the local wall clock — the
     # reference anchors via chronology field arithmetic, which works in
     # the zone's wall frame (QueryGranularityTest testPeriodTruncateDays)
-    origin_wall = origin_ms + _tz_offset_ms(tz, origin_ms)
+    origin_wall = origin_ms + tz_offset_ms(tz, origin_ms)
     # P1W with no origin floors to MONDAY (PeriodGranularity.java:295-299
     # — dayOfWeek roundFloor + set to 1); PnW n>1 aligns on multiples
     # from the epoch origin like every other millis period
@@ -398,8 +401,7 @@ def time_floor_col(col: Column, gran, timezone: str | None = None) -> Column:
         # (day adds are wall-clock 23/25h). Floor in the WALL frame
         # there; divergence is confined to instants inside the
         # sub-day remainder straddling a transition step.
-        if (_period_has_day_or_week(period) and tz
-                and not _tz_is_fixed(tz)):
+        if day_millis(period) and tz and not _tz_is_fixed(tz):
             return _with_tz(
                 col, tz,
                 lambda c: _floor_millis(
@@ -442,22 +444,27 @@ def time_ceil_col(col: Column, gran, timezone: str | None = None) -> Column:
 def time_shift_col(
     col: Column, gran, step: int, timezone: str | None = None
 ) -> Column:
-    """TIME_SHIFT: move a timestamp by step * period."""
-    months, millis = parse_period(period_of(gran), allow_mixed=True)
-    if months:
-        # add_months returns DATE; re-attach the time-of-day so P1M
-        # shifts preserve sub-day precision (Druid chronology.add);
-        # compound periods (P1M2D) add the fixed part on top
-        day = F.date_trunc("day", col)
-        tod = F.unix_millis(col) - F.unix_millis(day)
-        base = F.add_months(day, months * step).cast("timestamp")
-        return F.timestamp_millis(
-            F.unix_millis(base) + tod + F.lit(millis * step))
-    return F.timestamp_millis(F.unix_millis(col) + F.lit(millis * step))
+    """TIME_SHIFT by step * period as a zoned chronology adds it: months
+    (keeping the time of day, clamping the day), weeks and days on the
+    wall clock, the rest as elapsed time. A granularity's timeZone wins."""
+    period = period_of(gran)
+    if isinstance(gran, dict):
+        timezone = gran.get("timeZone") or timezone
+    months, millis = parse_period(period, allow_mixed=True)
+    wall = millis if is_utc(timezone) else day_millis(period)
+    if months or wall:
+        col = _with_tz(col, timezone,
+                       lambda c: c + _interval(months * step, wall * step))
+    return col + _interval(0, (millis - wall) * step) if millis != wall \
+        else col
+
+
+def _interval(months: int, ms: int) -> Column:
+    return F.expr(f"make_interval(0, {months}, 0, 0, 0, 0, {ms / 1000:.3f})")
 
 
 def _with_tz(col: Column, tz: str | None, f) -> Column:
-    if not tz or tz.upper() in ("UTC", "ETC/UTC", "Z"):
+    if is_utc(tz):
         return f(col)
     local = F.from_utc_timestamp(col, tz)
     return F.to_utc_timestamp(f(local), tz)

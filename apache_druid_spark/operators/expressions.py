@@ -25,6 +25,10 @@ from typing import Callable
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from apache_druid_spark.model.granularity import (
+    is_utc, time_ceil_col, time_floor_col, time_shift_col,
+)
+
 # ---------------------------------------------------------------------------
 # Tokenizer
 # ---------------------------------------------------------------------------
@@ -580,49 +584,26 @@ def _fn_case_simple(*args: Column) -> Column:
     return c
 
 
-def _fn_timestamp_floor(ts, period, *rest):
-    from apache_druid_spark.model.granularity import time_floor_col
-
+def _bucket_args(period, rest) -> tuple[dict, str | None]:
+    """The (period[, origin[, timezone]]) tail of timestamp_floor and
+    timestamp_ceil (TimestampCeilExprMacro.java) -> (granularity, tz)."""
     gran = {"type": "period", "period": str(_extract_literal(period))}
-    if len(rest) >= 1:
+    if rest:
         try:
             origin = _extract_literal(rest[0])
             if origin is not None:
                 gran["origin"] = str(origin)
         except ValueError:
             pass
-    tz = None
-    if len(rest) >= 2:
-        v = _extract_literal(rest[1])
-        tz = str(v) if v is not None else None
-    return time_floor_col(ts, gran, tz)
-
-
-def _fn_timestamp_ceil(ts, period, *rest):
-    # same optional origin/timezone tail as timestamp_floor
-    # (TimestampCeilExprMacro.java; ExprMacroTest.testTimestampCeil)
-    from apache_druid_spark.model.granularity import time_ceil_col
-
-    gran = {"type": "period", "period": str(_extract_literal(period))}
-    if len(rest) >= 1:
-        try:
-            origin = _extract_literal(rest[0])
-            if origin is not None:
-                gran["origin"] = str(origin)
-        except ValueError:
-            pass
-    tz = None
-    if len(rest) >= 2:
-        v = _extract_literal(rest[1])
-        tz = str(v) if v is not None else None
-    return time_ceil_col(ts, gran, tz)
+    tz = _extract_literal(rest[1]) if len(rest) >= 2 else None
+    return gran, (str(tz) if tz is not None else None)
 
 
 def _fn_timestamp_shift(ts, period, step, *rest):
-    from apache_druid_spark.model.granularity import time_shift_col
-
+    tz = _extract_literal(rest[0]) if rest else None
     return time_shift_col(ts, str(_extract_literal(period)),
-                          int(_extract_literal(step)))
+                          int(_extract_literal(step)),
+                          str(tz) if tz is not None else None)
 
 
 _EXTRACT_UNITS = {
@@ -647,49 +628,31 @@ _EXTRACT_UNITS = {
 
 def _fn_timestamp_extract(ts, unit, *rest):
     u = str(_extract_literal(unit)).lower()
-    tz = None
-    if rest:
-        v = _extract_literal(rest[0])
-        tz = str(v) if v is not None else None
-    if u == "epoch":
-        # epoch is an absolute instant — never wall-clock-shifted by tz
-        # (TimestampExtractExprMacro.java EPOCH uses millis directly)
-        return F.unix_timestamp(ts)
-    c = F.from_utc_timestamp(ts, tz) if tz and tz.upper() != "UTC" else ts
+    tz = _extract_literal(rest[0]) if rest else None
     if u not in _EXTRACT_UNITS:
         raise ValueError(f"bad extract unit: {u}")
-    return _EXTRACT_UNITS[u](c)
+    # epoch is an absolute instant — never wall-clock-shifted by tz
+    # (TimestampExtractExprMacro.java EPOCH uses millis directly)
+    local = ts if u == "epoch" or is_utc(tz) else F.from_utc_timestamp(
+        ts, str(tz))
+    return _EXTRACT_UNITS[u](local)
 
 
 def _fn_timestamp_parse(s, *rest):
     # timestamp_parse(s[, pattern[, tz]]) — the string is read in tz
     # and the result is the UTC instant (TimestampParseExprMacro.java)
-    parsed = None
-    if rest:
-        pat = _extract_literal(rest[0])
-        if pat:
-            parsed = F.try_to_timestamp(s, F.lit(str(pat)))
-    if parsed is None:
-        parsed = F.try_to_timestamp(s)
-    if len(rest) >= 2:
-        tz = _extract_literal(rest[1])
-        if tz:
-            parsed = F.to_utc_timestamp(parsed, str(tz))
-    return parsed
+    pat, tz = ([_extract_literal(a) for a in rest[:2]] + [None, None])[:2]
+    parsed = (F.try_to_timestamp(s, F.lit(str(pat))) if pat
+              else F.try_to_timestamp(s))
+    return F.to_utc_timestamp(parsed, str(tz)) if tz else parsed
 
 
 def _fn_timestamp_format(ts, *rest):
     # timestamp_format(ts[, pattern[, tz]]) — renders in tz
-    pat = "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"
-    if rest:
-        v = _extract_literal(rest[0])
-        if v:
-            pat = str(v)
-    if len(rest) >= 2:
-        tz = _extract_literal(rest[1])
-        if tz:
-            ts = F.from_utc_timestamp(ts, str(tz))
-    return F.date_format(ts, pat)
+    pat, tz = ([_extract_literal(a) for a in rest[:2]] + [None, None])[:2]
+    if tz:
+        ts = F.from_utc_timestamp(ts, str(tz))
+    return F.date_format(ts, str(pat or "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"))
 
 
 def _fn_lookup(registry, col, name_col, *rest):
@@ -980,8 +943,10 @@ _FUNCTIONS: dict[str, Callable] = {
     "like": lambda s, p: s.like(str(_extract_literal(p))),
     "lookup": _fn_lookup,
     # time
-    "timestamp_floor": _fn_timestamp_floor,
-    "timestamp_ceil": _fn_timestamp_ceil,
+    "timestamp_floor": lambda ts, p, *r: time_floor_col(
+        ts, *_bucket_args(p, r)),
+    "timestamp_ceil": lambda ts, p, *r: time_ceil_col(
+        ts, *_bucket_args(p, r)),
     "timestamp_shift": _fn_timestamp_shift,
     "timestamp_extract": _fn_timestamp_extract,
     "timestamp_parse": _fn_timestamp_parse,

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..model.granularity import (
-    _tz_offset_ms, iso_of, parse_instant, parse_interval, parse_period,
+    tz_offset_ms, iso_of, parse_instant, parse_interval, parse_period,
 )
 
 
@@ -58,7 +58,7 @@ class TimewarpOperator:
             t_offset += p
         t_offset += start
         return (t_offset - t
-                - (_tz_offset_ms(tz, t_offset) - _tz_offset_ms(tz, t)))
+                - (tz_offset_ms(tz, t_offset) - tz_offset_ms(tz, t)))
 
     def warp_intervals(self, intervals: list[str], now: int,
                        tz: str | None = None) -> tuple[list[str], int]:

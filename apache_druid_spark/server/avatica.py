@@ -211,7 +211,11 @@ class AvaticaMeta:
     def _req_openConnection(self, req: dict) -> dict:
         cid = req.get("connectionId") or str(uuid.uuid4())
         with self._lock:
-            self._connections[cid] = dict(req.get("info") or {})
+            # the query context of every statement on the connection:
+            # its properties minus the credentials (DruidConnection)
+            self._connections[cid] = {
+                k: v for k, v in (req.get("info") or {}).items()
+                if k not in ("user", "password")}
         return {"response": "openConnection", "connectionId": cid}
 
     def _req_closeConnection(self, req: dict) -> dict:
@@ -257,7 +261,8 @@ class AvaticaMeta:
         ORIGINAL (unbound) statement text in the registry so a prepared
         statement re-executed with new parameterValues rebinds from the
         ``?`` form, not from the previous execution's bound literals."""
-        df = druid_sql(self.spark, sql, self.registry)
+        df = druid_sql(self.spark, sql, self.registry,
+                       context=self._connections.get(cid))
         columns = [_column_meta(i, name, dtype)
                    for i, (name, dtype) in enumerate(df.dtypes)]
         rows = [[_avatica_value(v) for v in row]
@@ -309,8 +314,9 @@ class AvaticaMeta:
             probe = bind_parameters(
                 sql, [_fill.get(t, {"type": "VARCHAR", "value": ""})
                       for t in inferred])
+        context = self._connections.get(cid)
         try:
-            df = druid_sql(self.spark, probe, self.registry)
+            df = druid_sql(self.spark, probe, self.registry, context=context)
             columns = [_column_meta(i, name, dtype)
                        for i, (name, dtype) in enumerate(df.dtypes)]
         except Exception:  # noqa: BLE001 — probe-only failure
@@ -331,7 +337,8 @@ class AvaticaMeta:
                            {"type": "VARCHAR", "value": ""}):
                 try:
                     probe = bind_parameters(sql, [filler] * n_params)
-                    df = druid_sql(self.spark, probe, self.registry)
+                    df = druid_sql(self.spark, probe, self.registry,
+                                   context=context)
                     columns = [_column_meta(i, name, dtype)
                                for i, (name, dtype)
                                in enumerate(df.dtypes)]

@@ -12,8 +12,15 @@ identical to hand-written Spark SQL.
 ``_CALL_RULES`` is the one place a Druid function's SQL form is
 defined: one rule per upper-case Druid name (a rename is a rule too),
 applied by one walker, ``_rewrite_calls``, to every call outside string
-literals, arguments first. ``translate`` runs it between the few passes
-that look outside a call's parentheses.
+literals and backtick identifiers, arguments first. ``translate`` runs
+it between the few passes that look outside a call's parentheses.
+
+Time: ``translate(text, tz)`` hands the session zone (sqlTimeZone) to
+every rule. A time function works in its own zone argument, else the
+session zone, where TIMESTAMP literals are wall clocks too; only
+``_in_zone`` changes zone. A literal period is read at translate time;
+only a non-literal one calls the registered 2-arg TIME_FLOOR/TIME_CEIL/
+TIME_SHIFT UDFs. EXTRACT and CAST(… AS DATE) stay in UTC.
 
   EARLIEST(x)            -> min_by(x, __time)      (time-ordered first)
   LATEST(x)              -> max_by(x, __time)
@@ -53,7 +60,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from apache_druid_spark.model.datasource import TIME_COLUMN
 from apache_druid_spark.model.granularity import (
-    parse_instant, parse_period, period_of, trunc_unit, utc_datetime,
+    GRANULARITIES, day_millis, is_utc, parse_instant, parse_period,
+    period_of, trunc_unit, tz_offset_ms, utc_datetime,
 )
 
 # Druid functions that are a Spark function under another name: each is
@@ -112,6 +120,9 @@ _RENAMES = {
     "BIT_OR": "bit_or",
     "BIT_XOR": "bit_xor",
     "STRPOS": "instr",
+    # epoch millis <-> TIMESTAMP: instants, untouched by any zone
+    "MILLIS_TO_TIMESTAMP": "timestamp_millis",
+    "TIMESTAMP_TO_MILLIS": "unix_millis",
 }
 
 
@@ -392,43 +403,31 @@ def _rewrite_named_schemas(text: str) -> str:
     return "".join(out)
 
 
-def _trunc_unit(period: str) -> str | None:
-    """A quoted ISO period literal -> the one date_trunc unit it spans."""
-    unit = trunc_unit(period.strip("'")) if period.startswith("'") else None
-    return unit and unit.upper()
-
-
-_LIKE_ESCAPE_RE = re.compile(
-    r"(\bLIKE\s+)'((?:[^']|'')*)'\s+ESCAPE\s+'((?:[^']|'')*)'",
-    re.IGNORECASE)
+# LIKE with a literal pattern, and its ESCAPE clause if it has one
+_LIKE_PATTERN = (r"(\bLIKE\s+)'((?:[^']|'')*)'"
+                 r"(?:\s+ESCAPE\s+'((?:[^']|'')*)')?")
 
 
 def _rewrite_like_escape(text: str) -> str:
-    """LIKE ... ESCAPE with a custom escape char: Calcite (LikeDimFilter)
-    lets the escape precede ANY character (escaping an ordinary char is
-    the char itself); Spark rejects ESC_IN_THE_MIDDLE. Normalize to a
-    default-backslash pattern with only %/_ escapes kept, written as a
-    Calcite literal (_escape_backslashes then escapes it for Spark)."""
-    def _sub(m):
-        pat = m.group(2).replace("''", "'")
-        esc = m.group(3).replace("''", "'")
-        if len(esc) != 1:
-            return m.group(0)
-        out, i = [], 0
-        while i < len(pat):
-            c = pat[i]
-            if c == esc and i + 1 < len(pat):
-                n = pat[i + 1]
-                out.append("\\" + n if n in ("%", "_")
-                           else ("\\\\" if n == "\\" else n))
-                i += 2
-                continue
-            out.append("\\\\" if c == "\\" else c)
-            i += 1
-        lit = "".join(out).replace("'", "''")
-        return m.group(1) + "'" + lit + "'"
+    """A literal LIKE pattern as Calcite (LikeDimFilter) reads it: a
+    backslash is itself, and the ESCAPE char may precede ANY char (an
+    escaped ordinary char is itself). Spark escapes on backslash and
+    rejects ESC_IN_THE_MIDDLE: write the backslash-escaped pattern as a
+    Calcite literal. A non-literal pattern keeps Spark's escape."""
+    def escaped(t):  # an escaped char, or a bare backslash (None)
+        c = t.group(1)
+        return ("\\" + c if c in ("%", "_")
+                else "\\\\" if c in (None, "\\") else c)
 
-    return _LIKE_ESCAPE_RE.sub(_sub, text)
+    def _sub(m):
+        pat, esc = (g and g.replace("''", "'") for g in m.group(2, 3))
+        if esc is not None and len(esc) != 1:
+            return m.group(0)
+        esc_re = re.escape(esc) if esc else "(?!)"  # none: never matches
+        lit = re.sub(esc_re + r"(.)|\\", escaped, pat, flags=re.DOTALL)
+        return m.group(1) + "'" + lit.replace("'", "''") + "'"
+
+    return _sub_outside_strings(text, _LIKE_PATTERN, _sub)
 
 
 _INT_CAST_RE = re.compile(
@@ -768,7 +767,7 @@ def _rewrite_lookup_neq(text: str) -> str:
 
 
 def _rename(to: str):
-    return lambda _name, inner: f"{to}({inner})"
+    return lambda _name, inner, _tz: f"{to}({inner})"
 
 
 def _args(inner: str) -> list[str]:
@@ -776,7 +775,7 @@ def _args(inner: str) -> list[str]:
     return [a.strip() for a in _split_top_args(inner)]
 
 
-def _regexp_extract(_name: str, inner: str) -> str | None:
+def _regexp_extract(_name: str, inner: str, _tz: str | None) -> str | None:
     """Druid's REGEXP_EXTRACT (RegexpExtractOperatorConversion):
     default group is 0 (the whole match — Spark defaults to group 1)
     and a non-match yields NULL (Spark yields '')."""
@@ -792,7 +791,7 @@ def _regexp_extract(_name: str, inner: str) -> str | None:
     return call if args[1].strip() in ("''", '""') else f"nullif({call}, '')"
 
 
-def _regexp_like(_name: str, inner: str) -> str:
+def _regexp_like(_name: str, inner: str, _tz: str | None) -> str:
     """REGEXP_LIKE over NULL input is FALSE in the reference
     (RegexpLikeExprMacro: nulls match nothing in SQL-compatible mode —
     ExpressionsTest.testRegexpLike null cases); Spark's regexp_like
@@ -804,7 +803,7 @@ def _regexp_like(_name: str, inner: str) -> str:
 _ROUND_DMAX = "1.7976931348623157E308D"
 
 
-def _round(_name: str, inner: str) -> str | None:
+def _round(_name: str, inner: str, _tz: str | None) -> str | None:
     """Druid ROUND (Function.java Round): NaN rounds to 0, ±Infinity
     clamps to ±Double.MAX_VALUE, non-numeric strings are NULL, and
     rounding happens in double precision (BigDecimal.valueOf —
@@ -824,44 +823,192 @@ def _round(_name: str, inner: str) -> str | None:
             f"ELSE round({e}{d}) END")
 
 
-def _time_parse(_name: str, inner: str) -> str | None:
-    """Druid TIME_PARSE(s[, pattern[, tz]]) — TimeParseOperatorConversion:
-    optional Joda pattern (NULL = ISO), optional origin timezone (the
-    string is read in ``tz`` and the result is the UTC instant), and
-    unparseable input is NULL, never an error. The registered 1-arg SQL
-    macro handles the common form (SQL macros cannot overload arity)."""
-    args = _split_top_args(inner)
-    if len(args) < 2:
-        return None
-    pattern = args[1].strip()
-    parse = (f"try_to_timestamp({args[0]})" if pattern.upper() == "NULL"
-             else f"try_to_timestamp({args[0]}, {pattern})")
-    return (f"to_utc_timestamp({parse}, {args[2]})" if len(args) >= 3
-            else parse)
+def _in_zone(tz: str | None, ts: str, f=None, read: bool = True,
+             write: bool = True) -> str:
+    """Text twin of granularity._with_tz: the instant ``ts`` read as its
+    wall clock in ``tz`` (if ``read``), ``f`` applied, the wall clock
+    written back as the instant (if ``write``). None is UTC."""
+    t = f"from_utc_timestamp({ts}, {tz})" if tz and read else ts
+    t = f(t) if f else t
+    return f"to_utc_timestamp({t}, {tz})" if tz and write else t
 
 
-def _time_fn_tz(name: str, inner: str) -> str | None:
-    """Timezone-arity overloads the fixed-arity SQL macros can't take
-    (ExpressionsTest testTimeFormat/testTimeExtract/testTimeShift):
-    TIME_FORMAT(ts, fmt, tz) renders in ``tz``; TIME_EXTRACT(ts, unit,
-    tz) extracts the local field; TIME_SHIFT(ts, period, step, tz)
-    shifts in local time (calendar periods cross DST correctly) and
-    returns the UTC instant."""
-    fn = name.upper()
+def _time_args(name: str, inner: str, lo: int, hi: int) -> list[str]:
     args = _args(inner)
-    if len(args) != (4 if fn == "TIME_SHIFT" else 3):
+    if not lo <= len(args) <= hi:
+        raise ValueError(
+            f"Invalid number of arguments to function '{name.upper()}'")
+    return args
+
+
+def _literal(arg: str) -> str | None:
+    """The value of an argument that is one single-quoted literal."""
+    if arg[:1] == "'" and arg[-1:] == "'" and _LITERAL_RE.fullmatch(arg):
+        return arg[1:-1].replace("''", "'")
+    return None
+
+
+def _zone(args: list[str], i: int, tz: str | None) -> str | None:
+    """The zone argument ``args[i]``, or the session zone ``tz`` when it
+    is absent or NULL; None for UTC."""
+    arg = args[i] if len(args) > i else "NULL"
+    if arg.upper() == "NULL":
+        return tz
+    return None if is_utc(_literal(arg) or "?") else arg
+
+
+def _shift(t: str, months: int, ms: int, step: str) -> str:
+    """``t`` plus ``step`` times (``months``, ``ms``), months first,
+    keeping the time of day and clamping the day (chronology.add)."""
+    if re.fullmatch(r"[+-]?\d+", step):
+        m, secs = months * int(step), f"{ms * int(step) / 1000:.3f}"
+    else:
+        m = f"CAST({months} * ({step}) AS INT)"
+        secs = f"{ms / 1000:.3f} * ({step})"
+    return f"({t} + make_interval(0, {m}, 0, 0, 0, 0, {secs}))"
+
+
+def _bucket(name: str, ts: str, period: str, origin: str | None,
+            tz: str | None) -> str | None:
+    """TIME_FLOOR / TIME_CEIL: buckets tile the wall clock of ``tz`` from
+    ``origin`` (None: the epoch); ceil is one period past the floor
+    unless ``ts`` is on a boundary."""
+    p = _literal(period)
+    if p is None:
+        return None if origin else _in_zone(
+            tz, ts, lambda t: f"{name}({t}, {period})")
+    months, ms = parse_period(p, allow_mixed=True)
+    if months and ms:
+        raise ValueError(f"Invalid period[{p}] for {name.upper()}: a "
+                         f"period mixing months with days or time")
+    unit = None if origin else trunc_unit(p)
+    o = origin and _in_zone(tz, origin, write=False)
+
+    def floor(t: str) -> str:
+        if unit:
+            return f"date_trunc('{unit.upper()}', {t})"
+        if months:
+            # months_between ignores time-of-day when the days-of-month
+            # match, so a candidate bucket past t steps back one period
+            o_ = o or "TIMESTAMP '1970-01-01 00:00:00'"
+            k = f"CAST(floor(months_between({t}, {o_}) / {months}) AS INT)"
+            b = f"({o_} + make_interval(0, {k} * {months}))"
+            return (f"(CASE WHEN {b} > {t} THEN ({o_} + make_interval(0, "
+                    f"({k} - 1) * {months})) ELSE {b} END)")
+        if o:
+            return (f"timestamp_millis(unix_millis({o}) + CAST(floor(("
+                    f"unix_millis({t}) - unix_millis({o})) / {ms}) AS "
+                    f"BIGINT) * {ms})")
+        return (f"timestamp_millis(unix_millis({t}) - "
+                f"pmod(unix_millis({t}), {ms}))")
+
+    def ceil(t: str) -> str:
+        # the floor bound ONCE by a one-element transform: inlined three
+        # times it re-evaluates ts and origin and blows up nested calls
+        return (f"element_at(transform(array({floor(t)}), __tc_f -> "
+                f"CASE WHEN __tc_f = {t} THEN __tc_f "
+                f"ELSE {_shift('__tc_f', months, ms, '1')} END), 1)")
+
+    ts = ts if unit else f"CAST({ts} AS TIMESTAMP)"
+    return _in_zone(tz, ts, ceil if name.upper() == "TIME_CEIL" else floor)
+
+
+def _time_bucket(name: str, inner: str, tz: str | None) -> str | None:
+    """TIME_FLOOR / TIME_CEIL(ts, period[, origin[, timezone]])
+    (TimeFloorOperatorConversion, TimeCeilOperatorConversion)."""
+    args = _time_args(name, inner, 2, 4)
+    origin = args[2] if len(args) > 2 and args[2].upper() != "NULL" else None
+    return _bucket(name, args[0], args[1], origin, _zone(args, 3, tz))
+
+
+_TO_UNIT_RE = re.compile(
+    r"\s*(.+?)\s+TO\s+(SECOND|MINUTE|HOUR|DAY|WEEK|MONTH|QUARTER|YEAR)"
+    r"\s*\Z", re.IGNORECASE | re.DOTALL)
+
+
+def _to_unit(name: str, inner: str, tz: str | None) -> str | None:
+    """FLOOR/CEIL(ts TO unit) and DATE_TRUNC(unit, ts)
+    (DateTruncOperatorConversion): TIME_FLOOR/TIME_CEIL by the unit's
+    period. Other DATE_TRUNC units stay Spark's."""
+    m, args = _TO_UNIT_RE.match(inner), _args(inner)
+    if m:
+        ts, unit = m.groups()
+    elif name.upper() == "DATE_TRUNC" and len(args) == 2:
+        ts, unit = args[1], _literal(args[0])
+    else:
         return None
-    tz = args[-1]
-    local = f"from_utc_timestamp({args[0]}, {tz})"
-    if fn == "TIME_FORMAT":
-        return f"date_format({local}, {args[1]})"
-    if fn == "TIME_EXTRACT":
-        return f"TIME_EXTRACT({local}, {args[1]})"
-    return (f"to_utc_timestamp(TIME_SHIFT({local}, {args[1]}, "
-            f"{args[2]}), {tz})")
+    period = GRANULARITIES.get((unit or "").lower())
+    if period is None or trunc_unit(period) is None:
+        return None
+    fn = "TIME_CEIL" if name.upper() == "CEIL" else "TIME_FLOOR"
+    return _bucket(fn, ts, f"'{period}'", None, tz)
 
 
-def _parse_long_radix(_name: str, inner: str) -> str | None:
+def _time_shift(name: str, inner: str, tz: str | None) -> str:
+    """TIME_SHIFT(ts, period, step[, timezone]): chronology.add in the
+    zone, as granularity.time_shift_col."""
+    args = _time_args(name, inner, 3, 4)
+    ts, period, step = args[:3]
+    tz, p = _zone(args, 3, tz), _literal(period)
+    if p is None:
+        return _in_zone(tz, ts, lambda t: f"{name}({t}, {period}, {step})")
+    months, ms = parse_period(p, allow_mixed=True)
+    wall = ms if tz is None else day_millis(p)
+    ts = f"CAST({ts} AS TIMESTAMP)"
+    if months or wall:
+        ts = _in_zone(tz, ts, lambda t: _shift(t, months, wall, step))
+    return _shift(ts, 0, ms - wall, step) if ms != wall else ts
+
+
+# TIME_EXTRACT units of a wall clock (TimestampExtractExprMacro.java:
+# 120-154). DOW and ISODOW are both Joda ISO, Monday=1..Sunday=7 (Spark's
+# dayofweek is Sunday=1); EPOCH reads the instant, in any zone.
+_TIME_UNITS = {
+    "EPOCH": "unix_timestamp({})",
+    "MILLISECOND": "pmod(unix_millis(CAST({} AS TIMESTAMP)), 1000)",
+    "SECOND": "second({})", "MINUTE": "minute({})", "HOUR": "hour({})",
+    "DAY": "day({})", "DOY": "dayofyear({})", "WEEK": "weekofyear({})",
+    "MONTH": "month({})", "QUARTER": "quarter({})",
+    **dict.fromkeys(("DOW", "ISODOW"), "pmod(dayofweek({}) + 5, 7) + 1"),
+    **dict.fromkeys(("YEAR", "ISOYEAR"), "year({})"),
+    "DECADE": "year({}) / 10", "CENTURY": "ceil(year({}) / 100.0)",
+    "MILLENNIUM": "ceil(year({}) / 1000.0)",
+}
+
+
+def _extract_unit(ts: str, unit: str | None, tz: str | None) -> str:
+    """One TIME_EXTRACT unit of ``ts`` on the wall clock of ``tz``."""
+    u = (unit or "").upper()
+    if u not in _TIME_UNITS:
+        raise ValueError(f"TIME_EXTRACT needs a literal unit, got[{unit}]")
+    t = ts if u == "EPOCH" else _in_zone(tz, ts, write=False)
+    return f"CAST({_TIME_UNITS[u].format(t)} AS BIGINT)"
+
+
+def _time_extract(name: str, inner: str, tz: str | None) -> str:
+    """TIME_EXTRACT(ts, unit[, timezone]) (TimeExtractOperatorConversion)."""
+    args = _time_args(name, inner, 2, 3)
+    return _extract_unit(args[0], _literal(args[1]), _zone(args, 2, tz))
+
+
+def _time_format(name: str, inner: str, tz: str | None) -> str:
+    """TIME_FORMAT(ts, pattern[, timezone]) (TimeFormatOperatorConversion):
+    the wall clock in the zone."""
+    args = _time_args(name, inner, 2, 3)
+    local = _in_zone(_zone(args, 2, tz), args[0], write=False)
+    return f"date_format({local}, {args[1]})"
+
+
+def _time_parse(name: str, inner: str, tz: str | None) -> str:
+    """TIME_PARSE(s[, pattern[, timezone]]): ``s`` is a wall clock in
+    the zone (an offset it carries is shifted too); unparseable is NULL."""
+    args = _time_args(name, inner, 1, 3)
+    pattern = "".join(f", {a}" for a in args[1:2] if a.upper() != "NULL")
+    return _in_zone(_zone(args, 2, tz),
+                    f"try_to_timestamp({args[0]}{pattern})", read=False)
+
+
+def _parse_long_radix(_name: str, inner: str, _tz: str | None) -> str | None:
     """PARSE_LONG(s, radix) — ParseLongOperatorConversion: parse in the
     given radix with Long.parseLong semantics — optional sign, radix 16
     accepts an optional 0x/0X prefix, and ANY invalid input is NULL
@@ -894,7 +1041,7 @@ def _parse_long_radix(_name: str, inner: str) -> str | None:
             f"ELSE NULL END)")
 
 
-def _position_from(_name: str, inner: str) -> str | None:
+def _position_from(_name: str, inner: str, _tz: str | None) -> str | None:
     """POSITION(needle IN haystack FROM start) — Spark's parser only
     accepts the two-part form; the FROM form maps to locate(needle,
     haystack, start) (1-based, 0 when absent — Calcite contract)."""
@@ -912,7 +1059,7 @@ def _position_from(_name: str, inner: str) -> str | None:
     return f"locate({needle}, {hay}, {inner[parts['FROM'].end():]})"
 
 
-def _repeat(_name: str, inner: str) -> str | None:
+def _repeat(_name: str, inner: str, _tz: str | None) -> str | None:
     """REPEAT(s, n < 0) is NULL in the reference (Function.java Repeat
     throws on negative counts pre-vectorization; the SQL layer yields
     NULL) — Spark's repeat returns ''."""
@@ -924,7 +1071,7 @@ def _repeat(_name: str, inner: str) -> str | None:
             f"ELSE repeat({s}, {n}) END")
 
 
-def _ipv4_numeric(name: str, inner: str) -> str | None:
+def _ipv4_numeric(name: str, inner: str, _tz: str | None) -> str | None:
     """The IPv4 macros accept LONG-typed addresses too (IPv4Address
     ExprUtils: a long in [0, 2^32) IS the address), but the registered
     SQL macros are STRING-typed. Literal arguments carry their SQL type
@@ -945,7 +1092,7 @@ def _ipv4_numeric(name: str, inner: str) -> str | None:
     return f"{fn}(IPV4_STRINGIFY({args[0].rstrip('Ll')}L){rest})"
 
 
-def _array_prepend(_name: str, inner: str) -> str | None:
+def _array_prepend(_name: str, inner: str, _tz: str | None) -> str | None:
     """Druid ARRAY_PREPEND(expr, arr) vs Spark array_prepend(arr, el):
     same name, swapped arguments."""
     args = _split_top_args(inner)
@@ -954,7 +1101,7 @@ def _array_prepend(_name: str, inner: str) -> str | None:
     return f"array_prepend({args[1]}, {args[0]})"
 
 
-def _array_concat(_name: str, inner: str) -> str | None:
+def _array_concat(_name: str, inner: str, _tz: str | None) -> str | None:
     """ARRAY_CONCAT over EXPLICIT array constructors goes to Spark's
     type-generic native concat. The registered ARRAY_CONCAT UDF is
     typed ARRAY<STRING> (right for MV columns, the dominant case), so
@@ -978,16 +1125,17 @@ _NONSTD_EXTRACT_RE = re.compile(
     r"\s+FROM\s+(.+)\Z", re.IGNORECASE | re.DOTALL)
 
 
-def _extract(_name: str, inner: str) -> str | None:
+def _extract(_name: str, inner: str, _tz: str | None) -> str | None:
     """EXTRACT units Calcite/Druid accept but Spark's EXTRACT lacks
     (TimestampExtractExprMacro.java:120-154: DECADE = year/10,
     CENTURY/MILLENNIUM = ceil(year/unit), ISOYEAR ≈ year, MILLISECOND
-    = millis-of-second) route through the TIME_EXTRACT macro."""
+    = millis-of-second) take the TIME_EXTRACT lowering, in UTC: the
+    argument may be a DATE, which a zone would shift."""
     m = _NONSTD_EXTRACT_RE.match(inner)
-    return m and f"TIME_EXTRACT({m.group(2)}, '{m.group(1).upper()}')"
+    return m and _extract_unit(m.group(2), m.group(1), None)
 
 
-def _grouping(_name: str, inner: str) -> str | None:
+def _grouping(_name: str, inner: str, _tz: str | None) -> str | None:
     """Calcite's GROUPING(a, b, ...) composite indicator: the bitmask
     follows the ARGUMENT order, independent of the GROUP BY order
     (GroupingSqlAggregator; testGroupingAggregatorDifferentOrder pins
@@ -1004,7 +1152,7 @@ def _grouping(_name: str, inner: str) -> str | None:
     return f"CAST({bits} AS BIGINT)"
 
 
-def _trim_2arg(name: str, inner: str) -> str | None:
+def _trim_2arg(name: str, inner: str, _tz: str | None) -> str | None:
     """Druid LTRIM/RTRIM(s, chars) vs Spark's legacy 2-arg form
     ltrim(trimStr, str) — same name, swapped arguments
     (TrimOperatorConversion; CalciteSelectQueryTest
@@ -1015,7 +1163,7 @@ def _trim_2arg(name: str, inner: str) -> str | None:
     return f"{name.lower()}({args[1]}, {args[0]})"
 
 
-def _slice_2arg(name: str, inner: str) -> str | None:
+def _slice_2arg(name: str, inner: str, _tz: str | None) -> str | None:
     """Druid MV_SLICE/ARRAY_SLICE with two args slices to the end of
     the array (ArraySliceOperatorConversion end defaults to length);
     the registered SQL macro is fixed 3-arity. The rewrite KEEPS the
@@ -1029,7 +1177,7 @@ def _slice_2arg(name: str, inner: str) -> str | None:
     return f"{name.upper()}({a}, {s}, size({a}))"
 
 
-def _contains_array(_name: str, inner: str) -> str | None:
+def _contains_array(_name: str, inner: str, _tz: str | None) -> str | None:
     """Druid MV_CONTAINS/ARRAY_CONTAINS with an ARRAY second argument
     is contains-ALL (MultiValueStringOperatorConversions.Contains);
     the registered macro and the Spark builtin take a scalar needle."""
@@ -1040,7 +1188,7 @@ def _contains_array(_name: str, inner: str) -> str | None:
     return f"forall({args[1]}, __mv_c -> array_contains({args[0]}, __mv_c))"
 
 
-def _truncate(name: str, inner: str) -> str | None:
+def _truncate(name: str, inner: str, _tz: str | None) -> str | None:
     """TRUNC/TRUNCATE with one arg: Druid defaults digits to 0; the
     registered TRUNCATE UDF is fixed 2-arity (SQL functions can't
     overload). TRUNC is its numeric-truncate alias (not Spark's date
@@ -1048,98 +1196,6 @@ def _truncate(name: str, inner: str) -> str | None:
     if len(_split_top_args(inner)) == 1:
         return f"TRUNCATE({inner}, 0)"
     return f"TRUNCATE({inner})" if name.upper() == "TRUNC" else None
-
-
-def _time_bucket(name: str, inner: str) -> str | None:
-    """TIME_FLOOR / TIME_CEIL (ts, period[, origin[, timezone]]) — the
-    3/4-arg forms of TimeFloorOperatorConversion and
-    TimeCeilOperatorConversion (same signature; ceil = floor, plus one
-    period when ts is not already on a boundary): bucketing happens in
-    the given zone and the result is the UTC instant of that local
-    boundary. The registered macros are 2-arity, so the long forms
-    rewrite to from_utc/date_trunc/to_utc (or a wrapped 2-arg macro
-    call) here. Unrecognized origin periods are left for the caller's
-    error."""
-    fn = name.upper()
-    args = _args(inner)
-    if len(args) < 3:
-        return None
-    ts, period = args[0], args[1]
-    tz = args[3] if len(args) > 3 else "'UTC'"
-    if args[2].upper() == "NULL":
-        unit = _trunc_unit(period)
-        if fn == "TIME_FLOOR" and unit is not None:
-            return (f"to_utc_timestamp(CAST(date_trunc('{unit}', "
-                    f"from_utc_timestamp({ts}, {tz})) AS TIMESTAMP), {tz})")
-        # NULL origin, any ISO period (incl. TIME_CEIL): wrap the
-        # registered 2-arg macro around the shifted wall clock —
-        # flooring/ceiling naive-local time from the naive epoch IS
-        # PeriodGranularity with a tz (origin defaults to 1970-01-01T00:00
-        # local)
-        return (f"to_utc_timestamp({fn}(from_utc_timestamp({ts}, "
-                f"{tz}), {period}), {tz})")
-    # origin-aligned flooring (TimestampFloorExprMacro with an origin:
-    # buckets tile outward from the origin instant —
-    # testTimeseriesUsingTimeFloorWithOrigin). Month-ish periods bucket
-    # by whole-month counts from the origin; fixed-duration periods by
-    # millis arithmetic. With a zone (PeriodGranularity with both origin
-    # and tz) bucket in local wall time and emit the UTC instant of the
-    # local bucket start.
-    o = args[2]
-    local = tz.strip("'").upper() not in ("UTC", "")
-    if local:
-        ts = f"from_utc_timestamp({ts}, {tz})"
-        o = f"from_utc_timestamp({o}, {tz})"
-    try:
-        months, dur = parse_period(
-            period.strip("'") if period.startswith("'") else "")
-    except ValueError:
-        return None  # unsupported origin form
-    if months:
-        # interval arithmetic keeps the origin's time-of-day (add_months
-        # would degrade to DATE). months_between ignores time-of-day
-        # when the days-of-month match, so a candidate bucket past ts
-        # steps back one period.
-        k = (f"CAST(floor(months_between({ts}, {o}) / "
-             f"{months}) AS INT) * {months}")
-        b = f"({o} + make_interval(0, {k}))"
-        repl = (f"(CASE WHEN {b} > {ts} THEN "
-                f"({o} + make_interval(0, ({k}) - {months})) "
-                f"ELSE {b} END)")
-    else:
-        repl = (f"timestamp_millis(unix_millis({o}) + "
-                f"CAST(floor((unix_millis({ts}) - "
-                f"unix_millis({o})) / {dur}) AS BIGINT) * {dur})")
-    if fn == "TIME_CEIL":
-        # ceil = floor, stepped one period forward unless ts is already
-        # on a bucket boundary. The floored value is bound ONCE via a
-        # single-element transform (inlining it three times re-evaluates
-        # the ts/origin expressions ~6x and blows up nested calls).
-        v = "__tc_f"
-        step = (f"({v} + make_interval(0, {months}))" if months
-                else f"timestamp_millis(unix_millis({v}) + {dur})")
-        repl = (f"element_at(transform(array({repl}), {v} -> "
-                f"CASE WHEN {v} = {ts} THEN {v} "
-                f"ELSE {step} END), 1)")
-    return f"to_utc_timestamp({repl}, {tz})" if local else repl
-
-
-_TO_UNIT_RE = re.compile(
-    r"\s*(.+?)\s+TO\s+(SECOND|MINUTE|HOUR|DAY|WEEK|MONTH|QUARTER|YEAR)"
-    r"\s*\Z", re.IGNORECASE | re.DOTALL)
-
-
-def _floor_ceil_to(name: str, inner: str) -> str | None:
-    """Calcite time syntax FLOOR(ts TO MONTH) / CEIL(ts TO DAY)
-    (DruidOperatorTable.java time operators) -> date_trunc /
-    TIME_CEIL."""
-    m = _TO_UNIT_RE.match(inner)
-    if not m:
-        return None
-    arg, unit = m.group(1), m.group(2).upper()
-    if name.upper() == "FLOOR":
-        return f"date_trunc('{unit}', {arg})"
-    return f"TIME_CEIL({arg}, '{period_of(unit)}')"
 
 
 _HUMAN_READABLE = {
@@ -1152,7 +1208,7 @@ _HUMAN_READABLE = {
 }
 
 
-def _human_readable(name: str, inner: str) -> str | None:
+def _human_readable(name: str, inner: str, _tz: str | None) -> str | None:
     """HUMAN_READABLE_*_FORMAT(n[, precision]) — both arities inline
     (HumanReadableFormatOperatorConversion; precision 0..3 defaults 2;
     CalciteQueryTest.testHumanReadableFormatFunction). Inlined rather
@@ -1165,7 +1221,7 @@ def _human_readable(name: str, inner: str) -> str | None:
     return _human_readable_body(args[0], p, *_HUMAN_READABLE[name.upper()])
 
 
-def _substring(_name: str, inner: str) -> str:
+def _substring(_name: str, inner: str, _tz: str | None) -> str:
     """Druid SQL SUBSTRING lowers to SubstringDimExtractionFn, which
     returns NULL (never '') when the start index falls past the string
     (testGroupByWithSelectProjections pins SUBSTRING('1', 2) -> null);
@@ -1197,7 +1253,7 @@ def _drop_size_arg(inner: str, n: int) -> str:
     return inner
 
 
-def _subquery_agg(name: str, inner: str) -> str | None:
+def _subquery_agg(name: str, inner: str, _tz: str | None) -> str | None:
     """Calcite lets aggregates take a BARE correlated scalar subquery
     (CalciteCorrelatedQueryTest: ANY_VALUE(select ...)); Spark's parser
     needs it parenthesized, and Catalyst then decorrelates it the same
@@ -1211,7 +1267,8 @@ def _subquery_agg(name: str, inner: str) -> str | None:
     return None if kept == inner else f"{name}({kept})"
 
 
-def _approx_count_distinct(name: str, inner: str) -> str | None:
+def _approx_count_distinct(name: str, inner: str,
+                           _tz: str | None) -> str | None:
     """APPROX_COUNT_DISTINCT[_DS_HLL|_BUILTIN] -> approx_count_distinct;
     _DS_THETA -> the finalized theta estimate over real sketch state
     (the DataSketches theta ThetaSketchApproxCountDistinctSqlAggregator
@@ -1233,13 +1290,12 @@ _CALL_RULES = {
     "REGEXP_LIKE": _regexp_like,
     "ROUND": _round,
     "TIME_PARSE": _time_parse,
-    "TIME_FORMAT": _time_fn_tz,
-    "TIME_EXTRACT": _time_fn_tz,
-    "TIME_SHIFT": _time_fn_tz,
+    "TIME_FORMAT": _time_format,
+    "TIME_EXTRACT": _time_extract,
+    "TIME_SHIFT": _time_shift,
     "TIME_FLOOR": _time_bucket,
     "TIME_CEIL": _time_bucket,
-    "FLOOR": _floor_ceil_to,
-    "CEIL": _floor_ceil_to,
+    **dict.fromkeys(("FLOOR", "CEIL", "DATE_TRUNC"), _to_unit),
     "PARSE_LONG": _parse_long_radix,
     "POSITION": _position_from,
     "REPEAT": _repeat,
@@ -1262,15 +1318,15 @@ _CALL_RULES = {
     "SUBSTRING": _substring,
     **dict.fromkeys(("ANY_VALUE", "SUM", "MIN", "MAX", "AVG", "COUNT"),
                     _subquery_agg),
-    "EARLIEST": lambda _n, a: f"min_by({_drop_size_arg(a, 2)}, "
-                              f"`{TIME_COLUMN}`)",
-    "LATEST": lambda _n, a: f"max_by({_drop_size_arg(a, 2)}, "
-                            f"`{TIME_COLUMN}`)",
-    "EARLIEST_BY": lambda _n, a: f"min_by({_drop_size_arg(a, 3)})",
-    "LATEST_BY": lambda _n, a: f"max_by({_drop_size_arg(a, 3)})",
+    "EARLIEST": lambda _n, a, _tz: f"min_by({_drop_size_arg(a, 2)}, "
+                                   f"`{TIME_COLUMN}`)",
+    "LATEST": lambda _n, a, _tz: f"max_by({_drop_size_arg(a, 2)}, "
+                                 f"`{TIME_COLUMN}`)",
+    "EARLIEST_BY": lambda _n, a, _tz: f"min_by({_drop_size_arg(a, 3)})",
+    "LATEST_BY": lambda _n, a, _tz: f"max_by({_drop_size_arg(a, 3)})",
     # SUM0: null-as-zero sum (DruidOperatorTable.java SUM0 — the
     # rollup-count re-aggregation form)
-    "SUM0": lambda _n, a: f"coalesce(sum({a}), 0)",
+    "SUM0": lambda _n, a, _tz: f"coalesce(sum({a}), 0)",
     **dict.fromkeys(("APPROX_COUNT_DISTINCT", "APPROX_COUNT_DISTINCT_DS_HLL",
                      "APPROX_COUNT_DISTINCT_BUILTIN",
                      "APPROX_COUNT_DISTINCT_DS_THETA"),
@@ -1280,18 +1336,25 @@ _CALL_RE = re.compile(r"\b(?:" + "|".join(_CALL_RULES) + r")\s*\(",
                       re.IGNORECASE)
 
 
-def _rewrite_calls(text: str) -> str:
-    """Apply _CALL_RULES to every call of a table name outside string
-    literals: the call's arguments first, then its own rule on the
-    rewritten arguments. A rule's output is never scanned again, so a
-    rule can emit its own name and fires on every nesting level."""
+_TICKED_RE = re.compile(rf"{_LITERAL}|`[^`]*`?")
+
+
+def _rewrite_calls(text: str, tz: str | None) -> str:
+    """Apply _CALL_RULES, each given the session zone ``tz`` (SQL text,
+    None for UTC), to every call of a table name outside string
+    literals and backtick identifiers: the call's arguments first, then
+    its own rule on the rewritten arguments. A rule's output is never
+    scanned again, so a rule can emit its own name and fires on every
+    nesting level."""
+    ticked = [(m.start(), m.end() - 1) for m in _TICKED_RE.finditer(text)
+              if m.group()[0] == "`"] if "`" in text else []
     out, last = [], 0
     for start, op, cp in _find_calls(text, _CALL_RE):
-        if text[cp] != ")" or cp == op:  # never closed: leave it
-            continue
+        if text[cp] != ")" or cp == op or _in_string(ticked, start):
+            continue  # never closed, or part of an identifier
         name = text[start:op].rstrip()
-        inner = _rewrite_calls(text[op + 1:cp])
-        new = _CALL_RULES[name.upper()](name, inner)
+        inner = _rewrite_calls(text[op + 1:cp], tz)
+        new = _CALL_RULES[name.upper()](name, inner, tz)
         out.append(text[last:start])
         out.append(text[start:op + 1] + inner + ")" if new is None else new)
         last = cp + 1
@@ -1320,9 +1383,11 @@ def _escape_backslashes(text: str) -> str:
     return "".join(out)
 
 
-def translate(text: str) -> str:
-    """Rewrite Druid SQL into Spark SQL: one walk of _CALL_RULES between
-    the passes that look outside a call's parentheses."""
+def translate(text: str, tz: str | None = None) -> str:
+    """Rewrite Druid SQL into Spark SQL under the session zone ``tz``
+    (sqlTimeZone; None is UTC): one walk of _CALL_RULES between the
+    passes that look outside a call's parentheses."""
+    zone = None if is_utc(tz) else _sql_str(tz)
     text = _rewrite_quoted_identifiers(text)
     text = _rewrite_array_agg(text)
     text = _rewrite_string_agg(text)
@@ -1338,10 +1403,17 @@ def translate(text: str) -> str:
     # rewrite (used while the engine ran ANSI) would null '10.1'
     # instead of truncating (CalciteQueryTest testSumOfString pins 13).
     text = _rewrite_array_literal(text)
+    if zone:
+        # a TIMESTAMP literal is a wall clock in the session zone
+        # (PlannerContext); before the walk, so literals the time rules
+        # emit stay wall clocks
+        text = _sub_outside_strings(
+            text, r"\bTIMESTAMP\s+'(?:[^']|'')*'",
+            lambda m: _in_zone(zone, m.group(0), read=False))
     # after ARRAY[..] became array(..), which the ARRAY_CONCAT and
     # *_CONTAINS rules look for; before integer division, which reads
     # the CAST the GROUPING rule emits
-    text = _rewrite_calls(text)
+    text = _rewrite_calls(text, zone)
     # GROUP BY () — Calcite's explicit empty grouping set (the
     # ungrouped aggregate); Spark's parser rejects the () spelling
     text = _sub_outside_strings(text, r"\bGROUP\s+BY\s*\(\s*\)", " ")
@@ -1361,7 +1433,7 @@ def translate(text: str) -> str:
 
 
 def _explain_plan_for(spark: SparkSession, inner: str,
-                      registry) -> DataFrame:
+                      registry, context) -> DataFrame:
     """EXPLAIN PLAN FOR (reference: sql/.../DruidPlanner.java explain
     path, SqlResource returns PLAN/RESOURCES/ATTRIBUTES columns). PLAN
     is Catalyst's formatted physical plan — the honest equivalent of
@@ -1369,7 +1441,7 @@ def _explain_plan_for(spark: SparkSession, inner: str,
     datasources; ATTRIBUTES carries the statement type."""
     import json
 
-    df = druid_sql(spark, inner, registry)
+    df = druid_sql(spark, inner, registry, context=context)
     plan = df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"))
@@ -3241,38 +3313,22 @@ def _rewrite_complex_sketch_aggs(text: str, bin_cols) -> str:
     return "".join(out)
 
 
-def _tz_trunc(unit: str, ts: str, tz_lit: str) -> str:
-    """Floor `ts` to `unit` on tz-local boundaries, keeping the result a
-    UTC instant (shifted-wall-clock trick, same shape as the 4-arg
-    TIME_FLOOR rewrite in _rewrite_time_floor_tz)."""
-    return (f"to_utc_timestamp(CAST(date_trunc('{unit}', "
-            f"from_utc_timestamp({ts}, {tz_lit})) AS TIMESTAMP), {tz_lit})")
-
-
-def _freeze_current_timestamp(text: str, instant, tz: str) -> str:
+def _freeze_current_timestamp(text: str, instant, tz: str | None) -> str:
     """sqlCurrentTimestamp (PlannerConfig; BaseCalciteQueryTest pins
     2000-01-01T00Z): CURRENT_TIMESTAMP / CURRENT_DATE / LOCALTIMESTAMP
     render as literals of the frozen instant's WALL CLOCK in the
-    session timezone. Written as plain TIMESTAMP/DATE literals so a
-    following _apply_sql_timezone pass converts them back to the UTC
-    instant exactly like any user literal
-    (testFilterOnCurrentTimestampLosAngeles: CURRENT_TIMESTAMP + 1 DAY
-    under America/Los_Angeles = 2000-01-02T00Z)."""
-    from datetime import timezone
-    from zoneinfo import ZoneInfo
-
-    local = utc_datetime(parse_instant(instant)).replace(
-        tzinfo=timezone.utc).astimezone(ZoneInfo(tz))
-    wall = local.strftime("%Y-%m-%d %H:%M:%S")
-    if local.microsecond:  # keep a sub-second pinned instant exact
-        wall += (".%06d" % local.microsecond).rstrip("0")
-    ts_lit = "TIMESTAMP '" + wall + "'"
-    d_lit = "DATE '" + local.strftime("%Y-%m-%d") + "'"
-    for pat, lit in ((r"\bCURRENT_TIMESTAMP\b(?:\s*\(\s*\))?", ts_lit),
-                     (r"\bLOCALTIMESTAMP\b(?:\s*\(\s*\))?", ts_lit),
-                     (r"\bCURRENT_DATE\b(?:\s*\(\s*\))?", d_lit)):
-        text = _sub_outside_strings(text, pat, lambda m, L=lit: L)
-    return text
+    session timezone. Written as plain TIMESTAMP/DATE literals before
+    translate, which reads them back as the UTC instant exactly like
+    any user literal (testFilterOnCurrentTimestampLosAngeles:
+    CURRENT_TIMESTAMP + 1 DAY under America/Los_Angeles =
+    2000-01-02T00Z)."""
+    ms = parse_instant(instant)
+    wall = utc_datetime(ms + tz_offset_ms(tz, ms)).isoformat(" ")
+    return _sub_outside_strings(
+        text, r"\b(CURRENT_DATE|CURRENT_TIMESTAMP|LOCALTIMESTAMP)\b"
+              r"(?:\s*\(\s*\))?",
+        lambda m: (f"DATE '{wall[:10]}'" if m.group(1).upper() ==
+                   "CURRENT_DATE" else f"TIMESTAMP '{wall}'"))
 
 
 def _inline_context_views(text: str, registry) -> str:
@@ -3300,100 +3356,6 @@ def _inline_context_views(text: str, registry) -> str:
         text,
         rf"\b(FROM|JOIN)\s+view\.([A-Za-z_]\w*)"
         rf"(?:\s+(?:AS\s+)?(?!(?:{kw})\b)([A-Za-z_]\w*))?", rep)
-
-
-def _apply_sql_timezone(text: str, tz: str) -> str:
-    """sqlTimeZone (PlannerContext): TIMESTAMP literals are read as
-    wall-clock in the session zone, and time bucketing — 2-arg
-    TIME_FLOOR / TIME_CEIL with ANY ISO period, plus FLOOR..TO /
-    CEIL..TO (by now date_trunc / TIME_CEIL after translate()) — aligns
-    to that zone's local boundaries (the result stays the UTC instant of
-    the local bucket start). Applied post-translate. Explicit 4-arg
-    TIME_FLOOR timezones were already lowered by _rewrite_time_floor_tz
-    and win over sqlTimeZone — their inner date_trunc is recognized by
-    its to_utc_timestamp(CAST( wrapper and left alone. Sub-day EXTRACT
-    fields keep UTC (documented partial)."""
-    tz_lit = "'" + tz.replace("'", "''") + "'"
-    # timestamp literals: wall clock in tz -> UTC instant
-    text = _sub_outside_strings(
-        text, r"\bTIMESTAMP\s+('(?:[^']|'')*')",
-        lambda m: f"to_utc_timestamp(TIMESTAMP {m.group(1)}, {tz_lit})")
-    # TIME_PARSE defaults its origin zone to the SESSION timezone
-    # (TimeParseOperatorConversion reads plannerContext.getTimeZone();
-    # testTimeseriesLosAngelesViaPlannerConfig parses local wall
-    # clock). Only the 1-arg macro form survives translate(); wrap it.
-    # Divergence note: a string carrying an explicit offset would be
-    # double-shifted here — the ported goldens use offset-less input.
-    pos = 0
-    while True:
-        found = None
-        for start, op, cp in _find_calls(text[pos:], "TIME_PARSE"):
-            found = (pos + start, pos + cp)
-            break
-        if found is None:
-            break
-        s, c = found
-        repl = f"to_utc_timestamp({text[s:c + 1]}, {tz_lit})"
-        text = text[:s] + repl + text[c + 1:]
-        pos = s + len(repl)
-
-    def _wrapped_already(upto: str) -> bool:
-        return re.sub(r"\s+", "", upto).upper().endswith(
-            "TO_UTC_TIMESTAMP(CAST(")
-
-    # date_trunc('UNIT', ts) — what FLOOR(ts TO UNIT) became — floors in
-    # tz. pos-advance past each replacement: the replacement contains a
-    # date_trunc of its own which must not be rescanned.
-    pos = 0
-    while True:
-        found = None
-        for start, op, cp in _find_calls(text[pos:], "date_trunc"):
-            s, o, c = pos + start, pos + op, pos + cp
-            if _wrapped_already(text[:s]):
-                continue  # explicit-tz form from _rewrite_time_floor_tz
-            args = _split_top_args(text[o + 1:c])
-            if len(args) != 2 or not args[0].strip().startswith("'"):
-                continue
-            found = (s, c, args[0].strip().strip("'").upper(),
-                     args[1].strip())
-            break
-        if found is None:
-            break
-        s, c, unit, ts = found
-        repl = _tz_trunc(unit, ts, tz_lit)
-        text = text[:s] + repl + text[c + 1:]
-        pos = s + len(repl)
-    # 2-arg TIME_FLOOR / TIME_CEIL: unit periods lower to tz date_trunc;
-    # arbitrary ISO periods ('PT5M', 'P2W', ...) wrap the epoch-origin
-    # macro around the shifted wall clock — flooring naive-local time
-    # from the naive epoch IS PeriodGranularity with a tz (origin
-    # defaults to 1970-01-01T00:00 local).
-    for fn in ("TIME_FLOOR", "TIME_CEIL"):
-        pos = 0
-        while True:
-            found = None
-            for start, op, cp in _find_calls(text[pos:], fn):
-                s, o, c = pos + start, pos + op, pos + cp
-                args = _split_top_args(text[o + 1:c])
-                if len(args) != 2:
-                    continue  # 3/4-arg forms were lowered in translate()
-                if re.sub(r"\s+", "", text[:s]).upper().endswith(
-                        "TO_UTC_TIMESTAMP("):
-                    continue  # explicit-tz macro wrap from translate()
-                found = (s, c, args[0].strip(), args[1].strip())
-                break
-            if found is None:
-                break
-            s, c, ts, period = found
-            unit = _trunc_unit(period)
-            if fn == "TIME_FLOOR" and unit is not None:
-                repl = _tz_trunc(unit, ts, tz_lit)
-            else:
-                repl = (f"to_utc_timestamp({fn}(from_utc_timestamp({ts}, "
-                        f"{tz_lit}), {period}), {tz_lit})")
-            text = text[:s] + repl + text[c + 1:]
-            pos = s + len(repl)
-    return text
 
 
 class _ColumnTypes(NamedTuple):
@@ -3462,6 +3424,13 @@ def _referenced_tables(text: str, names) -> tuple:
 def _columns(types: dict, tables, kind: str) -> tuple:
     """Sorted union of one column kind over ``tables``."""
     return tuple(sorted({c for t in tables for c in getattr(types[t], kind)}))
+
+
+def _flag(context, key: str) -> bool:
+    """A boolean query-context key. JDBC connection properties arrive as
+    strings, and "false" reads false (QueryContexts.getBoolean)."""
+    v = (context or {}).get(key)
+    return v.strip().lower() == "true" if isinstance(v, str) else bool(v)
 
 
 def druid_sql(spark: SparkSession, text: str, registry=None,
@@ -3541,14 +3510,19 @@ def druid_sql(spark: SparkSession, text: str, registry=None,
                 raise
     explain = re.match(r"(?is)^\s*EXPLAIN\s+PLAN\s+FOR\s+(.+)$", text)
     if explain:
-        return _explain_plan_for(spark, explain.group(1), registry)
+        return _explain_plan_for(spark, explain.group(1), registry,
+                                 context)
     types = (_schema_types(spark, registry, (id(registry), epoch, names))
              if registry is not None else {})
     if types and re.search(r"\bROUND\s*\(", text, re.IGNORECASE):
         # pre-translate: ROUND over integral columns keeps LONG typing
         text = _mark_integral_rounds(text, _columns(
             types, _referenced_tables(text, types), "integral"))
-    translated = translate(text)
+    tz = (context or {}).get("sqlTimeZone")
+    if (context or {}).get("sqlCurrentTimestamp"):
+        text = _freeze_current_timestamp(
+            text, context["sqlCurrentTimestamp"], tz)
+    translated = translate(text, tz)
     translated = _rewrite_call(translated, "__round_int", "round")
     # Druid casts never throw. get_spark() runs non-ANSI (the faithful
     # mode — truncating numeric-string casts); on a caller-provided
@@ -3595,7 +3569,7 @@ def druid_sql(spark: SparkSession, text: str, registry=None,
         from apache_druid_spark.sql.catalog import register_system_views
 
         register_system_views(registry)
-    if context and context.get("requireTimeCondition"):
+    if _flag(context, "requireTimeCondition"):
         # PlannerConfig.requireTimeCondition
         # (sql/.../planner/PlannerConfig.java; CalciteQueryTest
         # testRequireTimeCondition*): datasource-backed queries must
@@ -3618,17 +3592,10 @@ def druid_sql(spark: SparkSession, text: str, registry=None,
             raise ValueError(
                 "requireTimeCondition is enabled on this connection, "
                 "queries on datasources must filter on __time")
-    _tz = (context or {}).get("sqlTimeZone")
-    _frozen_now = (context or {}).get("sqlCurrentTimestamp")
-    if _frozen_now:
-        translated = _freeze_current_timestamp(translated, _frozen_now,
-                                               _tz or "UTC")
-    if _tz and _tz.upper() not in ("UTC", "ETC/UTC"):
-        translated = _apply_sql_timezone(translated, _tz)
     # useApproximateCountDistinct (PlannerConfig; the reference's
     # DEFAULT is true — this engine defaults to exact, the
     # strictly-better mode, and honors the flag when asked)
-    if context and context.get("useApproximateCountDistinct"):
+    if _flag(context, "useApproximateCountDistinct"):
         translated = _sub_outside_strings(
             translated, r"\bCOUNT\s*\(\s*DISTINCT\b",
             lambda _m: "approx_count_distinct(")

@@ -1213,7 +1213,7 @@ def test_sql_time_zone_context(spark, reg):
 
 def test_sql_time_zone_floor_to_syntax(spark, reg):
     """sqlTimeZone must also reach the Calcite FLOOR(ts TO unit) spelling
-    (lowered to date_trunc before the tz pass — ADVICE r4): grouping foo
+    (its call rule floors in the session zone — ADVICE r4): grouping foo
     by LA-local month splits each January triplet across a December and
     a January bucket (2000-01-01 UTC is 1999-12-31T16:00 LA)."""
     out = druid_sql(spark, """
@@ -1242,7 +1242,7 @@ def test_sql_time_zone_non_unit_period(spark, reg):
 
 
 def test_sql_time_zone_ceil(spark, reg):
-    """CEIL(ts TO unit) (lowered to the TIME_CEIL macro) honors
+    """CEIL(ts TO unit) (lowered as TIME_CEIL) honors
     sqlTimeZone: 2000-01-02 UTC is 2000-01-01T16:00 LA, ceiling to
     2000-02-01 LA = 2000-02-01T08:00 UTC."""
     out = druid_sql(spark, """
@@ -1253,9 +1253,9 @@ def test_sql_time_zone_ceil(spark, reg):
 
 
 def test_sql_time_zone_explicit_tz_wins(spark, reg):
-    """A 4-arg TIME_FLOOR with its own timezone is not re-wrapped by the
-    sqlTimeZone pass (the to_utc_timestamp(CAST( guard): flooring stays
-    LA-local even with a Tokyo session zone."""
+    """A 4-arg TIME_FLOOR with its own timezone uses it, not the
+    sqlTimeZone: flooring stays LA-local even with a Tokyo session
+    zone."""
     out = druid_sql(spark, """
         SELECT TIME_FLOOR(__time, 'P1M', NULL, 'America/Los_Angeles') AS t,
                COUNT(*) AS n

@@ -35,6 +35,7 @@ SAMPLES = {
                    "TIME_FLOOR(__time, 'P1D', NULL, 'America/Los_Angeles')"),
     "TIME_CEIL": ("TIME_CEIL({}, 'PT1H', TIMESTAMP '2000-01-01 00:30:00')",
                   "TIME_CEIL(__time, 'P1D', NULL, 'America/Los_Angeles')"),
+    "DATE_TRUNC": ("DATE_TRUNC('year', {})", "DATE_TRUNC('day', __time)"),
     "FLOOR": ("FLOOR({} TO MONTH)", "FLOOR(__time TO DAY)"),
     "CEIL": ("CEIL({} TO YEAR)", "CEIL(__time TO HOUR)"),
     "PARSE_LONG": ("PARSE_LONG(CAST({} AS STRING), 10)",
@@ -188,3 +189,21 @@ def test_regex_escape_reaches_the_regex_engine(spark):
 def test_like_with_escape_clause(spark, value, pattern, matches):
     row = one(spark, f"SELECT {value} LIKE {pattern} ESCAPE '!' AS v")
     assert row.v is matches
+
+
+@pytest.mark.parametrize("value, pattern, matches", [
+    (r"'a\b'", r"'a\b'", True),
+    (r"'a\%'", r"'a\%'", True),
+    (r"'a\xyz'", r"'a\%'", True),
+    (r"'a%'", r"'a\%'", False),
+])
+def test_like_without_escape_clause_reads_backslash_as_itself(
+        spark, value, pattern, matches):
+    row = one(spark, f"SELECT {value} LIKE {pattern} AS v")
+    assert row.v is matches
+
+
+def test_calls_inside_a_quoted_identifier_are_text():
+    assert translate('SELECT 1 AS "SUM0(y)", SUM0(y) FROM t') == \
+        "SELECT 1 AS `SUM0(y)`, coalesce(sum(y), 0) FROM t"
+    assert translate("SELECT `ROUND(x)` FROM t") == "SELECT `ROUND(x)` FROM t"
