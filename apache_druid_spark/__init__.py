@@ -16,7 +16,7 @@ Layout:
     operators/   filters, expressions, aggregations, dimensions,
                  having, limit specs (reusable plan builders)
     plans/       native JSON Query -> DataFrame compiler (the engine)
-    functions/   Druid-named SQL function registry over Spark SQL
+    functions/   Druid SQL function bodies the dialect inlines (data)
     sources/     batch input sources / input formats, ingestion
     streaming/   Structured Streaming ingest (Kafka-style semantics)
     pipeline/    large-scale training-data ops (dedup, ANN, text, mm)

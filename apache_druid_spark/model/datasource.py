@@ -91,6 +91,9 @@ class DatasourceRegistry:
     # filter rows, so its footers could overstate the extent and are
     # never consulted (plans/compiler._footer_extent).
     footer_time_cols: dict = field(default_factory=dict)
+    # lookup name -> (epoch, its lookup_map, or None above the cap that
+    # built it), filled on first use
+    lookup_maps: dict = field(default_factory=dict)
 
     # -- registration ---------------------------------------------------
     def register(
@@ -180,23 +183,23 @@ class DatasourceRegistry:
             raise KeyError(f"unknown lookup: {name!r}")
         return self._lookups[name]
 
-    def lookup_map_expr(self, name: str):
-        """The lookup as a Spark map literal column for LOOKUP(col, name).
-
-        Collects the lookup to the driver once (lookups are by contract
-        small, broadcast-able structures in the reference too) and embeds
-        it as a ``map(...)`` literal, which Catalyst constant-folds and
-        ships with the plan — the Spark analogue of Druid's broadcast
-        lookup container.
-        """
-        rows = self.lookup_df(name).collect()
-        kv = []
-        for r in rows:
-            kv.append(F.lit(r[0]))
-            kv.append(F.lit(r[1]))
-        if not kv:
-            return F.lit(None).cast("map<string,string>")
-        return F.create_map(*kv)
+    def lookup_map(self, name: str, cap: int | None = None) -> dict | None:
+        """The lookup as one key -> value dict: a duplicated key keeps
+        its largest value (SQL max), a null value is omitted (the key
+        reads as missing). Collected once per epoch and lookup; None
+        when it has more than ``cap`` keys."""
+        hit = self.lookup_maps.get(name)
+        if hit is None or hit[0] != self.epoch or (hit[1] is None
+                                                   and cap is None):
+            rows = self.lookup_df(name).groupBy("k").agg(
+                F.max("v").alias("v"))
+            rows = (rows if cap is None else rows.limit(cap + 1)).collect()
+            full = cap is None or len(rows) <= cap
+            hit = (self.epoch, {k: v for k, v in rows if k is not None
+                                and v is not None} if full else None)
+            self.lookup_maps[name] = hit
+        m = hit[1]
+        return None if m is None or cap is not None and len(m) > cap else m
 
     def record_segments(self, name: str, path: str,
                         segment_granularity: str = "day") -> None:

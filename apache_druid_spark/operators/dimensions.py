@@ -17,7 +17,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from apache_druid_spark.operators.util import fcol
+from apache_druid_spark.operators.util import fcol, map_column
 
 _DRUID_OUT_TYPES = {"STRING": "string", "LONG": "long", "FLOAT": "float",
                     "DOUBLE": "double"}
@@ -134,25 +134,17 @@ def compile_extraction_fn(spec: dict, col: Column, registry=None,
         return out
     if t in ("lookup", "registeredLookup"):
         if t == "lookup" and "lookup" in spec and isinstance(spec["lookup"], dict):
-            # inline map lookup
-            m = spec["lookup"].get("map", {})
-            kv = []
-            for k, v in m.items():
-                if v is None:
-                    # MapLookupExtractor.apply: map.get -> null for a
-                    # null-VALUED key exactly like a missing key, so
-                    # the pair is omitted (str(None) rendered the
-                    # string 'None' — the same bug class as the r11
-                    # LOOKUP() advisor finding)
-                    continue
-                kv.append(F.lit(str(k)))
-                kv.append(F.lit(str(v)))
-            mexpr = F.create_map(*kv) if kv else F.lit(None).cast("map<string,string>")
+            # inline map lookup; MapLookupExtractor.apply: map.get ->
+            # null for a null-VALUED key exactly like a missing key, so
+            # the pair is omitted
+            mexpr = map_column({str(k): str(v) for k, v in
+                                spec["lookup"].get("map", {}).items()
+                                if v is not None})
         else:
             name = spec.get("lookup") or spec.get("name")
             if registry is None:
                 raise ValueError("registered lookup requires DatasourceRegistry")
-            mexpr = registry.lookup_map_expr(name)
+            mexpr = map_column(registry.lookup_map(name))
         out = F.element_at(mexpr, col.cast("string"))
         if spec.get("retainMissingValue", False):
             out = F.coalesce(out, col.cast("string"))

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from apache_druid_spark.model.granularity import (
     is_utc, time_ceil_col, time_floor_col, time_shift_col,
 )
+from apache_druid_spark.operators.util import map_column
 
 # ---------------------------------------------------------------------------
 # Tokenizer
@@ -648,19 +649,28 @@ def _fn_timestamp_parse(s, *rest):
 
 
 def _fn_timestamp_format(ts, *rest):
-    # timestamp_format(ts[, pattern[, tz]]) — renders in tz
+    # timestamp_format(ts[, pattern[, tz]]) — renders in tz; the default
+    # ISO pattern ends in the zone's offset at ts, 'Z' when it is zero
+    # (ISODateTimeFormat.dateTime)
     pat, tz = ([_extract_literal(a) for a in rest[:2]] + [None, None])[:2]
-    if tz:
-        ts = F.from_utc_timestamp(ts, str(tz))
-    return F.date_format(ts, str(pat or "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"))
+    if is_utc(tz):
+        return F.date_format(ts, str(pat or "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"))
+    local = F.from_utc_timestamp(ts, str(tz))
+    if pat:
+        return F.date_format(local, str(pat))
+    mins = (F.unix_seconds(local) - F.unix_seconds(ts)) / 60
+    offset = F.when(mins == 0, F.lit("Z")).otherwise(F.format_string(
+        "%s%02d:%02d", F.when(mins < 0, "-").otherwise("+"),
+        (F.abs(mins) / 60).cast("int"), (F.abs(mins) % 60).cast("int")))
+    return F.concat(F.date_format(local, "yyyy-MM-dd'T'HH:mm:ss.SSS"), offset)
 
 
 def _fn_lookup(registry, col, name_col, *rest):
     if registry is None:
         raise ValueError("lookup() requires a DatasourceRegistry")
     name = str(_extract_literal(name_col))
-    m = registry.lookup_map_expr(name)
-    res = F.element_at(m, col.cast("string"))
+    res = F.element_at(map_column(registry.lookup_map(name)),
+                       col.cast("string"))
     if rest:  # replaceMissingValueWith
         res = F.coalesce(res, rest[0])
     return res
@@ -851,7 +861,7 @@ _FUNCTIONS: dict[str, Callable] = {
     "mod": lambda a, b: a % b,
     "remainder": lambda a, b: a % b,
     # SafeDivideExprMacro: x/0 is NULL except 0/0, which is 0 (the SQL
-    # SAFE_DIVIDE macro in functions/registry.py agrees)
+    # SAFE_DIVIDE body in functions/registry.py agrees)
     "safe_divide": lambda a, b: F.when(
         b == 0, F.when(a == 0, F.lit(0.0))).otherwise(a / b),
     # bitwise

@@ -2,25 +2,29 @@
 
 Reference: the Calcite layer (sql/src/main/java/org/apache/druid/sql/
 calcite/planner/DruidOperatorTable.java — 18 SQL aggregators at lines
-132-151). Scalar Druid functions are registered as real SQL UDFs
-(functions/registry.py); *aggregate* functions can't be SQL UDFs, so
-this shim rewrites their names/arguments textually before ``spark.sql``.
-The rewrite is token-aware (skips string literals, matches parens), and
-everything it emits is a built-in Spark aggregate, so the plan is
-identical to hand-written Spark SQL.
+132-151). Every Druid function becomes Spark SQL text before
+``spark.sql``; nothing is registered with Spark. The rewrite is
+token-aware (skips string literals, matches parens), and everything it
+emits is a Spark built-in, so the plan is identical to hand-written
+Spark SQL.
 
-``_CALL_RULES`` is the one place a Druid function's SQL form is
-defined: one rule per upper-case Druid name (a rename is a rule too),
+A Druid function's SQL form is one entry of one of two tables, both
 applied by one walker, ``_rewrite_calls``, to every call outside string
-literals and backtick identifiers, arguments first. ``translate`` runs
-it between the few passes that look outside a call's parentheses.
+literals and backtick identifiers, arguments first. ``_CALL_RULES``
+(one rule per upper-case Druid name; a rename is a rule too) runs in
+``translate``, between the few passes that look outside a call's
+parentheses. ``_INLINE`` (the bodies of functions/registry.py, LOOKUP,
+and the rules merged with them) runs in ``druid_sql`` after the
+multi-value passes, which read the MV_*/ARRAY_* names. No name is in
+both.
 
 Time: ``translate(text, tz)`` hands the session zone (sqlTimeZone) to
 every rule. A time function works in its own zone argument, else the
 session zone, where TIMESTAMP literals are wall clocks too; only
 ``_in_zone`` changes zone. A literal period is read at translate time;
-only a non-literal one calls the registered 2-arg TIME_FLOOR/TIME_CEIL/
-TIME_SHIFT UDFs. EXTRACT and CAST(… AS DATE) stay in UTC.
+only a non-literal one inlines the per-row period arithmetic of
+functions/registry.PERIOD_BODIES. EXTRACT and CAST(… AS DATE) stay in
+UTC.
 
   EARLIEST(x)            -> min_by(x, __time)      (time-ordered first)
   LATEST(x)              -> max_by(x, __time)
@@ -58,6 +62,9 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
+from apache_druid_spark.functions.registry import (
+    FUNCTION_BODIES, PERIOD_BODIES,
+)
 from apache_druid_spark.model.datasource import TIME_COLUMN
 from apache_druid_spark.model.granularity import (
     GRANULARITIES, day_millis, is_utc, parse_instant, parse_period,
@@ -96,16 +103,16 @@ _RENAMES = {
     "DS_RANK": "kll_sketch_get_rank_double",
     "STRING_AGG": "listagg",
     # variadic Java-Formatter passthrough (StringFormatOperator
-    # Conversion); the fixed-arity SQL macro can't take >1 value arg,
-    # and casting args to STRING breaks %x/%d conversions. Divergence:
+    # Conversion); casting args to STRING would break %x/%d
+    # conversions. Divergence:
     # missing format args raise here; the reference's nonStrictFormat
     # returns 'fmt; args' (documented in the expressions goldens).
     "STRING_FORMAT": "format_string",
     # ARRAY_* scalar family (sql/.../builtin/Array*OperatorConversion.java)
     # — type-generic name maps onto Spark natives; ARRAY_APPEND already
     # matches its Spark builtin by name and semantics. The arithmetic ones
-    # (ARRAY_SLICE, ARRAY_OFFSET_OF, ARRAY_ORDINAL_OF) are registered
-    # as SQL UDFs in functions/registry.py.
+    # (ARRAY_SLICE, ARRAY_OFFSET_OF, ARRAY_ORDINAL_OF) are bodies in
+    # functions/registry.py.
     "ARRAY_LENGTH": "array_size",
     "ARRAY_OFFSET": "get",           # 0-based, null out of range
     "ARRAY_ORDINAL": "try_element_at",  # 1-based, null out of range
@@ -113,7 +120,7 @@ _RENAMES = {
     "ARRAY_OVERLAP": "arrays_overlap",
     "ARRAY_TO_STRING": "array_join",
     "STRING_TO_ARRAY": "split",
-    # ARRAY_CONCAT is a registered macro, NOT renamed to bare concat:
+    # ARRAY_CONCAT is an _INLINE entry, NOT renamed to bare concat:
     # concat over an MV input is the canonical element-mapped scalar,
     # so the MV pass would wrongly transform() it per element
     "BIT_AND": "bit_and",
@@ -833,7 +840,7 @@ def _in_zone(tz: str | None, ts: str, f=None, read: bool = True,
     return f"to_utc_timestamp({t}, {tz})" if tz and write else t
 
 
-def _time_args(name: str, inner: str, lo: int, hi: int) -> list[str]:
+def _call_args(name: str, inner: str, lo: int, hi: int) -> list[str]:
     args = _args(inner)
     if not lo <= len(args) <= hi:
         raise ValueError(
@@ -875,8 +882,10 @@ def _bucket(name: str, ts: str, period: str, origin: str | None,
     unless ``ts`` is on a boundary."""
     p = _literal(period)
     if p is None:
-        return None if origin else _in_zone(
-            tz, ts, lambda t: f"{name}({t}, {period})")
+        if origin:
+            raise ValueError(f"{name.upper()} with an origin needs a "
+                             f"literal period")
+        return _in_zone(tz, ts, lambda t: _body(name, [t, period]))
     months, ms = parse_period(p, allow_mixed=True)
     if months and ms:
         raise ValueError(f"Invalid period[{p}] for {name.upper()}: a "
@@ -916,7 +925,7 @@ def _bucket(name: str, ts: str, period: str, origin: str | None,
 def _time_bucket(name: str, inner: str, tz: str | None) -> str | None:
     """TIME_FLOOR / TIME_CEIL(ts, period[, origin[, timezone]])
     (TimeFloorOperatorConversion, TimeCeilOperatorConversion)."""
-    args = _time_args(name, inner, 2, 4)
+    args = _call_args(name, inner, 2, 4)
     origin = args[2] if len(args) > 2 and args[2].upper() != "NULL" else None
     return _bucket(name, args[0], args[1], origin, _zone(args, 3, tz))
 
@@ -947,11 +956,11 @@ def _to_unit(name: str, inner: str, tz: str | None) -> str | None:
 def _time_shift(name: str, inner: str, tz: str | None) -> str:
     """TIME_SHIFT(ts, period, step[, timezone]): chronology.add in the
     zone, as granularity.time_shift_col."""
-    args = _time_args(name, inner, 3, 4)
+    args = _call_args(name, inner, 3, 4)
     ts, period, step = args[:3]
     tz, p = _zone(args, 3, tz), _literal(period)
     if p is None:
-        return _in_zone(tz, ts, lambda t: f"{name}({t}, {period}, {step})")
+        return _in_zone(tz, ts, lambda t: _body(name, [t, period, step]))
     months, ms = parse_period(p, allow_mixed=True)
     wall = ms if tz is None else day_millis(p)
     ts = f"CAST({ts} AS TIMESTAMP)"
@@ -987,58 +996,39 @@ def _extract_unit(ts: str, unit: str | None, tz: str | None) -> str:
 
 def _time_extract(name: str, inner: str, tz: str | None) -> str:
     """TIME_EXTRACT(ts, unit[, timezone]) (TimeExtractOperatorConversion)."""
-    args = _time_args(name, inner, 2, 3)
+    args = _call_args(name, inner, 2, 3)
     return _extract_unit(args[0], _literal(args[1]), _zone(args, 2, tz))
 
 
 def _time_format(name: str, inner: str, tz: str | None) -> str:
     """TIME_FORMAT(ts, pattern[, timezone]) (TimeFormatOperatorConversion):
     the wall clock in the zone."""
-    args = _time_args(name, inner, 2, 3)
+    args = _call_args(name, inner, 2, 3)
     local = _in_zone(_zone(args, 2, tz), args[0], write=False)
     return f"date_format({local}, {args[1]})"
 
 
+# an ISO string's own zone: an offset or zone id after its time of day
+_OWN_ZONE = ("'[0-9]:[0-9]{2}(:[0-9]{2}([.,][0-9]*)?)?[ ]*"
+             "([Zz]|[+-][0-9:]+|[A-Za-z][A-Za-z_/]*([+-][0-9:]+)?)$'")
+
+
 def _time_parse(name: str, inner: str, tz: str | None) -> str:
-    """TIME_PARSE(s[, pattern[, timezone]]): ``s`` is a wall clock in
-    the zone (an offset it carries is shifted too); unparseable is NULL."""
-    args = _time_args(name, inner, 1, 3)
-    pattern = "".join(f", {a}" for a in args[1:2] if a.upper() != "NULL")
-    return _in_zone(_zone(args, 2, tz),
-                    f"try_to_timestamp({args[0]}{pattern})", read=False)
-
-
-def _parse_long_radix(_name: str, inner: str, _tz: str | None) -> str | None:
-    """PARSE_LONG(s, radix) — ParseLongOperatorConversion: parse in the
-    given radix with Long.parseLong semantics — optional sign, radix 16
-    accepts an optional 0x/0X prefix, and ANY invalid input is NULL
-    (the 1-arg form is a SQL macro, which can't overload).
-
-    Spark's conv() alone is too lenient: it returns '0' for digit-free
-    strings, parses the valid PREFIX of '1x', and reads negatives as
-    unsigned 64-bit. The rewrite validates every character against the
-    radix's digit set (forall over instr into the 36-char alphabet) and
-    applies the sign explicitly; unsigned overflow surfaces as a
-    >2^63-1 decimal string that try_cast nulls. Known divergence:
-    exactly Long.MIN_VALUE ('-8000000000000000' radix 16) nulls here
-    instead of parsing."""
-    args = _args(inner)
-    if len(args) != 2:
-        return None
-    s, radix = args
-    digits = "'0123456789abcdefghijklmnopqrstuvwxyz'"
-    low = f"lower({s})"
-    unsigned = (f"(CASE WHEN {s} LIKE '-%' OR {s} LIKE '+%' "
-                f"THEN substring({low}, 2) ELSE {low} END)")
-    body = (f"(CASE WHEN ({radix}) = 16 AND {unsigned} LIKE '0x%' "
-            f"THEN substring({unsigned}, 3) ELSE {unsigned} END)")
-    valid = (f"({body} != '' AND forall(split({body}, ''), "
-             f"__pl -> __pl = '' OR "
-             f"instr({digits}, __pl) BETWEEN 1 AND ({radix})))")
-    sgn = f"(CASE WHEN {s} LIKE '-%' THEN -1L ELSE 1L END)"
-    return (f"(CASE WHEN {valid} THEN {sgn} * "
-            f"try_cast(conv({body}, {radix}, 10) AS BIGINT) "
-            f"ELSE NULL END)")
+    """TIME_PARSE(s[, pattern[, timezone]]): ``s`` is a wall clock in the
+    zone unless it carries its own offset (TimestampParseExprMacro's
+    parser withZone); unparseable is NULL."""
+    args = _call_args(name, inner, 1, 3)
+    read = args[:1] + [a for a in args[1:2] if a.upper() != "NULL"]
+    parsed = f"try_to_timestamp({', '.join(read)})"
+    local = _in_zone(_zone(args, 2, tz), parsed, read=False)
+    if local == parsed:
+        return parsed
+    if len(read) == 1:
+        return (f"CASE WHEN {args[0]} RLIKE {_OWN_ZONE} THEN {parsed} "
+                f"ELSE {local} END")
+    # a pattern with an offset or zone field reads the string's own
+    pattern = re.sub(r"'[^']*'", "", _literal(read[1]) or "")
+    return parsed if re.search(r"[VzOXxZ]", pattern) else local
 
 
 def _position_from(_name: str, inner: str, _tz: str | None) -> str | None:
@@ -1071,27 +1061,6 @@ def _repeat(_name: str, inner: str, _tz: str | None) -> str | None:
             f"ELSE repeat({s}, {n}) END")
 
 
-def _ipv4_numeric(name: str, inner: str, _tz: str | None) -> str | None:
-    """The IPv4 macros accept LONG-typed addresses too (IPv4Address
-    ExprUtils: a long in [0, 2^32) IS the address), but the registered
-    SQL macros are STRING-typed. Literal arguments carry their SQL type
-    here, so dispatch them by composition: a numeric address validates
-    through IPV4_STRINGIFY (range-checked), a string argument to
-    STRINGIFY validates through IPV4_PARSE — uint strings stay NULL
-    (IPv4AddressParseExpressionTest testValidStringArgUnsignedInt vs
-    testValidIntegerArg pin the type distinction)."""
-    fn = name.upper()
-    if fn == "IPV4_STRINGIFY":
-        arg = inner.strip()
-        return (f"IPV4_STRINGIFY(IPV4_PARSE({arg}))"
-                if arg.startswith("'") and arg.endswith("'") else None)
-    args = _args(inner)
-    if not args or not re.match(r"^[0-9]+L?$", args[0]):
-        return None
-    rest = "".join(f", {a}" for a in args[1:])
-    return f"{fn}(IPV4_STRINGIFY({args[0].rstrip('Ll')}L){rest})"
-
-
 def _array_prepend(_name: str, inner: str, _tz: str | None) -> str | None:
     """Druid ARRAY_PREPEND(expr, arr) vs Spark array_prepend(arr, el):
     same name, swapped arguments."""
@@ -1099,22 +1068,6 @@ def _array_prepend(_name: str, inner: str, _tz: str | None) -> str | None:
     if len(args) != 2:  # malformed; leave for Spark's own error
         return None
     return f"array_prepend({args[1]}, {args[0]})"
-
-
-def _array_concat(_name: str, inner: str, _tz: str | None) -> str | None:
-    """ARRAY_CONCAT over EXPLICIT array constructors goes to Spark's
-    type-generic native concat. The registered ARRAY_CONCAT UDF is
-    typed ARRAY<STRING> (right for MV columns, the dominant case), so
-    ARRAY_CONCAT(ARRAY[l1], ARRAY[l2]) would coerce longs to strings —
-    the reference keeps LONG_ARRAY (CalciteArraysQueryTest
-    testSomeArrayFunctionsWithScanQuery pins [7, null]). Only the
-    all-constructor form rewrites: a bare `concat` over scalar or MV
-    column args would change semantics (string concat / the MV
-    element-mapping pass)."""
-    args = _split_top_args(inner)
-    if args and all(re.match(r"(?is)\s*array\s*\(", a) for a in args):
-        return f"concat({inner})"
-    return None
 
 
 # DOW/ISODOW included: Druid's are Joda ISO (Monday=1..Sunday=7, the
@@ -1163,39 +1116,20 @@ def _trim_2arg(name: str, inner: str, _tz: str | None) -> str | None:
     return f"{name.lower()}({args[1]}, {args[0]})"
 
 
-def _slice_2arg(name: str, inner: str, _tz: str | None) -> str | None:
-    """Druid MV_SLICE/ARRAY_SLICE with two args slices to the end of
-    the array (ArraySliceOperatorConversion end defaults to length);
-    the registered SQL macro is fixed 3-arity. The rewrite KEEPS the
-    function head (fills the end arg with size(a)) — MV_SLICE vs
-    ARRAY_SLICE must stay distinguishable downstream, where GROUP BY
-    explodes MV_* results but groups ARRAY_* results as arrays."""
-    args = _args(inner)
-    if len(args) != 2:
-        return None
-    a, s = args
-    return f"{name.upper()}({a}, {s}, size({a}))"
+def _contains_all(a: str, needles: str) -> str:
+    """Does array ``a`` hold every element of the array ``needles``?"""
+    return f"forall({needles}, __mv_c -> array_contains({a}, __mv_c))"
 
 
-def _contains_array(_name: str, inner: str, _tz: str | None) -> str | None:
+def _contains_array(_name: str, inner: str, _ctx) -> str | None:
     """Druid MV_CONTAINS/ARRAY_CONTAINS with an ARRAY second argument
     is contains-ALL (MultiValueStringOperatorConversions.Contains);
-    the registered macro and the Spark builtin take a scalar needle."""
+    Spark's array_contains takes a scalar needle."""
     args = _args(inner)
     if len(args) != 2 or not re.match(r"array\s*\(", args[1],
                                       re.IGNORECASE):
         return None
-    return f"forall({args[1]}, __mv_c -> array_contains({args[0]}, __mv_c))"
-
-
-def _truncate(name: str, inner: str, _tz: str | None) -> str | None:
-    """TRUNC/TRUNCATE with one arg: Druid defaults digits to 0; the
-    registered TRUNCATE UDF is fixed 2-arity (SQL functions can't
-    overload). TRUNC is its numeric-truncate alias (not Spark's date
-    trunc)."""
-    if len(_split_top_args(inner)) == 1:
-        return f"TRUNCATE({inner}, 0)"
-    return f"TRUNCATE({inner})" if name.upper() == "TRUNC" else None
+    return _contains_all(*args)
 
 
 _HUMAN_READABLE = {
@@ -1211,9 +1145,9 @@ _HUMAN_READABLE = {
 def _human_readable(name: str, inner: str, _tz: str | None) -> str | None:
     """HUMAN_READABLE_*_FORMAT(n[, precision]) — both arities inline
     (HumanReadableFormatOperatorConversion; precision 0..3 defaults 2;
-    CalciteQueryTest.testHumanReadableFormatFunction). Inlined rather
-    than SQL UDFs so the NULL/small-value/precision contract is a
-    single rendering (core/.../HumanReadableBytes.java)."""
+    CalciteQueryTest.testHumanReadableFormatFunction), one rendering
+    of the NULL/small-value/precision contract
+    (core/.../HumanReadableBytes.java)."""
     args = _args(inner)
     if len(args) not in (1, 2):
         return None
@@ -1296,24 +1230,14 @@ _CALL_RULES = {
     "TIME_FLOOR": _time_bucket,
     "TIME_CEIL": _time_bucket,
     **dict.fromkeys(("FLOOR", "CEIL", "DATE_TRUNC"), _to_unit),
-    "PARSE_LONG": _parse_long_radix,
     "POSITION": _position_from,
     "REPEAT": _repeat,
-    "IPV4_PARSE": _ipv4_numeric,
-    "IPV4_MATCH": _ipv4_numeric,
-    "IPV4_STRINGIFY": _ipv4_numeric,
     "ARRAY_PREPEND": _array_prepend,
-    "ARRAY_CONCAT": _array_concat,
     "EXTRACT": _extract,
     "GROUPING": _grouping,
     "LTRIM": _trim_2arg,
     "RTRIM": _trim_2arg,
-    "MV_SLICE": _slice_2arg,
-    "ARRAY_SLICE": _slice_2arg,
-    "MV_CONTAINS": _contains_array,
     "ARRAY_CONTAINS": _contains_array,
-    "TRUNC": _truncate,
-    "TRUNCATE": _truncate,
     **dict.fromkeys(_HUMAN_READABLE, _human_readable),
     "SUBSTRING": _substring,
     **dict.fromkeys(("ANY_VALUE", "SUM", "MIN", "MAX", "AVG", "COUNT"),
@@ -1332,34 +1256,186 @@ _CALL_RULES = {
                      "APPROX_COUNT_DISTINCT_DS_THETA"),
                     _approx_count_distinct),
 }
-_CALL_RE = re.compile(r"\b(?:" + "|".join(_CALL_RULES) + r")\s*\(",
-                      re.IGNORECASE)
-
-
 _TICKED_RE = re.compile(rf"{_LITERAL}|`[^`]*`?")
 
 
-def _rewrite_calls(text: str, tz: str | None) -> str:
-    """Apply _CALL_RULES, each given the session zone ``tz`` (SQL text,
-    None for UTC), to every call of a table name outside string
-    literals and backtick identifiers: the call's arguments first, then
-    its own rule on the rewritten arguments. A rule's output is never
-    scanned again, so a rule can emit its own name and fires on every
-    nesting level."""
+def _rewrite_calls(text: str, ctx, rules=_CALL_RULES) -> str:
+    """Apply a rule table to every call of one of its names outside
+    string literals and backtick identifiers: the call's arguments
+    first, then its own rule on the rewritten arguments, given ``ctx``
+    (for _CALL_RULES the session zone as SQL text, None for UTC; for
+    _INLINE the registry). A rule's output is never scanned again, so a
+    rule can emit its own name and fires on every nesting level."""
     ticked = [(m.start(), m.end() - 1) for m in _TICKED_RE.finditer(text)
               if m.group()[0] == "`"] if "`" in text else []
+    calls = re.compile(r"\b(?:" + "|".join(rules) + r")\s*\(", re.IGNORECASE)
     out, last = [], 0
-    for start, op, cp in _find_calls(text, _CALL_RE):
+    for start, op, cp in _find_calls(text, calls):
         if text[cp] != ")" or cp == op or _in_string(ticked, start):
             continue  # never closed, or part of an identifier
         name = text[start:op].rstrip()
-        inner = _rewrite_calls(text[op + 1:cp], tz)
-        new = _CALL_RULES[name.upper()](name, inner, tz)
+        inner = _rewrite_calls(text[op + 1:cp], ctx, rules)
+        new = rules[name.upper()](name, inner, ctx)
         out.append(text[last:start])
         out.append(text[start:op + 1] + inner + ")" if new is None else new)
         last = cp + 1
     out.append(text[last:])
     return "".join(out)
+
+
+# -- the inline table ----------------------------------------------------
+# One entry per Druid function Spark lacks, most of them a body of
+# functions/registry.py. druid_sql applies it with _rewrite_calls after
+# the multi-value passes, which read the MV_*/ARRAY_* names, so no
+# function is ever registered with Spark. No name is also a
+# _CALL_RULES key; a rule gets the registry as its context.
+
+
+def _body(name: str, args: list[str]) -> str:
+    """Function ``name``'s body over ``args``, each cast to its
+    parameter's type and the result to the return type, as a SQL
+    function declaration would."""
+    params, ret, text = _BODIES[name.upper()]
+    if len(args) != len(params):
+        raise ValueError(
+            f"Invalid number of arguments to function '{name.upper()}'")
+    cast = {p: f"CAST({a} AS {t})" for (p, t), a in zip(params, args)}
+    text = _sub_outside_strings(text, r"\b(?:" + "|".join(cast) + r")\b",
+                                lambda m: cast[m.group().lower()])
+    return f"CAST({text} AS {ret})"
+
+
+def _inline(name: str, inner: str, _ctx=None) -> str:
+    return _body(name, _args(inner))
+
+
+_BODIES: dict[str, tuple[list[list[str]], str, str]] = {}
+for _name, _params, _ret, _text in PERIOD_BODIES + FUNCTION_BODIES:
+    if _BODIES:  # a call of an earlier entry expands in place
+        _text = _rewrite_calls(_text, None, dict.fromkeys(_BODIES, _inline))
+    _BODIES[_name] = ([p.split() for p in _params.split(", ")], _ret, _text)
+
+
+def _parse_long(name: str, inner: str, _ctx) -> str:
+    """PARSE_LONG(s[, radix]) — ParseLongOperatorConversion: parse in the
+    given radix with Long.parseLong semantics — optional sign, radix 16
+    accepts an optional 0x/0X prefix, and ANY invalid input is NULL.
+
+    Spark's conv() alone is too lenient: it returns '0' for digit-free
+    strings, parses the valid PREFIX of '1x', and reads negatives as
+    unsigned 64-bit. The rewrite validates every character against the
+    radix's digit set (forall over instr into the 36-char alphabet) and
+    applies the sign explicitly; unsigned overflow surfaces as a
+    >2^63-1 decimal string that try_cast nulls. Known divergence:
+    exactly Long.MIN_VALUE ('-8000000000000000' radix 16) nulls here
+    instead of parsing."""
+    args = _call_args(name, inner, 1, 2)
+    if len(args) == 1:
+        return _body(name, args)
+    s, radix = args
+    digits = "'0123456789abcdefghijklmnopqrstuvwxyz'"
+    low = f"lower({s})"
+    unsigned = (f"(CASE WHEN {s} LIKE '-%' OR {s} LIKE '+%' "
+                f"THEN substring({low}, 2) ELSE {low} END)")
+    body = (f"(CASE WHEN ({radix}) = 16 AND {unsigned} LIKE '0x%' "
+            f"THEN substring({unsigned}, 3) ELSE {unsigned} END)")
+    valid = (f"({body} != '' AND forall(split({body}, ''), "
+             f"__pl -> __pl = '' OR "
+             f"instr({digits}, __pl) BETWEEN 1 AND ({radix})))")
+    sgn = f"(CASE WHEN {s} LIKE '-%' THEN -1L ELSE 1L END)"
+    return (f"(CASE WHEN {valid} THEN {sgn} * "
+            f"try_cast(conv({body}, {radix}, 10) AS BIGINT) "
+            f"ELSE NULL END)")
+
+
+def _truncate(name: str, inner: str, _ctx) -> str:
+    """TRUNC/TRUNCATE(x[, digits]): digits default to 0 (Function.java
+    Truncate); TRUNC is the numeric alias, not Spark's date trunc."""
+    args = _call_args(name, inner, 1, 2)
+    return _body("TRUNCATE", args + ["0"] * (2 - len(args)))
+
+
+def _slice(name: str, inner: str, _ctx) -> str:
+    """MV_SLICE/ARRAY_SLICE(a, start[, end]): end defaults to the
+    array's length (ArraySliceOperatorConversion)."""
+    args = _call_args(name, inner, 2, 3)
+    return _body(name, args + [f"size({args[0]})"] * (3 - len(args)))
+
+
+def _ipv4(name: str, inner: str, _ctx) -> str:
+    """IPV4_PARSE/_MATCH/_STRINGIFY: an address is a LONG in [0, 2^32)
+    or a dotted-quad STRING (IPv4AddressExprUtils), but each body takes
+    one type. A literal argument carries its SQL type here: a numeric
+    address validates through IPV4_STRINGIFY (range-checked), a string
+    argument to IPV4_STRINGIFY through IPV4_PARSE, and a uint string
+    stays NULL (IPv4AddressParseExpressionTest
+    testValidStringArgUnsignedInt vs testValidIntegerArg)."""
+    fn, args = name.upper(), _args(inner)
+    if fn == "IPV4_STRINGIFY" and args and _literal(args[0]) is not None:
+        args[0] = _body("IPV4_PARSE", args[:1])
+    elif fn != "IPV4_STRINGIFY" and args and re.fullmatch(r"[0-9]+L?",
+                                                           args[0]):
+        args[0] = _body("IPV4_STRINGIFY", [args[0].rstrip("Ll") + "L"])
+    return _body(fn, args)
+
+
+def _array_concat(name: str, inner: str, _ctx) -> str:
+    """ARRAY_CONCAT over array constructors is Spark's type-generic
+    concat: the reference keeps LONG_ARRAY (CalciteArraysQueryTest
+    testSomeArrayFunctionsWithScanQuery pins [7, null]). Over a column
+    it is the ARRAY<STRING> body of the multi-value case."""
+    args = _args(inner)
+    if args and all(re.match(r"array\s*\(", a, re.IGNORECASE) for a in args):
+        return f"concat({inner})"
+    return _body(name, args)
+
+
+def _spark_str(v) -> str:
+    """A Spark SQL string literal (backslash and quote escaped)."""
+    return "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+# keys above which LOOKUP() stops inlining a map literal and joins the
+# broadcast lookup view instead (VERDICT r8 missing #4)
+_LOOKUP_INLINE_MAX = 10_000
+
+
+def _lookup(name: str, inner: str, registry) -> str:
+    """LOOKUP(key, 'name') (QueryLookupOperatorConversion): the key's
+    value in the registered lookup (registry.lookup_map: max(v) for a
+    duplicated key); NULL for an unknown or empty lookup. Up to
+    _LOOKUP_INLINE_MAX keys the lookup is a map literal, the broadcast
+    LookupSegment; above it a scalar subquery on the broadcast-hinted
+    lookup_<name> view, which Catalyst plans as a broadcast join (and
+    Spark refuses inside a higher-order function's lambda)."""
+    key, lname = _call_args(name, inner, 2, 2)
+    lname, key = _literal(lname), f"CAST({key} AS STRING)"
+    if lname is None:
+        raise ValueError("LOOKUP needs a literal lookup name")
+    if registry is None or lname not in registry.lookup_names():
+        return "CAST(NULL AS STRING)"
+    m = registry.lookup_map(lname, _LOOKUP_INLINE_MAX)
+    if m is None:
+        return f"(SELECT v FROM lookup_{lname} WHERE k = {key})"
+    if not m:
+        return "CAST(NULL AS STRING)"
+    pairs = ", ".join(f"{_spark_str(k)}, {_spark_str(v)}"
+                      for k, v in m.items())
+    return f"element_at(map({pairs}), {key})"
+
+
+_INLINE = {
+    **dict.fromkeys((name for name, *_ in FUNCTION_BODIES), _inline),
+    "PARSE_LONG": _parse_long,
+    **dict.fromkeys(("TRUNC", "TRUNCATE"), _truncate),
+    **dict.fromkeys(("MV_SLICE", "ARRAY_SLICE"), _slice),
+    **dict.fromkeys(("IPV4_PARSE", "IPV4_MATCH", "IPV4_STRINGIFY"), _ipv4),
+    "ARRAY_CONCAT": _array_concat,
+    "MV_CONTAINS": lambda n, a, _r: _contains_array(n, a, _r) or _inline(n, a),
+    "LOOKUP": _lookup,
+    # the one-element array _align_mv_in_unions wraps a scalar union arm in
+    "__MV_WRAP": lambda _n, a, _r: f"array(CAST({a} AS STRING))",
+}
 
 
 def _rewrite_bare_varchar(text: str) -> str:
@@ -1508,39 +1584,6 @@ def _find_all(seg: str, needle: str):
         i = seg.find(needle, i + len(needle))
 
 
-def _expand_mv_macros(expr: str) -> str:
-    """Inline-expand registered MV/array SQL macros inside ``expr`` —
-    Spark refuses SQL UDFs inside a Generate (LATERAL VIEW explode),
-    so an exploded item must be pure built-in expressions."""
-    from apache_druid_spark.functions.registry import mv_macro_bodies
-
-    macros = mv_macro_bodies()
-    changed = True
-    while changed:
-        changed = False
-        for name, (argnames, body) in macros.items():
-            for start, op, cp in _find_calls(expr, name):
-                args = _split_top_args(expr[op + 1:cp])
-                if len(args) != len(argnames):
-                    continue
-                # two-phase: placeholders first, so an argument VALUE
-                # that happens to equal a later parameter name is never
-                # re-substituted
-                rep = body
-                for i2, an in enumerate(argnames):
-                    rep = re.sub(rf"\b{re.escape(an)}\b",
-                                 f"__MVARG{i2}__", rep)
-                for i2, av in enumerate(args):
-                    rep = rep.replace(f"__MVARG{i2}__",
-                                      f"({av.strip()})")
-                expr = expr[:start] + "(" + rep + ")" + expr[cp + 1:]
-                changed = True
-                break
-            if changed:
-                break
-    return expr
-
-
 def _explode_mv_array_items(text: str, mv_cols) -> str:
     """GROUP BY an ARRAY-VALUED expression of an MV column (MV_APPEND,
     MV_FILTER_ONLY, a transform-mapped scalar expression, ...) explodes
@@ -1659,8 +1702,7 @@ def _explode_mv_array_items(text: str, mv_cols) -> str:
 
                 new = (text[:bstart]
                        + _rep(text[bstart:pre_where_end])
-                       + f" LATERAL VIEW OUTER explode("
-                       + f"{_expand_mv_macros(it)}) AS {alias} "
+                       + f" LATERAL VIEW OUTER explode({it}) AS {alias} "
                        + text[pre_where_end:m.start()]
                        + _rep(text[m.start():bend])
                        + text[bend:])
@@ -2510,26 +2552,30 @@ def _unwrap_mv_array_wrap(text: str, mv_cols) -> str:
     — unwrap it rather than building array<array<string>>."""
     lower = {c.lower() for c in mv_cols}
     # ARRAYS_OVERLAP: ARRAY_OVERLAP was already renamed by translate()
-    # before this pass runs
+    # before this pass runs; MV_CONTAINS(x, ARRAY[mv]) is contains-ALL
     for fn in ("MV_OVERLAP", "MV_CONTAINS", "ARRAY_OVERLAP",
-               "ARRAY_CONTAINS", "ARRAYS_OVERLAP"):
+               "ARRAYS_OVERLAP"):
         changed = True
         while changed:
             changed = False
             for start, op, cp in _find_calls(text, fn):
-                args = _split_top_args(text[op + 1:cp])
+                args = _args(text[op + 1:cp])
                 if len(args) != 2:
                     continue
-                m2 = re.fullmatch(r"\s*array\s*\(\s*([A-Za-z_]\w*)\s*\)"
-                                  r"\s*", args[1], re.IGNORECASE)
-                if m2 and m2.group(1).lower() in lower:
-                    text = (text[:op + 1] + args[0].strip() + ", "
-                            + m2.group(1) + text[cp:])
-                    changed = True
-                    break
-    # the contains-ALL rewrite (translate) may already have produced
-    # forall(array(mv), ...) from MV_CONTAINS(x, ARRAY[mv]) — same
-    # identity unwrap applies
+                m2 = re.fullmatch(r"array\s*\(\s*([A-Za-z_]\w*)\s*\)",
+                                  args[1], re.IGNORECASE)
+                if not (m2 and m2.group(1).lower() in lower):
+                    continue
+                if fn == "MV_CONTAINS":  # unwrapped below
+                    text = text[:start] + _contains_all(*args) + text[cp + 1:]
+                else:
+                    text = (text[:op + 1] + args[0] + ", " + m2.group(1)
+                            + text[cp:])
+                changed = True
+                break
+    # the contains-ALL rule of ARRAY_CONTAINS (translate) produced
+    # forall(array(mv), ...) from ARRAY_CONTAINS(x, ARRAY[mv]) — the
+    # same identity unwrap applies
     for col in mv_cols:
         text = _sub_outside_strings(
             text,
@@ -2932,109 +2978,6 @@ def _align_mv_in_unions(text: str, mv_by_table) -> str:
     return text
 
 
-# keys above which LOOKUP() stops inlining a map literal and joins the
-# broadcast lookup view instead (VERDICT r8 missing #4)
-_LOOKUP_INLINE_MAX = 10_000
-
-
-def _inline_lookup_calls(text: str, registry) -> str:
-    """Inline ``LOOKUP(key, 'name')`` calls to
-    element_at(map(...), CAST(key AS STRING)) from the registered
-    lookup contents. The registered SQL UDF spelling breaks when the
-    key is a lambda variable (an element-mapped MV expression —
-    Spark's ResolveSQLFunctions cannot rewrite a SQL UDF whose
-    argument is a higher-order-function lambda var:
-    MISSING_ATTRIBUTES __mv_e), so the dialect path always inlines;
-    lookups are by contract small broadcast maps (LookupSegment), the
-    literal is the broadcast. Unknown / non-literal names fall through
-    to the UDF."""
-    if not getattr(registry, "_lookups", None):
-        return text
-    if not re.search(r"\bLOOKUP\s*\(", text, re.IGNORECASE):
-        return text
-    from apache_druid_spark.functions.registry import _esc
-
-    cache = getattr(registry, "_lookup_inline_cache", None)
-    if cache is None or cache[0] != registry.epoch:
-        cache = (registry.epoch, {})
-        registry._lookup_inline_cache = cache
-    maps = cache[1]
-
-    def _map_for(lname):
-        """Inline map SQL for one lookup, built LAZILY per name
-        (VERDICT r9 wrong #2: eagerly collecting every registered
-        lookup on the first LOOKUP( occurrence is bounded but wasteful
-        with many lookups). False = empty (fall through to the UDF);
-        None = oversized (subquery rewrite); str = map(...) literal.
-
-        Scale cap (VERDICT r8 missing #4): above the threshold a
-        map(...) literal would be a multi-megabyte SQL string (and a
-        driver collect of the whole lookup). Oversized lookups rewrite
-        to a correlated scalar subquery on the broadcast-hinted
-        lookup_<name> view instead — Catalyst plans it as a broadcast
-        left-outer join, the same physical shape as Druid's
-        LookupSegment join."""
-        if lname in maps:
-            return maps[lname]
-        # Dedup BEFORE the cap (ADVICE r11): the cap decides whether a
-        # map(...) literal is affordable, so it must measure distinct
-        # keys, not raw rows — a lookup with few keys but many
-        # duplicate rows stays inline. groupBy(k).agg(max(v)) is the
-        # exact dedup the lookup_<name> view applies
-        # (functions/registry.py), so both LOOKUP paths agree,
-        # including on all-NULL-valued keys (SQL max ignores NULLs ->
-        # NULL), which the literal then OMITS: element_at on a missing
-        # key already yields NULL, where the old _esc(None) rendered
-        # the string 'None' (ADVICE r11).
-        from pyspark.sql.functions import max as _sql_max
-        rows = (registry.lookup_df(lname)
-                .groupBy("k").agg(_sql_max("v").alias("v"))
-                .limit(_LOOKUP_INLINE_MAX + 1).collect())
-        if not rows:
-            maps[lname] = False
-        elif len(rows) > _LOOKUP_INLINE_MAX:
-            maps[lname] = None
-        else:
-            pairs = ", ".join(
-                f"'{_esc(k)}', '{_esc(v)}'"
-                for k, v in rows
-                if k is not None and v is not None)
-            maps[lname] = f"map({pairs})"
-        return maps[lname]
-
-    changed = True
-    while changed:
-        changed = False
-        for start, op, cp in _find_calls(text, "LOOKUP"):
-            args = _split_top_args(text[op + 1:cp])
-            if len(args) != 2:
-                continue
-            nm = re.fullmatch(r"\s*'((?:[^']|'')*)'\s*", args[1])
-            if not nm:
-                continue
-            lname = nm.group(1).replace("''", "'")
-            if lname not in registry._lookups:
-                continue
-            m = _map_for(lname)
-            if m is False:
-                continue  # empty lookup: leave for the registered UDF
-            if m is None:
-                # oversized: broadcast-join via correlated scalar
-                # subquery. (Known corner: a LOOKUP over a lambda var
-                # inside a HOF can't take this path — Spark rejects
-                # correlated subqueries there; such lookups must stay
-                # under the inline cap.)
-                repl = (f"(SELECT v FROM lookup_{lname} WHERE k = "
-                        f"CAST({args[0].strip()} AS STRING))")
-            else:
-                repl = (f"element_at({m}, "
-                        f"CAST({args[0].strip()} AS STRING))")
-            text = text[:start] + repl + text[cp + 1:]
-            changed = True
-            break
-    return text
-
-
 def _check_mv_lambda_hygiene(text: str) -> None:
     """Post-condition on the MV rewrite pipeline (VERDICT r7 #8): every
     __mv_e / __mv_sq token must sit inside a higher-order-function call
@@ -3112,7 +3055,7 @@ def _rewrite_mv_to_array_scalar(text: str, mv_cols) -> str:
     one-element array (CalciteMultiValueStringQueryTest
     testMultiValueToArrayGroupAsArrayWithSingleValueDim: MV_TO_ARRAY(
     dim1) groups as [''], ['1'], ...; a NULL scalar stays NULL). The
-    registered UDF is typed ARRAY<STRING> (identity for true MV
+    inlined body is typed ARRAY<STRING> (identity for true MV
     columns), so the scalar-column form rewrites here — bare column
     arguments not known to be MV are scalars."""
     mv_lower = {c.lower() for c in mv_cols}
@@ -3135,23 +3078,6 @@ def _rewrite_mv_to_array_scalar(text: str, mv_cols) -> str:
                 f"array(CAST({arg} AS STRING)))")
         text = text[:s] + repl + text[c + 1:]
         pos = s + len(repl)
-
-
-def _expand_mv_wrap(text: str) -> str:
-    """Expand the __mv_wrap(x) markers _align_mv_in_unions planted to
-    array(CAST(x AS STRING)) — run after _rewrite_mv_semantics so the
-    wrapped scalar never got MV element-mapping."""
-    while True:
-        found = None
-        for start, op, cp in _find_calls(text, "__mv_wrap"):
-            found = (start, op, cp)
-            break
-        if found is None:
-            return text
-        start, op, cp = found
-        inner = text[op + 1:cp]
-        text = (text[:start] + f"array(CAST({inner} AS STRING))"
-                + text[cp + 1:])
 
 
 # SQL type keywords that follow AS inside CAST(...) — not aliases
@@ -3435,18 +3361,15 @@ def _flag(context, key: str) -> bool:
 
 def druid_sql(spark: SparkSession, text: str, registry=None,
               parameters=None, context=None) -> DataFrame:
-    """Run a Druid SQL string on Spark: register scalar shims, translate
-    the aggregate surface, and hand the rest to Catalyst (parse/validate/
+    """Run a Druid SQL string on Spark: translate it, inline the Druid
+    functions Spark lacks, and hand the rest to Catalyst (parse/validate/
     optimize — the entire SqlLifecycle of the reference,
     sql/.../SqlLifecycle.java, collapses into this call).
 
-    Function/view registration is idempotent and driver-side chatty
-    (~40 CREATE FUNCTION round trips), so it runs once per
-    (session, registry, table-set) and is remembered on the session
-    object; registering a new datasource (e.g. a publish/compaction
-    mid-session) re-registers just the views on the next call."""
-    from apache_druid_spark.functions.registry import register_druid_functions
-
+    The registry's tables, lookups and views become temp views once per
+    (session, registry, epoch, table-set), remembered on the session
+    object; registering anything (e.g. a publish/compaction
+    mid-session) bumps the epoch and refreshes them on the next call."""
     if parameters is not None or "?" in text:
         text = bind_parameters(text, parameters)
     if (registry is not None and context
@@ -3455,59 +3378,56 @@ def druid_sql(spark: SparkSession, text: str, registry=None,
         text = _inline_context_views(text, registry)
     names = tuple(registry.names()) if registry is not None else ()
     epoch = registry.epoch if registry is not None else 0
-    marker = getattr(spark, "_druid_sql_registered", None)
-    if marker != (id(registry), epoch, names):
-        if marker is None or marker[0] != id(registry):
-            register_druid_functions(spark, registry)
-        else:
-            # epoch change only: refresh the `lookup` schema views +
-            # LOOKUP() function (no Spark job) so lookups registered
-            # or re-registered since the last call are addressable
-            from apache_druid_spark.functions.registry import \
-                register_lookup_function
+    if (registry is not None and getattr(
+            spark, "_druid_sql_registered", None) != (id(registry), epoch,
+                                                      names)):
+        from pyspark.sql.functions import broadcast, max as _max
 
-            register_lookup_function(spark, registry)
-        if registry is not None:
-            # epoch changes on ANY register(), including same-name
-            # re-registration — refresh all views so a second INSERT
-            # into an existing target is visible to later SELECTs
-            for name in names:
-                df = registry.table(name)
-                if "__segment" in df.columns:  # internal partition id
-                    df = df.drop("__segment")
-                df.createOrReplaceTempView(name)
+        # epoch changes on ANY register(), including same-name
+        # re-registration — refresh all views so a second INSERT into an
+        # existing target is visible to later SELECTs
+        for name in names:
+            df = registry.table(name)
+            if "__segment" in df.columns:  # internal partition id
+                df = df.drop("__segment")
+            df.createOrReplaceTempView(name)
+        # broadcast-hinted (the reference ships lookups whole to every
+        # task, LookupSegment), one value per key as registry.lookup_map
+        for lname in registry.lookup_names():
+            broadcast(registry.lookup_df(lname).groupBy("k")
+                      .agg(_max("v").alias("v"))
+                      ).createOrReplaceTempView(f"lookup_{lname}")
         # mark BEFORE materializing views: each view body runs back
         # through druid_sql (full dialect pipeline) and must not
         # re-enter this registration block
         spark._druid_sql_registered = (id(registry), epoch, names)
-        if registry is not None:
-            # Views may reference each other in any name order; iterate
-            # to convergence (each pass resolves at least the views
-            # whose dependencies materialized in earlier passes). On
-            # any terminal failure, clear the marker so the next call
-            # retries the whole registration instead of running with a
-            # half-materialized view set.
-            pending = list(registry.view_names())
-            try:
-                while pending:
-                    first_err = None
-                    progressed = False
-                    for name in list(pending):
-                        try:
-                            vdf = druid_sql(
-                                spark, registry.view_sql(name), registry)
-                        except Exception as exc:  # noqa: BLE001
-                            if first_err is None:
-                                first_err = exc
-                            continue
-                        vdf.createOrReplaceTempView(f"view_{name}")
-                        pending.remove(name)
-                        progressed = True
-                    if not progressed:
-                        raise first_err
-            except Exception:
-                spark._druid_sql_registered = None
-                raise
+        # Views may reference each other in any name order; iterate to
+        # convergence (each pass resolves at least the views whose
+        # dependencies materialized in earlier passes). On any terminal
+        # failure, clear the marker so the next call retries the whole
+        # registration instead of running with a half-materialized view
+        # set.
+        pending = list(registry.view_names())
+        try:
+            while pending:
+                first_err = None
+                progressed = False
+                for name in list(pending):
+                    try:
+                        vdf = druid_sql(
+                            spark, registry.view_sql(name), registry)
+                    except Exception as exc:  # noqa: BLE001
+                        if first_err is None:
+                            first_err = exc
+                        continue
+                    vdf.createOrReplaceTempView(f"view_{name}")
+                    pending.remove(name)
+                    progressed = True
+                if not progressed:
+                    raise first_err
+        except Exception:
+            spark._druid_sql_registered = None
+            raise
     explain = re.match(r"(?is)^\s*EXPLAIN\s+PLAN\s+FOR\s+(.+)$", text)
     if explain:
         return _explain_plan_for(spark, explain.group(1), registry,
@@ -3524,17 +3444,6 @@ def druid_sql(spark: SparkSession, text: str, registry=None,
             text, context["sqlCurrentTimestamp"], tz)
     translated = translate(text, tz)
     translated = _rewrite_call(translated, "__round_int", "round")
-    # Druid casts never throw. get_spark() runs non-ANSI (the faithful
-    # mode — truncating numeric-string casts); on a caller-provided
-    # ANSI session fall back to TRY_CAST so one malformed row still
-    # cannot kill a scan (null instead of truncate for '10.1'-style
-    # input — the lesser divergence).
-    try:
-        _ansi = str(spark.conf.get("spark.sql.ansi.enabled")).lower()
-    except Exception:  # noqa: BLE001 — conf unavailable: assume lenient
-        _ansi = "false"
-    if _ansi == "true":
-        translated = _rewrite_call(translated, "CAST", "TRY_CAST")
     if registry is not None:
         # Resolve column kinds against the tables this statement
         # actually references (word-boundary match on the translated
@@ -3557,11 +3466,22 @@ def druid_sql(spark: SparkSession, text: str, registry=None,
             translated = _align_mv_in_unions(translated, mv_by_table)
             translated = _rewrite_mv_semantics(translated, mv_cols,
                                                mv_by_table)
-            translated = _expand_mv_wrap(translated)
             translated = _hint_broadcast_mv_joins(translated)
             _check_mv_lambda_hygiene(translated)
         translated = _rewrite_mv_to_array_scalar(translated, mv_cols)
-        translated = _inline_lookup_calls(translated, registry)
+    # after the MV passes, which read the MV_*/ARRAY_* call names
+    translated = _rewrite_calls(translated, registry, _INLINE)
+    # Druid casts never throw. get_spark() runs non-ANSI (the faithful
+    # mode — truncating numeric-string casts); on a caller-provided
+    # ANSI session fall back to TRY_CAST so one malformed row still
+    # cannot kill a scan (null instead of truncate for '10.1'-style
+    # input — the lesser divergence).
+    try:
+        _ansi = str(spark.conf.get("spark.sql.ansi.enabled")).lower()
+    except Exception:  # noqa: BLE001 — conf unavailable: assume lenient
+        _ansi = "false"
+    if _ansi == "true":
+        translated = _rewrite_call(translated, "CAST", "TRY_CAST")
     if registry is not None and ("sys_" in translated
                                  or "information_schema_" in translated):
         # rebuild the catalog views so they reflect publishes/streams

@@ -204,44 +204,15 @@ def test_lookup_inline_cache_is_lazy(spark):
     r = DatasourceRegistry(spark)
     register_testdata(r, SF_DIR)
     r.register_lookup("wanted", {"1": "one", "2": "two"})
-    collected = []
-    unwanted = r.table("nation").select(
-        F.col("n_nationkey").cast("string"),
-        F.col("n_name")).toDF("k", "v")
-
-    class Spy:
-        """Delegates to the real DataFrame but records the inline
-        cache's touch. Since ADVICE r11 the cache's first call is
-        .groupBy() (dedup before the capped collect) — but
-        register_lookup_function ALSO calls groupBy per lookup to
-        build the lazy lookup_<name> views (no collect, fine), so
-        only the _map_for frame counts."""
-
-        def groupBy(self, *cols):
-            import traceback
-            stack = "".join(traceback.format_stack(limit=10))
-            if "_map_for" in stack:
-                collected.append(cols)
-            return unwanted.groupBy(*cols)
-
-        def __getattr__(self, name):
-            return getattr(unwanted, name)
-
-    r._lookups["unwanted"] = unwanted
-    orig = r.lookup_df
-
-    def spy_lookup_df(name):
-        if name == "unwanted":
-            return Spy()
-        return orig(name)
-
-    r.lookup_df = spy_lookup_df
+    r.register_lookup("unwanted", r.table("nation").select(
+        F.col("n_nationkey").cast("string"), F.col("n_name")))
     out = druid_sql(
         spark,
         "SELECT LOOKUP('1', 'wanted') AS v FROM nation LIMIT 1",
         r).first()
     assert out["v"] == "one"
-    assert collected == []  # the other lookup was never collected
+    # the other lookup was never collected
+    assert set(r.lookup_maps) == {"wanted"}
     # referencing it later still works
     out2 = druid_sql(
         spark,
@@ -249,4 +220,4 @@ def test_lookup_inline_cache_is_lazy(spark):
         "FROM nation WHERE n_nationkey = 0",
         r).first()
     assert out2["v"] is not None
-    assert collected  # now it was built, lazily
+    assert "unwanted" in r.lookup_maps  # now it was built, lazily

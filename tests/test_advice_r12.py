@@ -29,6 +29,10 @@ from apache_druid_spark.sql import dialect
 from apache_druid_spark.sql.dialect import druid_sql
 
 
+def _analyzed(df) -> str:
+    return df._jdf.queryExecution().analyzed().toString()
+
+
 @pytest.fixture()
 def base_table(spark):
     r = DatasourceRegistry(spark)
@@ -59,15 +63,14 @@ def test_lookup_null_value_paths_agree(spark, base_table):
     nullish = spark.createDataFrame(
         [("a", None), ("b", "bee")], "k string, v string")
     base_table.register_lookup("nully2", nullish)
-    inline = dialect._inline_lookup_calls(
-        "SELECT LOOKUP('a', 'nully2') AS la FROM advr12", base_table)
-    assert "element_at(map(" in inline
-    assert "None" not in inline       # no stringified NULL in the literal
-    from apache_druid_spark.functions.registry import (
-        register_lookup_function)
-    register_lookup_function(spark, base_table)
-    via_view = spark.sql(
-        "SELECT v FROM lookup_nully2 WHERE k = 'a'").first()
+    inline = _analyzed(druid_sql(
+        spark, "SELECT LOOKUP('b', 'nully2') AS lb FROM advr12",
+        base_table))
+    # the literal holds no stringified NULL: the NULL pair is omitted
+    assert "element_at(map(b, bee), " in inline
+    via_view = druid_sql(
+        spark, "SELECT v FROM lookup.nully2 WHERE k = 'a'",
+        base_table).first()
     assert via_view["v"] is None
 
 
@@ -105,10 +108,11 @@ def test_lookup_inline_cap_is_post_dedup(spark, base_table, monkeypatch):
         [("a", f"v{i}") for i in range(4)]
         + [("b", f"w{i}") for i in range(4)], "k string, v string")
     base_table.register_lookup("duppy12", dup)
-    text = dialect._inline_lookup_calls(
-        "SELECT LOOKUP('a', 'duppy12') AS la FROM advr12", base_table)
-    assert "element_at(map(" in text          # inline, not subquery
-    assert "SELECT v FROM lookup_" not in text
+    plan = _analyzed(druid_sql(
+        spark, "SELECT LOOKUP('a', 'duppy12') AS la FROM advr12",
+        base_table))
+    assert "element_at(map(" in plan          # inline, not subquery
+    assert "scalar-subquery" not in plan
     # and the dedup pick matches the view path (max v)
     out = druid_sql(
         spark, "SELECT LOOKUP('a', 'duppy12') AS la, "
@@ -123,9 +127,10 @@ def test_lookup_oversized_post_dedup_still_subquery(spark, base_table,
     big = spark.createDataFrame(
         [(f"k{i}", f"v{i}") for i in range(5)], "k string, v string")
     base_table.register_lookup("biggy12", big)
-    text = dialect._inline_lookup_calls(
-        "SELECT LOOKUP('k1', 'biggy12') AS la FROM advr12", base_table)
-    assert "SELECT v FROM lookup_biggy12" in text
+    plan = _analyzed(druid_sql(
+        spark, "SELECT LOOKUP('k1', 'biggy12') AS la FROM advr12",
+        base_table))
+    assert "scalar-subquery" in plan and "lookup_biggy12" in plan
 
 
 # -- 4: entry order is derived from committed evidence ---------------------

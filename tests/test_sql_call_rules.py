@@ -1,22 +1,40 @@
-"""The call-rule table of the SQL dialect (`_CALL_RULES`, applied by
-`_rewrite_calls`): one nested same-name sample per Druid function, row
-checks of nested calls and of call names inside string literals, and
-Druid (Calcite) string-literal semantics — a backslash is an ordinary
-character."""
+"""The two rule tables of the SQL dialect, both applied by
+`_rewrite_calls`: `_CALL_RULES` inside `translate` and the inline table
+`_INLINE` after the multi-value passes. One nested same-name sample per
+Druid function, row checks of nested calls, of the shapes a rule once
+split off for a registered function, and of call names inside string
+literals, and Druid (Calcite) string-literal semantics — a backslash is
+an ordinary character."""
 
 from __future__ import annotations
 
+import glob
+import os
+import re
 from datetime import datetime
 
 import pytest
 
 from apache_druid_spark.sql.dialect import (
-    _CALL_RULES, _RENAMES, druid_sql, translate,
+    _BODIES, _CALL_RULES, _INLINE, _RENAMES, _inline, _rewrite_calls,
+    druid_sql, translate,
 )
+
+PKG = os.path.join(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))), "apache_druid_spark")
+
+
+def _rest(k: str) -> str:
+    return "".join(f", c{i}" for i in range(1, len(_BODIES[k][0])))
+
 
 # key -> (outer call with {} where the nested call goes, nested call)
 SAMPLES = {
     **{k: (f"{k}({{}})", f"{k}(x)") for k in _RENAMES},
+    **{k: (f"{k}({{}}{_rest(k)})", f"{k}(c0{_rest(k)})")
+       for k, rule in _INLINE.items() if rule is _inline},
+    "LOOKUP": ("LOOKUP({}, 'lk')", "LOOKUP(dim1, 'lk')"),
+    "__MV_WRAP": ("__mv_wrap({})", "__mv_wrap(dim1)"),
     "REGEXP_EXTRACT": ("REGEXP_EXTRACT({}, '[0-9]+')",
                        "REGEXP_EXTRACT(dim1, 'a[0-9]+')"),
     "REGEXP_LIKE": ("REGEXP_LIKE(CAST({} AS STRING), 'true')",
@@ -99,26 +117,103 @@ SAMPLES = {
         "APPROX_COUNT_DISTINCT_DS_THETA(DISTINCT dim1)"),
 }
 
-# these rules fire only on a literal argument, which cannot hold a call
-LITERAL_ONLY = {"IPV4_PARSE", "IPV4_STRINGIFY"}
+# the other argument count or type of an entry that takes two shapes
+MORE_SAMPLES = {
+    "PARSE_LONG": ("PARSE_LONG({})", "PARSE_LONG('12')"),
+    "TRUNCATE": ("TRUNCATE({}, 2)", "TRUNCATE(m1, 1)"),
+    "IPV4_PARSE": ("IPV4_PARSE({})", "IPV4_PARSE('192.168.0.1')"),
+    "IPV4_STRINGIFY": ("IPV4_STRINGIFY({})", "IPV4_STRINGIFY(3232235777)"),
+    "IPV4_MATCH": ("IPV4_MATCH(CAST({} AS STRING), '10.0.0.0/8')",
+                   "IPV4_MATCH('10.0.0.1', '10.0.0.0/8')"),
+    "MV_SLICE": ("MV_SLICE({}, 1, 2)", "MV_SLICE(dim3, 0, 1)"),
+    "ARRAY_SLICE": ("ARRAY_SLICE({}, 1, 2)", "ARRAY_SLICE(arr, 0, 1)"),
+    "ARRAY_CONCAT": ("ARRAY_CONCAT({}, arr)", "ARRAY_CONCAT(dim3, arr)"),
+    "MV_CONTAINS": ("MV_CONTAINS({}, 'a')", "MV_CONTAINS(dim3, 'b')"),
+    "TIME_FLOOR": ("TIME_FLOOR({}, p)", "TIME_FLOOR(__time, p)"),
+    "TIME_CEIL": ("TIME_CEIL({}, p)", "TIME_CEIL(__time, p)"),
+    "TIME_SHIFT": ("TIME_SHIFT({}, p, 2)", "TIME_SHIFT(__time, p, -1)"),
+}
 HOLE = "hole_"
 
 
+def rewrite(sql: str) -> str:
+    """Both rule tables, as druid_sql applies them without a registry."""
+    return _rewrite_calls(translate(sql), None, _INLINE)
+
+
 def test_every_rule_has_a_nested_sample():
-    assert set(SAMPLES) == set(_CALL_RULES)
+    assert set(SAMPLES) == set(_CALL_RULES) | set(_INLINE)
+
+
+def test_no_function_is_both_a_rule_and_inlined():
+    assert not set(_CALL_RULES) & set(_INLINE)
+
+
+def test_no_function_is_registered_with_spark():
+    """Every Druid SQL function is text the dialect inlines: the package
+    declares no Spark SQL function."""
+    paths = glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True)
+    assert len(paths) > 20
+    for path in paths:
+        assert not re.search(r"\bCREATE\s+(?:\w+\s+)*?FUNCTION\b",
+                             open(path).read(), re.IGNORECASE), path
+
+
+def test_bodies_hold_no_backslash():
+    # a body is inlined into Druid-form text (the time rules, inside
+    # translate) and into Spark-form text (after it): both read it alike
+    assert not any("\\" in text for _, _, text in _BODIES.values())
+
+
+def nested_rewrite(outer: str, inner: str) -> None:
+    inner_out = rewrite(inner)
+    outer_out = rewrite(outer.format(HOLE))
+    assert inner_out != inner
+    assert outer_out != outer.format(HOLE)
+    # the outer rule sees the nested call already rewritten, and its
+    # own output is never scanned again
+    assert rewrite(outer.format(inner)) == outer_out.replace(HOLE, inner_out)
 
 
 @pytest.mark.parametrize("key", sorted(SAMPLES))
 def test_nested_same_name_call_is_rewritten_at_both_levels(key):
-    outer, inner = SAMPLES[key]
-    inner_out = translate(inner)
-    outer_out = translate(outer.format(HOLE))
-    assert inner_out != inner
-    assert (outer_out == outer.format(HOLE)) == (key in LITERAL_ONLY)
-    # the outer rule sees the nested call already rewritten, and its
-    # own output is never scanned again
-    assert translate(outer.format(inner)) == \
-        outer_out.replace(HOLE, inner_out)
+    nested_rewrite(*SAMPLES[key])
+
+
+@pytest.mark.parametrize("key", sorted(MORE_SAMPLES))
+def test_nested_call_of_the_second_shape(key):
+    nested_rewrite(*MORE_SAMPLES[key])
+
+
+# each shape a rewrite rule once fitted to a registered function's
+# arity or type, over one row: s = ['a'], t = 2000-01-01T03:00, p = PT2H
+@pytest.mark.parametrize("expr, want", [
+    ("PARSE_LONG('42')", 42),
+    ("PARSE_LONG('-ff', 16)", -255),
+    ("TRUNC(-1.77)", -1.0),
+    ("TRUNCATE(1.777, 2)", 1.77),
+    ("IPV4_PARSE(3232235777)", 3232235777),
+    ("IPV4_PARSE('192.168.1.1')", 3232235777),
+    ("IPV4_STRINGIFY(3232235777)", "192.168.1.1"),
+    ("IPV4_STRINGIFY('192.168.0.1')", "192.168.0.1"),
+    ("IPV4_MATCH(3232235777, '192.168.0.0/16')", True),
+    ("IPV4_MATCH('10.0.0.1', '192.168.0.0/16')", False),
+    ("MV_SLICE(ARRAY['a', 'b', 'c'], 1)", ["b", "c"]),
+    ("ARRAY_SLICE(ARRAY['a', 'b', 'c'], 0, 2)", ["a", "b"]),
+    ("ARRAY_CONCAT(ARRAY[1], ARRAY[2])", [1, 2]),
+    ("ARRAY_CONCAT(s, ARRAY['z'])", ["a", "z"]),
+    ("MV_CONTAINS(s, 'a')", True),
+    ("MV_CONTAINS(s, ARRAY['a', 'b'])", False),
+    ("TIME_FLOOR(t, p)", datetime(2000, 1, 1, 2, 0)),
+    ("TIME_CEIL(t, p)", datetime(2000, 1, 1, 4, 0)),
+    ("TIME_SHIFT(t, p, 2)", datetime(2000, 1, 1, 7, 0)),
+])
+def test_shape_once_split_between_a_rule_and_a_function(spark, expr, want):
+    row = druid_sql(spark, f"""
+        SELECT {expr} AS v FROM (SELECT ARRAY['a'] AS s, 'PT2H' AS p,
+                                        TIMESTAMP '2000-01-01 03:00:00' AS t)
+    """).first()
+    assert row.v == want
 
 
 def test_call_names_inside_literals_are_kept():

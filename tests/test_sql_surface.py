@@ -1,20 +1,17 @@
-"""Druid SQL surface tests: registered SQL UDFs + dialect translation
-(SURVEY.md §2.13) — modeled on the reference's CalciteQueryTest golden
-pattern but oracle-checked inline."""
+"""Druid SQL surface tests: inlined Druid functions + dialect
+translation (SURVEY.md §2.13) — modeled on the reference's
+CalciteQueryTest golden pattern but oracle-checked inline."""
 
-import pytest
-
-from apache_druid_spark.functions.registry import register_druid_functions
 from apache_druid_spark.sql.dialect import druid_sql, translate
 
 
-@pytest.fixture(scope="module", autouse=True)
-def _funcs(spark, registry):
-    register_druid_functions(spark, registry)
+def _one(spark, expr, registry=None):
+    return druid_sql(spark, f"SELECT {expr} AS v",
+                     registry).collect()[0]["v"]
 
 
-def _one(spark, expr):
-    return spark.sql(f"SELECT {expr} AS v").collect()[0]["v"]
+def _analyzed(df) -> str:
+    return df._jdf.queryExecution().analyzed().toString()
 
 
 def test_time_floor_hour(spark):
@@ -77,9 +74,8 @@ def test_scalar_shims(spark):
 
 
 def test_lookup_sql_function(spark, registry):
-    register_druid_functions(spark, registry)
-    assert _one(spark, "LOOKUP('abc', 'lookyloo')") == "xabc"
-    assert _one(spark, "LOOKUP('zzz', 'lookyloo')") is None
+    assert _one(spark, "LOOKUP('abc', 'lookyloo')", registry) == "xabc"
+    assert _one(spark, "LOOKUP('zzz', 'lookyloo')", registry) is None
 
 
 def test_lookup_inline_cap_falls_back_to_join(spark):
@@ -99,12 +95,10 @@ def test_lookup_inline_cap_falls_back_to_join(spark):
     r.register("lkp_probe", spark.createDataFrame(
         [("7",), ("99999",), ("nope",)], "key string").withColumn(
         "__time", F.lit("2024-01-01").cast("timestamp")))
-    from apache_druid_spark.sql import dialect as D
-
-    translated = D._inline_lookup_calls(
-        "SELECT LOOKUP(key, 'biglkp') AS v FROM lkp_probe", r)
-    assert "map(" not in translated
-    assert len(translated) < 500, len(translated)
+    plan = _analyzed(druid_sql(
+        spark, "SELECT LOOKUP(key, 'biglkp') AS v FROM lkp_probe", r))
+    assert "map(" not in plan and "scalar-subquery" in plan
+    assert len(plan) < 2000, len(plan)
     out = druid_sql(spark,
                     "SELECT key, LOOKUP(key, 'biglkp') AS v "
                     "FROM lkp_probe ORDER BY key", r).collect()

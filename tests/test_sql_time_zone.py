@@ -54,6 +54,16 @@ def test_time_parse_with_pattern(spark):
                LA) == datetime(2000, 1, 1, 11, 0)
 
 
+def test_time_parse_keeps_the_strings_own_offset(spark):
+    assert one(spark, "TIME_PARSE('2000-01-01T00:00:00Z')", LA) \
+        == datetime(2000, 1, 1, 0, 0)
+
+
+def test_time_parse_reads_a_bare_string_in_the_zone(spark):
+    assert one(spark, "TIME_PARSE('2000-01-01 00:00:00')", LA) \
+        == datetime(2000, 1, 1, 8, 0)
+
+
 def test_time_floor_null_origin(spark):
     assert one(spark, f"TIME_FLOOR({T0}, 'P1D', NULL)", LA) \
         == one(spark, f"TIME_FLOOR({T0}, 'P1D')", LA) \
@@ -135,6 +145,14 @@ def test_native_zone_matches_sql(spark, native, sql, want):
         "t timestamp, u timestamp")
     got = df.select(compile_expression(native).alias("v")).first()["v"]
     assert got == one(spark, sql) == want
+
+
+def test_native_timestamp_format_prints_the_zone_offset(spark):
+    df = spark.createDataFrame([(datetime(2000, 1, 1, 3, 0),)],
+                               "t timestamp")
+    got = df.select(compile_expression(
+        "timestamp_format(t, null, 'America/Los_Angeles')").alias("v"))
+    assert got.first()["v"] == "1999-12-31T19:00:00.000-08:00"
 
 
 # -- the query context reaches every statement ----------------------------
