@@ -22,6 +22,7 @@ period floors to months.
 from __future__ import annotations
 
 from apache_druid_spark.functions.bloom import bloom_test_sql
+from apache_druid_spark.model.granularity import EPOCH_MONTHS
 
 # The ISO-8601 period argument `period` read per row: field i of the
 # pattern (1=Y 2=M 3=W 4=D 5=H 6=Min 7=S) as an INT, 0 when absent
@@ -39,8 +40,10 @@ _MILLIS = "(" + " + ".join(
     ((3, 604_800_000), (4, 86_400_000), (5, 3_600_000), (6, 60_000),
      (7, 1000))) + ")"
 # months since year 0, floored to a multiple of the period's months
+# counted from the epoch
 _MONTH_FLOOR = (f"(year(ts) * 12 + month(ts) - 1 - "
-                f"pmod(year(ts) * 12 + month(ts) - 1, {_MONTHS}))")
+                f"pmod(year(ts) * 12 + month(ts) - {EPOCH_MONTHS + 1}, "
+                f"{_MONTHS}))")
 
 
 PERIOD_BODIES: list[tuple[str, str, str, str]] = [
@@ -89,18 +92,10 @@ FUNCTION_BODIES: list[tuple[str, str, str, str]] = [
     # columns in this engine (MultiValueStringOperatorConversions.java
     # MV_TO_ARRAY reinterprets the MV column as ARRAY — same value)
     ("MV_TO_ARRAY", "a ARRAY<STRING>", "ARRAY<STRING>", "a"),
-    # ARRAY_* arithmetic shims (Array{Slice,OffsetOf,OrdinalOf}
-    # OperatorConversion.java); the direct name maps live in
-    # sql/dialect.py _RENAMES. String-element arrays — the only
-    # array type the reference's MV columns produce.
-    # ARRAY_CONCAT must stay a distinct head (not bare concat): the MV
-    # element-mapping pass treats concat over an MV input as an
-    # element-mapped scalar, and GROUP BY semantics differ (ARRAY_*
-    # groups as arrays, MV_* explodes)
-    ("ARRAY_CONCAT", "a ARRAY<STRING>, b ARRAY<STRING>", "ARRAY<STRING>",
-     "concat(a, b)"),
-    ("ARRAY_SLICE", "a ARRAY<STRING>, s INT, e INT", "ARRAY<STRING>",
-     "slice(a, s + 1, e - s)"),
+    # ARRAY_* arithmetic shims (Array{OffsetOf,OrdinalOf}
+    # OperatorConversion.java), comparing as strings; the direct name
+    # maps live in sql/dialect.py _RENAMES, and ARRAY_SLICE and
+    # ARRAY_CONCAT, which keep the element type, in its _INLINE.
     ("ARRAY_OFFSET_OF", "a ARRAY<STRING>, v STRING", "INT",
      "CASE WHEN array_position(a, v) = 0 THEN NULL ELSE CAST(array_position(a, v) - 1 AS INT) END"),
     ("ARRAY_ORDINAL_OF", "a ARRAY<STRING>, v STRING", "INT",
@@ -190,9 +185,9 @@ FUNCTION_BODIES: list[tuple[str, str, str, str]] = [
     # -- ipv4 --------------------------------------------------------------
     # IPv4AddressParseExprMacro / IPv4AddressExprUtils: only a
     # well-formed dotted-quad STRING parses (octets 0-255; uint
-    # strings, IPv6 forms and hostnames are NULL); a long-typed literal
-    # argument is the address itself, range-checked [0, 2^32) (the
-    # dialect's IPV4_* entry, sql/dialect._ipv4)
+    # strings, IPv6 forms and hostnames are NULL); an integral argument
+    # is the address itself, range-checked [0, 2^32) (the dialect's
+    # IPV4_* entry, sql/dialect._ipv4, picks by the argument's type)
     ("IPV4_PARSE", "s STRING", "BIGINT",
      """CASE WHEN s RLIKE concat('^(25[0-5]|2[0-4][0-9]|[01]?[0-9]?',
             '[0-9])([.](25[0-5]|2[0-4][0-9]|[01]?[0-9]?[0-9])){3}$')
@@ -212,13 +207,12 @@ FUNCTION_BODIES: list[tuple[str, str, str, str]] = [
     ("TRUNCATE", "x DOUBLE, d INT", "DOUBLE",
      """CASE WHEN x >= 0 THEN floor(x * power(10, d)) / power(10, d)
         ELSE -floor(-x * power(10, d)) / power(10, d) END"""),
-    # IPv4AddressMatchExprMacro: a non-IPv4 address (hostname, uint
-    # string, IPv6 form) yields FALSE, not NULL; network and broadcast
+    # IPv4AddressMatchExprMacro over the parsed address: a non-IPv4
+    # address (NULL here) yields FALSE, not NULL; network and broadcast
     # addresses are inside the subnet (inclusive prefix compare)
-    ("IPV4_MATCH", "addr STRING, subnet STRING", "BOOLEAN",
+    ("IPV4_MATCH", "addr BIGINT, subnet STRING", "BOOLEAN",
      """coalesce(
-        floor(IPV4_PARSE(addr)
-              / power(2, 32 - cast(split(subnet, '/')[1] AS INT)))
+        floor(addr / power(2, 32 - cast(split(subnet, '/')[1] AS INT)))
         = floor(IPV4_PARSE(split(subnet, '/')[0])
               / power(2, 32 - cast(split(subnet, '/')[1] AS INT))),
         false)"""),

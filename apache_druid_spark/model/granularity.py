@@ -328,9 +328,14 @@ def _floor_period_from_origin(col: Column, months: int, millis: int,
         F.array_max(F.filter(cands, lambda x: x <= t)))
 
 
-def _floor_months(col: Column, n_months: int, origin_months: int = 0) -> Column:
-    m = (F.year(col) * F.lit(12) + F.month(col) - F.lit(1)) - F.lit(origin_months)
-    fm = (m - F.pmod(m, F.lit(n_months))) + F.lit(origin_months)
+# months from year 0 to the epoch: PeriodGranularity counts month periods
+# from 1970-01 (P7M floors 2000-06-15 to 2000-05-01)
+EPOCH_MONTHS = 1970 * 12
+
+
+def _floor_months(col: Column, n_months: int) -> Column:
+    m = F.year(col) * F.lit(12) + F.month(col) - F.lit(1)
+    fm = m - F.pmod(m - F.lit(EPOCH_MONTHS), F.lit(n_months))
     return F.make_timestamp(
         F.floor(fm / 12).cast("int"),
         (F.pmod(fm, F.lit(12)) + F.lit(1)).cast("int"),

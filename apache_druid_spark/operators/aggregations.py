@@ -23,9 +23,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from apache_druid_spark.model.datasource import TIME_COLUMN
-from apache_druid_spark.operators.expressions import compile_expression
+from apache_druid_spark.operators.expressions import (
+    compile_expression, expression_sql,
+)
 from apache_druid_spark.operators.filters import compile_filter
-from apache_druid_spark.operators.util import fcol
+from apache_druid_spark.operators.util import fcol, ident
 
 _SUM_TYPES = {"longSum": "long", "doubleSum": "double", "floatSum": "float"}
 _MINMAX = {
@@ -420,10 +422,15 @@ def _expression_lambda(spec: dict, registry, df=None) -> Column:
         raise NotImplementedError(
             "expression lambda aggregator needs at most one field in v1")
     acc_id = spec.get("accumulatorIdentifier", "__acc")
-    init = compile_expression(spec["initialValue"], registry)
+    env = {acc_id: "__fold_acc"}
+    # a field-less lambda folds once per ROW (the reference's diy-count
+    # shape: fold '__acc + 1' — testGroupByWithExpressionAggregator's
+    # "rows")
+    values = "collect_list(1)"
     if fields:
         field = fields[0]
-        values = F.collect_list(fcol(field))
+        env[field] = "__fold_x"
+        values = f"collect_list({ident(field)})"
         if (df is not None and field in df.columns
                 and isinstance(df.schema[field].dataType, T.ArrayType)):
             # a multi-value input folds PER VALUE — the reference's
@@ -432,24 +439,15 @@ def _expression_lambda(spec: dict, registry, df=None) -> Column:
             # testGroupByExpressionAggregatorArrayMultiValue:
             # array_set_add(acc, placementish) accumulates the
             # flattened token set)
-            values = F.flatten(values)
-        folded = F.aggregate(
-            values, init,
-            lambda acc, x: compile_expression(
-                spec["fold"], registry, env={acc_id: acc, field: x}))
-    else:
-        # a field-less lambda folds once per ROW (the reference's
-        # diy-count shape: fold '__acc + 1' — testGroupByWith
-        # ExpressionAggregator's "rows")
-        values = F.collect_list(F.lit(1))
-        folded = F.aggregate(
-            values, init,
-            lambda acc, _x: compile_expression(
-                spec["fold"], registry, env={acc_id: acc}))
+            values = f"flatten({values})"
+    folded = (f"aggregate({values}, "
+              f"{expression_sql(spec['initialValue'], registry)}, "
+              f"(__fold_acc, __fold_x) -> "
+              f"{expression_sql(spec['fold'], registry, env)})")
     fin = spec.get("finalize")
     if fin:
-        return compile_expression(fin, registry, env={"o": folded})
-    return folded
+        folded = expression_sql(fin, registry, {"o": folded})
+    return F.expr(folded)
 
 
 def _filtered(inner: dict, cond: Column, df, registry) -> Column:

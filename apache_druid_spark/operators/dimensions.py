@@ -17,10 +17,18 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from apache_druid_spark.operators.util import fcol, map_column
+from apache_druid_spark.operators.util import fcol
 
 _DRUID_OUT_TYPES = {"STRING": "string", "LONG": "long", "FLOAT": "float",
                     "DOUBLE": "double"}
+
+
+def _map_literal(m: dict) -> Column:
+    """A string -> string map literal (NULL when empty): a lookup shipped
+    with the plan, the analogue of Druid's broadcast lookup container."""
+    if not m:
+        return F.lit(None).cast("map<string,string>")
+    return F.create_map(*[F.lit(x) for kv in m.items() for x in kv])
 
 
 def compile_extraction_fn(spec: dict, col: Column, registry=None,
@@ -137,14 +145,14 @@ def compile_extraction_fn(spec: dict, col: Column, registry=None,
             # inline map lookup; MapLookupExtractor.apply: map.get ->
             # null for a null-VALUED key exactly like a missing key, so
             # the pair is omitted
-            mexpr = map_column({str(k): str(v) for k, v in
+            mexpr = _map_literal({str(k): str(v) for k, v in
                                 spec["lookup"].get("map", {}).items()
                                 if v is not None})
         else:
             name = spec.get("lookup") or spec.get("name")
             if registry is None:
                 raise ValueError("registered lookup requires DatasourceRegistry")
-            mexpr = map_column(registry.lookup_map(name))
+            mexpr = _map_literal(registry.lookup_map(name))
         out = F.element_at(mexpr, col.cast("string"))
         if spec.get("retainMissingValue", False):
             out = F.coalesce(out, col.cast("string"))

@@ -1,15 +1,25 @@
-"""Druid native expression language -> Catalyst Column translator.
+"""Druid native expression language -> Spark SQL text.
 
 Reference grammar: core/src/main/antlr4/org/apache/druid/math/expr/antlr/Expr.g4;
-evaluator core/src/main/java/org/apache/druid/math/expr/Function.java (3.8k LoC)
-and ApplyFunction.java (lambda higher-order functions).
+functions core/src/main/java/org/apache/druid/math/expr/Function.java and
+ApplyFunction.java (lambda higher-order functions).
 
-This is a small recursive-descent parser that builds pyspark Columns
-bottom-up — every function maps to a built-in ``pyspark.sql.functions``
-expression (JVM-side, codegen'd), never a Python UDF, so translated
-expressions run inside whole-stage codegen at full speed. Lambdas for
-map/filter/fold/any/all become Spark higher-order functions
-(transform/filter/aggregate/exists/forall).
+A small recursive-descent parser writes each expression as Spark SQL
+text (``expression_sql``); ``compile_expression`` (operators/util.py,
+re-exported here) wraps it in ``F.expr``, so this module builds no
+Column. Druid defines each
+SQL function as a conversion to a native one (DruidOperatorTable), so
+the library is shared the other way round: a native function with a
+Druid SQL counterpart is one ``_SQL_NAMES`` entry, the parser writes
+the call under its SQL name, and the SQL dialect's call-rule tables
+(``sql/dialect.lower_functions``: ``_CALL_RULES``, then ``_INLINE``)
+lower it exactly as they lower the SQL call. Such a function has one
+implementation for both languages, and a test fails on a second one
+here. A native function that is a Spark builtin under its own or
+another name is a ``_SPARK`` entry; the few native-only functions are
+small text builders in ``_BUILDERS``. Lambdas (map/filter/fold/any/all,
+cartesian_*) become Spark higher-order functions. Nothing is a Python
+UDF, so expressions run inside whole-stage codegen.
 
 Intentional divergences (documented):
   * Druid's legacy null-as-default mode is not implemented; we use
@@ -19,16 +29,15 @@ Intentional divergences (documented):
 
 from __future__ import annotations
 
+import itertools
 import re
-from typing import Callable
+from typing import Callable, NamedTuple
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-from apache_druid_spark.model.granularity import (
-    is_utc, time_ceil_col, time_floor_col, time_shift_col,
+from apache_druid_spark.model.granularity import parse_instant
+from apache_druid_spark.operators.util import (  # noqa: F401
+    compile_expression, ident,
 )
-from apache_druid_spark.operators.util import map_column
+from apache_druid_spark.sql.dialect import _sql_str, lower_functions
 
 # ---------------------------------------------------------------------------
 # Tokenizer
@@ -64,15 +73,49 @@ def _tokenize(text: str) -> list[tuple[str, str]]:
 
 
 # ---------------------------------------------------------------------------
-# Parser -> Column
+# Parser -> SQL text
 # ---------------------------------------------------------------------------
 
+class _V(NamedTuple):
+    """A parsed (sub)expression: its Spark SQL text, and what the parser
+    knows of it without a schema."""
+    sql: str
+    lit: tuple = ()  # (value,) for a literal: cast types, origins
+    string: bool = False  # a string literal or a string '+' chain
+
+
+def _literal(value) -> _V:
+    """A literal. Integers are LONG like the reference's (ExprListenerImpl
+    exitLongExpr): a 32-bit INT would wrap (1024*1024*1024*1024 is 0)."""
+    if value is None:
+        sql = "NULL"
+    elif isinstance(value, str):
+        sql = _sql_str(value)
+    elif isinstance(value, int):
+        sql = f"{value}L"
+    else:
+        sql = f"{value!r}D"
+    return _V(sql, (value,), isinstance(value, str))
+
+
+def _number(v: _V) -> bool:
+    return bool(v.lit) and isinstance(v.lit[0], (int, float))
+
+
+def _bool(v: _V) -> str:
+    return f"CAST({v.sql} AS BOOLEAN)"
+
+
+def _double(v: _V) -> str:
+    return f"CAST({v.sql} AS DOUBLE)"
+
+
 class _Parser:
-    def __init__(self, tokens, env, registry):
+    def __init__(self, tokens, env, names):
         self.toks = tokens
         self.i = 0
-        self.env = env  # lambda params: name -> Column
-        self.registry = registry  # for lookup()
+        self.env = env  # name -> SQL text (lambda parameters, caller binds)
+        self.names = names  # fresh lambda-variable numbers, shared
 
     def peek(self):
         return self.toks[self.i]
@@ -88,27 +131,27 @@ class _Parser:
             raise ValueError(f"expected {val!r}, got {v!r}")
 
     # precedence (Expr.g4): unary -> ^ -> * / % -> + - -> cmp -> && -> ||
-    def parse(self) -> Column:
-        c = self.parse_or()
+    def parse(self) -> _V:
+        v = self.parse_or()
         if self.peek()[0] != "eof":
             raise ValueError(f"trailing tokens: {self.toks[self.i:]}")
-        return c
+        return v
 
-    def parse_or(self) -> Column:
+    def parse_or(self) -> _V:
         left = self.parse_and()
         while self.peek()[1] == "||":
             self.next()
-            left = _as_bool(left) | _as_bool(self.parse_and())
+            left = _V(f"({_bool(left)} OR {_bool(self.parse_and())})")
         return left
 
-    def parse_and(self) -> Column:
+    def parse_and(self) -> _V:
         left = self.parse_cmp()
         while self.peek()[1] == "&&":
             self.next()
-            left = _as_bool(left) & _as_bool(self.parse_cmp())
+            left = _V(f"({_bool(left)} AND {_bool(self.parse_cmp())})")
         return left
 
-    def parse_cmp(self) -> Column:
+    def parse_cmp(self) -> _V:
         left = self.parse_add()
         while self.peek()[1] in ("<", "<=", ">", ">=", "==", "!="):
             op = self.next()[1]
@@ -118,131 +161,104 @@ class _Parser:
             # NOT match '1.234': 1.234 != 1.0 — ExpressionFilterTest
             # testOneSingleValuedStringColumn), while Spark's implicit
             # string-vs-int cast truncates the string to 1
-            lval = getattr(left, "__druid_literal__", None)
-            rval = getattr(right, "__druid_literal__", None)
-            if (isinstance(rval, (int, float)) and not isinstance(rval, bool)
-                    and lval is None):
-                left = left.cast("double")
-                right = F.lit(float(rval))
-            elif (isinstance(lval, (int, float))
-                    and not isinstance(lval, bool) and rval is None):
-                left = F.lit(float(lval))
-                right = right.cast("double")
-            left = {
-                "<": left.__lt__, "<=": left.__le__, ">": left.__gt__,
-                ">=": left.__ge__, "==": left.__eq__, "!=": left.__ne__,
-            }[op](right)
+            if any(_number(a) and not (b.lit and b.lit[0] is not None)
+                   for a, b in ((left, right), (right, left))):
+                lsql, rsql = _double(left), _double(right)
+            else:
+                lsql, rsql = left.sql, right.sql
+            left = _V(f"({lsql} {'=' if op == '==' else op} {rsql})")
         return left
 
-    def parse_add(self) -> Column:
+    def parse_add(self) -> _V:
         left = self.parse_mul()
         while self.peek()[1] in ("+", "-"):
             op = self.next()[1]
             right = self.parse_mul()
-            if op == "+" and (_is_string_expr(left)
-                              or _is_string_expr(right)):
+            if op == "+" and (left.string or right.string):
                 # BinPlusExpr.evalString: '+' with a STRING operand
                 # concatenates (TopNQueryRunnerTest
-                # testFullOnTopNOverPostAggsOnDimension:
-                # "market + 'x'")
-                left = F.concat(left.cast("string"),
-                                right.cast("string"))
-                try:  # chains of string-plus stay string-typed
-                    left.__druid_string__ = True
-                except AttributeError:
-                    pass
+                # testFullOnTopNOverPostAggsOnDimension: "market + 'x'");
+                # chains of string-plus stay string-typed
+                left = _V(f"concat(CAST({left.sql} AS STRING), "
+                          f"CAST({right.sql} AS STRING))", string=True)
             else:
-                left = left + right if op == "+" else left - right
+                left = _V(f"({left.sql} {op} {right.sql})")
         return left
 
-    def parse_mul(self) -> Column:
+    def parse_mul(self) -> _V:
         left = self.parse_pow()
         while self.peek()[1] in ("*", "/", "%"):
             op = self.next()[1]
-            right = self.parse_pow()
-            if op == "*":
-                left = left * right
-            elif op == "/":
-                left = left / right
-            else:
-                left = left % right
+            left = _V(f"({left.sql} {op} {self.parse_pow().sql})")
         return left
 
-    def parse_pow(self) -> Column:
+    def parse_pow(self) -> _V:
         left = self.parse_unary()
         if self.peek()[1] == "^":  # right-associative
             self.next()
-            return F.power(left, self.parse_pow())
+            return _V(f"power({left.sql}, {self.parse_pow().sql})")
         return left
 
-    def parse_unary(self) -> Column:
+    def parse_unary(self) -> _V:
         k, v = self.peek()
         if v == "-":
             self.next()
-            return -self.parse_unary()
+            x = self.parse_unary()
+            # a negated number is a literal (exitUnaryOpExpr), so
+            # Long.MIN_VALUE is writable
+            return _literal(-x.lit[0]) if _number(x) else _V(f"(- {x.sql})")
         if v == "!":
             self.next()
-            return ~_as_bool(self.parse_unary())
+            return _V(f"(NOT {_bool(self.parse_unary())})")
         return self.parse_atom()
 
-    def parse_atom(self) -> Column:
+    def parse_atom(self) -> _V:
         k, v = self.next()
         if k == "number":
-            return (_tag_lit(float(v)) if ("." in v or "e" in v or "E" in v)
-                    else _tag_lit(int(v)))
+            return _literal(float(v) if ("." in v or "e" in v or "E" in v)
+                            else int(v))
         if k == "string":
-            return _tag_lit(_unescape(v[1:-1]))
+            return _literal(_unescape(v[1:-1]))
         if k == "qident":
             return self._ident(v[1:-1])
         if v == "(":
-            c = self.parse_or()
+            x = self.parse_or()
             self.expect(")")
-            return c
+            return x
         if v == "[":  # array literal
             items = []
             if self.peek()[1] != "]":
-                items.append(self.parse_or())
+                items.append(self.parse_or().sql)
                 while self.peek()[1] == ",":
                     self.next()
-                    items.append(self.parse_or())
+                    items.append(self.parse_or().sql)
             self.expect("]")
-            if not items:
-                # the reference types a bare [] as STRING_ARRAY
-                # (ApplyFunctionTest fold-into-[] / FunctionTest
-                # array_append([], 1) -> ['1']); Spark's would be
-                # ARRAY<VOID>, which no operation accepts
-                arr = F.array().cast("array<string>")
-            else:
-                arr = F.array(*items)
-            try:  # tag for value-type-driven dispatch (array_contains)
-                arr.__druid_array__ = True
-            except AttributeError:
-                pass
-            return arr
+            # the reference types a bare [] as STRING_ARRAY
+            # (ApplyFunctionTest fold-into-[] / FunctionTest
+            # array_append([], 1) -> ['1']); Spark's would be
+            # ARRAY<VOID>, which no operation accepts
+            return _V(f"array({', '.join(items)})" if items
+                      else "CAST(array() AS ARRAY<STRING>)")
         if k == "ident":
             if self.peek()[1] == "(":
                 return self._call(v)
             low = v.lower()
             if low == "null":
-                return _tag_lit(None)
-            if low == "true":
-                return F.lit(True)
-            if low == "false":
-                return F.lit(False)
+                return _literal(None)
+            if low in ("true", "false"):
+                return _V(low)
             return self._ident(v)
         raise ValueError(f"unexpected token {v!r}")
 
-    def _ident(self, name: str) -> Column:
-        if name in self.env:
-            return self.env[name]
-        # Druid columns are flat; dots (join prefixes like "j0.col") are
-        # part of the name, not struct access — backtick-quote them
-        if "." in name:
-            return F.col(f"`{name}`")
-        return F.col(name)
+    def _ident(self, name: str) -> _V:
+        # Druid columns are flat: a dot (join prefixes like "j0.col") is
+        # part of the name, never struct access
+        return _V(self.env.get(name) or ident(name))
 
     def _parse_lambda(self):
-        """Parse '(x, y) -> expr' or 'x -> expr'; returns (params, body_fn)."""
+        """Parse '(x, y) -> expr' or 'x -> expr'; returns (params,
+        body_fn), body_fn(*sql) the body's text with the parameters
+        bound to ``sql``."""
         params = []
         if self.peek()[1] == "(":
             self.next()
@@ -271,20 +287,23 @@ class _Parser:
             self.i += 1
         body = self.toks[start:self.i] + [("eof", "")]
 
-        def body_fn(*cols: Column) -> Column:
-            env = dict(self.env)
-            env.update(zip(params, cols))
-            return _Parser(body, env, self.registry).parse_or()
+        def body_fn(*sql: str) -> str:
+            env = {**self.env, **dict(zip(params, sql))}
+            return _Parser(body, env, self.names).parse_or().sql
 
         return params, body_fn
 
-    def _call(self, name: str) -> Column:
+    def var(self) -> str:
+        """A fresh lambda variable: never a column or an outer variable."""
+        return f"__x{next(self.names)}"
+
+    def _call(self, name: str) -> _V:
         self.expect("(")
         low = name.lower()
         if low in _APPLY_FUNCTIONS:
             result = _APPLY_FUNCTIONS[low](self)
             self.expect(")")
-            return result
+            return _V(result)
         args = []
         if self.peek()[1] != ")":
             args.append(self.parse_or())
@@ -292,110 +311,90 @@ class _Parser:
                 self.next()
                 args.append(self.parse_or())
         self.expect(")")
-        fn = _FUNCTIONS.get(low)
-        if fn is None:
-            raise ValueError(f"unknown druid expression function: {name!r}")
-        if low == "lookup":
-            return fn(self.registry, *args)
-        return fn(*args)
+        fn = _SQL_NAMES.get(low) or _SPARK.get(low)
+        if fn:
+            args = _NATIVE_ARGS.get(low, list)(args)
+            return _V(f"{fn}({', '.join(a.sql for a in args)})")
+        if low in _BUILDERS:
+            return _V(_BUILDERS[low](*args))
+        raise ValueError(f"unknown druid expression function: {name!r}")
 
 
 def _unescape(s: str) -> str:
     return s.replace("\\'", "'").replace("\\\\", "\\")
 
 
-def _as_bool(c: Column) -> Column:
-    return c.cast("boolean")
-
-
 # ---------------------------------------------------------------------------
 # Apply (lambda) functions — reference: core/.../math/expr/ApplyFunction.java
 # ---------------------------------------------------------------------------
 
-def _apply_map(p: _Parser) -> Column:
+def _lambda_over(p: _Parser, spark_fn: str, cond: bool = False) -> str:
+    """map/filter/any/all(x -> body, arr) -> spark_fn(arr, x -> body)."""
     _, body = p._parse_lambda()
     p.expect(",")
-    arr = p.parse_or()
-    return F.transform(arr, lambda x: body(x))
+    arr = p.parse_or().sql
+    x = p.var()
+    out = f"CAST({body(x)} AS BOOLEAN)" if cond else body(x)
+    return f"{spark_fn}({arr}, {x} -> {out})"
 
 
-def _apply_filter(p: _Parser) -> Column:
-    _, body = p._parse_lambda()
-    p.expect(",")
-    arr = p.parse_or()
-    return F.filter(arr, lambda x: _as_bool(body(x)))
-
-
-def _apply_fold(p: _Parser) -> Column:
+def _apply_fold(p: _Parser) -> str:
     # fold((x, acc) -> ..., arr, init)
     _, body = p._parse_lambda()
     p.expect(",")
-    arr = p.parse_or()
+    arr = p.parse_or().sql
     p.expect(",")
-    init = p.parse_or()
-    return F.aggregate(arr, init, lambda acc, x: body(x, acc))
+    init = p.parse_or().sql
+    x, acc = p.var(), p.var()
+    return f"aggregate({arr}, {init}, ({acc}, {x}) -> {body(x, acc)})"
 
 
-def _apply_any(p: _Parser) -> Column:
-    _, body = p._parse_lambda()
-    p.expect(",")
-    arr = p.parse_or()
-    return F.exists(arr, lambda x: _as_bool(body(x)))
-
-
-def _apply_all(p: _Parser) -> Column:
-    _, body = p._parse_lambda()
-    p.expect(",")
-    arr = p.parse_or()
-    return F.forall(arr, lambda x: _as_bool(body(x)))
-
-
-def _cartesian(arrs: list, fn: Callable) -> Column:
+def _cartesian(p: _Parser, arrs: list[str], fn: Callable, bound=()) -> str:
     """Nested transform over the cartesian product of ``arrs``,
-    flattened to a single array: cartesian over k arrays is k-1 nested
-    transforms + flattens, all codegen HOFs."""
+    flattened to one array: k arrays are k-1 nested transforms and
+    flattens, all codegen HOFs."""
+    x = p.var()
     if len(arrs) == 1:
-        return F.transform(arrs[0], lambda x: fn(x))
-    return F.flatten(F.transform(
-        arrs[0], lambda x: _cartesian(arrs[1:], lambda *ys: fn(x, *ys))))
+        return f"transform({arrs[0]}, {x} -> {fn(*bound, x)})"
+    inner = _cartesian(p, arrs[1:], fn, (*bound, x))
+    return f"flatten(transform({arrs[0]}, {x} -> {inner}))"
 
 
-def _apply_cartesian_map(p: _Parser) -> Column:
+def _apply_cartesian_map(p: _Parser) -> str:
     # cartesian_map((x, y, ...) -> expr, arr1, arr2, ...)
     params, body = p._parse_lambda()
     arrs = []
     while p.peek()[1] == ",":
         p.next()
-        arrs.append(p.parse_or())
+        arrs.append(p.parse_or().sql)
     if len(arrs) != len(params):
         raise ValueError("cartesian_map: lambda arity != array count")
-    return _cartesian(arrs, body)
+    return _cartesian(p, arrs, body)
 
 
-def _apply_cartesian_fold(p: _Parser) -> Column:
+def _apply_cartesian_fold(p: _Parser) -> str:
     # cartesian_fold((x, y, ..., acc) -> expr, arr1, arr2, ..., init)
     params, body = p._parse_lambda()
     rest = []
     while p.peek()[1] == ",":
         p.next()
-        rest.append(p.parse_or())
+        rest.append(p.parse_or().sql)
     arrs, init = rest[:-1], rest[-1]
     if len(arrs) != len(params) - 1:
         raise ValueError("cartesian_fold: lambda arity != array count + 1")
-    pairs = _cartesian(
-        arrs, lambda *xs: F.struct(*[x.alias(f"_{i}")
-                                     for i, x in enumerate(xs)]))
-    return F.aggregate(
-        pairs, init,
-        lambda acc, s: body(*[s[f"_{i}"] for i in range(len(arrs))], acc))
+    pairs = _cartesian(p, arrs, lambda *xs: "named_struct(" + ", ".join(
+        f"'_{i}', {x}" for i, x in enumerate(xs)) + ")")
+    acc, s = p.var(), p.var()
+    fields = [f"{s}._{i}" for i in range(len(arrs))]
+    return f"aggregate({pairs}, {init}, ({acc}, {s}) -> {body(*fields, acc)})"
 
 
-_APPLY_FUNCTIONS: dict[str, Callable] = {
-    "map": _apply_map,
-    "filter": _apply_filter,
+_APPLY_FUNCTIONS: dict[str, Callable[[_Parser], str]] = {
+    "map": lambda p: _lambda_over(p, "transform"),
+    "filter": lambda p: _lambda_over(p, "filter", cond=True),
     "fold": _apply_fold,
-    "any": _apply_any,
-    "all": _apply_all,
+    "any": lambda p: _lambda_over(p, "exists", cond=True),
+    "all": lambda p: _lambda_over(p, "forall", cond=True),
     "cartesian_map": _apply_cartesian_map,
     "cartesian_fold": _apply_cartesian_fold,
 }
@@ -404,649 +403,245 @@ _APPLY_FUNCTIONS: dict[str, Callable] = {
 # Scalar functions — reference: core/.../math/expr/Function.java
 # ---------------------------------------------------------------------------
 
-_DRUID_TO_SPARK_TYPE = {
-    "long": "long", "double": "double", "float": "float", "string": "string",
-    "array<long>": "array<long>", "array<double>": "array<double>",
-    "array<string>": "array<string>", "long_array": "array<long>",
-    "double_array": "array<double>", "string_array": "array<string>",
+# Druid's operator table read backwards: the Druid SQL function each
+# native function is the conversion of. The call is written under the
+# SQL name and lowered by the dialect's tables, the one implementation
+# of both (each value is a _CALL_RULES or _INLINE key — tested).
+_SQL_NAMES = {
+    "round": "ROUND",
+    "safe_divide": "SAFE_DIVIDE",
+    "bitwiseand": "BITWISE_AND",
+    "bitwiseor": "BITWISE_OR",
+    "bitwisexor": "BITWISE_XOR",
+    "bitwisecomplement": "BITWISE_COMPLEMENT",
+    "bitwiseshiftleft": "BITWISE_SHIFT_LEFT",
+    "bitwiseshiftright": "BITWISE_SHIFT_RIGHT",
+    "bitwiseconvertdoubletolongbits": "BITWISE_CONVERT_DOUBLE_TO_LONG_BITS",
+    "bitwiseconvertlongbitstodouble": "BITWISE_CONVERT_LONG_BITS_TO_DOUBLE",
+    "format": "STRING_FORMAT",
+    "parse_long": "PARSE_LONG",
+    "regexp_extract": "REGEXP_EXTRACT",
+    "regexp_like": "REGEXP_LIKE",
+    "contains_string": "CONTAINS_STRING",
+    "icontains_string": "ICONTAINS_STRING",
+    "repeat": "REPEAT",
+    "ltrim": "LTRIM",
+    "rtrim": "RTRIM",
+    "lookup": "LOOKUP",
+    "timestamp_floor": "TIME_FLOOR",
+    "timestamp_ceil": "TIME_CEIL",
+    "timestamp_shift": "TIME_SHIFT",
+    "timestamp_extract": "TIME_EXTRACT",
+    "timestamp_parse": "TIME_PARSE",
+    "timestamp": "TIME_PARSE",
+    "timestamp_format": "TIME_FORMAT",
+    "array_length": "ARRAY_LENGTH",
+    "array_offset": "ARRAY_OFFSET",
+    "array_ordinal": "ARRAY_ORDINAL",
+    "array_contains": "ARRAY_CONTAINS",
+    "array_overlap": "ARRAY_OVERLAP",
+    "array_offset_of": "ARRAY_OFFSET_OF",
+    "array_ordinal_of": "ARRAY_ORDINAL_OF",
+    "array_prepend": "ARRAY_PREPEND",
+    "array_concat": "ARRAY_CONCAT",
+    "array_slice": "ARRAY_SLICE",
+    "array_to_string": "ARRAY_TO_STRING",
+    "string_to_array": "STRING_TO_ARRAY",
+    "mv_to_array": "MV_TO_ARRAY",
+    "ipv4_parse": "IPV4_PARSE",
+    "ipv4_stringify": "IPV4_STRINGIFY",
+    "ipv4_match": "IPV4_MATCH",
+    "human_readable_binary_byte_format": "HUMAN_READABLE_BINARY_BYTE_FORMAT",
+    "human_readable_decimal_byte_format":
+        "HUMAN_READABLE_DECIMAL_BYTE_FORMAT",
+    "human_readable_decimal_format": "HUMAN_READABLE_DECIMAL_FORMAT",
 }
 
 
-_MANT_MASK = 4503599627370495        # 2^52 - 1
-_MANT_ONE = 4503599627370496.0       # 2^52
-_MIN_LONG = -9223372036854775808
+def _origin_instant(args: list[_V]) -> list[_V]:
+    """timestamp_floor/ceil(ts, period, origin, ...): a native origin is
+    epoch millis or an ISO string (ExprUtils.toPeriodGranularity), the
+    SQL one a TIMESTAMP (TimeFloorOperatorConversion writes it back as
+    millis)."""
+    if len(args) > 2 and args[2].lit and args[2].lit[0] is not None:
+        o = args[2].lit[0]
+        ms = parse_instant(o) if isinstance(o, str) else int(o)
+        args = [*args[:2], _V(f"timestamp_millis({ms}L)"), *args[3:]]
+    return args
 
 
-def _fn_long_bits_to_double(a: Column) -> Column:
-    """Long bits -> IEEE-754 double, exactly (see registry.py twin)."""
-    a = a.cast("long")
-    expo = F.shiftright(a, 52).bitwiseAND(F.lit(2047))
-    mant = a.bitwiseAND(F.lit(_MANT_MASK))
-    sign = F.when(a < 0, F.lit(-1.0)).otherwise(F.lit(1.0))
-    return (
-        F.when(expo == 2047,
-               F.when(mant != 0, F.lit(float("nan")))
-                .when(a < 0, F.lit(float("-inf")))
-                .otherwise(F.lit(float("inf"))))
-        .when(expo == 0,
-              sign * mant.cast("double")
-              * F.lit(2.0 ** -537) * F.lit(2.0 ** -537))
-        .otherwise(sign * (F.lit(_MANT_ONE) + mant.cast("double"))
-                   * F.power(F.lit(2.0),
-                             expo.cast("double") - F.lit(1075.0))))
+_NATIVE_ARGS = {"timestamp_floor": _origin_instant,
+                "timestamp_ceil": _origin_instant}
 
-
-def _fn_double_to_long_bits(x: Column) -> Column:
-    """IEEE-754 double -> long bits, exactly (see registry.py twin).
-    floor(log2) carries a two-sided guard against misrounding at exact
-    powers of two; subnormals scale by 2^537 twice (2^1074 overflows)."""
-    x = x.cast("double")
-    ax = F.abs(x)
-    e0 = F.floor(F.log2(ax))
-    corr = (F.when(F.power(F.lit(2.0), e0.cast("double")) > ax, F.lit(-1))
-             .when(F.power(F.lit(2.0), (e0 + 1).cast("double")) <= ax,
-                   F.lit(1))
-             .otherwise(F.lit(0)))
-    e = e0.cast("long") + corr
-    mant = ((ax / F.power(F.lit(2.0), e.cast("double")) - F.lit(1.0))
-            * F.lit(_MANT_ONE)).cast("long")
-    sub_mant = (ax * F.lit(2.0 ** 537) * F.lit(2.0 ** 537)).cast("long")
-    sign_bit = F.when(x < 0, F.lit(_MIN_LONG)).otherwise(F.lit(0))
-    return (
-        F.when(F.isnan(x), F.lit(9221120237041090560))
-        .when(x == F.lit(float("inf")), F.lit(9218868437227405312))
-        .when(x == F.lit(float("-inf")), F.lit(-4503599627370496))
-        .when(x == 0.0,
-              F.when(x.cast("string").startswith("-"), F.lit(_MIN_LONG))
-               .otherwise(F.lit(0)))
-        .otherwise(
-            sign_bit
-            + F.when(ax < F.lit(2.0 ** -1022), sub_mant)
-               .otherwise((e + 1023) * F.lit(4503599627370496) + mant)))
-
-
-_MIN_SUBNORMAL = 5e-324
-
-
-def _fn_next_after(a: Column, b: Column) -> Column:
-    """Math.nextAfter via bit arithmetic: adjacent doubles differ by
-    one in their long-bits representation (moving away from zero adds
-    one, toward zero subtracts one)."""
-    a = a.cast("double")
-    b = b.cast("double")
-    bits = _fn_double_to_long_bits(a)
-    up = F.when(a >= 0, _fn_long_bits_to_double(bits + 1)) \
-          .otherwise(_fn_long_bits_to_double(bits - 1))
-    down = F.when(a > 0, _fn_long_bits_to_double(bits - 1)) \
-            .otherwise(_fn_long_bits_to_double(bits + 1))
-    return (
-        F.when(F.isnan(a) | F.isnan(b), F.lit(float("nan")))
-        .when(a == b, b)
-        .when(a < b, F.when(a == 0.0, F.lit(_MIN_SUBNORMAL))
-                      .otherwise(up))
-        .otherwise(F.when(a == 0.0, F.lit(-_MIN_SUBNORMAL))
-                    .otherwise(down)))
-
-
-def _fn_get_exponent(d: Column) -> Column:
-    """Math.getExponent: unbiased IEEE-754 exponent. Derived from log2
-    with a pow-back correction (log2 alone can land one below at exact
-    powers of two); zero/subnormals -> -1023, NaN/Inf -> 1024, matching
-    Java (Function.java GetExponent)."""
-    x = F.abs(d.cast("double"))
-    e0 = F.round(F.log2(x)).cast("int")
-    e = F.when(F.power(F.lit(2.0), e0.cast("double")) <= x, e0) \
-         .otherwise(e0 - 1)
-    return (F.when(F.isnan(x) | (x == F.lit(float("inf"))), F.lit(1024))
-             .when(x < F.lit(2.0 ** -1022), F.lit(-1023))
-             .otherwise(e))
-
-
-def _fn_ulp(d: Column) -> Column:
-    """Math.ulp via 2^(getExponent-52); zero/subnormal -> MIN_VALUE,
-    Inf -> Inf, NaN -> NaN."""
-    x = F.abs(d.cast("double"))
-    return (F.when(F.isnan(x) | (x == F.lit(float("inf"))), x)
-             .when(x < F.lit(2.0 ** -1022), F.lit(4.9e-324))
-             .otherwise(F.power(
-                 F.lit(2.0), (_fn_get_exponent(d) - 52).cast("double"))))
-
-
-def _fn_next_up(d: Column) -> Column:
-    """Math.nextUp, exact via long-bits adjacency (the former
-    d + ulp(d) approximation diverged one ulp at exact negative powers
-    of two, where the spacing halves below the boundary)."""
-    dd = d.cast("double")
-    bits = _fn_double_to_long_bits(dd)
-    return (F.when(F.isnan(dd), dd)
-             .when(dd == F.lit(float("inf")), dd)
-             .when(dd == F.lit(0.0), F.lit(4.9e-324))
-             .when(dd >= 0, _fn_long_bits_to_double(bits + 1))
-             .otherwise(_fn_long_bits_to_double(bits - 1)))
-
-
-def _fn_cast(x: Column, t: Column) -> Column:
-    # type name must be a literal string
-    import json as _json
-
-    tname = _extract_literal(t)
-    return x.cast(_DRUID_TO_SPARK_TYPE.get(str(tname).lower(), str(tname).lower()))
-
-
-def _tag_lit(value) -> Column:
-    """lit() Column tagged with its python value so compile-time-constant
-    args (cast types, periods, patterns) are recoverable. Integer
-    literals are LONG-typed like the reference's (ExprListenerImpl
-    exitLongExpr) — F.lit would make small ones 32-bit INTs, and int
-    arithmetic wraps (1024*1024*1024*1024 overflowed to 0 pre-fix)."""
-    if isinstance(value, bool) or not isinstance(value, int):
-        c = F.lit(value)
-    else:
-        c = F.lit(value).cast("long")
-    try:
-        c.__druid_literal__ = value
-    except AttributeError:
-        pass
-    return c
-
-
-def _extract_literal(c: Column):
-    """Pull the python literal back out of a parser-produced lit() Column
-    (for args that must be compile-time constants)."""
-    if hasattr(c, "__druid_literal__"):
-        return c.__druid_literal__
-    raise ValueError("argument must be a literal")
-
-
-def _fn_case_searched(*args: Column) -> Column:
-    # case_searched(cond1, r1, cond2, r2, ..., [else])
-    c = None
-    i = 0
-    while i + 1 < len(args):
-        c = (F.when(_as_bool(args[i]), args[i + 1]) if c is None
-             else c.when(_as_bool(args[i]), args[i + 1]))
-        i += 2
-    if i < len(args) and c is not None:
-        c = c.otherwise(args[i])
-    return c
-
-
-def _fn_case_simple(*args: Column) -> Column:
-    # case_simple(expr, v1, r1, v2, r2, ..., [else])
-    subject = args[0]
-    c = None
-    i = 1
-    while i + 1 < len(args):
-        c = (F.when(subject == args[i], args[i + 1]) if c is None
-             else c.when(subject == args[i], args[i + 1]))
-        i += 2
-    if i < len(args) and c is not None:
-        c = c.otherwise(args[i])
-    return c
-
-
-def _bucket_args(period, rest) -> tuple[dict, str | None]:
-    """The (period[, origin[, timezone]]) tail of timestamp_floor and
-    timestamp_ceil (TimestampCeilExprMacro.java) -> (granularity, tz)."""
-    gran = {"type": "period", "period": str(_extract_literal(period))}
-    if rest:
-        try:
-            origin = _extract_literal(rest[0])
-            if origin is not None:
-                gran["origin"] = str(origin)
-        except ValueError:
-            pass
-    tz = _extract_literal(rest[1]) if len(rest) >= 2 else None
-    return gran, (str(tz) if tz is not None else None)
-
-
-def _fn_timestamp_shift(ts, period, step, *rest):
-    tz = _extract_literal(rest[0]) if rest else None
-    return time_shift_col(ts, str(_extract_literal(period)),
-                          int(_extract_literal(step)),
-                          str(tz) if tz is not None else None)
-
-
-_EXTRACT_UNITS = {
-    "epoch": lambda c: F.unix_timestamp(c),
-    "millisecond": lambda c: (F.unix_millis(c) % 1000),
-    "second": lambda c: F.second(c),
-    "minute": lambda c: F.minute(c),
-    "hour": lambda c: F.hour(c),
-    "day": lambda c: F.dayofmonth(c),
-    # Druid returns Joda dayOfWeek (1=Monday..7=Sunday) for BOTH DOW and
-    # ISODOW (TimestampExtractExprMacro.java:130-133) — not Spark's
-    # 1=Sunday dayofweek.
-    "dow": lambda c: F.pmod(F.dayofweek(c) + F.lit(5), F.lit(7)) + F.lit(1),
-    "isodow": lambda c: F.pmod(F.dayofweek(c) + F.lit(5), F.lit(7)) + F.lit(1),
-    "doy": lambda c: F.dayofyear(c),
-    "week": lambda c: F.weekofyear(c),
-    "month": lambda c: F.month(c),
-    "quarter": lambda c: F.quarter(c),
-    "year": lambda c: F.year(c),
+# Spark builtins of the same meaning, by native name
+_SPARK = {
+    **{n: n for n in (
+        "abs", "acos", "asin", "atan", "atan2", "cbrt", "ceil", "cos",
+        "cosh", "cot", "exp", "expm1", "floor", "hypot", "log", "log10",
+        "log1p", "pi", "power", "rint", "signum", "sin", "sinh", "sqrt",
+        "tan", "tanh", "concat", "replace", "right", "left", "lower",
+        "upper", "reverse", "lpad", "rpad", "coalesce", "array",
+        "array_append", "unix_timestamp")},
+    "pow": "power", "todegrees": "degrees", "toradians": "radians",
+    "strlen": "length", "nvl": "coalesce",
 }
 
-
-def _fn_timestamp_extract(ts, unit, *rest):
-    u = str(_extract_literal(unit)).lower()
-    tz = _extract_literal(rest[0]) if rest else None
-    if u not in _EXTRACT_UNITS:
-        raise ValueError(f"bad extract unit: {u}")
-    # epoch is an absolute instant — never wall-clock-shifted by tz
-    # (TimestampExtractExprMacro.java EPOCH uses millis directly)
-    local = ts if u == "epoch" or is_utc(tz) else F.from_utc_timestamp(
-        ts, str(tz))
-    return _EXTRACT_UNITS[u](local)
+# Druid type names Spark spells otherwise (LONG, DOUBLE, ARRAY<LONG>...
+# are Spark's too)
+_ARRAY_TYPES = {"long_array": "array<long>", "double_array": "array<double>",
+                "string_array": "array<string>"}
 
 
-def _fn_timestamp_parse(s, *rest):
-    # timestamp_parse(s[, pattern[, tz]]) — the string is read in tz
-    # and the result is the UTC instant (TimestampParseExprMacro.java)
-    pat, tz = ([_extract_literal(a) for a in rest[:2]] + [None, None])[:2]
-    parsed = (F.try_to_timestamp(s, F.lit(str(pat))) if pat
-              else F.try_to_timestamp(s))
-    return F.to_utc_timestamp(parsed, str(tz)) if tz else parsed
+def _cast(x: _V, t: _V) -> str:
+    if not t.lit:
+        raise ValueError("cast: the type must be a literal")
+    tname = str(t.lit[0]).lower()
+    return f"CAST({x.sql} AS {_ARRAY_TYPES.get(tname, tname)})"
 
 
-def _fn_timestamp_format(ts, *rest):
-    # timestamp_format(ts[, pattern[, tz]]) — renders in tz; the default
-    # ISO pattern ends in the zone's offset at ts, 'Z' when it is zero
-    # (ISODateTimeFormat.dateTime)
-    pat, tz = ([_extract_literal(a) for a in rest[:2]] + [None, None])[:2]
-    if is_utc(tz):
-        return F.date_format(ts, str(pat or "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"))
-    local = F.from_utc_timestamp(ts, str(tz))
-    if pat:
-        return F.date_format(local, str(pat))
-    mins = (F.unix_seconds(local) - F.unix_seconds(ts)) / 60
-    offset = F.when(mins == 0, F.lit("Z")).otherwise(F.format_string(
-        "%s%02d:%02d", F.when(mins < 0, "-").otherwise("+"),
-        (F.abs(mins) / 60).cast("int"), (F.abs(mins) % 60).cast("int")))
-    return F.concat(F.date_format(local, "yyyy-MM-dd'T'HH:mm:ss.SSS"), offset)
+def _case(test: Callable[[str], str], args) -> str:
+    """CASE over (when, then) pairs and an optional else."""
+    whens = " ".join(f"WHEN {test(w.sql)} THEN {t.sql}"
+                     for w, t in zip(args[::2], args[1::2]))
+    other = f" ELSE {args[-1].sql}" if len(args) % 2 else ""
+    return f"CASE {whens}{other} END"
 
 
-def _fn_lookup(registry, col, name_col, *rest):
-    if registry is None:
-        raise ValueError("lookup() requires a DatasourceRegistry")
-    name = str(_extract_literal(name_col))
-    res = F.element_at(map_column(registry.lookup_map(name)),
-                       col.cast("string"))
-    if rest:  # replaceMissingValueWith
-        res = F.coalesce(res, rest[0])
-    return res
+def _spread(spark_fn: str):
+    """greatest/least, whose Spark forms need two arguments."""
+    return lambda *a: (a[0].sql if len(a) == 1 else
+                       f"{spark_fn}({', '.join(x.sql for x in a)})")
 
 
-def _fn_array_offset_of(arr, v):
-    pos = F.array_position(arr, v)
-    return F.when(pos == 0, F.lit(None)).otherwise(pos - 1)
+# IEEE-754 helpers (Function.java GetExponent/Ulp/NextUp/NextAfter) over
+# the exact BITWISE_CONVERT_* reinterpretations: adjacent doubles differ
+# by one in their long bits (away from zero adds one)
+_MIN_SUBNORMAL = "4.9E-324D"
+_MIN_NORMAL = "2.2250738585072014E-308D"
 
 
-def _fn_array_ordinal_of(arr, v):
-    pos = F.array_position(arr, v)
-    return F.when(pos == 0, F.lit(None)).otherwise(pos)
+def _bits_step(d: str, step: str) -> str:
+    return (f"BITWISE_CONVERT_LONG_BITS_TO_DOUBLE("
+            f"BITWISE_CONVERT_DOUBLE_TO_LONG_BITS({d}) {step} 1)")
 
 
-_DBL_MAX = 1.7976931348623157e308
+def _get_exponent(v: _V) -> str:
+    """The unbiased exponent field: zero and subnormals -1023, NaN and
+    Infinity 1024, as Java's."""
+    bits = f"BITWISE_CONVERT_DOUBLE_TO_LONG_BITS({_double(v)})"
+    return f"(CAST(shiftright({bits}, 52) & 2047 AS INT) - 1023)"
 
 
-def _fn_round(a, *d):
-    """Function.java Round: BigDecimal.valueOf would throw on NaN and
-    +/-Infinity, so the reference guards NaN -> 0 and clamps infinities
-    to +/-Double.MAX_VALUE; non-numeric strings are NULL; floats round
-    through double (round(12.34f, 2) is 12.34, not 12.34000015)."""
-    c = a.cast("double")
-    if d:
-        try:
-            rounded = F.round(c, int(_extract_literal(d[0])))
-        except ValueError:
-            # non-foldable scale (round(d, y)) — Spark's round requires
-            # a literal; HALF_UP (away from zero) like BigDecimal
-            p = F.power(F.lit(10.0), d[0].cast("double"))
-            rounded = (F.signum(c)
-                       * F.floor(F.abs(c) * p + F.lit(0.5)) / p)
-    else:
-        rounded = F.round(c)
-    return (F.when(F.isnan(c), F.lit(0.0))
-            .when(c == F.lit(float("inf")), F.lit(_DBL_MAX))
-            .when(c == F.lit(float("-inf")), F.lit(-_DBL_MAX))
-            .otherwise(rounded))
+def _ulp(v: _V) -> str:
+    x = f"abs({_double(v)})"
+    return (f"CASE WHEN isnan({x}) OR {x} = CAST('Infinity' AS DOUBLE) "
+            f"THEN {x} WHEN {x} < {_MIN_NORMAL} THEN {_MIN_SUBNORMAL} "
+            f"ELSE power(2D, {_get_exponent(v)} - 52) END")
 
 
-def _is_string_expr(v) -> bool:
-    """Is the built expression a KNOWN string? True for string
-    literals (the parser tags literals with their python value) and
-    for columns tagged by string-returning builders. Bare column refs
-    return False — a column ref keeps numeric '+' semantics unless
-    the OTHER operand is a known string, which is how the reference's
-    golden shapes use string-plus (dim + 'literal')."""
-    if getattr(v, "__druid_string__", False):
-        return True
-    return isinstance(getattr(v, "__druid_literal__", None), str)
+def _next_up(v: _V) -> str:
+    d = _double(v)
+    return (f"CASE WHEN isnan({d}) OR {d} = CAST('Infinity' AS DOUBLE) "
+            f"THEN {d} WHEN {d} = 0 THEN {_MIN_SUBNORMAL} "
+            f"WHEN {d} > 0 THEN {_bits_step(d, '+')} "
+            f"ELSE {_bits_step(d, '-')} END")
 
 
-def _needle_is_array(v) -> bool:
-    """Is the built needle expression a KNOWN array? True for array
-    literals — the parser tags them (``__druid_array__``) at build
-    time, which is environment-independent (PySpark 4's classic
-    Column exposes no resolved expression type, and repr formats
-    differ under Spark Connect). The repr sniff remains only as a
-    fallback for array() Columns built outside the parser. An
-    array-typed COLUMN REF keeps single-element semantics — resolving
-    it would need the enclosing DataFrame's schema, which the
-    expression translator doesn't have (Druid's own
-    Function.ArrayContains is value-type-driven)."""
-    if getattr(v, "__druid_array__", False):
-        return True
-    return str(v).startswith("Column<'array(")
+def _next_after(a: _V, b: _V) -> str:
+    a, b = _double(a), _double(b)
+    return (f"CASE WHEN isnan({a}) OR isnan({b}) THEN CAST('NaN' AS DOUBLE) "
+            f"WHEN {a} = {b} THEN {b} "
+            f"WHEN {a} = 0 THEN CASE WHEN {a} < {b} THEN {_MIN_SUBNORMAL} "
+            f"ELSE -{_MIN_SUBNORMAL} END "
+            f"WHEN ({a} < {b}) = ({a} > 0) THEN {_bits_step(a, '+')} "
+            f"ELSE {_bits_step(a, '-')} END")
 
 
-def _fn_array_contains(a, v):
-    """array_contains: with an ARRAY second argument the reference
-    tests containment of ALL its elements (FunctionTest
-    testArrayContains: array_contains(b, [3, 4]) is true)."""
-    if _needle_is_array(v):
-        return F.forall(v, lambda e: F.array_contains(a, e))
-    return F.array_contains(a, v)
+# hyper_unique*: HLL-state expression builders (HyperUniqueExpressions.
+# java) carrying COMPLEX collector state through scalar expressions, so
+# expression-lambda aggregators can fold cardinality state
+# (GroupByQueryRunnerTest.testGroupByWithExpressionAggregatorWith
+# Complex[OnSubquery]). The collector is the DISTINCT VALUE SET
+# (array<string>): hyper_unique_add is a set-add that skips SQL nulls
+# like the reference (HyperUniqueExpressions.java:170), and the estimate
+# is the exact set size. Honest divergences:
+# (1) estimates are EXACT where Druid's HLL carries ~2% error
+#     (UNIQUES_9 = 9.0198... vs our 9.0) — the suite pins approx;
+# (2) these SCALAR spellings keep the exact-set state; the aggregator
+#     path folds them only when the spec carries NO estimate finalize.
+#     An estimate-finalized fold rewrites to REAL DataSketches HLL state
+#     (aggregations.py _hyper_unique_direct: hll_sketch_agg, lgK=12 —
+#     ≤ 2 KB per group at any cardinality), and the remaining exact-set
+#     uses are capped at 65,536 distinct values with a loud error: the
+#     reference bounds expression-lambda accumulators too
+#     (ExpressionLambdaAggregatorFactory's maxSizeBytes throws), and a
+#     silently truncated set would be a wrong estimate;
+# (3) a string and a number rendering to the same text collide
+#     ('16' vs 16L) where Druid hashes them apart.
+def _hyper_unique_add(x: _V, acc: _V) -> str:
+    s = f"CAST({x.sql} AS STRING)"
+    return (f"CASE WHEN {x.sql} IS NULL THEN {acc.sql} "
+            f"WHEN size({acc.sql}) >= 65536 AND NOT array_contains("
+            f"{acc.sql}, {s}) THEN CAST(raise_error('hyper_unique_add: "
+            f"exact-set collector exceeded 65536 distinct values — use the "
+            f"expression-lambda AGGREGATOR spelling (initialValue "
+            f"hyper_unique(), finalize hyper_unique_estimate(o)), which "
+            f"carries bounded HLL sketch state') AS ARRAY<STRING>) "
+            f"ELSE array_union({acc.sql}, array({s})) END")
 
 
-def _fn_human_readable(base: int, units: list, suffix: str):
-    """HumanReadableBytes.java formatter family: input truncated to
-    long, NULL stays NULL, |v| < base renders the integer with the bare
-    suffix, binary tiers by power-of-1024 through EiB, decimal tiers
-    integer-divide by 1000 while |v| >= 1e6 (truncation BEFORE the
-    final /1000.0). Bounds compare against ±b, never abs(v): abs
-    overflows at Long.MIN (the -inf cast), which renders '-8.00 EiB' /
-    '-9.22 EB' like the reference."""
-    def fn(n, *rest):
-        prec = int(_extract_literal(rest[0])) if rest else 2
-        v = n.cast("long")
-
-        def below(b):
-            return (v > F.lit(-b)) & (v < F.lit(b))
-
-        arr = F.array(*[F.lit(u) for u in units])
-        if base == 1024:
-            idx = F.lit(6)
-            for i in reversed(range(1, 7)):
-                idx = F.when(below(1024 ** i), i - 1).otherwise(idx)
-            val = v / F.power(F.lit(1024.0), idx.cast("double"))
-        else:
-            idx = F.lit(5)
-            for i in reversed(range(2, 7)):
-                idx = F.when(below(1000 ** i), i - 2).otherwise(idx)
-            pw = F.power(F.lit(1000.0), idx.cast("double")).cast("long")
-            val = ((v - v % pw) / pw) / F.lit(1000.0)
-        big = F.format_string(f"%.{prec}f %s", val,
-                              F.element_at(arr, idx.cast("int") + 1))
-        small = (F.concat(v.cast("string"), F.lit(suffix)) if suffix
-                 else v.cast("string"))
-        return F.when(n.isNull(), F.lit(None)) \
-            .when(below(base), small).otherwise(big)
-    return fn
+def _substring(s: _V, i: _V, n: _V) -> str:
+    """0-based index; a negative length runs to the end."""
+    return (f"CASE WHEN {n.sql} < 0 THEN substr({s.sql}, {i.sql} + 1) "
+            f"ELSE substr({s.sql}, {i.sql} + 1, {n.sql}) END")
 
 
-_IPV4_RE = (r"^(25[0-5]|2[0-4][0-9]|[01]?[0-9]?[0-9])"
-            r"(\.(25[0-5]|2[0-4][0-9]|[01]?[0-9]?[0-9])){3}$")
+def _strpos(h: _V, n: _V, *start: _V) -> str:
+    """0-based, -1 when absent, optional 0-based start offset
+    (FunctionTest.testStrpos)."""
+    s = f"{start[0].sql} + 1" if start else "1"
+    return f"(locate({n.sql}, {h.sql}, {s}) - 1)"
 
 
-def _ipv4_dotted_to_long(s):
-    p = F.split(s, r"\.")
-    return F.when(
-        s.rlike(_IPV4_RE),
-        F.element_at(p, 1).cast("long") * 16777216
-        + F.element_at(p, 2).cast("long") * 65536
-        + F.element_at(p, 3).cast("long") * 256
-        + F.element_at(p, 4).cast("long"))
-
-
-def _ipv4_long_valid(n):
-    return F.when(n.between(0, 4294967295), n.cast("long"))
-
-
-def _fn_ipv4_parse(v):
-    """ipv4_parse: a long in [0, 2^32) is the address itself; a
-    well-formed dotted-quad string parses; everything else is NULL
-    (IPv4AddressParseExprMacro — a numeric value reaching this
-    type-blind layer takes the long path, so uint STRINGS diverge from
-    the reference's NULL; the SQL layer keeps the strict contract)."""
-    as_long = v.cast("string").try_cast("long")
-    return F.coalesce(_ipv4_long_valid(as_long),
-                      _ipv4_dotted_to_long(v.cast("string")))
-
-
-def _fn_ipv4_stringify(v):
-    """ipv4_stringify: range-checked long renders dotted; a valid
-    dotted string normalizes through parse; invalid input is NULL."""
-    n = _fn_ipv4_parse(v)
-    return F.when(
-        n.isNotNull(),
-        F.concat_ws(
-            ".",
-            (F.floor(n / 16777216) % 256).cast("long").cast("string"),
-            (F.floor(n / 65536) % 256).cast("long").cast("string"),
-            (F.floor(n / 256) % 256).cast("long").cast("string"),
-            (n % 256).cast("string"),
-        ))
-
-
-_FUNCTIONS: dict[str, Callable] = {
-    # math
-    "abs": F.abs, "acos": F.acos, "asin": F.asin, "atan": F.atan,
-    "atan2": F.atan2, "cbrt": F.cbrt, "ceil": F.ceil, "cos": F.cos,
-    "cosh": F.cosh, "cot": F.cot, "exp": F.exp, "expm1": F.expm1,
-    "floor": F.floor, "hypot": F.hypot, "log": F.log, "log10": F.log10,
-    "log1p": F.log1p, "pi": lambda: F.lit(3.141592653589793),
-    "pow": F.power, "power": F.power, "rint": F.rint,
-    # Function.java Round: NaN -> 0, +/-Infinity -> +/-Double.MAX_VALUE,
-    # non-numeric -> NULL, rounding in double precision (floats widen)
-    "round": lambda a, *d: _fn_round(a, *d),
-    "signum": F.signum, "sin": F.sin, "sinh": F.sinh, "sqrt": F.sqrt,
-    "tan": F.tan, "tanh": F.tanh,
-    "todegrees": F.degrees, "toradians": F.radians,
-    "max": F.greatest, "min": F.least,
-    # modern spellings (Function.java GreatestFunc/LeastFunc: null
-    # args skipped, all-null -> null — Spark's contract too). The
-    # reference's mixed string/number lists coerce to STRING and
-    # compare lexicographically; Spark coerces to the numeric common
-    # type (documented divergence, test_golden_function.py).
-    "greatest": lambda *a: a[0] if len(a) == 1 else F.greatest(*a),
-    "least": lambda *a: a[0] if len(a) == 1 else F.least(*a),
-    # IEEE-754 float helpers (Function.java GetExponent/Ulp/NextUp/Scalb)
-    "getexponent": _fn_get_exponent,
-    "ulp": _fn_ulp,
-    "nextup": _fn_next_up,
-    "nextafter": lambda a, b: _fn_next_after(a, b),
-    "scalb": lambda d, sb: d.cast("double")
-    * F.power(F.lit(2.0), sb.cast("double")),
-    "mod": lambda a, b: a % b,
-    "remainder": lambda a, b: a % b,
-    # SafeDivideExprMacro: x/0 is NULL except 0/0, which is 0 (the SQL
-    # SAFE_DIVIDE body in functions/registry.py agrees)
-    "safe_divide": lambda a, b: F.when(
-        b == 0, F.when(a == 0, F.lit(0.0))).otherwise(a / b),
-    # bitwise
-    "bitwiseand": lambda a, b: a.cast("long").bitwiseAND(b.cast("long")),
-    "bitwiseor": lambda a, b: a.cast("long").bitwiseOR(b.cast("long")),
-    "bitwisexor": lambda a, b: a.cast("long").bitwiseXOR(b.cast("long")),
-    "bitwisecomplement": lambda a: F.bitwise_not(a.cast("long")),
-    # exact IEEE-754 reinterpretation in pure arithmetic — same
-    # construction as the SQL macros (functions/registry.py): every
-    # step is a power-of-two multiply/divide or an integer-valued
-    # double below 2^53 (Function.java BitwiseConvert*)
-    "bitwiseconvertdoubletolongbits": lambda a: _fn_double_to_long_bits(a),
-    "bitwiseconvertlongbitstodouble": lambda a: _fn_long_bits_to_double(a),
-    # HLL-state expression builders (HyperUniqueExpressions.java) —
-    # COMPLEX collector state carried through scalar expressions so
-    # expression-lambda aggregators can fold cardinality state
-    # (GroupByQueryRunnerTest.testGroupByWithExpressionAggregatorWith
-    # Complex[OnSubquery]). Spark shape: the collector is the DISTINCT
-    # VALUE SET (array<string>) — hyper_unique_add is a set-add that
-    # skips SQL nulls exactly like the reference
-    # (HyperUniqueExpressions.java:170 skips null in SQL-null mode),
-    # and the estimate is the exact set size. Honest divergences:
-    # (1) estimates are EXACT where Druid's HLL carries ~2% error
-    #     (UNIQUES_9 = 9.0198... vs our 9.0) — the suite pins approx;
-    # (2) these SCALAR spellings keep the exact-set state; the
-    #     aggregator path folds them only when the spec carries NO
-    #     estimate finalize (advisor r15 — the unfinalized collector
-    #     must stay representation-consistent with these spellings).
-    #     An estimate-finalized fold rewrites to REAL DataSketches
-    #     HLL state (aggregations.py _hyper_unique_direct:
-    #     hll_sketch_agg, lgK=12 — ≤ 2 KB per group at any
-    #     cardinality, like the reference's ~1.5 KB collector), and
-    #     the remaining exact-set uses are hard-capped at 65,536
-    #     distinct values with a loud error (see hyper_unique_add);
-    # (3) a string and a number rendering to the same text collide
-    #     ('16' vs 16L) where Druid hashes them apart — mixed-type
-    #     adds to one collector are not a reference test surface.
-    "hyper_unique": lambda: F.array().cast("array<string>"),
-    # value-add only: the fold expression adds column VALUES. The
-    # combine expression (collector-fold) never runs in this engine —
-    # F.aggregate over the collected group is single-level, Spark's
-    # own partial/final merge handles distribution under collect_list.
-    # r15 (VERDICT r14 task #7): the exact set is CAPPED at 65,536
-    # distinct values — the reference bounds expression-lambda
-    # accumulators too (ExpressionLambdaAggregatorFactory's
-    # maxSizeBytes throws past the budget, not silently drops), and a
-    # silently truncated set would be a wrong estimate. Scalar use is
-    # bounded by values-per-row so the cap never binds in practice;
-    # past it the query fails LOUD with the remedy (the aggregator
-    # path, which _hyper_unique_direct rewrites to <= 2 KB HLL state).
-    "hyper_unique_add": lambda x, acc: F.when(x.isNull(), acc).otherwise(
-        F.when(
-            (F.size(acc) >= F.lit(65536)) & ~F.array_contains(
-                acc, x.cast("string")),
-            F.raise_error(F.lit(
-                "hyper_unique_add: exact-set collector exceeded 65536 "
-                "distinct values — use the expression-lambda AGGREGATOR "
-                "spelling (initialValue hyper_unique(), finalize "
-                "hyper_unique_estimate(o)), which carries bounded HLL "
-                "sketch state")).cast("array<string>"))
-        .otherwise(F.array_union(acc, F.array(x.cast("string"))))),
-    "hyper_unique_estimate": lambda o: F.size(o).cast("double"),
-    "hyper_unique_round_estimate": lambda o: F.size(o).cast("long"),
-    # string
-    "concat": F.concat, "format": F.format_string,
-    "parse_long": lambda s, *r: (F.conv(s, int(_extract_literal(r[0])), 10).cast("long")
-                                 if r else s.cast("long")),
-    "regexp_extract": lambda s, p, *r: F.regexp_extract(
-        s, str(_extract_literal(p)), int(_extract_literal(r[0])) if r else 0),
-    "regexp_like": lambda s, p: s.rlike(str(_extract_literal(p))),
-    "contains_string": lambda s, sub: F.contains(s, sub),
-    "icontains_string": lambda s, sub: F.contains(F.lower(s), F.lower(sub)),
-    "replace": lambda s, a, b: F.replace(s, a, b),
-    "substring": lambda s, i, ln: _druid_substring(s, i, ln),
-    "right": lambda s, n: F.right(s, n),
-    "left": lambda s, n: F.left(s, n),
-    "strlen": F.length,
-    # 0-based, -1 when absent, optional 0-based start offset
-    # (FunctionTest.testStrpos — locate's 0-when-absent maps to -1
-    # after the base shift)
-    "strpos": lambda h, n, *r: F.call_function(
-        "locate", n, h, (r[0] + F.lit(1)) if r else F.lit(1)) - 1,
-    "trim": F.trim, "ltrim": F.ltrim, "rtrim": F.rtrim,
-    "lower": F.lower, "upper": F.upper, "reverse": F.reverse,
-    # negative counts are NULL (FunctionTest.testRepeat), not ''
-    "repeat": lambda s, n: F.when(n < 0, F.lit(None))
-    .otherwise(F.repeat(s, n)),
-    "lpad": F.lpad, "rpad": F.rpad,
-    "like": lambda s, p: s.like(str(_extract_literal(p))),
-    "lookup": _fn_lookup,
-    # time
-    "timestamp_floor": lambda ts, p, *r: time_floor_col(
-        ts, *_bucket_args(p, r)),
-    "timestamp_ceil": lambda ts, p, *r: time_ceil_col(
-        ts, *_bucket_args(p, r)),
-    "timestamp_shift": _fn_timestamp_shift,
-    "timestamp_extract": _fn_timestamp_extract,
-    "timestamp_parse": _fn_timestamp_parse,
-    "timestamp_format": _fn_timestamp_format,
-    "timestamp": _fn_timestamp_parse,
-    "unix_timestamp": lambda c: F.unix_timestamp(c),
-    "subtract_months": lambda a, b, *r: F.months_between(a, b).cast("long"),
-    # control / null
-    "if": lambda c, a, b: F.when(_as_bool(c), a).otherwise(b),
-    "case_searched": _fn_case_searched,
-    "case_simple": _fn_case_simple,
-    "nvl": lambda a, b: F.coalesce(a, b),
-    "coalesce": F.coalesce,
-    "isnull": lambda a: a.isNull(),
-    "notnull": lambda a: a.isNotNull(),
-    "cast": _fn_cast,
-    # array
-    "array": F.array,
-    "array_length": F.size,
-    "array_offset": lambda a, i: F.get(a, i),
-    "array_ordinal": lambda a, i: F.get(a, i - F.lit(1)),
-    "array_contains": lambda a, v: _fn_array_contains(a, v),
-    "array_overlap": lambda a, b: F.arrays_overlap(a, b),
-    "array_offset_of": _fn_array_offset_of,
-    "array_ordinal_of": _fn_array_ordinal_of,
-    "array_append": F.array_append,
-    "array_prepend": lambda v, a: F.array_prepend(a, v),
-    "array_concat": F.concat,
+_BUILDERS: dict[str, Callable[..., str]] = {
+    "greatest": _spread("greatest"), "max": _spread("greatest"),
+    "least": _spread("least"), "min": _spread("least"),
+    "mod": lambda a, b: f"({a.sql} % {b.sql})",
+    "remainder": lambda a, b: f"({a.sql} % {b.sql})",
+    # Druid div(): long division truncating toward zero (Java semantics)
+    "div": lambda a, b: (
+        f"(CAST({a.sql} AS BIGINT) div CAST({b.sql} AS BIGINT))"),
+    "getexponent": _get_exponent,
+    "ulp": _ulp,
+    "nextup": _next_up,
+    "nextafter": _next_after,
+    "scalb": lambda d, n: f"({_double(d)} * power(2D, {_double(n)}))",
+    "hyper_unique": lambda: "CAST(array() AS ARRAY<STRING>)",
+    "hyper_unique_add": _hyper_unique_add,
+    "hyper_unique_estimate": lambda o: f"CAST(size({o.sql}) AS DOUBLE)",
+    "hyper_unique_round_estimate": lambda o: f"CAST(size({o.sql}) AS BIGINT)",
+    "substring": _substring,
+    "strpos": _strpos,
+    "trim": lambda s, *c: (f"btrim({s.sql}, {c[0].sql})" if c
+                           else f"trim({s.sql})"),
+    "like": lambda s, p: f"({s.sql} LIKE {p.sql})",
+    "subtract_months": lambda a, b, *r: (
+        f"CAST(months_between({a.sql}, {b.sql}) AS BIGINT)"),
+    "if": lambda c, a, b: (
+        f"CASE WHEN {_bool(c)} THEN {a.sql} ELSE {b.sql} END"),
+    "case_searched": lambda *a: _case(lambda w: f"CAST({w} AS BOOLEAN)", a),
+    "case_simple": lambda s, *a: _case(lambda w: f"{s.sql} = {w}", a),
+    "isnull": lambda a: f"({a.sql} IS NULL)",
+    "notnull": lambda a: f"({a.sql} IS NOT NULL)",
+    "cast": _cast,
     # SET semantics are SORTED — ArraySetAddFunction builds a TreeSet
     # (core/.../math/expr/Function.java:3463), so the result order is
     # the element order, not insertion order
-    "array_set_add": lambda a, v: F.array_sort(
-        F.array_distinct(F.array_append(a, v))),
-    "array_set_add_all": lambda a, b: F.array_sort(F.array_union(a, b)),
-    "array_slice": lambda a, s, *e: (F.slice(a, s + 1, e[0] - s) if e
-                                     else F.slice(a, s + 1, F.size(a))),
-    "array_to_string": lambda a, d: F.array_join(a, str(_extract_literal(d))),
-    "string_to_array": lambda s, d: F.split(s, str(_extract_literal(d))),
-    "mv_to_array": lambda c: c,
-    # ipv4 / misc
-    "ipv4_parse": _fn_ipv4_parse,
-    "ipv4_stringify": _fn_ipv4_stringify,
-    "human_readable_binary_byte_format": _fn_human_readable(
-        1024, ["B", "KiB", "MiB", "GiB", "TiB", "PiB", "EiB"], " B"),
-    "human_readable_decimal_byte_format": _fn_human_readable(
-        1000, ["KB", "MB", "GB", "TB", "PB", "EB"], " B"),
-    "human_readable_decimal_format": _fn_human_readable(
-        1000, ["K", "M", "G", "T", "P", "E"], ""),
+    "array_set_add": lambda a, v: (
+        f"array_sort(array_distinct(array_append({a.sql}, {v.sql})))"),
+    "array_set_add_all": lambda a, b: (
+        f"array_sort(array_union({a.sql}, {b.sql}))"),
 }
-
-
-def _fn_ipv4_match(addr: Column, subnet: Column) -> Column:
-    """ipv4_match(addr, 'a.b.c.d/n') — subnet must be a literal
-    (reference: processing/.../query/expression/IPv4AddressMatchExprMacro.java)."""
-    import ipaddress
-
-    net = ipaddress.ip_network(str(_extract_literal(subnet)), strict=False)
-    lo, hi = int(net.network_address), int(net.broadcast_address)
-    n = F.coalesce(addr.try_cast("long"), _fn_ipv4_parse(addr.cast("string")))
-    return (n >= F.lit(lo)) & (n <= F.lit(hi))
-
-
-_FUNCTIONS["ipv4_match"] = _fn_ipv4_match
-
-
-def _druid_substring(s: Column, i: Column, ln: Column) -> Column:
-    # Druid substring(expr, index, length) is 0-based; -1 length = to end
-    start = i + F.lit(1)
-    return F.when(ln < 0, F.substring(s, start, F.lit(2147483647))).otherwise(
-        F.substring(s, start, ln)
-    )
-
-
-def _shiftleft(a: Column, b: Column) -> Column:
-    # Spark's shiftleft takes a python int bit count
-    return F.shiftleft(a.cast("long"), int(_extract_literal(b)))
-
-
-def _shiftright(a: Column, b: Column) -> Column:
-    return F.shiftright(a.cast("long"), int(_extract_literal(b)))
-
-
-def _div(a: Column, b: Column) -> Column:
-    # Druid div(): long division truncating toward zero (Java semantics)
-    return (a.cast("long") / b.cast("long")).cast("long")
-
-
-_FUNCTIONS["div"] = _div
-_FUNCTIONS["bitwiseshiftleft"] = _shiftleft
-_FUNCTIONS["bitwiseshiftright"] = _shiftright
 
 
 def expression_identifiers(text: str) -> list[str]:
@@ -1082,15 +677,21 @@ def expression_identifiers(text: str) -> list[str]:
     return out
 
 
-def compile_expression(text: str, registry=None,
-                       env: dict | None = None) -> Column:
-    """Compile a Druid native expression string to a Column.
+def expression_sql(text: str, registry=None, env: dict | None = None) -> str:
+    """A Druid native expression as Spark SQL text.
 
-    ``env`` pre-binds identifiers to Columns (lambda parameters of an
-    enclosing context, e.g. the accumulator/element of an
-    expression-lambda aggregator fold).
+    ``env`` binds identifiers to Spark SQL text: lambda parameters of an
+    enclosing context (the accumulator and element of an
+    expression-lambda aggregator fold), or a column's per-row stand-in.
+    A bound text is put in after the Druid functions are lowered, so it
+    is never lowered twice. ``registry`` serves lookup()."""
+    env = env or {}
+    holes = {name: f"`\x00{i}`" for i, name in enumerate(env)}
+    sql = lower_functions(
+        _Parser(_tokenize(text), holes, itertools.count()).parse().sql,
+        registry)
+    for name, hole in holes.items():
+        sql = sql.replace(hole, env[name])
+    return sql
 
-    >>> compile_expression("floor(value / 10) * 10")
-    >>> compile_expression("if(x > 3 && y == 'a', 1, 0)")
-    """
-    return _Parser(_tokenize(text), dict(env or {}), registry).parse()
+

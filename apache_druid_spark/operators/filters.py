@@ -27,8 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from apache_druid_spark.model.granularity import instant_lit, parse_interval
-from apache_druid_spark.operators.expressions import compile_expression
-from apache_druid_spark.operators.util import fcol
+from apache_druid_spark.operators.util import fcol, ident
 
 
 def _is_array_col(df: DataFrame | None, name: str) -> bool:
@@ -49,24 +48,28 @@ def _expression_filter(text: str, df: DataFrame | None, registry) -> Column:
     scalar string column auto-coerces to a one-element array when fed
     to an array function (array_contains(dim3, '1'))."""
     from apache_druid_spark.operators.expressions import (
-        compile_expression, expression_identifiers,
+        expression_identifiers, expression_sql,
     )
 
-    idents = expression_identifiers(text)
     env: dict = {}
     arrays: list[str] = []
     strings: list[str] = []
     if df is not None:
-        for name in idents:
+        for name in expression_identifiers(text):
             if name not in df.columns:
-                env[name] = F.lit(None).cast("string")
+                env[name] = "CAST(NULL AS STRING)"
             else:
                 dt = df.schema[name].dataType
                 if isinstance(dt, T.ArrayType):
                     arrays.append(name)
                 elif isinstance(dt, T.StringType):
                     strings.append(name)
-    base = compile_expression(text, registry, env or None).cast("boolean")
+
+    def cond(binds: dict) -> str:
+        sql = expression_sql(text, registry, {**env, **binds})
+        return f"CAST({sql} AS BOOLEAN)"
+
+    base = F.expr(cond({}))
     if df is None:
         return base
     try:
@@ -76,25 +79,16 @@ def _expression_filter(text: str, df: DataFrame | None, registry) -> Column:
         pass
     if len(arrays) == 1:
         name = arrays[0]
-        arr = fcol(name)
-
-        def per_elem(e: Column) -> Column:
-            env2 = dict(env)
-            env2[name] = e
-            return compile_expression(text, registry, env2).cast("boolean")
-
+        arr = ident(name)
         # a null/empty multi-value row behaves as the single null value
-        out = F.when(arr.isNull() | (F.size(arr) == 0),
-                     F.coalesce(per_elem(F.lit(None).cast("string")),
-                                F.lit(False))
-                     ).otherwise(F.exists(arr, per_elem))
+        out = F.expr(
+            f"CASE WHEN {arr} IS NULL OR size({arr}) = 0 THEN coalesce("
+            f"{cond({name: 'CAST(NULL AS STRING)'})}, false) "
+            f"ELSE exists({arr}, __e -> {cond({name: '__e'})}) END")
         df.select(out)
         return out
     if not arrays and strings:
-        env2 = dict(env)
-        for s in strings:
-            env2[s] = F.array(fcol(s))
-        alt = compile_expression(text, registry, env2).cast("boolean")
+        alt = F.expr(cond({s: f"array({ident(s)})" for s in strings}))
         df.select(alt)
         return alt
     return base  # surface the original analysis error at execution

@@ -12,9 +12,21 @@ def fcol(name: str) -> Column:
     return F.col(name)
 
 
-def map_column(m: dict) -> Column:
-    """A string -> string map literal (NULL when empty): a lookup shipped
-    with the plan, the analogue of Druid's broadcast lookup container."""
-    if not m:
-        return F.lit(None).cast("map<string,string>")
-    return F.create_map(*[F.lit(x) for kv in m.items() for x in kv])
+def ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier (embedded backticks
+    doubled), for SQL-text projections."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def compile_expression(text: str, registry=None,
+                       env: dict | None = None) -> Column:
+    """A Druid native expression as a Column: the Spark SQL text of
+    ``operators.expressions.expression_sql``, whose ``env`` binds names
+    to SQL text.
+
+    >>> compile_expression("floor(value / 10) * 10")
+    >>> compile_expression("if(x > 3 && y == 'a', 1, 0)")
+    """
+    from apache_druid_spark.operators.expressions import expression_sql
+
+    return F.expr(expression_sql(text, registry, env))

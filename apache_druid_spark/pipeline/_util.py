@@ -4,11 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-
-def ident(name: str) -> str:
-    """``name`` as a backtick-quoted SQL identifier (embedded backticks
-    doubled), for the SQL-text projections built in this package."""
-    return "`" + name.replace("`", "``") + "`"
+from apache_druid_spark.operators.util import ident  # noqa: F401
 
 
 def sql_str(value: str) -> str:

@@ -44,7 +44,7 @@ from apache_druid_spark.operators.filters import compile_filter, interval_predic
 from apache_druid_spark.operators.having import compile_having
 from apache_druid_spark.operators.limitspec import apply_limit_spec
 from apache_druid_spark.operators.postaggs import apply_post_aggregations
-from apache_druid_spark.operators.util import fcol
+from apache_druid_spark.operators.util import fcol, ident
 from apache_druid_spark.plans.timeout import persist
 
 _DRUID_TYPES = {"STRING": "string", "LONG": "long", "DOUBLE": "double",
@@ -348,7 +348,7 @@ def _mv_auto_transform(df: DataFrame, vc: dict, registry):
     or None when the expression doesn't reference exactly one MV
     column (the whole-row analysis error then surfaces)."""
     from apache_druid_spark.operators.expressions import (
-        expression_identifiers,
+        expression_identifiers, expression_sql,
     )
 
     arrays = [n for n in expression_identifiers(vc["expression"])
@@ -356,19 +356,18 @@ def _mv_auto_transform(df: DataFrame, vc: dict, registry):
               and isinstance(df.schema[n].dataType, T.ArrayType)]
     if len(arrays) != 1:
         return None
-    name = arrays[0]
-    arr = fcol(name)
-    out = (vc.get("outputType") or "STRING").upper()
-    target = _DRUID_TYPES.get(out, "string")
+    name, arr = arrays[0], ident(arrays[0])
+    target = _DRUID_TYPES.get((vc.get("outputType") or "STRING").upper(),
+                              "string")
 
-    def per(e):
-        return compile_expression(
-            vc["expression"], registry, env={name: e}).cast(target)
+    def per(e: str) -> str:
+        sql = expression_sql(vc["expression"], registry, env={name: e})
+        return f"CAST({sql} AS {target})"
 
     # a null/empty multi-value row behaves as the single null value
-    return F.when(arr.isNull() | (F.size(arr) == 0),
-                  F.array(per(F.lit(None).cast("string")))
-                  ).otherwise(F.transform(arr, per))
+    return F.expr(f"CASE WHEN {arr} IS NULL OR size({arr}) = 0 "
+                  f"THEN array({per('CAST(NULL AS STRING)')}) "
+                  f"ELSE transform({arr}, __e -> {per('__e')}) END")
 
 
 def _granularity_bucket(q: dict) -> tuple[str, object] | None:

@@ -31,6 +31,13 @@ def scratch_dir(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root())
 
 
+def _driver_memory() -> str:
+    """Half the host's physical memory, at most 48g: a heap sized for a
+    far larger host lets the JVM grow until the machine runs out."""
+    host = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(48 << 30, host // 2) >> 30)}g"
+
+
 def get_spark(
     app_name: str = "apache_druid_spark",
     master: str | None = None,
@@ -74,7 +81,8 @@ def get_spark(
         # null-propagating form
         .config("spark.sql.legacy.sizeOfNull", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY")
+                or _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

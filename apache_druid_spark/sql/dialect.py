@@ -67,8 +67,8 @@ from apache_druid_spark.functions.registry import (
 )
 from apache_druid_spark.model.datasource import TIME_COLUMN
 from apache_druid_spark.model.granularity import (
-    GRANULARITIES, day_millis, is_utc, parse_instant, parse_period,
-    period_of, trunc_unit, tz_offset_ms, utc_datetime,
+    GRANULARITIES, _compound_boundaries, day_millis, is_utc, parse_instant,
+    parse_period, period_of, trunc_unit, tz_offset_ms, utc_datetime,
 )
 
 # Druid functions that are a Spark function under another name: each is
@@ -110,19 +110,14 @@ _RENAMES = {
     "STRING_FORMAT": "format_string",
     # ARRAY_* scalar family (sql/.../builtin/Array*OperatorConversion.java)
     # — type-generic name maps onto Spark natives; ARRAY_APPEND already
-    # matches its Spark builtin by name and semantics. The arithmetic ones
-    # (ARRAY_SLICE, ARRAY_OFFSET_OF, ARRAY_ORDINAL_OF) are bodies in
-    # functions/registry.py.
+    # matches its Spark builtin by name and semantics. ARRAY_OFFSET_OF and
+    # ARRAY_ORDINAL_OF are bodies in functions/registry.py; ARRAY_SLICE
+    # and ARRAY_CONCAT are _INLINE entries.
     "ARRAY_LENGTH": "array_size",
     "ARRAY_OFFSET": "get",           # 0-based, null out of range
-    "ARRAY_ORDINAL": "try_element_at",  # 1-based, null out of range
-                                        # (ANSI element_at would throw)
     "ARRAY_OVERLAP": "arrays_overlap",
     "ARRAY_TO_STRING": "array_join",
     "STRING_TO_ARRAY": "split",
-    # ARRAY_CONCAT is an _INLINE entry, NOT renamed to bare concat:
-    # concat over an MV input is the canonical element-mapped scalar,
-    # so the MV pass would wrongly transform() it per element
     "BIT_AND": "bit_and",
     "BIT_OR": "bit_or",
     "BIT_XOR": "bit_xor",
@@ -822,12 +817,18 @@ def _round(_name: str, inner: str, _tz: str | None) -> str | None:
     if len(args) not in (1, 2):
         return None
     e = f"CAST({args[0]} AS DOUBLE)"
-    d = f", {args[1]}" if len(args) == 2 else ""
+    if len(args) == 1 or re.fullmatch(r"[+-]?\d+L?", args[1]):
+        rounded = f"round({', '.join([e, *args[1:]])})"
+    else:
+        # Spark's round wants a constant scale: HALF_UP (away from
+        # zero) like BigDecimal, by the column's power of ten
+        p = f"power(10D, {args[1]})"
+        rounded = f"signum({e}) * floor(abs({e}) * {p} + 0.5D) / {p}"
     return (f"CASE WHEN isnan({e}) THEN 0D "
             f"WHEN {e} = CAST('Infinity' AS DOUBLE) THEN {_ROUND_DMAX} "
             f"WHEN {e} = CAST('-Infinity' AS DOUBLE) "
             f"THEN -{_ROUND_DMAX} "
-            f"ELSE round({e}{d}) END")
+            f"ELSE {rounded} END")
 
 
 def _in_zone(tz: str | None, ts: str, f=None, read: bool = True,
@@ -867,8 +868,9 @@ def _zone(args: list[str], i: int, tz: str | None) -> str | None:
 def _shift(t: str, months: int, ms: int, step: str) -> str:
     """``t`` plus ``step`` times (``months``, ``ms``), months first,
     keeping the time of day and clamping the day (chronology.add)."""
-    if re.fullmatch(r"[+-]?\d+", step):
-        m, secs = months * int(step), f"{ms * int(step) / 1000:.3f}"
+    if re.fullmatch(r"[+-]?\d+L?", step):
+        n = int(step.rstrip("L"))
+        m, secs = months * n, f"{ms * n / 1000:.3f}"
     else:
         m = f"CAST({months} * ({step}) AS INT)"
         secs = f"{ms / 1000:.3f} * ({step})"
@@ -887,15 +889,22 @@ def _bucket(name: str, ts: str, period: str, origin: str | None,
                              f"literal period")
         return _in_zone(tz, ts, lambda t: _body(name, [t, period]))
     months, ms = parse_period(p, allow_mixed=True)
-    if months and ms:
+    if months and ms and origin:
         raise ValueError(f"Invalid period[{p}] for {name.upper()}: a "
-                         f"period mixing months with days or time")
+                         f"period mixing months with days or time takes "
+                         f"no origin")
     unit = None if origin else trunc_unit(p)
     o = origin and _in_zone(tz, origin, write=False)
 
     def floor(t: str) -> str:
         if unit:
             return f"date_trunc('{unit.upper()}', {t})"
+        if months and ms:
+            # PeriodGranularity.truncateCompoundPeriod: the last boundary
+            # of the month-then-time walk from the epoch at or before t
+            bounds = ", ".join(map(str, _compound_boundaries(0, months, ms)))
+            return (f"timestamp_millis(array_max(filter(array({bounds}), "
+                    f"__tf_b -> __tf_b <= unix_millis({t}))))")
         if months:
             # months_between ignores time-of-day when the days-of-month
             # match, so a candidate bucket past t steps back one period
@@ -1001,11 +1010,22 @@ def _time_extract(name: str, inner: str, tz: str | None) -> str:
 
 
 def _time_format(name: str, inner: str, tz: str | None) -> str:
-    """TIME_FORMAT(ts, pattern[, timezone]) (TimeFormatOperatorConversion):
-    the wall clock in the zone."""
-    args = _call_args(name, inner, 2, 3)
-    local = _in_zone(_zone(args, 2, tz), args[0], write=False)
-    return f"date_format({local}, {args[1]})"
+    """TIME_FORMAT(ts[, pattern[, timezone]]) (TimeFormatOperatorConversion):
+    the wall clock in the zone. The default pattern is ISO, ending in
+    the zone's offset at ts, 'Z' when it is zero (ISODateTimeFormat
+    .dateTime)."""
+    args = _call_args(name, inner, 1, 3)
+    zone = _zone(args, 2, tz)
+    local = _in_zone(zone, args[0], write=False)
+    if len(args) > 1 and args[1].upper() != "NULL":
+        return f"date_format({local}, {args[1]})"
+    iso = f"date_format({local}, 'yyyy-MM-dd''T''HH:mm:ss.SSS"
+    if zone is None:
+        return iso + "''Z''')"
+    mins = f"((unix_seconds({local}) - unix_seconds({args[0]})) DIV 60)"
+    return (f"concat({iso}'), CASE WHEN {mins} = 0 THEN 'Z' ELSE "
+            f"format_string('%s%02d:%02d', CASE WHEN {mins} < 0 THEN '-' "
+            f"ELSE '+' END, abs({mins}) DIV 60, abs({mins}) % 60) END)")
 
 
 # an ISO string's own zone: an offset or zone id after its time of day
@@ -1233,6 +1253,10 @@ _CALL_RULES = {
     "POSITION": _position_from,
     "REPEAT": _repeat,
     "ARRAY_PREPEND": _array_prepend,
+    # 1-based, NULL out of range at either end (try_element_at throws at
+    # 0, counts from the end below it and wants an INT index)
+    "ARRAY_ORDINAL": lambda n, a, _tz: "get({}, ({}) - 1)".format(
+        *_call_args(n, a, 2, 2)),
     "EXTRACT": _extract,
     "GROUPING": _grouping,
     "LTRIM": _trim_2arg,
@@ -1357,37 +1381,33 @@ def _truncate(name: str, inner: str, _ctx) -> str:
 
 def _slice(name: str, inner: str, _ctx) -> str:
     """MV_SLICE/ARRAY_SLICE(a, start[, end]): end defaults to the
-    array's length (ArraySliceOperatorConversion)."""
+    array's length (ArraySliceOperatorConversion). ARRAY_SLICE keeps the
+    element type; MV_SLICE is over strings."""
     args = _call_args(name, inner, 2, 3)
-    return _body(name, args + [f"size({args[0]})"] * (3 - len(args)))
+    a, s, e = args + [f"size({args[0]})"] * (3 - len(args))
+    if name.upper() == "MV_SLICE":
+        return _body(name, [a, s, e])
+    s, e = f"CAST({s} AS INT)", f"CAST({e} AS INT)"
+    return f"slice({a}, {s} + 1, {e} - {s})"
+
+
+_INTEGRAL = "('tinyint', 'smallint', 'int', 'bigint')"
 
 
 def _ipv4(name: str, inner: str, _ctx) -> str:
     """IPV4_PARSE/_MATCH/_STRINGIFY: an address is a LONG in [0, 2^32)
-    or a dotted-quad STRING (IPv4AddressExprUtils), but each body takes
-    one type. A literal argument carries its SQL type here: a numeric
-    address validates through IPV4_STRINGIFY (range-checked), a string
-    argument to IPV4_STRINGIFY through IPV4_PARSE, and a uint string
-    stays NULL (IPv4AddressParseExpressionTest
-    testValidStringArgUnsignedInt vs testValidIntegerArg)."""
-    fn, args = name.upper(), _args(inner)
-    if fn == "IPV4_STRINGIFY" and args and _literal(args[0]) is not None:
-        args[0] = _body("IPV4_PARSE", args[:1])
-    elif fn != "IPV4_STRINGIFY" and args and re.fullmatch(r"[0-9]+L?",
-                                                           args[0]):
-        args[0] = _body("IPV4_STRINGIFY", [args[0].rstrip("Ll") + "L"])
-    return _body(fn, args)
-
-
-def _array_concat(name: str, inner: str, _ctx) -> str:
-    """ARRAY_CONCAT over array constructors is Spark's type-generic
-    concat: the reference keeps LONG_ARRAY (CalciteArraysQueryTest
-    testSomeArrayFunctionsWithScanQuery pins [7, null]). Over a column
-    it is the ARRAY<STRING> body of the multi-value case."""
-    args = _args(inner)
-    if args and all(re.match(r"array\s*\(", a, re.IGNORECASE) for a in args):
-        return f"concat({inner})"
-    return _body(name, args)
+    or a dotted-quad STRING (IPv4AddressExprUtils). The argument's Spark
+    type picks the path (``typeof`` folds when the plan is optimized),
+    so a BIGINT column is an address and a uint STRING stays NULL
+    (IPv4AddressParseExpressionTest testValidStringArgUnsignedInt vs
+    testValidIntegerArg)."""
+    fn = name.upper()
+    args = _call_args(name, inner, *[2 if fn == "IPV4_MATCH" else 1] * 2)
+    a, n = args[0], f"CAST({args[0]} AS BIGINT)"
+    args[:1] = [f"CASE WHEN typeof({a}) IN {_INTEGRAL} THEN CASE WHEN {n} "
+                f"BETWEEN 0 AND 4294967295 THEN {n} END ELSE "
+                f"{_body('IPV4_PARSE', [a])} END"]
+    return args[0] if fn == "IPV4_PARSE" else _body(fn, args)
 
 
 def _spark_str(v) -> str:
@@ -1400,28 +1420,44 @@ def _spark_str(v) -> str:
 _LOOKUP_INLINE_MAX = 10_000
 
 
+def _lookup_view(registry, name: str) -> str:
+    """Register the lookup as the broadcast-hinted view ``lookup_<name>``
+    (k, v), one value per key as registry.lookup_map: the reference ships
+    lookups whole to every task (LookupSegment)."""
+    from pyspark.sql.functions import broadcast, max as _max
+
+    view = f"lookup_{name}"
+    broadcast(registry.lookup_df(name).groupBy("k").agg(
+        _max("v").alias("v"))).createOrReplaceTempView(view)
+    return view
+
+
 def _lookup(name: str, inner: str, registry) -> str:
-    """LOOKUP(key, 'name') (QueryLookupOperatorConversion): the key's
-    value in the registered lookup (registry.lookup_map: max(v) for a
-    duplicated key); NULL for an unknown or empty lookup. Up to
-    _LOOKUP_INLINE_MAX keys the lookup is a map literal, the broadcast
-    LookupSegment; above it a scalar subquery on the broadcast-hinted
-    lookup_<name> view, which Catalyst plans as a broadcast join (and
-    Spark refuses inside a higher-order function's lambda)."""
-    key, lname = _call_args(name, inner, 2, 2)
+    """LOOKUP(key, 'name'[, replaceMissingValueWith])
+    (QueryLookupOperatorConversion): the key's value in the registered
+    lookup (registry.lookup_map: max(v) for a duplicated key); NULL, or
+    the replacement, for an unknown key or an unknown or empty lookup.
+    Up to _LOOKUP_INLINE_MAX keys the lookup is a map literal, the
+    broadcast LookupSegment; above it a scalar subquery on the
+    broadcast-hinted lookup_<name> view, which Catalyst plans as a
+    broadcast join (and Spark refuses inside a higher-order function's
+    lambda)."""
+    key, lname, *missing = _call_args(name, inner, 2, 3)
     lname, key = _literal(lname), f"CAST({key} AS STRING)"
     if lname is None:
         raise ValueError("LOOKUP needs a literal lookup name")
-    if registry is None or lname not in registry.lookup_names():
-        return "CAST(NULL AS STRING)"
-    m = registry.lookup_map(lname, _LOOKUP_INLINE_MAX)
+    m = (registry.lookup_map(lname, _LOOKUP_INLINE_MAX)
+         if registry is not None and lname in registry.lookup_names() else {})
     if m is None:
-        return f"(SELECT v FROM lookup_{lname} WHERE k = {key})"
-    if not m:
-        return "CAST(NULL AS STRING)"
-    pairs = ", ".join(f"{_spark_str(k)}, {_spark_str(v)}"
-                      for k, v in m.items())
-    return f"element_at(map({pairs}), {key})"
+        view = _lookup_view(registry, lname)
+        value = f"(SELECT v FROM {view} WHERE k = {key})"
+    elif not m:
+        value = "CAST(NULL AS STRING)"
+    else:
+        pairs = ", ".join(f"{_spark_str(k)}, {_spark_str(v)}"
+                          for k, v in m.items())
+        value = f"element_at(map({pairs}), {key})"
+    return f"coalesce({value}, {missing[0]})" if missing else value
 
 
 _INLINE = {
@@ -1430,12 +1466,23 @@ _INLINE = {
     **dict.fromkeys(("TRUNC", "TRUNCATE"), _truncate),
     **dict.fromkeys(("MV_SLICE", "ARRAY_SLICE"), _slice),
     **dict.fromkeys(("IPV4_PARSE", "IPV4_MATCH", "IPV4_STRINGIFY"), _ipv4),
-    "ARRAY_CONCAT": _array_concat,
+    # concat keeps the element type; ARRAY_CONCAT is not renamed in
+    # _CALL_RULES: concat over an MV input is the canonical element-mapped
+    # scalar, so the MV passes would transform() it per element
+    "ARRAY_CONCAT": lambda _n, a, _r: f"concat({a})",
     "MV_CONTAINS": lambda n, a, _r: _contains_array(n, a, _r) or _inline(n, a),
     "LOOKUP": _lookup,
     # the one-element array _align_mv_in_unions wraps a scalar union arm in
     "__MV_WRAP": lambda _n, a, _r: f"array(CAST({a} AS STRING))",
 }
+
+
+def lower_functions(text: str, registry=None) -> str:
+    """The Druid function calls of text outside ``translate`` (native
+    expressions) as Spark SQL: _CALL_RULES in UTC, the literals in
+    Spark's form, then _INLINE, as a SQL statement has them lowered."""
+    return _rewrite_calls(_escape_backslashes(_rewrite_calls(text, None)),
+                          registry, _INLINE)
 
 
 def _rewrite_bare_varchar(text: str) -> str:
@@ -3381,8 +3428,6 @@ def druid_sql(spark: SparkSession, text: str, registry=None,
     if (registry is not None and getattr(
             spark, "_druid_sql_registered", None) != (id(registry), epoch,
                                                       names)):
-        from pyspark.sql.functions import broadcast, max as _max
-
         # epoch changes on ANY register(), including same-name
         # re-registration — refresh all views so a second INSERT into an
         # existing target is visible to later SELECTs
@@ -3391,12 +3436,8 @@ def druid_sql(spark: SparkSession, text: str, registry=None,
             if "__segment" in df.columns:  # internal partition id
                 df = df.drop("__segment")
             df.createOrReplaceTempView(name)
-        # broadcast-hinted (the reference ships lookups whole to every
-        # task, LookupSegment), one value per key as registry.lookup_map
         for lname in registry.lookup_names():
-            broadcast(registry.lookup_df(lname).groupBy("k")
-                      .agg(_max("v").alias("v"))
-                      ).createOrReplaceTempView(f"lookup_{lname}")
+            _lookup_view(registry, lname)
         # mark BEFORE materializing views: each view body runs back
         # through druid_sql (full dialect pipeline) and must not
         # re-enter this registration block

@@ -290,15 +290,14 @@ def test_scalar_hyper_unique_small_sets_unchanged(spark):
 def test_scalar_hyper_unique_add_overflow_raises(spark):
     # force the cap branch with a pre-built 65536-element accumulator:
     # one more DISTINCT value must fail loud with the aggregator remedy
-    from apache_druid_spark.operators.expressions import _FUNCTIONS
+    from apache_druid_spark.operators.expressions import compile_expression
 
-    add = _FUNCTIONS["hyper_unique_add"]
-    acc = F.transform(F.sequence(F.lit(1), F.lit(65536)),
-                      lambda i: i.cast("string"))
+    acc = {"acc": "transform(sequence(1, 65536), i -> CAST(i AS STRING))"}
     # re-adding an EXISTING value at cap is a no-op, not an error
-    ok = spark.range(1).select(
-        F.size(add(F.lit("42"), acc)).alias("s")).first()["s"]
+    ok = spark.range(1).select(F.size(compile_expression(
+        "hyper_unique_add('42', acc)", env=acc)).alias("s")).first()["s"]
     assert ok == 65536
     with pytest.raises(Exception, match="exceeded 65536"):
-        spark.range(1).select(
-            F.size(add(F.lit("brand-new"), acc)).alias("s")).collect()
+        spark.range(1).select(F.size(compile_expression(
+            "hyper_unique_add('brand-new', acc)", env=acc)).alias("s")
+        ).collect()

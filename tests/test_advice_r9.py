@@ -107,15 +107,16 @@ def test_compound_period_day_component_dst_wall_floor(spark):
 
 
 def test_array_contains_needle_type_resolution(spark):
-    # ADVICE r8 #5: the contains-ALL dispatch resolves the needle's
-    # type from the JVM expression tree, not the Column repr
+    # ADVICE r8 #5: an array needle is contains-ALL, a scalar one (even
+    # a string spelling "array(") is a single element — the dialect's
+    # ARRAY_CONTAINS rule reads the needle's SQL text
     from apache_druid_spark.operators.expressions import (
-        _needle_is_array, compile_expression,
+        compile_expression, expression_sql,
     )
 
-    assert _needle_is_array(F.array(F.lit(3), F.lit(4)))
-    assert not _needle_is_array(F.lit(3))
-    assert not _needle_is_array(F.concat(F.lit("array("), F.lit("x")))
+    assert "forall" in expression_sql("array_contains(b, array(3, 4))")
+    assert "forall" not in expression_sql("array_contains(b, 3)")
+    assert "forall" not in expression_sql("array_contains(b, 'array(x')")
     df = spark.createDataFrame([([1, 2, 3, 4],)], "b array<bigint>")
     got = df.select(
         compile_expression("array_contains(\"b\", [3, 4])").alias("x"),

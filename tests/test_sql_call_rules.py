@@ -67,6 +67,7 @@ SAMPLES = {
                    "IPV4_MATCH(167772161, '10.0.0.0/8')"),
     "IPV4_STRINGIFY": ("IPV4_STRINGIFY({})",
                        "IPV4_STRINGIFY('192.168.0.1')"),
+    "ARRAY_ORDINAL": ("ARRAY_ORDINAL(ARRAY[{}], 1)", "ARRAY_ORDINAL(arr, 2)"),
     "ARRAY_PREPEND": ("ARRAY_PREPEND('z', {})",
                       "ARRAY_PREPEND('a', ARRAY['b'])"),
     "ARRAY_CONCAT": ("ARRAY_CONCAT(ARRAY[1], ARRAY[ARRAY_LENGTH({})])",

@@ -111,9 +111,24 @@ def test_compound_shift_adds_both_parts(spark):
 
 
 @pytest.mark.parametrize("fn", ["TIME_FLOOR", "TIME_CEIL"])
-def test_compound_bucket_is_a_validation_error(spark, fn):
+def test_compound_bucket_walks_from_the_epoch(spark, fn):
+    # a P1M1D bucket steps a month, then a day, from 1970-01-01
+    # (PeriodGranularity.truncateCompoundPeriod), as query granularity does
+    from pyspark.sql import functions as F
+
+    from apache_druid_spark.model.granularity import (
+        time_ceil_col, time_floor_col,
+    )
+
+    bucket = time_floor_col if fn == "TIME_FLOOR" else time_ceil_col
+    want = spark.range(1).select(bucket(
+        F.timestamp_millis(F.lit(946695600000)), "P1M1D").alias("v")
+    ).first()["v"]
+    assert want == {"TIME_FLOOR": datetime(1999, 12, 22),
+                    "TIME_CEIL": datetime(2000, 1, 23)}[fn]
+    assert one(spark, f"{fn}({T0}, 'P1M1D')") == want
     with pytest.raises(ValueError, match=r"Invalid period\[P1M1D\]"):
-        one(spark, f"{fn}({T0}, 'P1M1D')")
+        one(spark, f"{fn}({T0}, 'P1M1D', TIMESTAMP '2000-01-01 00:00:00')")
 
 
 @pytest.mark.parametrize("context, want", [
