@@ -5622,7 +5622,7 @@ SELECT CAST(epoch_ms(b) AS TIMESTAMP) AS __time, COUNT(*) AS cnt FROM (
 def _timeseries_compound_period(spark, sf_dir):
     """Compound-period granularity (P1M2D): PeriodGranularity
     truncateCompoundPeriod walks the period iteratively from the
-    origin with interleaved month/day adds (r8 `_floor_compound_walk`,
+    origin with interleaved month/day adds (`granularity.bucket_sql`,
     QueryGranularityTest.testCompoundPeriodTruncate); the oracle
     embeds the same data-independent boundary series as literals."""
     return compile_query({

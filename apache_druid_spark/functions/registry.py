@@ -7,7 +7,8 @@ conversions in sql/.../expression/builtin/MultiValueStringOperatorConversions.ja
 Each entry is (NAME, parameters, return type, body), the body Spark SQL
 over the parameter names. Nothing here is registered with Spark:
 sql/dialect.py inlines a call of NAME as its body, each argument cast
-to its parameter's type and the result to the return type, so the plan
+to its parameter's type (an ``ANY`` parameter keeps its argument's)
+and the result to the return type, so the plan
 is the hand-written Spark SQL. A body may call an earlier entry, which
 is expanded in place, and holds no backslash, so it reads the same in
 Druid and in Spark string-literal form.
@@ -93,13 +94,17 @@ FUNCTION_BODIES: list[tuple[str, str, str, str]] = [
     # MV_TO_ARRAY reinterprets the MV column as ARRAY — same value)
     ("MV_TO_ARRAY", "a ARRAY<STRING>", "ARRAY<STRING>", "a"),
     # ARRAY_* arithmetic shims (Array{OffsetOf,OrdinalOf}
-    # OperatorConversion.java), comparing as strings; the direct name
-    # maps live in sql/dialect.py _RENAMES, and ARRAY_SLICE and
-    # ARRAY_CONCAT, which keep the element type, in its _INLINE.
-    ("ARRAY_OFFSET_OF", "a ARRAY<STRING>, v STRING", "INT",
-     "CASE WHEN array_position(a, v) = 0 THEN NULL ELSE CAST(array_position(a, v) - 1 AS INT) END"),
-    ("ARRAY_ORDINAL_OF", "a ARRAY<STRING>, v STRING", "INT",
-     "CASE WHEN array_position(a, v) = 0 THEN NULL ELSE CAST(array_position(a, v) AS INT) END"),
+    # OperatorConversion.java): each element compared with the needle
+    # as Spark compares the two types (a string needle read as a
+    # numeric array's element type, numbers by value), not both sides
+    # as STRING, which misses 2 in [1.0, 2.0]; array_position itself
+    # wants the two types equal. The direct name maps live in
+    # sql/dialect.py _RENAMES, and ARRAY_SLICE and ARRAY_CONCAT, which
+    # keep the element type, in its _INLINE.
+    ("ARRAY_ORDINAL_OF", "a ANY, v ANY", "INT",
+     "nullif(array_position(transform(a, __e -> coalesce(__e = v, false)), "
+     "true), 0)"),
+    ("ARRAY_OFFSET_OF", "a ANY, v ANY", "INT", "ARRAY_ORDINAL_OF(a, v) - 1"),
     # a filter result with no surviving elements is NULL, not []: the
     # native ListFilteredVirtualColumn selector treats a 0-length row
     # as null (pinned by CalciteMultiValueStringQueryTest

@@ -32,6 +32,7 @@ from apache_druid_spark.model.granularity import time_floor_col
 from apache_druid_spark.operators.aggregations import compile_aggregations
 from apache_druid_spark.operators.expressions import compile_expression
 from apache_druid_spark.operators.filters import compile_filter
+from apache_druid_spark.operators.util import ident
 
 # ---------------------------------------------------------------------------
 # Input sources / formats (SURVEY §2.1)
@@ -237,7 +238,7 @@ def _read_druid_segments(spark: SparkSession, src: dict) -> DataFrame:
         import re as _re
 
         decode_cols = set((dims or []) + (mets or []))
-        ident = _re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+        word = _re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
         def _filter_dims(f):
             # every column-referencing shape a DimFilter can take:
@@ -258,7 +259,7 @@ def _read_druid_segments(spark: SparkSession, src: dict) -> DataFrame:
                             elif isinstance(x, dict):
                                 _filter_dims(x)
                     elif k == "expression" and isinstance(v, str):
-                        decode_cols.update(ident.findall(v))
+                        decode_cols.update(word.findall(v))
                     else:
                         _filter_dims(v)
             elif isinstance(f, list):
@@ -540,7 +541,7 @@ def rollup(df: DataFrame, dimensions: list[str], metrics: list[dict],
     ``finalize_metrics`` unwraps to the value."""
     bucketed = df.withColumn(
         "__raw_time", F.col(TIME_COLUMN)).withColumn(
-        TIME_COLUMN, time_floor_col(F.col(TIME_COLUMN), query_granularity))
+        TIME_COLUMN, time_floor_col(ident(TIME_COLUMN), query_granularity))
     aggs = []
     for m in metrics:
         if m["type"] in _HLL_SKETCH_TYPES:
@@ -692,7 +693,7 @@ def write_segments(df: DataFrame, path: str,
     time chunks); atomic replace of a chunk = dynamic partition
     overwrite, which is Druid's segment versioning collapsed into the
     table format."""
-    seg = time_floor_col(F.col(TIME_COLUMN), segment_granularity)
+    seg = time_floor_col(ident(TIME_COLUMN), segment_granularity)
     writer = (df.withColumn("__segment", F.date_format(seg, "yyyy-MM-dd'T'HH"))
                 .repartition(F.col("__segment"))
                 .write.mode(mode).partitionBy("__segment"))

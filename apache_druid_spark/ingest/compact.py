@@ -11,10 +11,10 @@ job of SURVEY §2.15's late-data row).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from apache_druid_spark.model.datasource import TIME_COLUMN
 from apache_druid_spark.model.granularity import time_floor_col
+from apache_druid_spark.operators.util import ident
 
 
 def compact(spark: SparkSession, path: str,
@@ -38,7 +38,7 @@ def compact(spark: SparkSession, path: str,
         dims = rollup.get("dimensions", [])
         gran = rollup.get("queryGranularity", segment_granularity)
         bucketed = df.withColumn(
-            TIME_COLUMN, time_floor_col(F.col(TIME_COLUMN), gran))
+            TIME_COLUMN, time_floor_col(ident(TIME_COLUMN), gran))
         df = (bucketed.groupBy(TIME_COLUMN, *dims)
               .agg(*reaggregate(rollup.get("metricsSpec", []))))
     from apache_druid_spark.ingest.batch import write_segments

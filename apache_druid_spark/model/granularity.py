@@ -1,14 +1,27 @@
-"""Druid granularities -> Catalyst time-bucketing expressions.
+"""Druid granularities and time specs, and the one time-bucket lowering.
 
 Reference: core/src/main/java/org/apache/druid/java/util/common/granularity/
 GranularityType.java:34-84 (SECOND..YEAR, ALL, NONE),
 PeriodGranularity.java (ISO-8601 period + timeZone + origin),
 DurationGranularity.java (fixed millis + origin).
 
-Everything here composes built-in expressions (date_trunc, pmod on
-unix millis, month arithmetic) — no UDFs, so bucketing stays inside
-whole-stage codegen and, when the bucket feeds a groupBy, the shuffle
-key is a plain long/timestamp column.
+Buckets are Spark SQL text built here and nowhere else: ``bucket_sql``
+floors or ceils by an ISO period, ``shift_sql`` steps by one, and
+``in_zone`` is the only zone conversion. Query granularity
+(``granularity_sql``, ``time_floor_col``), ingest rollup and segment
+granularity, the timeFormat extraction fn and the SQL TIME_FLOOR,
+TIME_CEIL, TIME_SHIFT, FLOOR … TO and DATE_TRUNC rules all call them.
+The text is built-in expressions (date_trunc, pmod on unix millis,
+month arithmetic), so bucketing stays inside whole-stage codegen and a
+bucket that feeds a groupBy is a plain timestamp key.
+
+Buckets tile the wall clock of the zone from the origin, by default the
+zone's local 1970-01-01T00:00, with three exceptions: a period of two or
+more fields without months, weeks or days (PT12H5M) counts elapsed time
+from the origin instant; a period mixing months with days or time
+(P1M2D) floors on the month-then-time walk from the origin; a duration
+has no zone. ``floor_ms``, ``shift_ms`` and ``_compound_boundaries`` are
+the Python twins used for interval math.
 """
 
 from __future__ import annotations
@@ -26,15 +39,20 @@ _PERIOD_RE = re.compile(
 )
 
 
+def _fields(period: str) -> tuple:
+    """An ISO-8601 period's Y, M, W, D, H, M, S fields (None if absent)."""
+    m = _PERIOD_RE.match(period.strip().upper())
+    if not m:
+        raise ValueError(f"bad ISO-8601 period: {period!r}")
+    return m.groups()
+
+
 def parse_period(period: str, allow_mixed: bool = False) -> tuple[int, int]:
     """ISO-8601 period -> (months, millis). Mixed month+millis periods
     (e.g. P1M2D) are accepted only with ``allow_mixed`` (the
     granularity floor/shift paths implement the reference's compound
     stepping); other callers keep the uniform-bucket restriction."""
-    m = _PERIOD_RE.match(period.strip().upper())
-    if not m:
-        raise ValueError(f"bad ISO-8601 period: {period!r}")
-    y, mo, w, d, h, mi, s = m.groups()
+    y, mo, w, d, h, mi, s = _fields(period)
     months = int(y or 0) * 12 + int(mo or 0)
     millis = (
         int(w or 0) * 7 * 86_400_000
@@ -64,8 +82,6 @@ GRANULARITIES = {
 # agree on week-starts-Monday for 'week'); the rest are fixed
 # millisecond multiples floored from the epoch.
 _TRUNC_UNITS = frozenset(g for g in GRANULARITIES if "_" not in g)
-_FIXED_MILLIS = {g: parse_period(p)[1] for g, p in GRANULARITIES.items()
-                 if g not in _TRUNC_UNITS}
 
 
 def period_of(gran) -> str:
@@ -150,14 +166,19 @@ def iso_of(ms: int) -> str:
     return utc_datetime(ms).isoformat(timespec="milliseconds") + "Z"
 
 
+def instant_sql(ms: int) -> str:
+    """Timestamp literal text of an epoch-millis instant, clamped to
+    years 1..9999 (the eternity bounds overflow a Spark timestamp)."""
+    return f"timestamp_millis({min(max(ms, _LO_MS), _HI_MS)})"
+
+
 def instant_lit(ms: int) -> Column:
-    """Timestamp literal of an epoch-millis instant, clamped to years
-    1..9999 (the eternity bounds overflow a Spark timestamp)."""
-    return F.timestamp_millis(F.lit(min(max(ms, _LO_MS), _HI_MS)))
+    """``instant_sql`` as a Column."""
+    return F.expr(instant_sql(ms))
 
 
 def floor_ms(ms: int, gran: str) -> int:
-    """Python twin of ``time_floor_col`` for a named granularity in UTC
+    """Python twin of ``bucket_sql`` for a named granularity in UTC
     (week starts Monday, 1969-12-29 being the Monday before the epoch)."""
     g = str(gran).lower()
     if g not in GRANULARITIES:
@@ -173,7 +194,7 @@ def floor_ms(ms: int, gran: str) -> int:
 
 
 def shift_ms(ms: int, gran, step: int) -> int:
-    """Python twin of ``time_shift_col``: move an instant by ``step``
+    """Python twin of ``shift_sql``: move an instant by ``step``
     periods of ``gran`` in UTC; a month step keeps the time of day and
     clamps the day to the month's end."""
     return _shift(ms, *parse_period(period_of(gran), allow_mixed=True), step)
@@ -189,43 +210,16 @@ def _shift(ms: int, months: int, millis: int, step: int) -> int:
     return ms + millis * step
 
 
-def _period_field_count(period: str) -> int:
-    """Number of non-zero fields in the period (PeriodGranularity
-    isCompoundPeriod: >1 field changes the truncation algorithm)."""
-    m = _PERIOD_RE.match(period.strip().upper())
-    return sum(1 for g in (m.groups() if m else ()) if g and float(g))
-
-
 def day_millis(period: str) -> int:
     """An ISO period's weeks and days in millis: the fields a zoned
     chronology adds on the wall clock (DST makes them imprecise)."""
-    m = _PERIOD_RE.match(period.strip().upper())
-    weeks, days = (m.group(3), m.group(4)) if m else (None, None)
+    weeks, days = _fields(period)[2:4]
     return (int(weeks or 0) * 7 + int(days or 0)) * 86_400_000
 
 
 def is_utc(tz: str | None) -> bool:
     """No zone, or a spelling of UTC."""
     return not tz or tz.upper() in ("UTC", "ETC/UTC", "Z")
-
-
-def _tz_is_fixed(tz: str) -> bool:
-    """True when the zone has a constant UTC offset (no DST) — sampled
-    at winter/summer instants across five decades, which is how far
-    the engine's own test pins reach."""
-    if is_utc(tz):
-        return True
-    try:
-        from zoneinfo import ZoneInfo
-
-        z = ZoneInfo(tz)
-        offs = {
-            datetime(y, mo, 1, tzinfo=timezone.utc).astimezone(z).utcoffset()
-            for y in (1975, 2000, 2020, 2035) for mo in (1, 7)
-        }
-        return len(offs) == 1
-    except Exception:  # noqa: BLE001 — unknown zone: assume DST-capable
-        return False
 
 
 def granularity_to_duration(gran) -> str:
@@ -238,14 +232,6 @@ def granularity_to_duration(gran) -> str:
     if months:
         raise ValueError("month-based periods unsupported in streaming windows")
     return f"{millis} milliseconds"
-
-
-def _floor_millis(col: Column, dur_ms: int, origin_ms: int = 0) -> Column:
-    """Floor a timestamp column to fixed millisecond buckets using pmod
-    (integer-exact, codegen-friendly; no floating point)."""
-    t = F.unix_millis(col)
-    off = t - F.lit(origin_ms)
-    return F.timestamp_millis(t - F.pmod(off, F.lit(dur_ms)))
 
 
 def tz_offset_ms(tz: str | None, instant_ms: int) -> int:
@@ -291,185 +277,148 @@ def _compound_boundaries(origin_wall_ms: int, months: int,
     return out
 
 
-def _floor_compound_walk(col: Column, months: int, millis: int,
-                         origin_wall_ms: int) -> Column:
-    bounds = _compound_boundaries(origin_wall_ms, months, millis)
-    arr = F.lit(bounds)
-    t = F.unix_millis(col)
-    return F.timestamp_millis(
-        F.array_max(F.filter(arr, lambda x: x <= t)))
-
-
-def _floor_period_from_origin(col: Column, months: int, millis: int,
-                              origin_wall_ms: int) -> Column:
-    """Origin-anchored floor for periods with a month component
-    (PeriodGranularity truncateCompoundPeriod / the months-with-origin
-    field path): boundaries are origin + k*(months, millis); estimate k
-    from calendar month distance, generate a +/-3 candidate window, and
-    take the greatest boundary <= t. ``col`` and the origin are in the
-    WALL frame (the caller shifts by timezone)."""
-    o_day = origin_wall_ms - (origin_wall_ms % 86_400_000)
-    o_tod = origin_wall_ms - o_day
-    origin_ts = F.timestamp_millis(F.lit(origin_wall_ms))
-    # average Gregorian month = 30.436875 days
-    step_months = months + millis / 2_629_746_000.0
-    k0 = F.floor(
-        F.months_between(col, origin_ts) / F.lit(step_months)).cast("long")
-
-    def cand(k: Column) -> Column:
-        base = F.add_months(
-            F.timestamp_millis(F.lit(o_day)), k * F.lit(months))
-        return (F.unix_millis(base.cast("timestamp"))
-                + F.lit(o_tod) + k * F.lit(millis))
-
-    t = F.unix_millis(col)
-    cands = F.array(*[cand(k0 + F.lit(i)) for i in range(-3, 4)])
-    return F.timestamp_millis(
-        F.array_max(F.filter(cands, lambda x: x <= t)))
-
-
 # months from year 0 to the epoch: PeriodGranularity counts month periods
 # from 1970-01 (P7M floors 2000-06-15 to 2000-05-01)
 EPOCH_MONTHS = 1970 * 12
 
 
-def _floor_months(col: Column, n_months: int) -> Column:
-    m = F.year(col) * F.lit(12) + F.month(col) - F.lit(1)
-    fm = m - F.pmod(m - F.lit(EPOCH_MONTHS), F.lit(n_months))
-    return F.make_timestamp(
-        F.floor(fm / 12).cast("int"),
-        (F.pmod(fm, F.lit(12)) + F.lit(1)).cast("int"),
-        F.lit(1), F.lit(0), F.lit(0), F.lit(0),
-    )
+def zone_sql(tz: str | None) -> str | None:
+    """A zone id (or ``±hh:mm`` offset) as SQL text; None for UTC."""
+    return None if is_utc(tz) else f"'{tz}'"
 
 
-def time_floor_col(col: Column, gran, timezone: str | None = None) -> Column:
-    """The engine's TIME_FLOOR: bucket a TimestampType column by a Druid
-    granularity (named, {"type":"duration"...}, or {"type":"period"...}).
+def in_zone(tz: str | None, ts: str, f=None, read: bool = True,
+            write: bool = True) -> str:
+    """The instant ``ts`` read as its wall clock in the zone ``tz`` (SQL
+    text, None for UTC) if ``read``, ``f`` applied, the wall clock
+    written back as the instant if ``write``."""
+    t = f"from_utc_timestamp({ts}, {tz})" if tz and read else ts
+    t = f(t) if f else t
+    return f"to_utc_timestamp({t}, {tz})" if tz and write else t
 
-    timeZone support: arithmetic runs on the wall-clock-shifted
-    timestamp and shifts back (DST transitions inside a bucket follow
-    the fixed-offset approximation; documented divergence).
-    """
-    origin_ms = 0
-    period_tz = None
-    if isinstance(gran, dict):
-        period_tz = gran.get("timeZone")
-        if gran.get("origin") is not None:
-            origin_ms = parse_instant(gran["origin"])
-        if gran.get("type") == "duration":
-            return _with_tz(
-                col, period_tz or timezone,
-                lambda c: _floor_millis(c, int(gran["duration"]), origin_ms),
-            )
-        period = gran.get("period", "P1D")
+
+def _add(t: str, months: int, ms: int, step: str) -> str:
+    """``t`` plus ``step`` (SQL text) times (``months``, ``ms``), months
+    first, keeping the time of day and clamping the day
+    (chronology.add)."""
+    if re.fullmatch(r"[+-]?\d+L?", step):
+        n = int(step.rstrip("L"))
+        m, secs = months * n, f"{ms * n / 1000:.3f}"
     else:
-        g = str(gran).lower()
-        if g in ("all",):
-            return F.lit(None).cast("timestamp")
-        if g in ("none",):
-            return col
-        if g in _TRUNC_UNITS:
-            return _with_tz(
-                col, timezone, lambda c: F.date_trunc(g, c)
-            )
-        if g in _FIXED_MILLIS:
-            return _with_tz(
-                col, timezone, lambda c: _floor_millis(c, _FIXED_MILLIS[g])
-            )
-        # allow bare ISO periods like "PT1H"
-        period = gran if g.startswith("p") else None
-        if period is None:
-            raise ValueError(f"unsupported granularity: {gran!r}")
-
-    months, millis = parse_period(period, allow_mixed=True)
-    tz = period_tz or timezone
-    has_origin = isinstance(gran, dict) and gran.get("origin") is not None
-    # the origin instant expressed on the local wall clock — the
-    # reference anchors via chronology field arithmetic, which works in
-    # the zone's wall frame (QueryGranularityTest testPeriodTruncateDays)
-    origin_wall = origin_ms + tz_offset_ms(tz, origin_ms)
-    # P1W with no origin floors to MONDAY (PeriodGranularity.java:295-299
-    # — dayOfWeek roundFloor + set to 1); PnW n>1 aligns on multiples
-    # from the epoch origin like every other millis period
-    week_one = (period.strip().upper() == "P1W" and not has_origin)
-
-    if not months and _period_field_count(period) >= 2:
-        # compound fixed-length period (PT12H5M): the reference's
-        # truncateMillisPeriod is plain modular arithmetic on UTC
-        # instants — no wall-clock shift
-        # (QueryGranularityTest.testCompoundPeriodMillisTruncate).
-        # EXCEPTION (ADVICE r8): when the period carries a DAYS/WEEKS
-        # component and the zone has DST, Joda's days field is
-        # imprecise — truncateMillisPeriod throws and the reference
-        # falls back to the zone-aware truncateCompoundPeriod walk
-        # (day adds are wall-clock 23/25h). Floor in the WALL frame
-        # there; divergence is confined to instants inside the
-        # sub-day remainder straddling a transition step.
-        if day_millis(period) and tz and not _tz_is_fixed(tz):
-            return _with_tz(
-                col, tz,
-                lambda c: _floor_millis(
-                    c, millis, origin_wall if has_origin else 0))
-        return _floor_millis(col, millis, origin_ms)
-
-    def _f(c: Column) -> Column:
-        if months and millis:
-            # compound month periods (P1M2D) replay the reference's
-            # iterative walk from the origin (interleaved month/day
-            # adds — QueryGranularityTest.testCompoundPeriodTruncate)
-            return _floor_compound_walk(
-                c, months, millis, origin_wall if has_origin else 0)
-        if months and has_origin:
-            # month periods with an origin step calendar-exactly from
-            # the anchor (months-difference field path)
-            return _floor_period_from_origin(
-                c, months, millis, origin_wall)
-        if months == 1:
-            return F.date_trunc("month", c)
-        if months == 12:
-            return F.date_trunc("year", c)
-        if months:
-            return _floor_months(c, months)
-        if week_one:
-            return F.date_trunc("week", c)
-        return _floor_millis(c, millis,
-                             origin_wall if has_origin else origin_ms)
-
-    return _with_tz(col, tz, _f)
+        m = f"CAST({months} * ({step}) AS INT)"
+        secs = f"{ms / 1000:.3f} * ({step})"
+    return f"({t} + make_interval(0, {m}, 0, 0, 0, 0, {secs}))"
 
 
-def time_ceil_col(col: Column, gran, timezone: str | None = None) -> Column:
-    """TIME_CEIL: smallest bucket boundary >= col."""
-    floored = time_floor_col(col, gran, timezone)
-    nxt = time_shift_col(floored, gran, 1, timezone)
-    return F.when(floored == col, col).otherwise(nxt)
-
-
-def time_shift_col(
-    col: Column, gran, step: int, timezone: str | None = None
-) -> Column:
-    """TIME_SHIFT by step * period as a zoned chronology adds it: months
-    (keeping the time of day, clamping the day), weeks and days on the
-    wall clock, the rest as elapsed time. A granularity's timeZone wins."""
-    period = period_of(gran)
-    if isinstance(gran, dict):
-        timezone = gran.get("timeZone") or timezone
-    months, millis = parse_period(period, allow_mixed=True)
-    wall = millis if is_utc(timezone) else day_millis(period)
+def shift_sql(ts: str, period: str, step: str, tz: str | None = None) -> str:
+    """TIME_SHIFT of ``ts`` by ``step`` ISO periods as a zoned chronology
+    adds them: months (keeping the time of day, clamping the day), weeks
+    and days on the wall clock of ``tz``, the rest as elapsed time."""
+    months, ms = parse_period(period, allow_mixed=True)
+    wall = ms if tz is None else day_millis(period)
+    ts = f"CAST({ts} AS TIMESTAMP)"
     if months or wall:
-        col = _with_tz(col, timezone,
-                       lambda c: c + _interval(months * step, wall * step))
-    return col + _interval(0, (millis - wall) * step) if millis != wall \
-        else col
+        ts = in_zone(tz, ts, lambda t: _add(t, months, wall, step))
+    return _add(ts, 0, ms - wall, step) if ms != wall else ts
 
 
-def _interval(months: int, ms: int) -> Column:
-    return F.expr(f"make_interval(0, {months}, 0, 0, 0, 0, {ms / 1000:.3f})")
+def _literal_ms(text: str | None, tz: str | None) -> int | None:
+    """Epoch millis of an origin written as a literal
+    (``timestamp_millis(n)``, or ``TIMESTAMP '…'`` alone or as the wall
+    clock of a literal zone, the form a zoned SQL session writes),
+    moved onto the wall clock of the literal zone ``tz``; None if either
+    is not a literal."""
+    zone = re.fullmatch(r"'([^']*)'", tz or "''")
+    m = re.fullmatch(r"timestamp_millis\((-?\d+)\)|(?:to_utc_timestamp"
+                     r"\()?TIMESTAMP\s*'([^']*)'(?:, '([^']*)'\))?",
+                     (text or "").strip(), re.IGNORECASE)
+    if not (m and zone):
+        return None
+    ms = int(m.group(1)) if m.group(1) else parse_instant(m.group(2))
+    if m.group(3):  # a wall clock of that zone
+        ms -= tz_offset_ms(m.group(3), ms - tz_offset_ms(m.group(3), ms))
+    return ms + tz_offset_ms(zone.group(1), ms)
 
 
-def _with_tz(col: Column, tz: str | None, f) -> Column:
-    if is_utc(tz):
-        return f(col)
-    local = F.from_utc_timestamp(col, tz)
-    return F.to_utc_timestamp(f(local), tz)
+def bucket_sql(ts: str, period: str, origin: str | None = None,
+               tz: str | None = None, ceil: bool = False) -> str:
+    """TIME_FLOOR (or, with ``ceil``, TIME_CEIL) of the instant ``ts`` by
+    an ISO ``period``. ``origin`` and ``tz`` are SQL text; None is the
+    zone's local epoch and UTC. Ceil is one period past the floor
+    unless ``ts`` is on a boundary."""
+    months, ms = parse_period(period, allow_mixed=True)
+    unit = None if origin else trunc_unit(period)
+    if (not months and not day_millis(period)
+            and sum(bool(f and float(f)) for f in _fields(period)) > 1):
+        # PT12H5M: elapsed time from the origin instant
+        # (PeriodGranularity.truncateMillisPeriod); a weeks or days field
+        # steps on the wall clock like a one-field period
+        if not origin and tz:
+            origin = in_zone(tz, "timestamp_millis(0)", read=False)
+        o, tz = origin, None
+    else:
+        o = origin and in_zone(tz, origin, write=False)
+
+    def floor(t: str) -> str:
+        if unit:
+            return f"date_trunc('{unit.upper()}', {t})"
+        if months and ms:
+            # PeriodGranularity.truncateCompoundPeriod: the last boundary
+            # of the month-then-time walk from the origin at or before t
+            o_ms = _literal_ms(origin, tz) if origin else 0
+            if o_ms is None:
+                raise ValueError(f"Invalid period[{period}]: a period "
+                                 f"mixing months with days or time needs "
+                                 f"a literal origin and zone")
+            bounds = ", ".join(map(str, _compound_boundaries(o_ms, months,
+                                                             ms)))
+            return (f"timestamp_millis(array_max(filter(array({bounds}), "
+                    f"__tf_b -> __tf_b <= unix_millis({t}))))")
+        if months:
+            # months_between ignores time-of-day when the days-of-month
+            # match, so a candidate bucket past t steps back one period
+            o_ = o or "TIMESTAMP '1970-01-01 00:00:00'"
+            k = f"CAST(floor(months_between({t}, {o_}) / {months}) AS INT)"
+            b = f"({o_} + make_interval(0, {k} * {months}))"
+            return (f"(CASE WHEN {b} > {t} THEN ({o_} + make_interval(0, "
+                    f"({k} - 1) * {months})) ELSE {b} END)")
+        if o:
+            return (f"timestamp_millis(unix_millis({o}) + CAST(floor(("
+                    f"unix_millis({t}) - unix_millis({o})) / {ms}) AS "
+                    f"BIGINT) * {ms})")
+        return (f"timestamp_millis(unix_millis({t}) - "
+                f"pmod(unix_millis({t}), {ms}))")
+
+    def ceiling(t: str) -> str:
+        # the floor bound ONCE by a one-element transform: inlined three
+        # times it re-evaluates ts and origin and blows up nested calls
+        return (f"element_at(transform(array({floor(t)}), __tc_f -> "
+                f"CASE WHEN __tc_f = {t} THEN __tc_f "
+                f"ELSE {_add('__tc_f', months, ms, '1')} END), 1)")
+
+    ts = ts if unit else f"CAST({ts} AS TIMESTAMP)"
+    return in_zone(tz, ts, ceiling if ceil else floor)
+
+
+def granularity_sql(ts: str, gran, tz: str | None = None) -> str:
+    """The bucket of the instant ``ts`` (SQL text) by a Druid query
+    granularity: a name, a bare ISO period, a ``period`` or ``duration``
+    dict, ``all`` (no bucket: NULL) or ``none`` (``ts`` itself). ``tz``
+    is a zone id; a period dict's own timeZone wins, and a duration has
+    no zone."""
+    origin = None
+    if isinstance(gran, dict):
+        if gran.get("origin") is not None:
+            origin = instant_sql(parse_instant(gran["origin"]))
+        tz = (None if gran.get("type") == "duration"
+              else gran.get("timeZone") or tz)
+    elif str(gran).lower() == "all":
+        return "CAST(NULL AS TIMESTAMP)"
+    elif str(gran).lower() == "none":
+        return ts
+    return bucket_sql(ts, period_of(gran), origin, zone_sql(tz))
+
+
+def time_floor_col(ts: str, gran, tz: str | None = None) -> Column:
+    """``granularity_sql`` as a Column: the query-granularity bucket."""
+    return F.expr(granularity_sql(ts, gran, tz))

@@ -5,10 +5,17 @@ Reference: processing/src/main/java/org/apache/druid/query/dimension/
 and processing/src/main/java/org/apache/druid/query/extraction/*.java
 (17 extraction fns).
 
-Each compiles to a Column expression over the input dimension; for
-multi-value (array) dimensions the filtered specs compile to
-``F.filter`` element-whitelists so the later explode sees only kept
-elements, matching Druid's behavior.
+An extraction fn compiles to Spark SQL text over the SQL text of its
+input (``compile_extraction_fn``), as native expressions do, so it can
+apply inside a higher-order function's lambda: over a multi-value
+(array) input a caller maps it per element as
+``transform(<col>, __x -> <fn over __x>)``. The timeFormat fn buckets
+through model/granularity's builder, and the lookup fns through the SQL
+dialect's LOOKUP (a map literal up to its inline cap, the broadcast
+lookup view above it). A dimension spec compiles to a Column; over an
+array dimension the filtered specs are ``F.filter`` element whitelists,
+so the later explode sees only kept elements, matching Druid's
+behavior.
 """
 
 from __future__ import annotations
@@ -17,48 +24,48 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from apache_druid_spark.operators.util import fcol
+from apache_druid_spark.model.granularity import (
+    granularity_sql, in_zone, zone_sql,
+)
+from apache_druid_spark.operators.util import fcol, ident
+from apache_druid_spark.sql.dialect import (
+    _lookup, _spark_str, _sql_str, map_value,
+)
 
 _DRUID_OUT_TYPES = {"STRING": "string", "LONG": "long", "FLOAT": "float",
                     "DOUBLE": "double"}
 
 
-def _map_literal(m: dict) -> Column:
-    """A string -> string map literal (NULL when empty): a lookup shipped
-    with the plan, the analogue of Druid's broadcast lookup container."""
-    if not m:
-        return F.lit(None).cast("map<string,string>")
-    return F.create_map(*[F.lit(x) for kv in m.items() for x in kv])
+def _lit(v) -> str:
+    """A string literal, or NULL for None."""
+    return "CAST(NULL AS STRING)" if v is None else _spark_str(v)
 
 
-def compile_extraction_fn(spec: dict, col: Column, registry=None,
-                          src_type=None) -> Column:
-    """Extraction fn JSON -> Column transform of a (scalar) value.
-    ``src_type`` (optional Spark DataType) disambiguates time inputs:
-    a LONG source feeding timeFormat is epoch MILLIS (Druid time
-    values are millis longs; Spark's long->timestamp cast would read
-    seconds)."""
+def compile_extraction_fn(spec: dict, sql: str, registry=None,
+                          src_type=None) -> str:
+    """Extraction fn JSON -> Spark SQL text of the fn applied to the
+    (scalar) value ``sql``, itself SQL text. ``src_type`` (optional
+    Spark DataType) disambiguates time inputs: a LONG source feeding
+    timeFormat is epoch MILLIS (Druid time values are millis longs;
+    Spark's long->timestamp cast would read seconds)."""
     t = spec["type"]
+    s = f"CAST({sql} AS STRING)"
     if t == "identity":
-        return col
+        return sql
     if t == "regex":
         # RegexDimExtractionFn: matcher.find() semantics; an EMPTY
         # group on a successful match stays '' — only a true no-match
         # falls back to the replacement (or the original value)
         # (RegexDimExtractionFnTest.testNullAndEmpty: '(.*)/.*/.*'
-        # applied to '/a/b' is '', not '/a/b')
-        expr = spec["expr"]
-        idx = int(spec.get("index", 1))
-        s = col.cast("string")
-        matched = s.rlike(expr)
-        ext = F.regexp_extract(s, expr, idx)
-        if spec.get("replaceMissingValue", False):
-            miss = spec.get("replaceMissingValueWith")
-            # a null input is a miss too (apply(null) -> replacement)
-            return F.when(matched, ext).otherwise(F.lit(miss))
-        return F.when(matched, ext).otherwise(s)
+        # applied to '/a/b' is '', not '/a/b'); a null input is a miss
+        # too (apply(null) -> replacement)
+        expr = _spark_str(spec["expr"])
+        miss = (_lit(spec.get("replaceMissingValueWith"))
+                if spec.get("replaceMissingValue", False) else s)
+        return (f"CASE WHEN {s} RLIKE {expr} THEN regexp_extract({s}, "
+                f"{expr}, {int(spec.get('index', 1))}) ELSE {miss} END")
     if t == "partial":  # keep value only if regex matches
-        return F.when(col.cast("string").rlike(spec["expr"]), col.cast("string"))
+        return f"CASE WHEN {s} RLIKE {_spark_str(spec['expr'])} THEN {s} END"
     if t == "substring":
         index = int(spec.get("index", 0))
         length = spec.get("length")
@@ -67,57 +74,51 @@ def compile_extraction_fn(spec: dict, col: Column, registry=None,
             # (SubstringDimExtractionFnTest.testZeroLength)
             raise ValueError(
                 f"substring length[{length}] must be strictly positive")
-        if length is None:
-            return F.when(F.length(col.cast("string")) > index,
-                          F.substring(col.cast("string"), index + 1, 2147483647))
-        return F.when(F.length(col.cast("string")) > index,
-                      F.substring(col.cast("string"), index + 1, int(length)))
+        n = 2147483647 if length is None else int(length)
+        return (f"CASE WHEN length({s}) > {index} "
+                f"THEN substring({s}, {index + 1}, {n}) END")
     if t == "strlen":
-        return F.length(col.cast("string")).cast("string")
+        return f"CAST(length({s}) AS STRING)"
     if t == "timeFormat":
         fmt = spec.get("format")
         tz = spec.get("timeZone")
         gran = spec.get("granularity")
-        if src_type is not None and isinstance(src_type, T.LongType):
-            c = F.timestamp_millis(col)  # millis long, not seconds
-        else:
-            c = col.cast("timestamp")
+        c = (f"timestamp_millis({sql})" if isinstance(src_type, T.LongType)
+             else f"CAST({sql} AS TIMESTAMP)")
         if gran:
-            from apache_druid_spark.model.granularity import time_floor_col
-            c = time_floor_col(c, gran, tz)
+            c = granularity_sql(c, gran, tz)
         if spec.get("asMillis") and fmt is None:
             # TimeFormatExtractionFn(asMillis=true, format=null):
             # the (granularity-floored) instant as epoch millis
             # (testGroupByNestedDoubleTimeExtractionFnWithLongOutputTypes)
-            return F.unix_millis(c)
-        fmt = fmt or "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"
-        if tz and tz.upper() != "UTC":
-            c = F.from_utc_timestamp(c, tz)
-        return F.date_format(c, fmt)
+            return f"unix_millis({c})"
+        fmt = _spark_str(fmt or "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")
+        return f"date_format({in_zone(zone_sql(tz), c, write=False)}, {fmt})"
     if t == "time":  # parse with timeFormat then reformat with resultFormat
         tf, rf = spec.get("timeFormat"), spec.get("resultFormat")
-        parsed = F.to_timestamp(col.cast("string"), tf) if tf else col.cast("timestamp")
-        out = F.date_format(parsed, rf) if rf else parsed.cast("string")
+        parsed = (f"to_timestamp({s}, {_spark_str(tf)})" if tf
+                  else f"CAST({sql} AS TIMESTAMP)")
+        out = (f"date_format({parsed}, {_spark_str(rf)})" if rf
+               else f"CAST({parsed} AS STRING)")
         # TimeDimExtractionFn.apply returns the ORIGINAL value when the
         # parse misses, and null only for a null input
         # (SelectorFilterTest.testWithTimeExtractionFnNull: a null
         # selector over extracted dim0 matches nothing — "0" fails to
         # parse but extracts to "0", not null)
-        return F.coalesce(out, col.cast("string"))
-    if t == "upper":
-        return F.upper(col.cast("string"))
-    if t == "lower":
-        return F.lower(col.cast("string"))
+        return f"coalesce({out}, {s})"
+    if t in ("upper", "lower"):
+        return f"{t}({s})"
     if t == "bucket":
         # BucketExtractionFn.bucket renders integral buckets WITHOUT a
         # decimal point ('2', not '2.0') and unparseable inputs as null
         # (BucketExtractionFnTest.testApply)
         size = float(spec.get("size", 1))
         offset = float(spec.get("offset", 0))
-        v = col.cast("double")
-        b = F.floor((v - offset) / size) * size + offset
-        return F.when(b == b.cast("long"), b.cast("long").cast("string")
-                      ).otherwise(b.cast("string"))
+        b = (f"(floor((CAST({sql} AS DOUBLE) - {offset!r}D) / {size!r}D) "
+             f"* {size!r}D + {offset!r}D)")
+        return (f"CASE WHEN {b} = CAST({b} AS BIGINT) THEN "
+                f"CAST(CAST({b} AS BIGINT) AS STRING) "
+                f"ELSE CAST({b} AS STRING) END")
     if t == "stringFormat":
         # StringFormatExtractionFn nullHandling: NULLSTRING (default)
         # formats a null input as the string 'null' (Java
@@ -127,16 +128,16 @@ def compile_extraction_fn(spec: dict, col: Column, registry=None,
             # StringFormatExtractionFn ctor contract
             # (StringFormatExtractionFnTest.testInvalidOption1)
             raise ValueError("format string should not be empty")
+        fmt = _spark_str(spec["format"])
         nh = (spec.get("nullHandling") or "NULLSTRING").upper()
         if nh == "RETURNNULL":
-            return F.when(col.isNotNull(),
-                          F.format_string(spec["format"], col))
+            return (f"CASE WHEN {sql} IS NOT NULL "
+                    f"THEN format_string({fmt}, {sql}) END")
         if nh == "EMPTYSTRING":
-            return F.format_string(
-                spec["format"], F.coalesce(col.cast("string"), F.lit("")))
-        return F.format_string(spec["format"], col)
+            return f"format_string({fmt}, coalesce({s}, ''))"
+        return f"format_string({fmt}, {sql})"
     if t == "cascade":
-        out = col
+        out = sql
         for sub in spec["extractionFns"]:
             out = compile_extraction_fn(sub, out, registry)
         return out
@@ -145,19 +146,18 @@ def compile_extraction_fn(spec: dict, col: Column, registry=None,
             # inline map lookup; MapLookupExtractor.apply: map.get ->
             # null for a null-VALUED key exactly like a missing key, so
             # the pair is omitted
-            mexpr = _map_literal({str(k): str(v) for k, v in
-                                spec["lookup"].get("map", {}).items()
-                                if v is not None})
+            out = map_value({str(k): str(v) for k, v in
+                             spec["lookup"].get("map", {}).items()
+                             if v is not None}, s)
         else:
-            name = spec.get("lookup") or spec.get("name")
             if registry is None:
                 raise ValueError("registered lookup requires DatasourceRegistry")
-            mexpr = _map_literal(registry.lookup_map(name))
-        out = F.element_at(mexpr, col.cast("string"))
+            name = spec.get("lookup") or spec.get("name")
+            out = _lookup("LOOKUP", f"{sql}, {_sql_str(name)}", registry)
         if spec.get("retainMissingValue", False):
-            out = F.coalesce(out, col.cast("string"))
-        elif spec.get("replaceMissingValueWith") is not None:
-            out = F.coalesce(out, F.lit(spec["replaceMissingValueWith"]))
+            return f"coalesce({out}, {s})"
+        if spec.get("replaceMissingValueWith") is not None:
+            return f"coalesce({out}, {_lit(spec['replaceMissingValueWith'])})"
         return out
     if t == "searchQuery":
         # SearchQuerySpecDimExtractionFn: keep the value when the
@@ -166,19 +166,18 @@ def compile_extraction_fn(spec: dict, col: Column, registry=None,
         # case-insensitive)
         q = spec["query"]
         qt = q.get("type", "contains")
-        s = col.cast("string")
         if qt == "fragment":
             cs = q.get("caseSensitive", False)
-            probe = s if cs else F.lower(s)
-            cond = F.lit(True)
-            for frag in q.get("values", []):
-                cond = cond & F.contains(
-                    probe, F.lit(frag if cs else frag.lower()))
-            return F.when(cond, s)
+            probe = s if cs else f"lower({s})"
+            cond = " AND ".join(
+                f"contains({probe}, {_spark_str(f if cs else f.lower())})"
+                for f in q.get("values", [])) or "true"
+            return f"CASE WHEN {cond} THEN {s} END"
         needle = q.get("value", "")
         if q.get("caseSensitive", False) and qt != "insensitive_contains":
-            return F.when(F.contains(s, F.lit(needle)), s)
-        return F.when(F.contains(F.lower(s), F.lit(needle.lower())), s)
+            return f"CASE WHEN contains({s}, {_spark_str(needle)}) THEN {s} END"
+        return (f"CASE WHEN contains(lower({s}), "
+                f"{_spark_str(needle.lower())}) THEN {s} END")
     if t == "javascript":
         raise NotImplementedError("javascript extraction fns unsupported; "
                                   "use expression virtual columns")
@@ -234,22 +233,15 @@ def compile_dimension_spec(spec, registry=None, df=None) -> tuple[str, Column]:
             # null and 'r'); the outputType cast also applies per
             # element — the generic tail cast would stringify the
             # whole array
-            exfn = spec["extractionFn"]
-            elem_target = (_DRUID_OUT_TYPES.get(out_type.upper())
-                           if out_type
-                           and out_type.upper() in _DRUID_OUT_TYPES
-                           else None)
-            c = F.transform(
-                fcol(dim),
-                lambda e: (lambda r: r.cast(elem_target)
-                           if elem_target else r)(
-                    compile_extraction_fn(
-                        exfn, e, registry,
-                        src_type=src_type.elementType)))
+            fn = compile_extraction_fn(spec["extractionFn"], "__x", registry,
+                                       src_type=src_type.elementType)
+            if out_type and out_type.upper() in _DRUID_OUT_TYPES:
+                fn = f"CAST({fn} AS {_DRUID_OUT_TYPES[out_type.upper()]})"
+            c = F.expr(f"transform({ident(dim)}, __x -> {fn})")
             out_type = None  # consumed per element
         else:
-            c = compile_extraction_fn(spec["extractionFn"], fcol(dim),
-                                      registry, src_type=src_type)
+            c = F.expr(compile_extraction_fn(spec["extractionFn"], ident(dim),
+                                             registry, src_type=src_type))
     elif t in ("listFiltered", "regexFiltered", "prefixFiltered"):
         # Decorations accept either the flat {"dimension": ...} form or
         # the reference's {"delegate": <spec|name>} form
@@ -320,12 +312,12 @@ def compile_dimension_spec(spec, registry=None, df=None) -> tuple[str, Column]:
             target = _DRUID_OUT_TYPES[d_out.upper()]
             c = F.transform(c, lambda e: e.cast(target))
     elif t == "lookup":
-        c = compile_extraction_fn(
+        c = F.expr(compile_extraction_fn(
             {"type": "lookup", "lookup": spec.get("lookup"),
              "name": spec.get("name"),
              "retainMissingValue": spec.get("retainMissingValue", False),
              "replaceMissingValueWith": spec.get("replaceMissingValueWith")},
-            fcol(dim), registry)
+            ident(dim), registry))
     else:
         raise ValueError(f"unknown dimension spec type: {t!r}")
 

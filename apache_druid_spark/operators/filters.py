@@ -176,25 +176,27 @@ def _dim_predicate(df: DataFrame | None, dim: str, pred, extraction_fn=None) -> 
     each (element) value first."""
     from apache_druid_spark.operators.dimensions import compile_extraction_fn
 
-    def full(c: Column) -> Column:
-        if extraction_fn is not None:
-            c = compile_extraction_fn(extraction_fn, c)
-        return pred(c)
+    def extract(sql: str) -> str:
+        if extraction_fn is None:
+            return sql
+        return compile_extraction_fn(extraction_fn, sql)
 
+    null = "CAST(NULL AS STRING)"
     if _is_array_col(df, dim):
         col = fcol(dim)
         # ANY-element match; a null or empty multi-value row behaves as
         # a single null value (Druid ingests [] as a no-value row)
-        null_case = full(F.lit(None).cast("string"))
+        elems = col if extraction_fn is None else F.expr(
+            f"transform({ident(dim)}, __x -> {extract('__x')})")
         return F.when(col.isNull() | (F.size(col) == 0),
-                      F.coalesce(null_case, F.lit(False))
-                      ).otherwise(F.exists(col, lambda e: full(e)))
-    col = fcol(dim)
+                      F.coalesce(pred(F.expr(extract(null))), F.lit(False))
+                      ).otherwise(F.exists(elems, pred))
+    col = ident(dim)
     if (df is not None and dim in df.columns
             and isinstance(df.schema[dim].dataType, T.BinaryType)):
         # a COMPLEX (sketch-state) column reads NULL as a filter input
         # (testGroupByComplexColumn's null selector matches every row)
-        col = F.lit(None).cast("string")
+        col = null
     if (dim == "__time" and df is not None
             and "__time" in df.columns
             and isinstance(df.schema["__time"].dataType,
@@ -209,8 +211,8 @@ def _dim_predicate(df: DataFrame | None, dim: str, pred, extraction_fn=None) -> 
         # directly (testSubqueryWithOuterTimeFilter filters
         # EEEE='Friday').
         if not _wants_timestamp(extraction_fn):
-            col = F.unix_millis(col)
-    return full(col)
+            col = f"unix_millis({col})"
+    return pred(F.expr(extract(col)))
 
 
 def _wants_timestamp(fn) -> bool:
@@ -490,14 +492,15 @@ def compile_filter(spec: dict | None, df: DataFrame | None = None,
 
         if efn is not None and dt != "timestamp":
             # fn over the raw value, then millis-parse its string output
-            raw = compile_extraction_fn(efn, c, registry)
+            raw = F.expr(compile_extraction_fn(efn, ident(dim), registry))
             millis = _parse_millis(raw.cast("string"), "string")
         else:
             millis = _parse_millis(c, dt)
             if efn is not None:
                 # __time (timestamp-typed): the fn receives millis
-                millis = compile_extraction_fn(
-                    efn, millis, registry).cast("long")
+                millis = F.expr(compile_extraction_fn(
+                    efn, f"unix_millis({ident(dim)})", registry)
+                ).cast("long")
         return interval_predicate(F.timestamp_millis(millis),
                                   spec["intervals"])
     if t == "columnComparison":
@@ -513,7 +516,7 @@ def compile_filter(spec: dict | None, df: DataFrame | None = None,
         # Objects.equals), so encode it as a sentinel string and let
         # arrays_overlap do plain equality (nested F.exists lambdas
         # cannot bind the outer element variable)
-        sentinel = "\x00<druid-null>"
+        sentinel = "'\\u0000<druid-null>'"
 
         sets: list[Column] = []
         for d in spec["dimensions"]:
@@ -522,22 +525,21 @@ def compile_filter(spec: dict | None, df: DataFrame | None = None,
             name = d["dimension"]
             d_efn = d.get("extractionFn")
 
-            def apply_efn(e: Column, _fn=d_efn) -> Column:
+            def apply_efn(e: str, _fn=d_efn) -> str:
                 if _fn is not None:
                     e = compile_extraction_fn(_fn, e, registry)
-                return F.coalesce(e.cast("string"), F.lit(sentinel))
+                return f"coalesce(CAST({e} AS STRING), {sentinel})"
 
-            c = fcol(name)
+            c = ident(name)
             if _is_array_col(df, name):
-                arr = F.when(
-                    c.isNull() | (F.size(c) == 0),
-                    F.array(apply_efn(F.lit(None).cast("string")))
-                ).otherwise(F.transform(c, lambda e: apply_efn(e)))
+                arr = (f"CASE WHEN {c} IS NULL OR size({c}) = 0 THEN "
+                       f"array({apply_efn('CAST(NULL AS STRING)')}) ELSE "
+                       f"transform({c}, __x -> {apply_efn('__x')}) END")
             else:
                 if df is not None and name not in df.columns:
-                    c = F.lit(None).cast("string")
-                arr = F.array(apply_efn(c))
-            sets.append(arr)
+                    c = "CAST(NULL AS STRING)"
+                arr = f"array({apply_efn(c)})"
+            sets.append(F.expr(arr))
         out = F.lit(True)
         for i in range(1, len(sets)):
             for j in range(i):

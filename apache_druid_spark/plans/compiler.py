@@ -33,8 +33,8 @@ from apache_druid_spark.model.datasource import (
     TIME_COLUMN, DatasourceRegistry, local_path,
 )
 from apache_druid_spark.model.granularity import (
-    floor_ms, instant_lit, iso_of, parse_interval, parse_period, period_of,
-    time_floor_col, utc_datetime,
+    floor_ms, instant_lit, instant_sql, iso_of, parse_interval, parse_period,
+    period_of, time_floor_col, utc_datetime,
 )
 from apache_druid_spark.operators.aggregations import (
     compile_aggregations, synthesize_quantile_postaggs)
@@ -47,6 +47,8 @@ from apache_druid_spark.operators.postaggs import apply_post_aggregations
 from apache_druid_spark.operators.util import fcol, ident
 from apache_druid_spark.plans.timeout import persist
 
+# the row time as SQL text, the input of every bucket
+_TIME_SQL = ident(TIME_COLUMN)
 _DRUID_TYPES = {"STRING": "string", "LONG": "long", "DOUBLE": "double",
                 "FLOAT": "float"}
 
@@ -452,19 +454,16 @@ def compile_timeseries(q: dict, registry: DatasourceRegistry) -> DataFrame:
         out = df.agg(*aggs)
         out = out.select(F.lit(None).cast("timestamp").alias(TIME_COLUMN), "*")
     else:
-        tz = _tz_of(q)
-        out = (df.groupBy(time_floor_col(F.col(TIME_COLUMN), bucket[1], tz)
+        out = (df.groupBy(time_floor_col(_TIME_SQL, bucket[1])
                           .alias(TIME_COLUMN))
                  .agg(*aggs))
         if q.get("context", {}).get("skipEmptyBuckets", True) is False:
-            out = _zero_fill(out, q, registry, bucket[1], tz)
+            out = _zero_fill(out, q, registry, bucket[1])
     if no_aggs:
         out = out.drop("__ts_rows")
     if legacy_specs:
         keys = ([] if bucket is None else
-                [(TIME_COLUMN,
-                  time_floor_col(F.col(TIME_COLUMN), bucket[1],
-                                 _tz_of(q)))])
+                [(TIME_COLUMN, time_floor_col(_TIME_SQL, bucket[1]))])
         out = _attach_legacy_folds(df, out, keys, legacy_specs,
                                    finalize=True, zero_fill=True)
     ts_field = q.get("context", {}).get("timestampResultField")
@@ -501,13 +500,6 @@ def compile_timeseries(q: dict, registry: DatasourceRegistry) -> DataFrame:
     if limit:
         out = out.limit(int(limit))
     return out
-
-
-def _tz_of(q: dict) -> str | None:
-    gran = q.get("granularity")
-    if isinstance(gran, dict):
-        return gran.get("timeZone")
-    return None
 
 
 def _granularity_interval_sql(gran) -> str:
@@ -723,7 +715,7 @@ def _data_extent(q: dict, registry) -> tuple:
     return ext
 
 
-def _zero_fill(out: DataFrame, q: dict, registry, gran, tz) -> DataFrame:
+def _zero_fill(out: DataFrame, q: dict, registry, gran) -> DataFrame:
     """Left-join the aggregate onto the bucket sequence of the query
     intervals CLIPPED to the data's extent — the reference's toolchest
     iterates buckets over the intersection of the query interval and
@@ -746,8 +738,10 @@ def _zero_fill(out: DataFrame, q: dict, registry, gran, tz) -> DataFrame:
     one = out.sparkSession.range(1)
     parts = []
     for start_ms, end_ms in map(parse_interval, intervals):
+        # lo converts as F.lit(lo) would (TimestampType.toInternal)
         start = time_floor_col(
-            F.greatest(instant_lit(start_ms), F.lit(lo)), gran, tz)
+            f"greatest({instant_sql(start_ms)}, timestamp_micros("
+            f"{T.TimestampType().toInternal(lo)}))", gran)
         stop = F.least(instant_lit(end_ms - 1), F.lit(hi))
         seq = F.when(
             stop >= start,
@@ -816,8 +810,7 @@ def compile_topn(q: dict, registry: DatasourceRegistry) -> DataFrame:
         # aggregators must see the RAW row __time (first/last
         # tie-breaking and longSum(__time) read it — flooring first
         # fed them the bucket, a real divergence)
-        group_cols = [time_floor_col(F.col(TIME_COLUMN), bucket[1],
-                                     _tz_of(q)).alias(TIME_COLUMN)
+        group_cols = [time_floor_col(_TIME_SQL, bucket[1]).alias(TIME_COLUMN)
                       ] + group_cols
 
     out = df.groupBy(*group_cols).agg(*aggs)
@@ -826,9 +819,8 @@ def compile_topn(q: dict, registry: DatasourceRegistry) -> DataFrame:
     if legacy_specs:
         keys = [(dim_name, fcol(dim_name))]
         if bucket is not None:
-            keys = [(TIME_COLUMN,
-                     time_floor_col(F.col(TIME_COLUMN), bucket[1],
-                                    _tz_of(q)))] + keys
+            keys = [(TIME_COLUMN, time_floor_col(_TIME_SQL, bucket[1]))
+                    ] + keys
         out = _attach_legacy_folds(df, out, keys, legacy_specs,
                                    finalize=True)
     out = apply_post_aggregations(out, q.get("postAggregations", []), registry)
@@ -1173,8 +1165,7 @@ def compile_groupby(q: dict, registry: DatasourceRegistry,
         # aggregators see the raw row time (first/last tie-breaking,
         # longSum over __time)
         df = df.withColumn(
-            "__bucket", time_floor_col(F.col(TIME_COLUMN), bucket[1],
-                                       _tz_of(q)))
+            "__bucket", time_floor_col(_TIME_SQL, bucket[1]))
         group_names = ["__bucket"] + group_names
 
     if legacy_specs:
@@ -1388,15 +1379,13 @@ def compile_search(q: dict, registry: DatasourceRegistry) -> DataFrame:
         c = fcol(d)
         if isinstance(df.schema[d].dataType, T.ArrayType):
             p = df.select(F.explode(c).alias("value"))
-            c = F.col("value")
         else:
             p = df.select(c.cast("string").alias("value"))
-            c = F.col("value")
         if exfn is not None:
             from apache_druid_spark.operators.dimensions import (
                 compile_extraction_fn)
-            p = p.select(compile_extraction_fn(
-                exfn, c, registry).alias("value"))
+            p = p.select(F.expr(compile_extraction_fn(
+                exfn, "value", registry)).alias("value"))
         parts.append(_search_part(p, out_name, match,
                                   qspec["type"] == "all"))
     if not parts:

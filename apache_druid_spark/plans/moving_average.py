@@ -26,8 +26,8 @@ from pyspark.sql.window import Window
 
 from apache_druid_spark.model.datasource import TIME_COLUMN
 from apache_druid_spark.model.granularity import (
-    MAX_INSTANT, MIN_INSTANT, instant_lit, iso_of, parse_interval,
-    parse_period, period_of, shift_ms, time_floor_col,
+    MAX_INSTANT, MIN_INSTANT, instant_lit, instant_sql, iso_of,
+    parse_interval, parse_period, period_of, shift_ms, time_floor_col,
 )
 from apache_druid_spark.operators.having import compile_having
 from apache_druid_spark.operators.limitspec import apply_limit_spec
@@ -36,7 +36,7 @@ from apache_druid_spark.operators.postaggs import apply_post_aggregations
 
 def compile_moving_average(q: dict, registry) -> DataFrame:
     from apache_druid_spark.plans.compiler import (
-        _granularity_interval_sql, _intervals_of, _tz_of, compile_groupby,
+        _granularity_interval_sql, _intervals_of, compile_groupby,
         interval_predicate,
     )
 
@@ -45,7 +45,6 @@ def compile_moving_average(q: dict, registry) -> DataFrame:
         raise ValueError("movingAverage query needs averagers")
     n = max(int(a["buckets"]) for a in averagers)
     gran = q.get("granularity", "day")
-    tz = _tz_of(q)
     intervals = _intervals_of(q)
     if not intervals:
         raise ValueError("movingAverage query needs bounded intervals")
@@ -78,7 +77,7 @@ def compile_moving_average(q: dict, registry) -> DataFrame:
     step = _granularity_interval_sql(gran)
     seqs = []
     for lo, hi in extended:
-        start = time_floor_col(instant_lit(lo), gran, tz)
+        start = time_floor_col(instant_sql(lo), gran)
         stop = instant_lit(hi - 1)
         seqs.append(registry.spark.range(1).select(
             F.explode(F.sequence(start, stop, F.expr(f"INTERVAL {step}"))

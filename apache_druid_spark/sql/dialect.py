@@ -21,10 +21,11 @@ both.
 Time: ``translate(text, tz)`` hands the session zone (sqlTimeZone) to
 every rule. A time function works in its own zone argument, else the
 session zone, where TIMESTAMP literals are wall clocks too; only
-``_in_zone`` changes zone. A literal period is read at translate time;
-only a non-literal one inlines the per-row period arithmetic of
-functions/registry.PERIOD_BODIES. EXTRACT and CAST(… AS DATE) stay in
-UTC.
+model/granularity's ``in_zone`` changes zone. A literal period lowers
+through granularity's ``bucket_sql``/``shift_sql``, the builders query
+granularity uses; only a non-literal one inlines the per-row period
+arithmetic of functions/registry.PERIOD_BODIES. EXTRACT and
+CAST(… AS DATE) stay in UTC.
 
   EARLIEST(x)            -> min_by(x, __time)      (time-ordered first)
   LATEST(x)              -> max_by(x, __time)
@@ -67,8 +68,8 @@ from apache_druid_spark.functions.registry import (
 )
 from apache_druid_spark.model.datasource import TIME_COLUMN
 from apache_druid_spark.model.granularity import (
-    GRANULARITIES, _compound_boundaries, day_millis, is_utc, parse_instant,
-    parse_period, period_of, trunc_unit, tz_offset_ms, utc_datetime,
+    GRANULARITIES, bucket_sql, in_zone, is_utc, parse_instant, shift_sql,
+    trunc_unit, tz_offset_ms, utc_datetime,
 )
 
 # Druid functions that are a Spark function under another name: each is
@@ -831,16 +832,6 @@ def _round(_name: str, inner: str, _tz: str | None) -> str | None:
             f"ELSE {rounded} END")
 
 
-def _in_zone(tz: str | None, ts: str, f=None, read: bool = True,
-             write: bool = True) -> str:
-    """Text twin of granularity._with_tz: the instant ``ts`` read as its
-    wall clock in ``tz`` (if ``read``), ``f`` applied, the wall clock
-    written back as the instant (if ``write``). None is UTC."""
-    t = f"from_utc_timestamp({ts}, {tz})" if tz and read else ts
-    t = f(t) if f else t
-    return f"to_utc_timestamp({t}, {tz})" if tz and write else t
-
-
 def _call_args(name: str, inner: str, lo: int, hi: int) -> list[str]:
     args = _args(inner)
     if not lo <= len(args) <= hi:
@@ -865,70 +856,17 @@ def _zone(args: list[str], i: int, tz: str | None) -> str | None:
     return None if is_utc(_literal(arg) or "?") else arg
 
 
-def _shift(t: str, months: int, ms: int, step: str) -> str:
-    """``t`` plus ``step`` times (``months``, ``ms``), months first,
-    keeping the time of day and clamping the day (chronology.add)."""
-    if re.fullmatch(r"[+-]?\d+L?", step):
-        n = int(step.rstrip("L"))
-        m, secs = months * n, f"{ms * n / 1000:.3f}"
-    else:
-        m = f"CAST({months} * ({step}) AS INT)"
-        secs = f"{ms / 1000:.3f} * ({step})"
-    return f"({t} + make_interval(0, {m}, 0, 0, 0, 0, {secs}))"
-
-
 def _bucket(name: str, ts: str, period: str, origin: str | None,
-            tz: str | None) -> str | None:
-    """TIME_FLOOR / TIME_CEIL: buckets tile the wall clock of ``tz`` from
-    ``origin`` (None: the epoch); ceil is one period past the floor
-    unless ``ts`` is on a boundary."""
+            tz: str | None) -> str:
+    """TIME_FLOOR / TIME_CEIL through granularity.bucket_sql; a period
+    read per row inlines the PERIOD_BODIES arithmetic instead."""
     p = _literal(period)
-    if p is None:
-        if origin:
-            raise ValueError(f"{name.upper()} with an origin needs a "
-                             f"literal period")
-        return _in_zone(tz, ts, lambda t: _body(name, [t, period]))
-    months, ms = parse_period(p, allow_mixed=True)
-    if months and ms and origin:
-        raise ValueError(f"Invalid period[{p}] for {name.upper()}: a "
-                         f"period mixing months with days or time takes "
-                         f"no origin")
-    unit = None if origin else trunc_unit(p)
-    o = origin and _in_zone(tz, origin, write=False)
-
-    def floor(t: str) -> str:
-        if unit:
-            return f"date_trunc('{unit.upper()}', {t})"
-        if months and ms:
-            # PeriodGranularity.truncateCompoundPeriod: the last boundary
-            # of the month-then-time walk from the epoch at or before t
-            bounds = ", ".join(map(str, _compound_boundaries(0, months, ms)))
-            return (f"timestamp_millis(array_max(filter(array({bounds}), "
-                    f"__tf_b -> __tf_b <= unix_millis({t}))))")
-        if months:
-            # months_between ignores time-of-day when the days-of-month
-            # match, so a candidate bucket past t steps back one period
-            o_ = o or "TIMESTAMP '1970-01-01 00:00:00'"
-            k = f"CAST(floor(months_between({t}, {o_}) / {months}) AS INT)"
-            b = f"({o_} + make_interval(0, {k} * {months}))"
-            return (f"(CASE WHEN {b} > {t} THEN ({o_} + make_interval(0, "
-                    f"({k} - 1) * {months})) ELSE {b} END)")
-        if o:
-            return (f"timestamp_millis(unix_millis({o}) + CAST(floor(("
-                    f"unix_millis({t}) - unix_millis({o})) / {ms}) AS "
-                    f"BIGINT) * {ms})")
-        return (f"timestamp_millis(unix_millis({t}) - "
-                f"pmod(unix_millis({t}), {ms}))")
-
-    def ceil(t: str) -> str:
-        # the floor bound ONCE by a one-element transform: inlined three
-        # times it re-evaluates ts and origin and blows up nested calls
-        return (f"element_at(transform(array({floor(t)}), __tc_f -> "
-                f"CASE WHEN __tc_f = {t} THEN __tc_f "
-                f"ELSE {_shift('__tc_f', months, ms, '1')} END), 1)")
-
-    ts = ts if unit else f"CAST({ts} AS TIMESTAMP)"
-    return _in_zone(tz, ts, ceil if name.upper() == "TIME_CEIL" else floor)
+    if p is not None:
+        return bucket_sql(ts, p, origin, tz, name.upper() == "TIME_CEIL")
+    if origin:
+        raise ValueError(f"{name.upper()} with an origin needs a "
+                         f"literal period")
+    return in_zone(tz, ts, lambda t: _body(name, [t, period]))
 
 
 def _time_bucket(name: str, inner: str, tz: str | None) -> str | None:
@@ -964,18 +902,13 @@ def _to_unit(name: str, inner: str, tz: str | None) -> str | None:
 
 def _time_shift(name: str, inner: str, tz: str | None) -> str:
     """TIME_SHIFT(ts, period, step[, timezone]): chronology.add in the
-    zone, as granularity.time_shift_col."""
+    zone (granularity.shift_sql)."""
     args = _call_args(name, inner, 3, 4)
     ts, period, step = args[:3]
     tz, p = _zone(args, 3, tz), _literal(period)
     if p is None:
-        return _in_zone(tz, ts, lambda t: _body(name, [t, period, step]))
-    months, ms = parse_period(p, allow_mixed=True)
-    wall = ms if tz is None else day_millis(p)
-    ts = f"CAST({ts} AS TIMESTAMP)"
-    if months or wall:
-        ts = _in_zone(tz, ts, lambda t: _shift(t, months, wall, step))
-    return _shift(ts, 0, ms - wall, step) if ms != wall else ts
+        return in_zone(tz, ts, lambda t: _body(name, [t, period, step]))
+    return shift_sql(ts, p, step, tz)
 
 
 # TIME_EXTRACT units of a wall clock (TimestampExtractExprMacro.java:
@@ -999,7 +932,7 @@ def _extract_unit(ts: str, unit: str | None, tz: str | None) -> str:
     u = (unit or "").upper()
     if u not in _TIME_UNITS:
         raise ValueError(f"TIME_EXTRACT needs a literal unit, got[{unit}]")
-    t = ts if u == "EPOCH" else _in_zone(tz, ts, write=False)
+    t = ts if u == "EPOCH" else in_zone(tz, ts, write=False)
     return f"CAST({_TIME_UNITS[u].format(t)} AS BIGINT)"
 
 
@@ -1016,7 +949,7 @@ def _time_format(name: str, inner: str, tz: str | None) -> str:
     .dateTime)."""
     args = _call_args(name, inner, 1, 3)
     zone = _zone(args, 2, tz)
-    local = _in_zone(zone, args[0], write=False)
+    local = in_zone(zone, args[0], write=False)
     if len(args) > 1 and args[1].upper() != "NULL":
         return f"date_format({local}, {args[1]})"
     iso = f"date_format({local}, 'yyyy-MM-dd''T''HH:mm:ss.SSS"
@@ -1040,7 +973,7 @@ def _time_parse(name: str, inner: str, tz: str | None) -> str:
     args = _call_args(name, inner, 1, 3)
     read = args[:1] + [a for a in args[1:2] if a.upper() != "NULL"]
     parsed = f"try_to_timestamp({', '.join(read)})"
-    local = _in_zone(_zone(args, 2, tz), parsed, read=False)
+    local = in_zone(_zone(args, 2, tz), parsed, read=False)
     if local == parsed:
         return parsed
     if len(read) == 1:
@@ -1317,13 +1250,14 @@ def _rewrite_calls(text: str, ctx, rules=_CALL_RULES) -> str:
 
 def _body(name: str, args: list[str]) -> str:
     """Function ``name``'s body over ``args``, each cast to its
-    parameter's type and the result to the return type, as a SQL
-    function declaration would."""
+    parameter's type (``ANY``: kept as it is) and the result to the
+    return type, as a SQL function declaration would."""
     params, ret, text = _BODIES[name.upper()]
     if len(args) != len(params):
         raise ValueError(
             f"Invalid number of arguments to function '{name.upper()}'")
-    cast = {p: f"CAST({a} AS {t})" for (p, t), a in zip(params, args)}
+    cast = {p: a if t == "ANY" else f"CAST({a} AS {t})"
+            for (p, t), a in zip(params, args)}
     text = _sub_outside_strings(text, r"\b(?:" + "|".join(cast) + r")\b",
                                 lambda m: cast[m.group().lower()])
     return f"CAST({text} AS {ret})"
@@ -1432,6 +1366,17 @@ def _lookup_view(registry, name: str) -> str:
     return view
 
 
+def map_value(m: dict, key: str) -> str:
+    """The value of ``key`` (SQL text) in the string map ``m``, shipped
+    with the plan as a map literal (the broadcast LookupSegment); NULL
+    when ``m`` is empty."""
+    if not m:
+        return "CAST(NULL AS STRING)"
+    pairs = ", ".join(f"{_spark_str(k)}, {_spark_str(v)}"
+                      for k, v in m.items())
+    return f"element_at(map({pairs}), {key})"
+
+
 def _lookup(name: str, inner: str, registry) -> str:
     """LOOKUP(key, 'name'[, replaceMissingValueWith])
     (QueryLookupOperatorConversion): the key's value in the registered
@@ -1441,7 +1386,7 @@ def _lookup(name: str, inner: str, registry) -> str:
     broadcast LookupSegment; above it a scalar subquery on the
     broadcast-hinted lookup_<name> view, which Catalyst plans as a
     broadcast join (and Spark refuses inside a higher-order function's
-    lambda)."""
+    lambda). The native lookup extraction fns lower through it too."""
     key, lname, *missing = _call_args(name, inner, 2, 3)
     lname, key = _literal(lname), f"CAST({key} AS STRING)"
     if lname is None:
@@ -1450,13 +1395,11 @@ def _lookup(name: str, inner: str, registry) -> str:
          if registry is not None and lname in registry.lookup_names() else {})
     if m is None:
         view = _lookup_view(registry, lname)
-        value = f"(SELECT v FROM {view} WHERE k = {key})"
-    elif not m:
-        value = "CAST(NULL AS STRING)"
+        # renamed columns: a key column named k or v binds outside
+        value = (f"(SELECT __lv FROM (SELECT k AS __lk, v AS __lv FROM "
+                 f"{view}) WHERE __lk = {key})")
     else:
-        pairs = ", ".join(f"{_spark_str(k)}, {_spark_str(v)}"
-                          for k, v in m.items())
-        value = f"element_at(map({pairs}), {key})"
+        value = map_value(m, key)
     return f"coalesce({value}, {missing[0]})" if missing else value
 
 
@@ -1532,7 +1475,7 @@ def translate(text: str, tz: str | None = None) -> str:
         # emit stay wall clocks
         text = _sub_outside_strings(
             text, r"\bTIMESTAMP\s+'(?:[^']|'')*'",
-            lambda m: _in_zone(zone, m.group(0), read=False))
+            lambda m: in_zone(zone, m.group(0), read=False))
     # after ARRAY[..] became array(..), which the ARRAY_CONCAT and
     # *_CONTAINS rules look for; before integer division, which reads
     # the CAST the GROUPING rule emits
@@ -3178,10 +3121,17 @@ def _mark_integral_rounds(text: str, int_cols) -> str:
         return text
     cols = "|".join(re.escape(c) for c in int_cols)
     ref = rf"(?:[A-Za-z_]\w*\.)?(?:{cols})"
+
+    def mark(m: re.Match) -> str:
+        scale = m.group(2) or ""
+        if scale and not re.fullmatch(r",\s*[+-]?\d+L?\s*", scale):
+            # a column scale: the ROUND rule's HALF_UP power-of-ten
+            # path in DOUBLE, back to BIGINT at the nearest integer
+            return f"CAST(rint(ROUND({m.group(1)}{scale})) AS BIGINT)"
+        return f"__round_int({m.group(1)}{scale})"
+
     return _sub_outside_strings(
-        text,
-        rf"\bROUND\s*\(\s*({ref})\s*(,\s*[^()]*)?\)",
-        lambda m: f"__round_int({m.group(1)}{m.group(2) or ''})")
+        text, rf"\bROUND\s*\(\s*({ref})\s*(,\s*[^()]*)?\)", mark)
 
 
 def _coerce_float_literals(text: str, float_cols) -> str:

@@ -267,12 +267,12 @@ def test_extraction_lookup_null_value_is_a_miss(spark, base_table):
     exfn = {"type": "lookup",
             "lookup": {"type": "map",
                        "map": {"a": None, "b": "bee"}}}
-    got = [r[0] for r in df.select(compile_extraction_fn(
-        exfn, F.col("d"), None).alias("x")).collect()]
+    got = [r[0] for r in df.select(F.expr(compile_extraction_fn(
+        exfn, "d", None)).alias("x")).collect()]
     assert got == [None, "bee", None]
     # retainMissingValue treats the null-valued key as a miss too —
     # the input value comes back (LookupExtractionFn retain contract)
-    got = [r[0] for r in df.select(compile_extraction_fn(
-        {**exfn, "retainMissingValue": True}, F.col("d"),
-        None).alias("x")).collect()]
+    got = [r[0] for r in df.select(F.expr(compile_extraction_fn(
+        {**exfn, "retainMissingValue": True}, "d",
+        None)).alias("x")).collect()]
     assert got == ["a", "bee", "c"]

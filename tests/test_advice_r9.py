@@ -81,7 +81,7 @@ def test_compound_period_day_component_dst_wall_floor(spark):
     t = datetime(2021, 7, 1, 12, 0, 0)  # UTC instant (LA is UTC-7)
     df = spark.createDataFrame([(t,)], "ts timestamp")
     la = df.select(time_floor_col(
-        F.col("ts"), {"type": "period", "period": "P1DT1H",
+        "ts", {"type": "period", "period": "P1DT1H",
                       "timeZone": "America/Los_Angeles"}).alias("b")
     ).collect()[0]["b"]
     # expected: floor the LA wall clock to 25h boundaries from wall
@@ -98,7 +98,7 @@ def test_compound_period_day_component_dst_wall_floor(spark):
     assert la == expect
     # UTC path unchanged: plain 25h modular on the instant
     utc = df.select(time_floor_col(
-        F.col("ts"), {"type": "period", "period": "P1DT1H"}).alias("b")
+        "ts", {"type": "period", "period": "P1DT1H"}).alias("b")
     ).collect()[0]["b"]
     ms = int(t.replace(tzinfo=timezone.utc).timestamp() * 1000)
     assert utc == datetime.fromtimestamp(

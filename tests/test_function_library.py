@@ -12,7 +12,6 @@ import math
 from datetime import datetime
 
 import pytest
-from pyspark.sql import functions as F
 
 from apache_druid_spark.model.datasource import DatasourceRegistry
 from apache_druid_spark.model.granularity import time_floor_col
@@ -81,6 +80,13 @@ PAIRS = {
                           [20, 30]),
     "array_concat_longs": ("array_concat(arr, [40])",
                            "ARRAY_CONCAT(arr, ARRAY[40])", [10, 20, 30, 40]),
+    # the needle is cast to the element type, not both sides to STRING
+    "array_offset_of_decimal": ("array_offset_of([1.0, 2.0], 2)",
+                                "ARRAY_OFFSET_OF(ARRAY[1.0, 2.0], 2)", 1),
+    "array_ordinal_of_decimal": ("array_ordinal_of([1.0, 2.0], 2)",
+                                 "ARRAY_ORDINAL_OF(ARRAY[1.0, 2.0], 2)", 2),
+    "array_offset_of_string_needle": ("array_offset_of(arr, '20')",
+                                      "ARRAY_OFFSET_OF(arr, '20')", 1),
     # LOOKUP and its replaceMissingValueWith argument
     "lookup_hit": ("lookup(s, 'lk')", "LOOKUP(s, 'lk')", "found"),
     "lookup_missing": ("lookup(k, 'lk', 'none')", "LOOKUP(k, 'lk', 'none')",
@@ -163,7 +169,7 @@ def test_native_and_sql_agree_with_druid(spark, edge, key):
 
 def test_compound_floor_is_query_granularity(spark, edge):
     t = edge.table("edge").select(
-        time_floor_col(F.col("t"), "P1M1D").alias("v")).first()["v"]
+        time_floor_col("t", "P1M1D").alias("v")).first()["v"]
     assert t == PAIRS["floor_p1m1d"][2]
 
 
@@ -196,8 +202,8 @@ def test_p7m_and_p3y_anchor_at_the_epoch(spark):
     df = spark.createDataFrame([(datetime(2000, 6, 15), datetime(2001, 3, 1))],
                                "a timestamp, b timestamp")
     row = df.select(
-        time_floor_col(F.col("a"), {"type": "period", "period": "P7M"}),
-        time_floor_col(F.col("b"), {"type": "period", "period": "P3Y"}),
+        time_floor_col("a", {"type": "period", "period": "P7M"}),
+        time_floor_col("b", {"type": "period", "period": "P3Y"}),
     ).first()
     assert tuple(row) == (datetime(2000, 5, 1), datetime(2000, 1, 1))
 

@@ -40,12 +40,11 @@ WORDS = ["apple", "awesome", "asylum", "business", "be", "cool"]
 
 def apply_fn(spark, fn, values, dtype="string"):
     df = spark.createDataFrame([(v,) for v in values], f"v {dtype}")
-    col = df["v"]
     if dtype == "long" and fn.get("type") in ("timeFormat",):
-        out = compile_extraction_fn(fn, F.timestamp_millis(col))
+        out = compile_extraction_fn(fn, "timestamp_millis(v)")
     else:
-        out = compile_extraction_fn(fn, col)
-    return [r["o"] for r in df.select(out.alias("o")).collect()]
+        out = compile_extraction_fn(fn, "v")
+    return [r["o"] for r in df.select(F.expr(out).alias("o")).collect()]
 
 
 def regex(expr, index=1, replace=False, replace_with=None):
@@ -132,7 +131,7 @@ def test_substring_zero_length(spark):
     # testZeroLength: build-time IllegalArgumentException
     with pytest.raises(ValueError):
         compile_extraction_fn({"type": "substring", "index": 1,
-                               "length": 0}, F.lit("x"))
+                               "length": 0}, "'x'")
 
 
 def test_substring_no_length(spark):
@@ -224,7 +223,7 @@ def test_string_format_invalid_option(spark):
     # testInvalidOption1: empty format is a build-time error
     with pytest.raises(ValueError):
         compile_extraction_fn({"type": "stringFormat", "format": ""},
-                              F.lit("x"))
+                              "'x'")
 
 
 # ------------------------------------------------ partial (matching)

@@ -40,7 +40,7 @@ from apache_druid_spark.model.granularity import time_floor_col
 
 def floors(spark, instants, gran, tz=None):
     df = spark.createDataFrame([(t,) for t in instants], "ts timestamp")
-    rows = (df.select("ts", time_floor_col(df.ts, gran, tz).alias("b"))
+    rows = (df.select("ts", time_floor_col("ts", gran, tz).alias("b"))
             .collect())
     by_in = {r["ts"]: r["b"] for r in rows}
     return [by_in[t] for t in instants]
@@ -206,10 +206,12 @@ def test_duration_bucket_start(spark):
 def test_duration_increment(spark):
     # testDurationIncrement + testDurationIncrementOnMillis (r14):
     # increment() of a PT12H5M DurationGranularity adds the fixed
-    # millis — time_shift_col with a duration gran, step 1 (the
+    # millis — shift_sql by a duration gran's period, step 1 (the
     # OnMillis twin asserts the same instants as epoch longs; one
     # column op covers both). Reference instants converted to UTC.
-    from apache_druid_spark.model.granularity import time_shift_col
+    from pyspark.sql import functions as F
+
+    from apache_druid_spark.model.granularity import period_of, shift_sql
 
     ms = (12 * 3600 + 5 * 60) * 1000
     gran = {"type": "duration", "duration": ms,
@@ -219,7 +221,8 @@ def test_duration_increment(spark):
            dt(2012, 1, 3, 8, 20, 4, 123000),
            dt(2012, 2, 4, 6, 25)]
     df = spark.createDataFrame([(t,) for t in ins], "ts timestamp")
-    rows = df.select("ts", time_shift_col(df.ts, gran, 1).alias("n")) \
+    rows = df.select("ts", F.expr(shift_sql("ts", period_of(gran), "1"))
+                     .alias("n")) \
         .collect()
     by_in = {r["ts"]: r["n"] for r in rows}
     assert [by_in[t] for t in ins] == [

@@ -9,13 +9,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from apache_druid_spark.model.granularity import (
-    time_ceil_col, time_floor_col, time_shift_col,
+    bucket_sql, shift_sql, time_floor_col,
 )
 
 
 def _floor(spark, ts: str, gran, tz=None) -> datetime:
     df = spark.createDataFrame([(ts,)], "t string").select(
-        time_floor_col(F.to_timestamp("t"), gran, tz).alias("f"))
+        time_floor_col("to_timestamp(t)", gran, tz).alias("f"))
     return df.first()["f"]
 
 
@@ -73,12 +73,14 @@ def test_multi_month_period(spark):
 def test_ceil_and_shift(spark):
     df = spark.createDataFrame([("2024-01-15 10:30:00",)], "t string")
     row = df.select(
-        time_ceil_col(F.to_timestamp("t"), "day").alias("c"),
-        time_shift_col(F.to_timestamp("t"), "month", 2).alias("s"),
+        F.expr(bucket_sql("to_timestamp(t)", "P1D", ceil=True))
+        .alias("c"),
+        F.expr(shift_sql("to_timestamp(t)", "P1M", "2")).alias("s"),
     ).first()
     assert row["c"] == datetime(2024, 1, 16)
     assert row["s"] == datetime(2024, 3, 15, 10, 30)
     # ceil of an exact boundary is itself
     exact = spark.createDataFrame([("2024-01-15 00:00:00",)], "t string")
-    assert exact.select(time_ceil_col(F.to_timestamp("t"), "day")
+    assert exact.select(F.expr(bucket_sql("to_timestamp(t)", "P1D",
+                                          ceil=True))
                         .alias("c")).first()["c"] == datetime(2024, 1, 15)

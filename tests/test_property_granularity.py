@@ -16,7 +16,8 @@ from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from apache_druid_spark.model.granularity import (
-    time_ceil_col, time_floor_col, time_shift_col,
+    bucket_sql, instant_sql, parse_instant, period_of, shift_sql,
+    time_floor_col,
 )
 
 GRANS = [
@@ -30,6 +31,13 @@ GRANS = [
      "origin": "2000-01-01T00:00:07"},
 ]
 
+def _ceil_sql(ts: str, gran) -> str:
+    origin = gran.get("origin") if isinstance(gran, dict) else None
+    return bucket_sql(ts, period_of(gran),
+                      origin and instant_sql(parse_instant(origin)),
+                      ceil=True)
+
+
 TS = st.datetimes(min_value=datetime(1980, 1, 5),
                   max_value=datetime(2035, 12, 28))
 
@@ -39,12 +47,13 @@ def floor_fn(spark):
     def run(ts: datetime, gran):
         df = spark.createDataFrame([(ts,)], "t timestamp")
         row = df.select(
-            time_floor_col(F.col("t"), gran).alias("f"),
-            time_ceil_col(F.col("t"), gran).alias("c"),
+            time_floor_col("t", gran).alias("f"),
+            F.expr(_ceil_sql("t", gran)).alias("c"),
         ).first()
         nxt = (spark.createDataFrame([(row["f"],)], "t timestamp")
-               .select(time_shift_col(F.col("t"), gran, 1).alias("n"),
-                       time_floor_col(F.col("t"), gran).alias("ff"))
+               .select(F.expr(shift_sql("t", period_of(gran), "1"))
+                       .alias("n"),
+                       time_floor_col("t", gran).alias("ff"))
                .first())
         return row["f"], row["c"], nxt["n"], nxt["ff"]
     return run

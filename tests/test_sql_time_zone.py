@@ -4,7 +4,7 @@ unless the call names its own zone: one row test per time rule under
 America/Los_Angeles, compound literal periods, non-literal periods,
 the native timestamp_shift / timestamp_ceil zone checked against the
 SQL forms, the context on the Avatica and EXPLAIN paths, and a lint
-that keeps zone wrapping in the dialect's one helper."""
+that keeps zone wrapping in model/granularity's one helper."""
 
 from __future__ import annotations
 
@@ -112,23 +112,27 @@ def test_compound_shift_adds_both_parts(spark):
 
 @pytest.mark.parametrize("fn", ["TIME_FLOOR", "TIME_CEIL"])
 def test_compound_bucket_walks_from_the_epoch(spark, fn):
-    # a P1M1D bucket steps a month, then a day, from 1970-01-01
-    # (PeriodGranularity.truncateCompoundPeriod), as query granularity does
+    # a P1M1D bucket steps a month, then a day, from 1970-01-01 or from
+    # a literal origin (PeriodGranularity.truncateCompoundPeriod), as
+    # query granularity does
     from pyspark.sql import functions as F
 
-    from apache_druid_spark.model.granularity import (
-        time_ceil_col, time_floor_col,
-    )
+    from apache_druid_spark.model.granularity import bucket_sql
 
-    bucket = time_floor_col if fn == "TIME_FLOOR" else time_ceil_col
-    want = spark.range(1).select(bucket(
-        F.timestamp_millis(F.lit(946695600000)), "P1M1D").alias("v")
-    ).first()["v"]
+    def native(origin=None):
+        return spark.range(1).select(F.expr(bucket_sql(
+            "timestamp_millis(946695600000)", "P1M1D", origin,
+            ceil=fn == "TIME_CEIL")).alias("v")).first()["v"]
+
+    want = native()
     assert want == {"TIME_FLOOR": datetime(1999, 12, 22),
                     "TIME_CEIL": datetime(2000, 1, 23)}[fn]
     assert one(spark, f"{fn}({T0}, 'P1M1D')") == want
-    with pytest.raises(ValueError, match=r"Invalid period\[P1M1D\]"):
-        one(spark, f"{fn}({T0}, 'P1M1D', TIMESTAMP '2000-01-01 00:00:00')")
+    anchored = native("timestamp_millis(946684800000)")  # 2000-01-01
+    assert anchored == {"TIME_FLOOR": datetime(2000, 1, 1),
+                        "TIME_CEIL": datetime(2000, 2, 2)}[fn]
+    assert one(spark, f"{fn}({T0}, 'P1M1D', "
+                      f"TIMESTAMP '2000-01-01 00:00:00')") == anchored
 
 
 @pytest.mark.parametrize("context, want", [
@@ -212,7 +216,7 @@ def test_explain_runs_its_statement_in_the_zone(spark):
 
 def test_zone_conversions_only_in_the_zone_helper():
     path = os.path.join(os.path.dirname(__file__), os.pardir,
-                        "apache_druid_spark", "sql", "dialect.py")
+                        "apache_druid_spark", "model", "granularity.py")
     src = open(path).read()
     funcs = [n for n in ast.walk(ast.parse(src))
              if isinstance(n, ast.FunctionDef)]
@@ -223,5 +227,5 @@ def test_zone_conversions_only_in_the_zone_helper():
         owner = min((f for f in funcs
                      if f.lineno <= lineno <= f.end_lineno),
                     key=lambda f: f.end_lineno - f.lineno, default=None)
-        assert owner is not None and owner.name == "_in_zone", \
-            f"dialect.py:{lineno}: wrap zones with _in_zone"
+        assert owner is not None and owner.name == "in_zone", \
+            f"granularity.py:{lineno}: wrap zones with in_zone"

@@ -18,8 +18,8 @@ from pyspark.sql import functions as F
 from apache_druid_spark.model.datasource import DatasourceRegistry
 from apache_druid_spark.model.granularity import (
     ETERNITY, GRANULARITIES, MAX_INSTANT, MIN_INSTANT, floor_ms, iso_of,
-    parse_instant, parse_interval, period_of, shift_ms, time_floor_col,
-    time_shift_col,
+    parse_instant, parse_interval, period_of, shift_ms, shift_sql,
+    time_floor_col,
 )
 from apache_druid_spark.plans.compiler import _footer_extent, compile_query
 
@@ -99,9 +99,11 @@ def test_floor_and_shift_twin_the_column_functions(spark, name):
     df = spark.createDataFrame([(m,) for m in ms], "ms long").select(
         F.timestamp_millis("ms").alias("t"))
     rows = df.select(
-        F.unix_millis(time_floor_col(F.col("t"), name)).alias("f"),
-        F.unix_millis(time_shift_col(F.col("t"), name, 1)).alias("s"),
-        F.unix_millis(time_shift_col(F.col("t"), name, -2)).alias("b"),
+        F.unix_millis(time_floor_col("t", name)).alias("f"),
+        F.expr(f"unix_millis({shift_sql('t', period_of(name), '1')})")
+        .alias("s"),
+        F.expr(f"unix_millis({shift_sql('t', period_of(name), '-2')})")
+        .alias("b"),
     ).collect()
     assert [(r["f"], r["s"], r["b"]) for r in rows] == [
         (floor_ms(m, name), shift_ms(m, name, 1), shift_ms(m, name, -2))
@@ -170,7 +172,7 @@ def test_partial_date_origin_floors_like_the_full_instant(spark):
     def floored(origin):
         gran = {"type": "period", "period": "PT7H", "origin": origin}
         return [r[0] for r in
-                df.select(time_floor_col(F.col("t"), gran)).collect()]
+                df.select(time_floor_col("t", gran)).collect()]
 
     assert floored("2012") == floored("2012-01-01T00:00:00Z")
     # 7-hour buckets from 2012 differ from the epoch-aligned ones
