@@ -94,16 +94,22 @@ FUNCTION_BODIES: list[tuple[str, str, str, str]] = [
     # MV_TO_ARRAY reinterprets the MV column as ARRAY — same value)
     ("MV_TO_ARRAY", "a ARRAY<STRING>", "ARRAY<STRING>", "a"),
     # ARRAY_* arithmetic shims (Array{OffsetOf,OrdinalOf}
-    # OperatorConversion.java): each element compared with the needle
-    # as Spark compares the two types (a string needle read as a
-    # numeric array's element type, numbers by value), not both sides
-    # as STRING, which misses 2 in [1.0, 2.0]; array_position itself
-    # wants the two types equal. The direct name maps live in
+    # OperatorConversion.java): the needle cast to the array's element
+    # type (Function.ArrayOffsetOfFunction castTo), so 2 is found in
+    # [1.0, 2.0] and '2' in an ARRAY<STRING>, where 2.0 is not. The
+    # argument's Spark type picks the branch (``typeof`` folds when the
+    # plan is optimized), and the needle stays outside any lambda, so a
+    # subquery needle still analyzes. The direct name maps live in
     # sql/dialect.py _RENAMES, and ARRAY_SLICE and ARRAY_CONCAT, which
     # keep the element type, in its _INLINE.
     ("ARRAY_ORDINAL_OF", "a ANY, v ANY", "INT",
-     "nullif(array_position(transform(a, __e -> coalesce(__e = v, false)), "
-     "true), 0)"),
+     "nullif(CASE WHEN typeof(a) = 'array<string>' "
+     "THEN array_position(CAST(a AS ARRAY<STRING>), CAST(v AS STRING)) "
+     "WHEN typeof(a) IN ('array<tinyint>', 'array<smallint>', "
+     "'array<int>', 'array<bigint>') "
+     "THEN array_position(CAST(a AS ARRAY<BIGINT>), CAST(v AS BIGINT)) "
+     "ELSE array_position(CAST(a AS ARRAY<DOUBLE>), CAST(v AS DOUBLE)) "
+     "END, 0)"),
     ("ARRAY_OFFSET_OF", "a ANY, v ANY", "INT", "ARRAY_ORDINAL_OF(a, v) - 1"),
     # a filter result with no surviving elements is NULL, not []: the
     # native ListFilteredVirtualColumn selector treats a 0-length row

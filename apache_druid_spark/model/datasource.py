@@ -183,21 +183,23 @@ class DatasourceRegistry:
             raise KeyError(f"unknown lookup: {name!r}")
         return self._lookups[name]
 
-    def lookup_map(self, name: str, cap: int) -> dict | None:
+    def lookup_map(self, name: str, cap: int | None = None) -> dict | None:
         """The lookup as one key -> value dict: a duplicated key keeps
         its largest value (SQL max), a null value is omitted (the key
         reads as missing). Collected once per epoch and lookup; None
         when it has more than ``cap`` keys."""
         hit = self.lookup_maps.get(name)
-        if hit is None or hit[0] != self.epoch:
+        if hit is None or hit[0] != self.epoch or (hit[1] is None
+                                                   and cap is None):
             rows = self.lookup_df(name).groupBy("k").agg(
-                F.max("v").alias("v")).limit(cap + 1).collect()
+                F.max("v").alias("v"))
+            rows = (rows if cap is None else rows.limit(cap + 1)).collect()
+            full = cap is None or len(rows) <= cap
             hit = (self.epoch, {k: v for k, v in rows if k is not None
-                                and v is not None}
-                   if len(rows) <= cap else None)
+                                and v is not None} if full else None)
             self.lookup_maps[name] = hit
         m = hit[1]
-        return None if m is None or len(m) > cap else m
+        return None if m is None or cap is not None and len(m) > cap else m
 
     def record_segments(self, name: str, path: str,
                         segment_granularity: str = "day") -> None:

@@ -282,9 +282,20 @@ def _compound_boundaries(origin_wall_ms: int, months: int,
 EPOCH_MONTHS = 1970 * 12
 
 
+# a zone id or offset as java.time and Joda spell one
+# (America/Los_Angeles, Etc/GMT+8, +05:30, UTC-3)
+_ZONE_RE = re.compile(r"[A-Za-z0-9~/._+:-]+")
+
+
 def zone_sql(tz: str | None) -> str | None:
-    """A zone id (or ``±hh:mm`` offset) as SQL text; None for UTC."""
-    return None if is_utc(tz) else f"'{tz}'"
+    """A zone id (or ``±hh:mm`` offset) as a SQL string literal; None for
+    UTC. The zone comes from a native query's timeZone, so any other
+    character is refused, not quoted into the SQL text."""
+    if is_utc(tz):
+        return None
+    if not _ZONE_RE.fullmatch(str(tz)):
+        raise ValueError(f"Invalid time zone: {tz!r}")
+    return f"'{tz}'"
 
 
 def in_zone(tz: str | None, ts: str, f=None, read: bool = True,
@@ -419,6 +430,6 @@ def granularity_sql(ts: str, gran, tz: str | None = None) -> str:
     return bucket_sql(ts, period_of(gran), origin, zone_sql(tz))
 
 
-def time_floor_col(ts: str, gran, tz: str | None = None) -> Column:
+def time_floor_col(ts: str, gran) -> Column:
     """``granularity_sql`` as a Column: the query-granularity bucket."""
-    return F.expr(granularity_sql(ts, gran, tz))
+    return F.expr(granularity_sql(ts, gran))

@@ -11,11 +11,11 @@ apply inside a higher-order function's lambda: over a multi-value
 (array) input a caller maps it per element as
 ``transform(<col>, __x -> <fn over __x>)``. The timeFormat fn buckets
 through model/granularity's builder, and the lookup fns through the SQL
-dialect's LOOKUP (a map literal up to its inline cap, the broadcast
-lookup view above it). A dimension spec compiles to a Column; over an
-array dimension the filtered specs are ``F.filter`` element whitelists,
-so the later explode sees only kept elements, matching Druid's
-behavior.
+dialect's ``lookup_sql`` (a map literal up to its inline cap or per
+element, the broadcast lookup view above it). A dimension spec compiles
+to a Column; over an array dimension the filtered specs are ``F.filter``
+element whitelists, so the later explode sees only kept elements,
+matching Druid's behavior.
 """
 
 from __future__ import annotations
@@ -28,9 +28,7 @@ from apache_druid_spark.model.granularity import (
     granularity_sql, in_zone, zone_sql,
 )
 from apache_druid_spark.operators.util import fcol, ident
-from apache_druid_spark.sql.dialect import (
-    _lookup, _spark_str, _sql_str, map_value,
-)
+from apache_druid_spark.sql.dialect import lookup_sql, map_value, spark_str
 
 _DRUID_OUT_TYPES = {"STRING": "string", "LONG": "long", "FLOAT": "float",
                     "DOUBLE": "double"}
@@ -38,7 +36,7 @@ _DRUID_OUT_TYPES = {"STRING": "string", "LONG": "long", "FLOAT": "float",
 
 def _lit(v) -> str:
     """A string literal, or NULL for None."""
-    return "CAST(NULL AS STRING)" if v is None else _spark_str(v)
+    return "CAST(NULL AS STRING)" if v is None else spark_str(v)
 
 
 def compile_extraction_fn(spec: dict, sql: str, registry=None,
@@ -59,13 +57,13 @@ def compile_extraction_fn(spec: dict, sql: str, registry=None,
         # (RegexDimExtractionFnTest.testNullAndEmpty: '(.*)/.*/.*'
         # applied to '/a/b' is '', not '/a/b'); a null input is a miss
         # too (apply(null) -> replacement)
-        expr = _spark_str(spec["expr"])
+        expr = spark_str(spec["expr"])
         miss = (_lit(spec.get("replaceMissingValueWith"))
                 if spec.get("replaceMissingValue", False) else s)
         return (f"CASE WHEN {s} RLIKE {expr} THEN regexp_extract({s}, "
                 f"{expr}, {int(spec.get('index', 1))}) ELSE {miss} END")
     if t == "partial":  # keep value only if regex matches
-        return f"CASE WHEN {s} RLIKE {_spark_str(spec['expr'])} THEN {s} END"
+        return f"CASE WHEN {s} RLIKE {spark_str(spec['expr'])} THEN {s} END"
     if t == "substring":
         index = int(spec.get("index", 0))
         length = spec.get("length")
@@ -92,13 +90,13 @@ def compile_extraction_fn(spec: dict, sql: str, registry=None,
             # the (granularity-floored) instant as epoch millis
             # (testGroupByNestedDoubleTimeExtractionFnWithLongOutputTypes)
             return f"unix_millis({c})"
-        fmt = _spark_str(fmt or "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")
+        fmt = spark_str(fmt or "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")
         return f"date_format({in_zone(zone_sql(tz), c, write=False)}, {fmt})"
     if t == "time":  # parse with timeFormat then reformat with resultFormat
         tf, rf = spec.get("timeFormat"), spec.get("resultFormat")
-        parsed = (f"to_timestamp({s}, {_spark_str(tf)})" if tf
+        parsed = (f"to_timestamp({s}, {spark_str(tf)})" if tf
                   else f"CAST({sql} AS TIMESTAMP)")
-        out = (f"date_format({parsed}, {_spark_str(rf)})" if rf
+        out = (f"date_format({parsed}, {spark_str(rf)})" if rf
                else f"CAST({parsed} AS STRING)")
         # TimeDimExtractionFn.apply returns the ORIGINAL value when the
         # parse misses, and null only for a null input
@@ -128,7 +126,7 @@ def compile_extraction_fn(spec: dict, sql: str, registry=None,
             # StringFormatExtractionFn ctor contract
             # (StringFormatExtractionFnTest.testInvalidOption1)
             raise ValueError("format string should not be empty")
-        fmt = _spark_str(spec["format"])
+        fmt = spark_str(spec["format"])
         nh = (spec.get("nullHandling") or "NULLSTRING").upper()
         if nh == "RETURNNULL":
             return (f"CASE WHEN {sql} IS NOT NULL "
@@ -153,7 +151,7 @@ def compile_extraction_fn(spec: dict, sql: str, registry=None,
             if registry is None:
                 raise ValueError("registered lookup requires DatasourceRegistry")
             name = spec.get("lookup") or spec.get("name")
-            out = _lookup("LOOKUP", f"{sql}, {_sql_str(name)}", registry)
+            out = lookup_sql(sql, name, registry)
         if spec.get("retainMissingValue", False):
             return f"coalesce({out}, {s})"
         if spec.get("replaceMissingValueWith") is not None:
@@ -170,14 +168,14 @@ def compile_extraction_fn(spec: dict, sql: str, registry=None,
             cs = q.get("caseSensitive", False)
             probe = s if cs else f"lower({s})"
             cond = " AND ".join(
-                f"contains({probe}, {_spark_str(f if cs else f.lower())})"
+                f"contains({probe}, {spark_str(f if cs else f.lower())})"
                 for f in q.get("values", [])) or "true"
             return f"CASE WHEN {cond} THEN {s} END"
         needle = q.get("value", "")
         if q.get("caseSensitive", False) and qt != "insensitive_contains":
-            return f"CASE WHEN contains({s}, {_spark_str(needle)}) THEN {s} END"
+            return f"CASE WHEN contains({s}, {spark_str(needle)}) THEN {s} END"
         return (f"CASE WHEN contains(lower({s}), "
-                f"{_spark_str(needle.lower())}) THEN {s} END")
+                f"{spark_str(needle.lower())}) THEN {s} END")
     if t == "javascript":
         raise NotImplementedError("javascript extraction fns unsupported; "
                                   "use expression virtual columns")

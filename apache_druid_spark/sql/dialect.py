@@ -1344,7 +1344,7 @@ def _ipv4(name: str, inner: str, _ctx) -> str:
     return args[0] if fn == "IPV4_PARSE" else _body(fn, args)
 
 
-def _spark_str(v) -> str:
+def spark_str(v) -> str:
     """A Spark SQL string literal (backslash and quote escaped)."""
     return "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
 
@@ -1372,34 +1372,49 @@ def map_value(m: dict, key: str) -> str:
     when ``m`` is empty."""
     if not m:
         return "CAST(NULL AS STRING)"
-    pairs = ", ".join(f"{_spark_str(k)}, {_spark_str(v)}"
+    pairs = ", ".join(f"{spark_str(k)}, {spark_str(v)}"
                       for k, v in m.items())
     return f"element_at(map({pairs}), {key})"
 
 
+# the lambda variables the engine binds are named __x, __x<n>, __e,
+# __mv_e: a key naming one is read per element, where Spark refuses a
+# subquery. __time is the one column so named; another one only costs
+# LOOKUP the inlined map.
+_LAMBDA_VAR = re.compile(r"\b__(?!time\b)[A-Za-z]\w*")
+
+
+def lookup_sql(key: str, name: str, registry) -> str:
+    """The value of ``key`` (SQL text) in the registered lookup ``name``
+    (registry.lookup_map: max(v) for a duplicated key); NULL for an
+    unknown key or an unknown or empty lookup. Up to _LOOKUP_INLINE_MAX
+    keys the lookup is a map literal, the broadcast LookupSegment; above
+    it a scalar subquery on the broadcast-hinted lookup_<name> view,
+    which Catalyst plans as a broadcast join. A key read per element
+    (inside a higher-order function's lambda, where Spark refuses a
+    subquery) keeps the whole map literal at any size."""
+    key = f"CAST({key} AS STRING)"
+    if registry is None or name not in registry.lookup_names():
+        return map_value({}, key)
+    m = registry.lookup_map(name, _LOOKUP_INLINE_MAX)
+    if m is None and _LAMBDA_VAR.search(key):
+        m = registry.lookup_map(name)
+    if m is not None:
+        return map_value(m, key)
+    # renamed columns: a key column named k or v binds outside
+    return (f"(SELECT __lv FROM (SELECT k AS __lk, v AS __lv FROM "
+            f"{_lookup_view(registry, name)}) WHERE __lk = {key})")
+
+
 def _lookup(name: str, inner: str, registry) -> str:
     """LOOKUP(key, 'name'[, replaceMissingValueWith])
-    (QueryLookupOperatorConversion): the key's value in the registered
-    lookup (registry.lookup_map: max(v) for a duplicated key); NULL, or
-    the replacement, for an unknown key or an unknown or empty lookup.
-    Up to _LOOKUP_INLINE_MAX keys the lookup is a map literal, the
-    broadcast LookupSegment; above it a scalar subquery on the
-    broadcast-hinted lookup_<name> view, which Catalyst plans as a
-    broadcast join (and Spark refuses inside a higher-order function's
-    lambda). The native lookup extraction fns lower through it too."""
+    (QueryLookupOperatorConversion): ``lookup_sql``, or the replacement
+    for a missing value."""
     key, lname, *missing = _call_args(name, inner, 2, 3)
-    lname, key = _literal(lname), f"CAST({key} AS STRING)"
+    lname = _literal(lname)
     if lname is None:
         raise ValueError("LOOKUP needs a literal lookup name")
-    m = (registry.lookup_map(lname, _LOOKUP_INLINE_MAX)
-         if registry is not None and lname in registry.lookup_names() else {})
-    if m is None:
-        view = _lookup_view(registry, lname)
-        # renamed columns: a key column named k or v binds outside
-        value = (f"(SELECT __lv FROM (SELECT k AS __lk, v AS __lv FROM "
-                 f"{view}) WHERE __lk = {key})")
-    else:
-        value = map_value(m, key)
+    value = lookup_sql(key, lname, registry)
     return f"coalesce({value}, {missing[0]})" if missing else value
 
 

@@ -1,7 +1,7 @@
 """Golden tests ported from the reference's QueryGranularityTest.java
 (processing/src/test/java/org/apache/druid/granularity/, 36 methods) —
 bucketStart value pins for PeriodGranularity/DurationGranularity
-through time_floor_col (model/granularity.py): timezone truncation in
+through granularity_sql (model/granularity.py): timezone truncation in
 odd-offset zones (Kathmandu +05:45, Dhaka +06:00), the
 America/Los_Angeles daylight-saving fall-back day (25-hour bucket),
 origin-anchored periods, compound periods (P1M2D, PT12H5M), and
@@ -34,14 +34,15 @@ from __future__ import annotations
 from datetime import datetime
 
 import pytest
+from pyspark.sql import functions as F
 
-from apache_druid_spark.model.granularity import time_floor_col
+from apache_druid_spark.model.granularity import granularity_sql
 
 
 def floors(spark, instants, gran, tz=None):
     df = spark.createDataFrame([(t,) for t in instants], "ts timestamp")
-    rows = (df.select("ts", time_floor_col("ts", gran, tz).alias("b"))
-            .collect())
+    rows = (df.select("ts", F.expr(granularity_sql("ts", gran, tz))
+                      .alias("b")).collect())
     by_in = {r["ts"]: r["b"] for r in rows}
     return [by_in[t] for t in instants]
 

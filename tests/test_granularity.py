@@ -9,13 +9,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from apache_druid_spark.model.granularity import (
-    bucket_sql, shift_sql, time_floor_col,
+    bucket_sql, granularity_sql, shift_sql,
 )
 
 
 def _floor(spark, ts: str, gran, tz=None) -> datetime:
     df = spark.createDataFrame([(ts,)], "t string").select(
-        time_floor_col("to_timestamp(t)", gran, tz).alias("f"))
+        F.expr(granularity_sql("to_timestamp(t)", gran, tz)).alias("f"))
     return df.first()["f"]
 
 

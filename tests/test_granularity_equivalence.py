@@ -1,12 +1,12 @@
 """One time-bucket lowering for both languages: query granularity
-(``time_floor_col``) and SQL TIME_FLOOR give the same bucket for every
+(``granularity_sql``) and SQL TIME_FLOOR give the same bucket for every
 cell of a table of periods, origins, zones, named granularities and
 durations over edge instants (pre-1970, the 2011/2012 Los Angeles DST
 days, a leap day, 1950, the 1986 Kathmandu offset change); SQL
 TIME_CEIL / TIME_SHIFT match the native expressions and the Python
 twins for every named granularity. Row tests pin the integral ROUND by
-a column scale, ARRAY_OFFSET_OF's needle typing and the native lookup
-extraction above the inline cap, and two lints keep the lowering in one
+a column scale, ARRAY_OFFSET_OF's needle typing, the native lookup
+extraction above the inline cap and a refused zone id, and two lints keep the lowering in one
 place."""
 
 from __future__ import annotations
@@ -20,8 +20,8 @@ from pyspark.sql import functions as F
 
 from apache_druid_spark.model.datasource import DatasourceRegistry
 from apache_druid_spark.model.granularity import (
-    GRANULARITIES, floor_ms, parse_instant, period_of, shift_ms,
-    time_floor_col,
+    GRANULARITIES, floor_ms, granularity_sql, parse_instant, period_of,
+    shift_ms, time_floor_col,
 )
 from apache_druid_spark.operators import dimensions
 from apache_druid_spark.operators.dimensions import (
@@ -83,7 +83,7 @@ def test_query_granularity_is_sql_time_floor(spark, instants, zone):
     cells = list(_cells(zone))
     # the zone reaches every cell; a duration ignores it
     native = instants.table("eq_instants").select("ms", *[
-        time_floor_col("t", g, zone).alias(f"c{i}")
+        F.expr(granularity_sql("t", g, zone)).alias(f"c{i}")
         for i, (g, _) in enumerate(cells)])
     sql = druid_sql(spark, "SELECT ms, " + ", ".join(
         f"TIME_FLOOR(t, {args}) AS c{i}"
@@ -185,6 +185,22 @@ def test_array_offset_of_multi_value_string_needle(spark):
     assert native == 2
 
 
+def test_array_offset_of_string_array_reads_the_needle_as_string(spark):
+    """A numeric needle in an ARRAY<STRING> is its string form: '02' and
+    '2.0' are not 2 (the elements are not read as numbers)."""
+    row = druid_sql(spark, "SELECT ARRAY_OFFSET_OF(ARRAY['02', 'a'], 2) "
+                           "AS a, ARRAY_OFFSET_OF(ARRAY['2.0'], 2) AS b, "
+                           "ARRAY_ORDINAL_OF(ARRAY['1', '2'], 2) AS c, "
+                           "ARRAY_OFFSET_OF(ARRAY[1, 2], 2.0) AS d"
+                    ).first()
+    assert tuple(row) == (None, None, 2, 1)
+    native = spark.range(1).select(*[compile_expression(e).alias(f"c{i}")
+                                     for i, e in enumerate((
+        "array_offset_of(array('02', 'a'), 2)",
+        "array_ordinal_of(array('1', '2'), 2)"))]).first()
+    assert tuple(native) == (None, 2)
+
+
 # -- the native lookup extraction above the inline cap -------------------
 
 @pytest.fixture
@@ -218,22 +234,41 @@ def test_lookup_extraction_above_the_cap_is_sql_lookup(spark, capped,
     assert {r["k"]: r["v"] for r in sql.collect()} == want
 
 
-def test_multi_value_lookup_above_the_cap_fails_as_sql(spark, capped):
-    """Above the cap LOOKUP is a scalar subquery, which Spark refuses in
-    a higher-order function's lambda: a per-element lookup over a
-    multi-value column fails in both languages (PARITY.md)."""
+def test_multi_value_lookup_above_the_cap_inlines_the_map(spark, capped):
+    """Spark refuses a subquery inside a higher-order function's lambda,
+    so a per-element lookup over a multi-value column keeps the map
+    literal above the cap, in both languages."""
     spec = {"type": "extraction", "dimension": "ks", "outputName": "v",
             "extractionFn": {"type": "registeredLookup",
                              "lookup": "eq_big"}}
     df = capped.table("eq_keys")
-    with pytest.raises(Exception) as native:
-        _, col = compile_dimension_spec(spec, capped, df)
-        df.select(col).collect()
-    with pytest.raises(Exception) as sql:
-        druid_sql(spark, "SELECT LOOKUP(ks, 'eq_big') AS v FROM eq_keys",
-                  capped).collect()
-    for err in (native.value, sql.value):
-        assert "lambda" in str(err).lower() or "subquer" in str(err).lower()
+    _, col = compile_dimension_spec(spec, capped, df)
+    native = df.select("k", col.alias("v"))
+    sql = druid_sql(spark, "SELECT k, LOOKUP(ks, 'eq_big') AS v "
+                           "FROM eq_keys", capped)
+    for out in (native, sql):
+        got = {r["k"]: r["v"] for r in out.collect()}
+        assert got["k1"] == ["v2", None] and got["k4"] == ["v0"]
+
+
+def test_array_offset_of_a_subquery_needle(spark, capped):
+    """Above the cap LOOKUP is a scalar subquery; as ARRAY_OFFSET_OF's
+    needle it stays outside any lambda, so the statement analyzes."""
+    rows = druid_sql(spark, "SELECT k, ARRAY_OFFSET_OF(ARRAY['v0', 'v1', "
+                            "'v4'], LOOKUP(k, 'eq_big')) AS o FROM eq_keys",
+                     capped).collect()
+    assert {r["k"]: r["o"] for r in rows} == {"k1": 1, "k4": 2, "x": None,
+                                             None: None}
+
+
+def test_a_zone_id_is_not_quoted_into_sql():
+    gran = {"type": "period", "period": "P1D",
+            "timeZone": "UTC', 'x') --"}
+    with pytest.raises(ValueError, match="Invalid time zone"):
+        granularity_sql("t", gran)
+    with pytest.raises(ValueError, match="Invalid time zone"):
+        compile_extraction_fn({"type": "timeFormat", "format": "yyyy",
+                               "timeZone": "Asia/Kathmandu'"}, "t")
 
 
 # -- lints: one bucket lowering, extraction fns as SQL text ----------------
